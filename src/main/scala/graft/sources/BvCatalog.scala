@@ -64,10 +64,9 @@ class BvCatalog extends TableCatalog {
       basename == p || basename.startsWith(p.stripSuffix("/") + "/"))
 
   private def exists(basename: String): Boolean = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     def isFile(suffix: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(basename + suffix)
-      try p.getFileSystem(conf).exists(p) catch { case _: Exception => false }
+      try p.getFileSystem(HadoopConf.shared).exists(p) catch { case _: Exception => false }
     }
     isFile(".shards") || isFile(".properties")
   }

@@ -309,10 +309,12 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
 
   // Loaded lazily on the driver for planning (offsets for byte-balancing,
   // properties for stats). The per-executor cache is separate. Sharded
-  // graphs (written by the distributed sink) are planned from the
-  // manifest instead.
-  private lazy val manifest: Option[BvShards.Manifest] =
-    BvShards.readManifest(basename)
+  // graphs (written by the distributed sink) are planned from one cached
+  // manifest version instead, so both planInputPartitions calls of a
+  // query see the same manifest and block hosts.
+  private lazy val planned: Option[BvShards.ManifestVersion] =
+    BvShards.lookup(basename)
+  private def manifest: Option[BvShards.Manifest] = planned.map(_.manifest)
   private lazy val graph: BvGraph = BvGraphCache.get(basename)
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -352,6 +354,20 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
     (0 until cuts.length - 1).map(i => (cuts(i), cuts(i + 1)))
   }
 
+  /** Planning I/O. Sharded graphs plan from [[BvShards.lookup]]: the
+    * parsed manifest plus ONE batched `listLocatedStatus` of the shard
+    * directory for block hosts, both cached per JVM under the `.shards`
+    * file's (mtime, length). A steady-state read of an unchanged graph
+    * costs one `getFileStatus` of `.shards` per manifest lookup and no
+    * listing; the listing runs once per manifest version, not once per
+    * call (Spark calls this method twice per query), and never as a
+    * per-shard `getFileStatus` loop (10k shards would mean 10k serial
+    * NameNode RPCs before the first task launches). Caching matters even
+    * on the local filesystem: each `LocatedFileStatus` there forks
+    * `ls -ld` to load permissions, and every Hadoop call reuses
+    * [[HadoopConf.shared]] because a fresh `Configuration` costs about
+    * 6 ms of XML parsing. Cached hosts may be stale after a block move;
+    * they are only a locality hint. */
   override def planInputPartitions(): Array[InputPartition] = {
     pushedAggs.foreach { aggs =>
       // metadata-only answer from the ACTUAL shard id ranges (see
@@ -368,33 +384,16 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
       }.toArray
       return Array(BvAggResultPartition(values))
     }
-    manifest.foreach { mf =>
+    planned.foreach { pv =>
+      val mf = pv.manifest
       // One partition per shard (each is an independently decodable
       // graph); pushed id bounds drop/narrow shards at planning time, and
       // a shard written oversized (misconfigured write) is sub-split on
       // its own offsets index so no single task scans it alone.
-      //
-      // Planning I/O: shard byte sizes come from the manifest (recorded
-      // at commit); block-location hosts come from ONE batched
-      // listLocatedStatus of the shard directory. Total filesystem calls
-      // are O(1) in the shard count — never a per-shard getFileStatus
-      // loop (10k shards would mean 10k serial NameNode RPCs before the
-      // first task launches).
-      val conf = new Configuration()
-      val dir = new Path(basename + ".d")
-      val fs = dir.getFileSystem(conf)
-      val located: Map[String, org.apache.hadoop.fs.LocatedFileStatus] =
-        try {
-          val it = fs.listLocatedStatus(dir)
-          val b = Map.newBuilder[String, org.apache.hadoop.fs.LocatedFileStatus]
-          while (it.hasNext) {
-            val st = it.next()
-            b += st.getPath.toUri.getPath -> st
-          }
-          b.result()
-        } catch { case _: Exception => Map.empty }
+      // Shard byte sizes come from the manifest (recorded at commit),
+      // block hosts from the manifest version's cached directory listing.
       def statusFor(base: String) =
-        located.get(new Path(base + ".graph").toUri.getPath)
+        pv.located.get(new Path(base + ".graph").toUri.getPath)
       // hosts of the blocks overlapping [startByte, endByte) — same
       // locality contract as the reference's NodeIteratorInputSplit
       // (io/NodeIteratorInputSplit.java:48-50) and our unsharded path
@@ -454,9 +453,8 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
     // should not be shredded into the caller's full-scan split count)
     val numSplits = (if (limit.isDefined) None else splits).getOrElse(
       math.max(1, math.ceil((totalBits / 8.0) / BvGraphTable.TARGET_SPLIT_BYTES).toInt))
-    val conf = new Configuration()
     val graphPath = new Path(basename + ".graph")
-    val fs = graphPath.getFileSystem(conf)
+    val fs = graphPath.getFileSystem(HadoopConf.shared)
     val status = fs.getFileStatus(graphPath)
 
     byteBalancedCuts(g, scanFrom, scanUntil, numSplits).map { case (from, until) =>
@@ -690,6 +688,21 @@ class BvGraphPartitionReaderLong(p: BvInputPartition, fields: Array[String])
   override def close(): Unit = graph.release()
 }
 
+/** The one Hadoop `Configuration` graft.sources builds from defaults:
+  * JVM-wide, loaded at first use and read-only by convention. A fresh
+  * `new Configuration()` re-parses `core-default.xml` and probes the
+  * classpath for `core-site.xml` (about 6 ms each), which used to be paid
+  * several times per read and once per executor cache lookup. Code that
+  * must change a setting copies it first with `new Configuration(shared)`,
+  * which clones the loaded properties without re-parsing. */
+object HadoopConf {
+  val shared: Configuration = {
+    val c = new Configuration()
+    c.size() // load the default resources now, so copies never re-parse
+    c
+  }
+}
+
 /** Positioned-read adapter over Hadoop `FSDataInputStream` — the Spark-side
   * equivalent of the reference's HdfsRepositionableStream
   * (io/HdfsRepositionableStream.java:9-24). `read(position, ...)` is
@@ -709,7 +722,10 @@ class HadoopBytes(path: Path, conf: Configuration) extends SeekableBytes {
   * per-task `.offsets` reload (SURVEY.md §2.1 notes). Entries invalidate
   * when the `.properties` mtime changes (graph rewritten in place) and
   * the cache is LRU-bounded so scans over many shards/graphs can't pin
-  * unbounded offsets indexes in executor memory.
+  * unbounded offsets indexes in executor memory. A warm lookup costs one
+  * `getFileStatus` of `.properties` and no `Configuration` construction
+  * (it reads through [[HadoopConf.shared]]) — it runs for every executor
+  * task and every `WebGraphInputFormat.getSplits`.
   *
   * Lifetime: entries are reference-counted (see [[graft.bv.BvGraph]]).
   * The cache holds one reference; [[acquire]] pins one more for an active
@@ -740,7 +756,7 @@ object BvGraphCache {
     })
 
   private def lookup(basename: String, pin: Boolean): BvGraph = {
-    val conf = new Configuration()
+    val conf = HadoopConf.shared
     val propsPath = new Path(basename + ".properties")
     val fs = propsPath.getFileSystem(conf)
     val mtime = fs.getFileStatus(propsPath).getModificationTime

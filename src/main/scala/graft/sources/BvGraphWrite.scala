@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
@@ -108,9 +107,8 @@ class BvBatchWrite(basename: String, schema: StructType, padNodes: Option[Long],
         s"overlapping shards: [${a.from},${a.until}) vs [${b.from},${b.until})")
       case _ =>
     }
-    val conf = new Configuration()
     val manifest = new Path(basename + ".shards")
-    val fs = manifest.getFileSystem(conf)
+    val fs = manifest.getFileSystem(HadoopConf.shared)
     // `nodes` option: fill every boundary gap (leading, inter-shard,
     // trailing) with empty shards so the graph round-trips as dense [0, n)
     val shards: Seq[BvShardCommit] = padNodes match {
@@ -160,13 +158,16 @@ class BvBatchWrite(basename: String, schema: StructType, padNodes: Option[Long],
     val out = fs.create(manifest, true)
     try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    // an in-place overwrite can keep the old (mtime, length) when the
+    // filesystem's mtime is coarse: drop the entry rather than rely on it
+    BvShards.invalidate(basename)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
     val dir = new Path(basename + ".d")
-    val fs = dir.getFileSystem(conf)
+    val fs = dir.getFileSystem(HadoopConf.shared)
     if (fs.exists(dir)) fs.delete(dir, true)
+    BvShards.invalidate(basename)
   }
 }
 
@@ -193,12 +194,71 @@ object BvShards {
   case class Manifest(nodes: Long, arcs: Long, shards: Seq[Shard],
       big: Boolean = false)
 
-  /** Read `<basename>.shards` if present. */
-  def readManifest(basename: String): Option[Manifest] = {
-    val conf = new Configuration()
+  /** Shard-directory listings made in this JVM — instrumentation for the
+    * planning-cost gate, read as a before/after delta like
+    * [[BvGraphCache.coldOpens]]: a repeated scan of an unchanged sharded
+    * graph must not list its shard directory again. */
+  val listings = new java.util.concurrent.atomic.AtomicLong()
+
+  /** One version of a sharded graph's metadata: the parsed manifest and,
+    * on first use, its shard directory's located listing (path → status,
+    * for `.graph` sizes and block hosts). The listing is one batched
+    * `listLocatedStatus` — O(1) RPCs in the shard count. */
+  final class ManifestVersion private[BvShards] (basename: String,
+      val manifest: Manifest) {
+    lazy val located: Map[String, LocatedFileStatus] = {
+      listings.incrementAndGet()
+      val dir = new Path(basename + ".d")
+      try {
+        val it = dir.getFileSystem(HadoopConf.shared).listLocatedStatus(dir)
+        val b = Map.newBuilder[String, LocatedFileStatus]
+        while (it.hasNext) {
+          val st = it.next()
+          b += st.getPath.toUri.getPath -> st
+        }
+        b.result()
+      } catch { case _: Exception => Map.empty }
+    }
+  }
+
+  private val MAX_VERSIONS = 64
+  /** basename → ((mtime, length) of `.shards`, its parsed version). */
+  private val versions = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, ((Long, Long), ManifestVersion)](32, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, ((Long, Long), ManifestVersion)]): Boolean =
+        size() > MAX_VERSIONS
+    })
+
+  /** The current version of `<basename>.shards`, if present. Versions are
+    * cached per JVM under the file's (mtime, length), so a warm lookup is
+    * one `getFileStatus`; a rewrite by another process changes the key
+    * and is re-read on the next lookup. The sink's commit and abort drop
+    * the entry outright ([[invalidate]]), so an in-process overwrite
+    * never depends on mtime resolution. */
+  def lookup(basename: String): Option[ManifestVersion] = {
     val p = new Path(basename + ".shards")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
+    val fs = p.getFileSystem(HadoopConf.shared)
+    val st =
+      try fs.getFileStatus(p)
+      catch { case _: java.io.FileNotFoundException => invalidate(basename); return None }
+    // the key is taken BEFORE reading: a rewrite racing the read leaves a
+    // stale key, which only costs one more parse on the next lookup
+    val key = (st.getModificationTime, st.getLen)
+    Some(versions.compute(basename, (_, cached) =>
+      if (cached != null && cached._1 == key) cached
+      else (key, new ManifestVersion(basename, parse(fs, p)))
+    )._2)
+  }
+
+  /** Forget the cached manifest version of `basename`. */
+  def invalidate(basename: String): Unit = versions.remove(basename): Unit
+
+  /** Read `<basename>.shards` if present (through [[lookup]]'s cache). */
+  def readManifest(basename: String): Option[Manifest] =
+    lookup(basename).map(_.manifest)
+
+  private def parse(fs: FileSystem, p: Path): Manifest = {
     val props = new java.util.Properties()
     val in = fs.open(p)
     try props.load(in) finally in.close()
@@ -211,8 +271,8 @@ object BvShards {
     }
     val big = "long" == props.getProperty("idwidth") ||
       shards.exists(_.until > Int.MaxValue.toLong)
-    Some(Manifest(props.getProperty("nodes").toLong,
-      props.getProperty("arcs").toLong, shards, big))
+    Manifest(props.getProperty("nodes").toLong,
+      props.getProperty("arcs").toLong, shards, big)
   }
 
   /** Regenerate offsets for every shard of a sharded graph (the sink's
@@ -304,10 +364,9 @@ class BvShardWriter(basename: String, partitionId: Int, taskId: Long,
     idIdx: Int, succIdx: Int, big: Boolean = false,
     template: graft.bv.BvProperties = graft.bv.BvProperties(0, 0))
     extends DataWriter[InternalRow] {
-  private val conf = new Configuration()
   private val finalBase = BvShards.shardBase(basename, partitionId)
   private val tmpBase = s"$finalBase.attempt-$taskId"
-  private val fs = new Path(finalBase + ".graph").getFileSystem(conf)
+  private val fs = new Path(finalBase + ".graph").getFileSystem(HadoopConf.shared)
 
   private var enc: BvEncoder#Stream = _
   private var graphOut: org.apache.hadoop.fs.FSDataOutputStream = _

@@ -17,18 +17,21 @@ class BvShardOpenSpec extends AnyFunSuite {
   import SparkSessionFixture._
 
   private def writeFixture(n: Int, shards: Int): String = {
+    val base = java.nio.file.Files.createTempDirectory("bvopen").toString + "/g"
+    writeTo(base, n, shards)
+    base
+  }
+
+  private def writeTo(base: String, n: Int, shards: Int): Unit = {
     import spark.implicits._
     val adj = (0 until n).map { i =>
       (i, Seq((i + 1) % n, (i + 7) % n).distinct.sorted)
     }
-    val dir = java.nio.file.Files.createTempDirectory("bvopen").toString
-    val base = s"$dir/g"
     adj.toDF("id", "successors")
       .withColumn("outdegree", size(col("successors")))
       .write.format("bvgraph").option("basename", base)
       .option("shards", shards).option("nodes", n)
       .mode("overwrite").save()
-    base
   }
 
   test("cold id-range scan opens only the covering shards") {
@@ -61,5 +64,31 @@ class BvShardOpenSpec extends AnyFunSuite {
     assert(opened == 8,
       s"full scan over 8 shards constructed $opened graphs — the " +
         "per-executor cache must dedupe per-task opens")
+  }
+
+  test("repeated planning lists the shard directory once per manifest version") {
+    val base = writeFixture(4000, 8)
+    def scan(): Array[(Int, Int)] =
+      spark.read.format("bvgraph").option("basename", base).load()
+        .select(col("id"), col("outdegree")).collect()
+        .map(r => r.getInt(0) -> r.getInt(1)).sortBy(_._1)
+    def listed[T](body: => T): (T, Long) = {
+      val before = BvShards.listings.get()
+      val r = body
+      (r, BvShards.listings.get() - before)
+    }
+    scan() // the first read after the write lists the new version
+    val (rows, second) = listed(scan())
+    assert(rows.sameElements((0 until 4000).map(_ -> 2)))
+    assert(second == 0,
+      s"a second planned scan of an unchanged graph listed its shards $second times")
+
+    // in-place overwrite with a different shard count and node count
+    writeTo(base, 3000, 5)
+    assert(BvShards.readManifest(base).get.shards.size == 5)
+    val (rowsAfter, afterOverwrite) = listed(scan())
+    assert(rowsAfter.sameElements((0 until 3000).map(_ -> 2)))
+    assert(afterOverwrite == 1,
+      s"the first scan of a new manifest version listed $afterOverwrite times, not once")
   }
 }

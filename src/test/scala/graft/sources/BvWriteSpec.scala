@@ -249,6 +249,50 @@ class BvWriteSpec extends AnyFunSuite {
     parts.foreach(p => assert(p.hosts.nonEmpty, s"no hosts on $p"))
   }
 
+  test("a manifest rewritten outside the sink is planned from on the next read") {
+    // stands in for a writer in another JVM: no in-process invalidation
+    // runs, so the (mtime, length) version key alone must catch the change
+    val adj = randomAdj(300, 11L)
+    val base = java.nio.file.Files.createTempDirectory("bvw").toString + "/g"
+    adjDf(adj).write.format("bvgraph").option("basename", base)
+      .option("shards", 3).mode("overwrite").save()
+    def read() = spark.read.format("bvgraph").option("basename", base).load()
+    def ids(): Seq[Int] = read().select("id").collect().map(_.getInt(0)).sorted.toSeq
+    assert(ids() == (0 until 300)) // populates the cache, listing included
+    val mf = BvShards.readManifest(base).get
+    assert(mf.shards.size == 3)
+
+    val path = java.nio.file.Paths.get(base + ".shards")
+    val crc = path.getParent.resolve(".g.shards.crc")
+    val mtime0 = java.nio.file.Files.getLastModifiedTime(path).toMillis
+    def rewrite(shards: Seq[BvShards.Shard], arcs: Long, mtime: Long): Unit = {
+      val text = (Seq(s"shards=${shards.size}", s"nodes=${shards.last.until}",
+        s"arcs=$arcs") ++ shards.zipWithIndex.flatMap { case (sh, i) =>
+        Seq(s"shard.$i.file=${sh.base}", s"shard.$i.from=${sh.from}",
+          s"shard.$i.until=${sh.until}", s"shard.$i.bytes=${sh.bytes}")
+      }).mkString("", "\n", "\n")
+      java.nio.file.Files.writeString(path, text)
+      java.nio.file.Files.deleteIfExists(crc) // stale checksum sidecar
+      java.nio.file.Files.setLastModifiedTime(path,
+        java.nio.file.attribute.FileTime.fromMillis(mtime))
+    }
+
+    // 1. a shorter manifest (last shard dropped) under the OLD mtime: the
+    //    length alone marks the new version
+    val kept = mf.shards.init
+    val keptArcs = adj.take(kept.last.until.toInt).map(_.length.toLong).sum
+    rewrite(kept, keptArcs, mtime0)
+    val len1 = java.nio.file.Files.size(path)
+    assert(ids() == (0 until kept.last.until.toInt))
+
+    // 2. same length, new mtime: a different arcs figure of equal width,
+    //    read back through the metadata-only SUM(outdegree) pushdown
+    val altArcs = if (keptArcs % 10 == 9) keptArcs - 1 else keptArcs + 1
+    rewrite(kept, altArcs, mtime0 + 5000)
+    assert(java.nio.file.Files.size(path) == len1)
+    assert(read().agg(sum("outdegree")).head().getLong(0) == altArcs)
+  }
+
   test("Long manifest ranges: id-filtered scans of in-range shards work past 2^31") {
     import spark.implicits._
     // a real 10-node shard, referenced twice: once at [0,10), once at a
