@@ -228,44 +228,55 @@ final class BitInput(bytes: SeekableBytes, bufferSize: Int = 1 << 16) {
   }
 }
 
-/** MSB-first bit output, symmetric to [[BitInput]]. Bit-at-a-time byte
-  * accumulator — the encoder is the fixture/ingest path, not the scan hot
-  * path. `writtenBits` feeds the offsets stream.
+/** MSB-first bit output, symmetric to [[BitInput]]. Bits are packed into
+  * a 64-bit accumulator and drained as whole bytes into an internal byte
+  * buffer, which goes to the stream in one `write` whenever it fills and
+  * on `flush()` — so the stream lags `writtenBits` until `flush()`.
+  * `writtenBits` feeds the offsets stream.
+  *
+  * Every code below is built from three primitives: `writeLong`,
+  * `writeUnary` and `writeOnes`. [[BitOutput.counting]] overrides only
+  * those to add up lengths, so the encoder's cost dry runs share the code
+  * definitions with the real output and cannot disagree with it about a
+  * code's length.
   */
-final class BitOutput(out: java.io.OutputStream) {
-  private var cur: Int = 0
-  private var nbits: Int = 0
-  private var written: Long = 0L
+class BitOutput(out: java.io.OutputStream) {
+  private val buf = new Array[Byte](BitOutput.BufferBytes)
+  private var pos: Int = 0 // bytes pending in buf
+  private var acc: Long = 0L // the low `fill` bits are pending, oldest first
+  private var fill: Int = 0 // < 8 between calls
+  protected var written: Long = 0L
 
-  def writtenBits: Long = written
+  final def writtenBits: Long = written
 
-  def writeBit(b: Int): Unit = {
-    cur = (cur << 1) | (b & 1)
-    nbits += 1
-    written += 1
-    if (nbits == 8) {
-      out.write(cur)
-      cur = 0
-      nbits = 0
-    }
-  }
+  final def writeBit(b: Int): Unit = writeLong(b.toLong, 1)
 
-  /** Write the low `len` bits of x, MSB first. */
+  /** Write the low `len` bits of x (0 <= len <= 64), MSB first. */
   def writeLong(x: Long, len: Int): Unit = {
-    var i = len - 1
-    while (i >= 0) {
-      writeBit(((x >>> i) & 1L).toInt)
-      i -= 1
+    if (len > 56) { // keep fill + len within the accumulator
+      writeLong(x >>> 32, len - 32)
+      writeLong(x, 32)
+    } else {
+      acc = (acc << len) | (x & ((1L << len) - 1))
+      fill += len
+      written += len
+      while (fill >= 8) {
+        fill -= 8
+        if (pos == buf.length) drain()
+        buf(pos) = (acc >>> fill).toByte
+        pos += 1
+      }
     }
   }
 
   def writeUnary(n: Int): Unit = {
-    var i = n
-    while (i > 0) { writeBit(0); i -= 1 }
-    writeBit(1)
+    require(n >= 0, s"unary needs n >= 0, got $n")
+    var zeros = n
+    while (zeros >= 32) { writeLong(0L, 32); zeros -= 32 }
+    writeLong(1L, zeros + 1)
   }
 
-  def writeGamma(n: Long): Unit = {
+  final def writeGamma(n: Long): Unit = {
     require(n >= 0, s"gamma needs n >= 0, got $n")
     val v = n + 1
     val msb = 63 - java.lang.Long.numberOfLeadingZeros(v)
@@ -273,7 +284,7 @@ final class BitOutput(out: java.io.OutputStream) {
     writeLong(v, msb) // v without its MSB, in msb bits (writeLong masks)
   }
 
-  def writeDelta(n: Long): Unit = {
+  final def writeDelta(n: Long): Unit = {
     require(n >= 0)
     val v = n + 1
     val msb = 63 - java.lang.Long.numberOfLeadingZeros(v)
@@ -281,7 +292,7 @@ final class BitOutput(out: java.io.OutputStream) {
     writeLong(v, msb)
   }
 
-  def writeZeta(n: Long, k: Int): Unit = {
+  final def writeZeta(n: Long, k: Int): Unit = {
     require(n >= 0)
     val v = n + 1
     val msb = 63 - java.lang.Long.numberOfLeadingZeros(v)
@@ -293,26 +304,22 @@ final class BitOutput(out: java.io.OutputStream) {
   }
 
   /** Minimal binary for x in [0, b) — see [[BitInput.readMinimalBinary]]. */
-  def writeMinimalBinary(x: Int, b: Int): Unit =
+  final def writeMinimalBinary(x: Int, b: Int): Unit =
     writeLongMinimalBinary(x.toLong, b.toLong)
 
   /** Long-bound variant (b < 2^62) — see
     * [[BitInput.readLongMinimalBinary]]. */
-  def writeLongMinimalBinary(x: Long, b: Long): Unit = {
+  final def writeLongMinimalBinary(x: Long, b: Long): Unit = {
     require(b > 0 && x >= 0 && x < b, s"minimal binary needs 0 <= $x < $b")
     val log2b = 63 - java.lang.Long.numberOfLeadingZeros(b)
     val m = (1L << (log2b + 1)) - b
     if (x < m) writeLong(x, log2b)
-    else {
-      val y = x + m
-      writeLong(y >> 1, log2b)
-      writeBit((y & 1L).toInt)
-    }
+    else writeLong(x + m, log2b + 1)
   }
 
-  def writeGolomb(x: Int, b: Int): Unit = writeGolomb(x.toLong, b)
+  final def writeGolomb(x: Int, b: Int): Unit = writeGolomb(x.toLong, b)
 
-  def writeGolomb(x: Long, b: Int): Unit = {
+  final def writeGolomb(x: Long, b: Int): Unit = {
     require(b > 0 && x >= 0)
     val q = x / b
     require(q <= Int.MaxValue, s"golomb quotient $q overflows the unary run")
@@ -320,9 +327,9 @@ final class BitOutput(out: java.io.OutputStream) {
     writeMinimalBinary((x % b).toInt, b)
   }
 
-  def writeSkewedGolomb(x: Int, b: Int): Unit = writeSkewedGolomb(x.toLong, b)
+  final def writeSkewedGolomb(x: Int, b: Int): Unit = writeSkewedGolomb(x.toLong, b)
 
-  def writeSkewedGolomb(x: Long, b: Int): Unit = {
+  final def writeSkewedGolomb(x: Long, b: Int): Unit = {
     require(b > 0 && x >= 0)
     val i = 63 - java.lang.Long.numberOfLeadingZeros(x / b + 1)
     writeUnary(i)
@@ -331,51 +338,68 @@ final class BitOutput(out: java.io.OutputStream) {
     writeLongMinimalBinary(x - m, (1L << i) * b)
   }
 
-  def writeNibble(n: Long): Unit = {
+  final def writeNibble(n: Long): Unit = {
     require(n >= 0)
     val msb = if (n == 0) 0 else 63 - java.lang.Long.numberOfLeadingZeros(n)
     var h = msb / 3
     while (h >= 0) {
-      writeBit(if (h == 0) 1 else 0)
-      writeLong(n >>> (h * 3), 3)
+      // stop bit (1 on the last group) + 3 data bits
+      writeLong((if (h == 0) 8L else 0L) | ((n >>> (h * 3)) & 7L), 4)
       h -= 1
     }
   }
 
   /** Emit `n` '1' bits — the bulk path for runs of γ(0) records
-    * (degree-0 nodes): once byte-aligned, whole 0xFF bytes go straight to
-    * the underlying stream instead of 8 per-bit pushes each. A 2^31-node
-    * gap shard encodes in one pass of ~256 MB byte writes rather than
-    * ~2^31 `writeBit` calls stalling the driver at commit time. */
+    * (degree-0 nodes): once byte-aligned, whole 0xFF bytes are filled
+    * into the buffer instead of being shifted through the accumulator.
+    * A 2^31-node gap shard encodes in one pass of ~256 MB byte fills
+    * rather than stalling the driver at commit time. */
   def writeOnes(n: Long): Unit = {
-    var left = n
-    while (left > 0 && nbits != 0) { writeBit(1); left -= 1 }
-    if (left >= 8) {
-      val chunk = new Array[Byte](math.min(left / 8, 1L << 16).toInt)
-      java.util.Arrays.fill(chunk, 0xFF.toByte)
-      while (left >= 8) {
-        val bytes = math.min(left / 8, chunk.length.toLong).toInt
-        out.write(chunk, 0, bytes)
-        written += 8L * bytes
-        left -= 8L * bytes
-      }
+    val head = math.min(n, ((8 - fill) & 7).toLong).toInt
+    writeLong(-1L, head) // up to the next byte boundary
+    var left = n - head
+    while (left >= 8) {
+      if (pos == buf.length) drain()
+      val bytes = math.min(left / 8, (buf.length - pos).toLong).toInt
+      java.util.Arrays.fill(buf, pos, pos + bytes, 0xFF.toByte)
+      pos += bytes
+      written += 8L * bytes
+      left -= 8L * bytes
     }
-    while (left > 0) { writeBit(1); left -= 1 }
+    writeLong(-1L, left.toInt)
   }
 
-  /** Pad the final partial byte with zeros and flush. */
+  private def drain(): Unit = {
+    if (pos > 0) out.write(buf, 0, pos)
+    pos = 0
+  }
+
+  /** Pad the final partial byte with zeros and flush the buffer and the
+    * stream. */
   def flush(): Unit = {
-    while (nbits != 0) writeBit(0)
+    if (fill != 0) writeLong(0L, 8 - fill)
+    drain()
     out.flush()
   }
 }
 
 object BitOutput {
-  /** Bit sink for cost estimation (the encoder dry-runs candidate
-    * reference encodings to pick the cheapest). */
-  object NullStream extends java.io.OutputStream {
-    override def write(b: Int): Unit = ()
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = ()
+  /** Bytes buffered between writes to the underlying stream. */
+  private[bv] val BufferBytes = 1 << 16
+
+  /** A bit output that only adds up code lengths: after any sequence of
+    * writes its `writtenBits` equals a real writer's, but no bit is
+    * shifted or stored. The encoder prices reference candidates with it. */
+  private[bv] def counting(): BitOutput = new Counting
+
+  private final class Counting extends BitOutput(null) {
+    override def writeLong(x: Long, len: Int): Unit = written += len
+    override def writeUnary(n: Int): Unit = {
+      require(n >= 0, s"unary needs n >= 0, got $n")
+      written += n + 1L
+    }
+    override def writeOnes(n: Long): Unit = written += n
+    override def flush(): Unit = written = (written + 7) & ~7L
   }
 }
 

@@ -21,9 +21,13 @@ import ZigZag.int2nat
   *
   * Encoding per node (mirror image of [[BvGraph.decodeNode]]):
   * outdegree → reference + copy-blocks → intervals → residuals. Reference
-  * selection is cost-based: each candidate in the window is dry-encoded
-  * through a counting [[BitOutput]] and the cheapest wins, subject to the
-  * `maxRefCount` chain-length cap.
+  * selection is cost-based: "no reference" and each candidate in the window
+  * (subject to the `maxRefCount` chain-length cap) are dry-encoded through
+  * [[BitOutput.counting]], which adds up code lengths without producing
+  * bits, and the strictly cheapest wins (a tie keeps the choice priced
+  * first: no reference, then the nearest candidate). The dry runs and the
+  * real encode share one code path and the [[Stream]]'s primitive scratch
+  * arrays, so pricing a candidate allocates nothing.
   */
 final class BvEncoder(props: BvProperties) {
   private val windowSize = props.windowSize
@@ -48,114 +52,6 @@ final class BvEncoder(props: BvProperties) {
     case c => throw new IllegalStateException(s"coding $c unsupported")
   }
 
-  /** Copy-block decomposition of `succ` against `refList`: alternating
-    * copy/skip run lengths over refList, starting with a copy run, with a
-    * trailing copy run left implicit (decoder's even-blockCount rule,
-    * /root/reference/.../patched/HdfsBVGraph.java:135). Returns (blocks,
-    * leftover successors not covered by the copy).
-    */
-  private[bv] def copyBlocks(succ: Array[Long], refList: Array[Long]): (Array[Int], Array[Long]) = {
-    val blocks = new scala.collection.mutable.ArrayBuffer[Int]
-    val extras = new scala.collection.mutable.ArrayBuffer[Long]
-    var i = 0 // index into succ
-    var j = 0 // index into refList
-    var curr = 0 // current run length
-    var copying = true // runs alternate, first is a copy run
-    while (j < refList.length) {
-      // two-pointer walk: refList(j) either appears in succ (copy) or not
-      while (i < succ.length && succ(i) < refList(j)) { extras += succ(i); i += 1 }
-      val inSucc = i < succ.length && succ(i) == refList(j)
-      if (inSucc == copying) curr += 1
-      else { blocks += curr; copying = !copying; curr = 1 }
-      if (inSucc) i += 1
-      j += 1
-    }
-    // The final run is always left implicit: with an even emitted block
-    // count the decoder copies the refList tail, with an odd one it skips
-    // it — and dropping the last run lands on the right parity either way
-    // (copy runs sit at even indices, skip runs at odd).
-    while (i < succ.length) { extras += succ(i); i += 1 }
-    (blocks.toArray, extras.toArray)
-  }
-
-  /** Split `extras` into maximal runs of consecutive ids of length ≥
-    * minIntervalLength (the intervals) and the rest (residuals).
-    */
-  private[bv] def intervalize(extras: Array[Long]): (Array[(Long, Int)], Array[Long]) = {
-    if (minIntervalLength == 0 || extras.isEmpty)
-      return (Array.empty, extras)
-    val intervals = new scala.collection.mutable.ArrayBuffer[(Long, Int)]
-    val residuals = new scala.collection.mutable.ArrayBuffer[Long]
-    var runStart = 0
-    var i = 1
-    def closeRun(endExcl: Int): Unit = {
-      val len = endExcl - runStart
-      if (len >= minIntervalLength) intervals += ((extras(runStart), len))
-      else { var k = runStart; while (k < endExcl) { residuals += extras(k); k += 1 } }
-    }
-    while (i < extras.length) {
-      if (extras(i) != extras(i - 1) + 1) { closeRun(i); runStart = i }
-      i += 1
-    }
-    closeRun(extras.length)
-    (intervals.toArray, residuals.toArray)
-  }
-
-  /** Encode one node's list given a chosen reference (0 = none) and the
-    * referenced list. Works against any BitOutput, including a counting one
-    * for cost estimation.
-    */
-  private def encodeNode(out: BitOutput, x: Int, succ: Array[Long],
-      ref: Int, refList: Array[Long]): Unit = {
-    writeCoded(out, codings.outdegree, succ.length.toLong)
-    if (succ.isEmpty) return
-    if (windowSize > 0) writeCoded(out, codings.reference, ref.toLong)
-
-    var extras = succ
-    if (ref > 0) {
-      val (blocks, ex) = copyBlocks(succ, refList)
-      extras = ex
-      writeCoded(out, codings.blockCount, blocks.length.toLong)
-      var i = 0
-      while (i < blocks.length) {
-        writeCoded(out, codings.block, (blocks(i) - (if (i == 0) 0 else 1)).toLong)
-        i += 1
-      }
-    }
-
-    if (extras.nonEmpty && minIntervalLength != 0) {
-      val (intervals, residuals) = intervalize(extras)
-      out.writeGamma(intervals.length.toLong)
-      var prev = 0L
-      var i = 0
-      while (i < intervals.length) {
-        val (left, len) = intervals(i)
-        if (i == 0) out.writeGamma(int2nat(left - (firstNode + x)))
-        else out.writeGamma(left - prev - 1)
-        out.writeGamma((len - minIntervalLength).toLong)
-        prev = left + len
-        i += 1
-      }
-      extras = residuals
-    }
-
-    if (extras.nonEmpty) {
-      writeCoded(out, codings.residual,
-        int2nat(extras(0) - (firstNode + x)))
-      var i = 1
-      while (i < extras.length) {
-        writeCoded(out, codings.residual, extras(i) - extras(i - 1) - 1)
-        i += 1
-      }
-    }
-  }
-
-  private def costOf(x: Int, succ: Array[Long], ref: Int, refList: Array[Long]): Long = {
-    val counter = new BitOutput(BitOutput.NullStream)
-    encodeNode(counter, x, succ, ref, refList)
-    counter.writtenBits
-  }
-
   /** Stateful one-node-at-a-time encoder: nodes are appended in ascending
     * id order and the bit stream grows incrementally — this is what lets a
     * Spark `DataWriter` encode its partition's node range without
@@ -163,35 +59,181 @@ final class BvEncoder(props: BvProperties) {
     * graft.sources write path). */
   final class Stream(graphOut: java.io.OutputStream) {
     private val out = new BitOutput(graphOut)
+    private val counter = BitOutput.counting()
     private val cyclic = math.max(windowSize + 1, 1)
     private val window = new Array[Array[Long]](cyclic)
     private val refCounts = new Array[Int](cyclic)
-    private val offsetsBuf = new scala.collection.mutable.ArrayBuffer[Long]
+    private var offsets = new Array[Long](1024)
     private var x = 0
     private var arcs = 0L
+
+    // Per-node scratch, reused by every candidate and every node: copy
+    // block lengths, the successors a copy leaves over, and their split
+    // into intervals (left end, length) and residuals. Grown on demand.
+    private var blocks = new Array[Int](16)
+    private var blockCount = 0
+    private var extras = new Array[Long](16)
+    private var extraCount = 0
+    private var intervalLeft = new Array[Long](16)
+    private var intervalLen = new Array[Int](16)
+    private var intervalCount = 0
+    private var residuals = new Array[Long](16)
+    private var residualCount = 0
 
     def nodeCount: Int = x
     def arcCount: Long = arcs
 
+    private def ensureScratch(degree: Int): Unit = {
+      if (extras.length < degree) {
+        val cap = math.max(degree, 2 * extras.length)
+        extras = new Array[Long](cap)
+        intervalLeft = new Array[Long](cap)
+        intervalLen = new Array[Int](cap)
+        residuals = new Array[Long](cap)
+      }
+    }
+
+    /** Copy-block decomposition of `succ` against `refList` into `blocks`
+      * and `extras`: alternating copy/skip run lengths over refList,
+      * starting with a copy run, with a trailing copy run left implicit
+      * (the decoder's even-blockCount rule, see [[BvGraph.decodeNode]]);
+      * extras are the successors the copy does not cover.
+      */
+    private def copyBlocks(succ: Array[Long], refList: Array[Long]): Unit = {
+      if (blocks.length < refList.length)
+        blocks = new Array[Int](math.max(refList.length, 2 * blocks.length))
+      var nb = 0
+      var ne = 0
+      var i = 0 // index into succ
+      var j = 0 // index into refList
+      var curr = 0 // current run length
+      var copying = true // runs alternate, first is a copy run
+      while (j < refList.length) {
+        // two-pointer walk: refList(j) either appears in succ (copy) or not
+        val r = refList(j)
+        while (i < succ.length && succ(i) < r) { extras(ne) = succ(i); ne += 1; i += 1 }
+        val inSucc = i < succ.length && succ(i) == r
+        if (inSucc == copying) curr += 1
+        else { blocks(nb) = curr; nb += 1; copying = !copying; curr = 1 }
+        if (inSucc) i += 1
+        j += 1
+      }
+      // The final run is always left implicit: with an even emitted block
+      // count the decoder copies the refList tail, with an odd one it skips
+      // it — and dropping the last run lands on the right parity either way
+      // (copy runs sit at even indices, skip runs at odd).
+      while (i < succ.length) { extras(ne) = succ(i); ne += 1; i += 1 }
+      blockCount = nb
+      extraCount = ne
+    }
+
+    /** Split `src(0 until len)` into maximal runs of consecutive ids of
+      * length ≥ minIntervalLength (the intervals) and the rest (residuals).
+      */
+    private def intervalize(src: Array[Long], len: Int): Unit = {
+      var ni = 0
+      var nr = 0
+      var runStart = 0
+      var i = 1
+      while (i <= len) {
+        if (i == len || src(i) != src(i - 1) + 1) { // close the run [runStart, i)
+          val runLen = i - runStart
+          if (runLen >= minIntervalLength) {
+            intervalLeft(ni) = src(runStart)
+            intervalLen(ni) = runLen
+            ni += 1
+          } else {
+            var k = runStart
+            while (k < i) { residuals(nr) = src(k); nr += 1; k += 1 }
+          }
+          runStart = i
+        }
+        i += 1
+      }
+      intervalCount = ni
+      residualCount = nr
+    }
+
+    /** Encode node `x`'s list given a chosen reference (0 = none) and the
+      * referenced list, into the real output or the counting one. */
+    private def encodeNode(out: BitOutput, succ: Array[Long], ref: Int,
+        refList: Array[Long]): Unit = {
+      writeCoded(out, codings.outdegree, succ.length.toLong)
+      if (succ.length == 0) return
+      if (windowSize > 0) writeCoded(out, codings.reference, ref.toLong)
+
+      var rest = succ
+      var restLen = succ.length
+      if (ref > 0) {
+        copyBlocks(succ, refList)
+        writeCoded(out, codings.blockCount, blockCount.toLong)
+        var i = 0
+        while (i < blockCount) {
+          writeCoded(out, codings.block, (blocks(i) - (if (i == 0) 0 else 1)).toLong)
+          i += 1
+        }
+        rest = extras
+        restLen = extraCount
+      }
+
+      if (restLen > 0 && minIntervalLength != 0) {
+        intervalize(rest, restLen)
+        out.writeGamma(intervalCount.toLong)
+        var prev = 0L
+        var i = 0
+        while (i < intervalCount) {
+          val left = intervalLeft(i)
+          if (i == 0) out.writeGamma(int2nat(left - (firstNode + x)))
+          else out.writeGamma(left - prev - 1)
+          out.writeGamma((intervalLen(i) - minIntervalLength).toLong)
+          prev = left + intervalLen(i)
+          i += 1
+        }
+        rest = residuals
+        restLen = residualCount
+      }
+
+      if (restLen > 0) {
+        writeCoded(out, codings.residual, int2nat(rest(0) - (firstNode + x)))
+        var i = 1
+        while (i < restLen) {
+          writeCoded(out, codings.residual, rest(i) - rest(i - 1) - 1)
+          i += 1
+        }
+      }
+    }
+
+    private def costOf(succ: Array[Long], ref: Int, refList: Array[Long]): Long = {
+      val before = counter.writtenBits
+      encodeNode(counter, succ, ref, refList)
+      counter.writtenBits - before
+    }
+
+    private def recordOffset(): Unit = {
+      if (x >= offsets.length) offsets = java.util.Arrays.copyOf(offsets, 2 * offsets.length)
+      offsets(x) = out.writtenBits
+    }
+
     /** Append node `x` (implicit: call order defines ids 0,1,2,…). */
     def append(succ: Array[Long]): Unit = {
-      offsetsBuf += out.writtenBits
+      recordOffset()
       arcs += succ.length
+      ensureScratch(succ.length)
       var bestRef = 0
       var bestCost = Long.MaxValue
       if (succ.nonEmpty && windowSize > 0) {
-        bestCost = costOf(x, succ, 0, null)
+        bestCost = costOf(succ, 0, null)
         var r = 1
         while (r <= math.min(windowSize, x)) {
           val cand = window((x - r) % cyclic)
           if (cand != null && cand.nonEmpty && refCounts((x - r) % cyclic) < maxRefCount) {
-            val c = costOf(x, succ, r, cand)
+            val c = costOf(succ, r, cand)
             if (c < bestCost) { bestCost = c; bestRef = r }
           }
           r += 1
         }
       }
-      encodeNode(out, x, succ,
+      encodeNode(out, succ,
         bestRef, if (bestRef > 0) window((x - bestRef) % cyclic) else null)
       if (windowSize > 0) {
         window(x % cyclic) = succ
@@ -202,13 +244,18 @@ final class BvEncoder(props: BvProperties) {
     }
 
     /** Int-adjacency convenience (the classic <2³¹ write path). */
-    def append(succ: Array[Int]): Unit = append(BvEncoder.widenInts(succ))
+    def append(succ: Array[Int]): Unit = {
+      val wide = new Array[Long](succ.length)
+      var i = 0
+      while (i < succ.length) { wide(i) = succ(i).toLong; i += 1 }
+      append(wide)
+    }
 
     /** Flush the graph stream; returns (offsetsBytes, propertiesText). */
     def finish(): (Array[Byte], String) = {
-      offsetsBuf += out.writtenBits
+      recordOffset() // the end of the last node's record
       out.flush()
-      (BvOffsets.encode(offsetsBuf.toSeq, props),
+      (BvOffsets.encode(java.util.Arrays.copyOf(offsets, x + 1), props),
         props.copy(nodes = x, arcs = arcs).render)
     }
   }
@@ -218,15 +265,6 @@ final class BvEncoder(props: BvProperties) {
     * propertiesText) with `arcs` filled in.
     */
   def encode(adjacency: Array[Array[Int]]): (Array[Byte], Array[Byte], String) = {
-    val graphBos = new java.io.ByteArrayOutputStream()
-    val st = new Stream(graphBos)
-    adjacency.foreach(st.append)
-    val (offsets, propsText) = st.finish()
-    (graphBos.toByteArray, offsets, propsText)
-  }
-
-  /** Long-adjacency encode (values may exceed 2³¹ — shard-global ids). */
-  def encodeLong(adjacency: Array[Array[Long]]): (Array[Byte], Array[Byte], String) = {
     val graphBos = new java.io.ByteArrayOutputStream()
     val st = new Stream(graphBos)
     adjacency.foreach(st.append)
@@ -246,13 +284,6 @@ final class BvEncoder(props: BvProperties) {
 }
 
 object BvEncoder {
-  private[graft] def widenInts(a: Array[Int]): Array[Long] = {
-    val out = new Array[Long](a.length)
-    var i = 0
-    while (i < a.length) { out(i) = a(i).toLong; i += 1 }
-    out
-  }
-
   def apply(
       windowSize: Int = 7,
       maxRefCount: Int = 3,

@@ -18,11 +18,13 @@ object BvOffsets {
   /** Gap-encode absolute bit offsets with the properties' offset coding —
     * the exact wire format [[BvGraph.decodeOffsets]] reads (and
     * [[BvEncoder]]'s Stream.finish emits). */
-  def encode(offsets: Seq[Long], props: BvProperties): Array[Byte] = {
+  def encode(offsets: Array[Long], props: BvProperties): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new BitOutput(bos)
     var prev = 0L
-    offsets.foreach { o =>
+    var i = 0
+    while (i < offsets.length) {
+      val o = offsets(i)
       val gap = o - prev
       props.codings.offset match {
         case Coding.GAMMA => out.writeGamma(gap)
@@ -36,6 +38,7 @@ object BvOffsets {
         case c => throw new IllegalStateException(s"offset coding $c unsupported")
       }
       prev = o
+      i += 1
     }
     out.flush()
     bos.toByteArray
@@ -44,7 +47,7 @@ object BvOffsets {
   /** Rebuild the `.offsets` byte stream for an existing `.graph`. */
   def regenerate(props: BvProperties, graph: SeekableBytes): Array[Byte] = {
     val g = new BvGraph(props, graph, BvGraph.NoOffsets)
-    try encode(g.rebuildOffsets().toSeq, props) finally g.release()
+    try encode(g.rebuildOffsets(), props) finally g.release()
   }
 
   /** Local-file convenience: read `<basename>.{properties,graph}`, write a

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
@@ -391,10 +392,7 @@ class BvShardWriter(basename: String, partitionId: Int, taskId: Long,
         s"(> 2^31 cap); raise the `shards` option so range partitioning " +
         "cuts the id space finer")
     while (nextId < id) { enc.append(BvShardWriter.EMPTY); nextId += 1 } // gap nodes
-    val succ: Array[Long] =
-      if (big) row.getArray(succIdx).toLongArray()
-      else graft.bv.BvEncoder.widenInts(row.getArray(succIdx).toIntArray())
-    enc.append(succ)
+    enc.append(BvShardWriter.successors(row.getArray(succIdx), big))
     nextId += 1
   }
 
@@ -432,4 +430,13 @@ class BvShardWriter(basename: String, partitionId: Int, taskId: Long,
 
 object BvShardWriter {
   private val EMPTY = new Array[Long](0)
+
+  /** A row's successors as the encoder's `Array[Long]`, in one copy. */
+  private def successors(a: ArrayData, big: Boolean): Array[Long] = {
+    if (big) return a.toLongArray()
+    val out = new Array[Long](a.numElements())
+    var i = 0
+    while (i < out.length) { out(i) = a.getInt(i).toLong; i += 1 }
+    out
+  }
 }
