@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every declared query at SPARK_GRAFT_SF_DIR, one
   * JSON line on stdout. The noop sink executes the COMPLETE physical plan
@@ -160,7 +159,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Graft.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     // r11 measurement fix (documented in OPTIMIZATION_r11.md): the noisy
     // family's blanket 5-sample rule predates the clean/spread resampling
@@ -174,19 +173,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_RUNS_NOISY", "3").toInt)
     def isNoisy(name: String): Boolean =
       name.startsWith("graph_") || name == "layout_zorder"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle spill on scratch (tmpfs when available): production boxes
-      // provision NVMe local dirs; this VM's /tmp shares the OS virtio
-      // disk and the graph family's own spills show up as iowait ([[Scratch]])
-      .config("spark.local.dir", Scratch.dir("spark_local"))
+    val spark = Graft.session(conf = Map(
       // streaming determinism: the state store's background maintenance
       // (snapshot compaction) fires on a wall-clock timer and lands
       // inside whichever query is unlucky — push it past any single
@@ -194,10 +181,8 @@ object Bench {
       // cost a stream_* row pays; 2 retained batches (the minimum that
       // keeps recovery sound) cuts the per-commit file churn that
       // dominated the stream family's 2x swings on unchanged code
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s",
+      "spark.sql.streaming.minBatchesToRetain" -> "2"))
     // untimed warmup: JIT + codegen + parquet reader init so the first
     // timed query doesn't absorb JVM start-up costs
     SparkEntry.queries("scalar_funcs")(spark, sfDir)
@@ -209,9 +194,9 @@ object Bench {
     // the end so in-bench drift is visible too
     cpuProbe(1): Unit
     val probe1Start = cpuProbe(1)
-    val probeAll = cpuProbe(cpus.toInt)
+    val probeAll = cpuProbe(cpus)
     val memProbe1Start = memProbe(1)
-    val memProbeAll = memProbe(cpus.toInt)
+    val memProbeAll = memProbe(cpus)
     // contention thresholds (the round-7 lesson: the driver's record read
     // 1.92 s/query where a quiet box reproduces 1.24 — its own load/steal
     // columns showed load to 19.7 and steal to 25.6% on exactly the slow
@@ -223,7 +208,7 @@ object Bench {
     // record adjudicates itself.
     val stealMax = sys.env.getOrElse("SPARK_GRAFT_STEAL_MAX", "2.0").toDouble
     val loadMax = sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX",
-      (cpus.toInt / 4.0).toString).toDouble
+      (cpus / 4.0).toString).toDouble
     val spreadMax = sys.env.getOrElse("SPARK_GRAFT_SPREAD_MAX", "2.0").toDouble
     val wallCap = sys.env.getOrElse("SPARK_GRAFT_QUERY_WALL", "45").toDouble
     // a failed query reports -1 (never its partial elapsed time, which

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Rehearsal.timed
 
 /** Embedding-pipeline scale rehearsal: drive the k-means engine
   * ([[graft.queries.SimilarityQueries.lloydTwoSteps]] — the SHARED
@@ -32,23 +33,10 @@ import org.apache.spark.sql.functions._
   * k·dim-sized, which is exactly what this measures.
   */
 object EmbedScaleRehearsal {
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+    Rehearsal.run(args, defaultSize = 2000000L)(rehearse)
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-
+  private def rehearse(spark: SparkSession, n: Long): Seq[(String, Any)] = {
     // generator: one codegen'd projection over spark.range — center bit
     // from xxhash64(cluster·64 + dim) (same value for every member of a
     // cluster), jitter from xxhash64(vec·64 + dim, salt) % 201 ∈
@@ -101,16 +89,13 @@ object EmbedScaleRehearsal {
     val (pqTotal, pqMis) = (resPq.getLong(0), resPq.getLong(1))
     val ok = total == nVec && mis1 == 0L && mis2 == 0L &&
       pqTotal == nVec && pqMis == 0L
-    def f(v: Double): String = f"$v%.2f"
-    println(s"""{"vectors":$n,"dims":64,"k":8,""" +
-      s""""lloyd2_sec":${f(tLloyd)},""" +
-      s""""kvec_per_sec":${f(nVec / tLloyd / 1000.0)},""" +
-      s""""mismatch_round1":$mis1,"mismatch_round2":$mis2,""" +
-      s""""sum_sq_dist":$ssd,""" +
-      s""""pq_sec":${f(tPq)},""" +
-      s""""pq_kvec_per_sec":${f(nVec / tPq / 1000.0)},""" +
-      s""""pq_code_mismatch":$pqMis,"checks":$ok}""")
-    spark.stop()
-    if (!ok) sys.exit(1)
+    Seq("vectors" -> n, "dims" -> 64, "k" -> 8,
+      "lloyd2_sec" -> tLloyd,
+      "kvec_per_sec" -> nVec / tLloyd / 1000.0,
+      "mismatch_round1" -> mis1, "mismatch_round2" -> mis2,
+      "sum_sq_dist" -> ssd,
+      "pq_sec" -> tPq,
+      "pq_kvec_per_sec" -> nVec / tPq / 1000.0,
+      "pq_code_mismatch" -> pqMis, "checks" -> ok)
   }
 }

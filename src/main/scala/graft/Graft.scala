@@ -7,16 +7,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * graph is queryable from `spark.sql(...)`.
   */
 object Graft {
-  /** A SparkSession wired for the engine: extensions (fnv64/vec_dot),
-    * AQE, UTC, and sane local shuffle parallelism. */
-  def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession =
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+  /** Local cores every run uses: `SPARK_GRAFT_CPUS`, default 32. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The one session builder: every main (Bench, Verify, Profile,
+    * PlanAudit, the rehearsals) and the test suite start here, so they
+    * all run the config users get. Base config: `local[cpus]`, shuffle
+    * partitions = cpus, AQE with partition coalescing, UTC, the engine's
+    * extensions (fnv64/vec_dot/...), nanosecond parquet timestamps read as
+    * longs, no UI, and shuffle spill under [[Scratch]] (tmpfs when
+    * available). `conf` entries override or extend the base; each caller
+    * passes only the settings it has a documented reason for. Sets the
+    * log level to WARN. */
+  def session(cpus: Int = Graft.cpus,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val base = Map(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false")
+    // by-name default: Scratch is only touched when not overridden
+    val local = "spark.local.dir" ->
+      conf.getOrElse("spark.local.dir", Scratch.dir("spark_local"))
+    val spark = SparkSession.builder().config(base + local ++ conf).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Register every testdata table under its name as a temp view, so the
     * whole relational surface is available to plain SQL. */

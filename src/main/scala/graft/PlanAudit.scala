@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit over the whole declared query surface: executes
   * every query at a small SF (so AQE settles to its final plan) and
   * records the plan shape — join strategies, exchange count, codegen
@@ -17,15 +15,9 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 8 cpus, explicitly: the committed PLANS.md was generated at
+    // local[8] with 8 shuffle partitions
+    val spark = Graft.session(cpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
@@ -114,13 +106,11 @@ object PlanAudit {
         topk: Boolean, flags: String)
     def auditOne(name: String, dir: String): Either[String, Audit] =
       try {
-        // full cache reset: the audit must see each query's REAL plan, not
-        // an InMemoryTableScan over whatever ran first (memoized pair
-        // tables, leftover GraphX caches)
-        Caches.hardSweep(spark)
-        val df = SparkEntry.queries(name)(spark, dir)
-        df.collect() // drive AQE to the final plan
-        val nodes = liveNodes(df.queryExecution.executedPlan)
+        // a hard sweep first: the audit must see each query's REAL plan,
+        // not an InMemoryTableScan over whatever ran first (memoized pair
+        // tables, leftover GraphX caches); the run drives AQE to the
+        // final plan
+        val nodes = liveNodes(Profile.runOnce(spark, dir, name)._1.executedPlan)
         def has(tok: String): Boolean = nodes.exists(_.contains(tok))
         val joins = Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
           .filter(has).map(_.replace("Join", "")).mkString("+")

@@ -1,31 +1,74 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 
-/** Ad-hoc profiling harness: run the named queries in ONE warm session
-  * (bench-identical config), print per-run wall seconds and, with
-  * -Dgraft.explain=1, the AQE-final formatted plan. Iteration tool only —
-  * the driver contract mains are Verify/Bench.
+/** Profiling and plan-dump tool: run the named queries in ONE session
+  * (Bench's config, and Bench's cold-cache discipline of a hard sweep
+  * before every run) and print per-run wall seconds. Given a plan
+  * directory, it also writes the last run's AQE-final formatted plan
+  * (`isFinalPlan=true`) to `<planDir>/<query>_<suffix>.txt`, the layout
+  * the optimization rounds commit under `plans/rNN/`. The dumped plan is
+  * the plan of the timed run itself, not of a second execution.
+  * Iteration tool only — the driver contract mains are Verify/Bench.
   *
-  * Usage: Profile <sfDir> <query>[,query...] [runs]
+  * Usage: Profile <sfDir> <query>[,query...] [runs] [planDir suffix]
+  * (runs defaults to 2; -Dgraft.jobs=1 adds per-job timing)
   */
 object Profile {
+  // sub-plan probes for decomposition (not part of the query surface)
+  private val extras: Map[String, (SparkSession, String) => DataFrame] =
+    Map("_copurchase" -> ((s, d) => queries.GraphAlgos.coPurchaseEdges(s, d)),
+      // architectural floor of one iteration round: lazy localCheckpoint
+      // of a trivially-transformed 20k-row frame + 1-row agg action,
+      // 20 rounds — isolates the per-barrier cost every iterative query
+      // pays from any real operator work
+      "_roundfloor" -> ((s, _) => {
+        import org.apache.spark.sql.functions._
+        var df = s.range(20000).select(col("id").as("x"), col("id").as("h"))
+        var ids = Set.empty[Int]
+        for (r <- 1 to 20) {
+          val t0 = System.nanoTime()
+          val (ck, nIds) = queries.GraphAlgos.checkpointWithIdsLazy(
+            df.select(col("x"), (col("h") + r).as("h")))
+          val st = ck.agg(sum(col("h"))).head()
+          require(!st.isNullAt(0))
+          queries.GraphAlgos.freeRdds(s, ids)
+          df = ck; ids = nIds
+          println(f"[floor] round $r: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        }
+        df
+      }),
+      // the streaming replay harness's own cost (see Bench's
+      // stream_harness_floor) — profiled here so -Dgraft.jobs=1 can
+      // decompose it into staging writes vs micro-batch commits
+      "_streamfloor" -> ((s, d) =>
+        graft.streaming.StreamingOps.harnessFloor(s, d)))
+
+  /** Hard-sweep every cache, then build `name` (a declared query or one
+    * of the probes above) and run it ONCE through its own
+    * QueryExecution's `toRdd`, consuming every row driver-free. Returns
+    * that execution, whose `executedPlan` is now the AQE-final plan, and
+    * the seconds the build and run took (the sweep is not timed). */
+  def runOnce(spark: SparkSession, sfDir: String, name: String)
+      : (QueryExecution, Double) = {
+    Caches.hardSweep(spark)
+    val t0 = System.nanoTime()
+    val qe = SparkEntry.queries.getOrElse(name, extras(name))(spark, sfDir)
+      .queryExecution
+    qe.toRdd.foreachPartition { it => while (it.hasNext) { it.next(); () } }
+    (qe, (System.nanoTime() - t0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2 && args.length != 4,
+      "usage: Profile <sfDir> <query>[,query...] [runs] [planDir suffix]")
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val runs = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val planOut = args.lift(3).map(dir => (dir, args(4)))
+    val spark = Graft.session()
     // -Dgraft.jobs=1: per-JOB timing (id, wall ms, #stages, #tasks,
     // description) — decomposes barrier-bound iterative queries into
     // their actions/broadcast-collect jobs, which per-query wall time
@@ -49,50 +92,16 @@ object Profile {
           }
         })
     // warmup (JIT/codegen/parquet init), same as Bench
-    SparkEntry.queries("scalar_funcs")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    // sub-plan probes for decomposition (not part of the query surface)
-    val extras: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Map("_copurchase" -> ((s, d) => queries.GraphAlgos.coPurchaseEdges(s, d)),
-        // architectural floor of one iteration round: lazy localCheckpoint
-        // of a trivially-transformed 20k-row frame + 1-row agg action,
-        // 20 rounds — isolates the per-barrier cost every iterative query
-        // pays from any real operator work
-        "_roundfloor" -> ((s, _) => {
-          import org.apache.spark.sql.functions._
-          var df = s.range(20000).select(col("id").as("x"), col("id").as("h"))
-          var ids = Set.empty[Int]
-          for (r <- 1 to 20) {
-            val t0 = System.nanoTime()
-            val (ck, nIds) = queries.GraphAlgos.checkpointWithIdsLazy(
-              df.select(col("x"), (col("h") + r).as("h")))
-            val st = ck.agg(sum(col("h"))).head()
-            require(!st.isNullAt(0))
-            queries.GraphAlgos.freeRdds(s, ids)
-            df = ck; ids = nIds
-            println(f"[floor] round $r: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-          }
-          df
-        }),
-        // the streaming replay harness's own cost (see Bench's
-        // stream_harness_floor) — profiled here so -Dgraft.jobs=1 can
-        // decompose it into staging writes vs micro-batch commits
-        "_streamfloor" -> ((s, d) =>
-          graft.streaming.StreamingOps.harnessFloor(s, d)))
+    runOnce(spark, sfDir, "scalar_funcs"): Unit
+    planOut.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
     names.foreach { name =>
       (1 to runs).foreach { i =>
-        // -Dgraft.sweep=1 replicates Bench's cold-cache discipline (hard
-        // sweep before every timed run) instead of warm-session timing
-        if (sys.props.get("graft.sweep").contains("1")) Caches.hardSweep(spark)
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries.getOrElse(name, extras(name))(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (qe, sec) = runOnce(spark, sfDir, name)
         println(f"[profile] $name run$i: $sec%.2f s")
-        if (i == runs && sys.props.get("graft.explain").contains("1")) {
-          df.collect() // settle AQE on the same QueryExecution
-          println(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
+        if (i == runs) planOut.foreach { case (dir, suffix) =>
+          val file = Paths.get(dir, s"${name}_$suffix.txt")
+          Files.writeString(file, qe.explainString(FormattedMode))
+          println(s"[profile] wrote $file")
         }
       }
     }

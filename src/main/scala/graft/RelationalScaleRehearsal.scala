@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Rehearsal.timed
 
 /** Relational scale rehearsal — the third axis next to [[ScaleRehearsal]]
   * (graph) and [[TextScaleRehearsal]] (curation): drive the core
@@ -84,24 +85,12 @@ object RelationalScaleRehearsal {
     per * (k / 50) * 50
   }
 
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(50000000L)
+  def main(args: Array[String]): Unit =
+    Rehearsal.run(args, defaultSize = 50000000L)(rehearse)
+
+  private def rehearse(spark: SparkSession, n: Long): Seq[(String, Any)] = {
     require(n % 10000 == 0, "n must be a multiple of 10000")
     val k = n / 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val base = fact(spark, n)
 
     // stage 1: q1-shape report — scan-dominant partial+final aggregation
@@ -153,14 +142,13 @@ object RelationalScaleRehearsal {
     }
     val distOk = nKeys == k
 
-    def f2(v: Double): String = f"$v%.2f"
-    def mrate(t: Double): String = f"${n / t / 1e6}%.1f"
-    println(s"""{"rows":$n,"keys":$k,""" +
-      s""""agg_sec":${f2(tAgg)},"agg_mrows_per_sec":${mrate(tAgg)},"agg_ok":$aggOk,""" +
-      s""""join_sec":${f2(tJoin)},"join_mrows_per_sec":${mrate(tJoin)},"join_ok":$joinOk,""" +
-      s""""topk_sec":${f2(tTop)},"topk_mrows_per_sec":${mrate(tTop)},"topk_ok":$topOk,""" +
-      s""""distinct_sec":${f2(tDist)},"distinct_mrows_per_sec":${mrate(tDist)},"distinct_ok":$distOk}""")
-    spark.stop()
-    if (!(aggOk && joinOk && topOk && distOk)) sys.exit(1)
+    def mrate(t: Double): Double = n / t / 1e6
+    Seq("rows" -> n, "keys" -> k,
+      "agg_sec" -> tAgg, "agg_mrows_per_sec" -> mrate(tAgg), "agg_ok" -> aggOk,
+      "join_sec" -> tJoin, "join_mrows_per_sec" -> mrate(tJoin), "join_ok" -> joinOk,
+      "topk_sec" -> tTop, "topk_mrows_per_sec" -> mrate(tTop), "topk_ok" -> topOk,
+      "distinct_sec" -> tDist, "distinct_mrows_per_sec" -> mrate(tDist),
+      "distinct_ok" -> distOk,
+      "checks" -> (aggOk && joinOk && topOk && distOk))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Rehearsal.timed
 
 /** Scale rehearsal: drive the BV sink + source well past the bench SF on
   * a synthetic web-ish graph, and print measured throughput as one JSON
@@ -19,10 +20,8 @@ import org.apache.spark.sql.functions._
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toInt).getOrElse(2000000)
     val avgDeg = args.lift(1).map(_.toInt).getOrElse(5)
     val shards = args.lift(2).map(_.toInt).getOrElse(32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // more shuffle partitions than cores at big n: 50M-node frames at 32
     // partitions put ~1.5M sketch/edge rows in ONE task's hash tables —
     // the per-task footprint, not the total, is what OOMs. 4x cores keeps
@@ -30,20 +29,16 @@ object ScaleRehearsal {
     // (this is exactly the shuffle.partitions sizing lever the brief
     // names for the 100 TB tier).
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      (cpus.toInt * 4).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
+      (Graft.cpus * 4).toString)
+    Rehearsal.run(args, defaultSize = 2000000L,
+      conf = Map("spark.sql.shuffle.partitions" -> shuffleParts)) {
+      (spark, n) => rehearse(spark, Math.toIntExact(n), avgDeg, shards)
     }
+  }
+
+  private def rehearse(spark: SparkSession, n: Int, avgDeg: Int,
+      shards: Int): Seq[(String, Any)] = {
+    import spark.implicits._
 
     // distributed deterministic generation: one task per id range
     val base = java.nio.file.Files.createTempDirectory("graft_scale").toString + "/g"
@@ -582,46 +577,45 @@ object ScaleRehearsal {
       (arcs, prOk, mism)
     }
 
-    def f(v: Double): String = f"$v%.2f"
-    println(s"""{"nodes":$n,"arcs":$mm,"shards":$shards,""" +
-      s""""bits_per_link":${f(bitsPerLink)},"write_sec":${f(tWrite)},""" +
-      s""""meta_agg_sec":${f(tMeta)},"full_decode_sec":${f(tFull)},""" +
-      s""""decode_mlinks_per_sec":${f(m2 / tFull / 1e6)},""" +
-      s""""degree_scan_sec":${f(tDeg)},"id_slice_sec":${f(tSlice)},""" +
-      s""""cold_slice_sec":${f(tColdSlice)},""" +
-      s""""cold_slice_shards_opened":$coldOpened,""" +
-      s""""cold_slice_shards_covering":$coveringShards,""" +
-      s""""kcore_rounds":$kcoreRounds,"kcore_sec":${f(tKcore)},""" +
-      s""""coreness_sec":${f(tCoreness)},"coreness_nodes":$corenessNodes,""" +
-      s""""coreness_monotone_violations":$corenessViol,""" +
-      s""""coreness_hist_diff":$corenessHistDiff,""" +
-      s""""coreness_fixpoint_rounds":$corenessFxRounds,""" +
-      s""""coreness_converged":$corenessConverged,"max_core":$maxCore,""" +
-      s""""louvain_sec":${f(tLouvain)},"louvain_coarse_edges":$coarseEdges,""" +
-      s""""louvain_q_scaled":[$q0s,$q1s,$q2s],"louvain_ok":$louvainOk,""" +
-      s""""runtime_join_sec":${f(tRt)},"runtime_join_edges":$rtEdges,""" +
-      s""""golomb_write_sec":${f(tWriteGol)},""" +
-      s""""golomb_full_decode_sec":${f(tFullGol)},""" +
-      s""""golomb_decode_mlinks_per_sec":${f(mGol / tFullGol / 1e6)},""" +
-      s""""golomb_bits_per_link":${f(bitsPerLinkGol)},""" +
-      s""""slice_edges":$sliceEdges,""" +
-      s""""scc_nodes":$sccN,"scc_rounds":$sccRounds,"scc_sec":${f(tScc)},""" +
-      s""""scc_on_cycle":$sccOnCycle,""" +
-      s""""hyperball_sec":${f(tHb)},"hyperball_avg_ball2":${f(hbAvgX100 / 100.0)},""" +
-      s""""pagerank_sec":${f(tPr)},""" +
-      s""""advisor_sec":${f(tAdv)},"advisor_buckets":${advRows.length},""" +
-      s""""advisor_uniform_best_bits":$advUniformBest,""" +
-      s""""advisor_mixed_bits":$advMixed,""" +
-      s""""advisor_gain_pct":${f(advGainPct)},""" +
-      s""""advisor_model_matches_encoder":$modelOk,""" +
-      s""""perm_sec":${f(tPerm)},"perm_bits_per_link":${f(permBpl)},""" +
-      s""""msf_sec":${f(tMsf)},"msf_nodes":$msfNodes,""" +
-      s""""msf_chosen":$msfChosen,"msf_components":$msfComps,""" +
-      s""""sssp_sec":${f(tSssp)},"sssp_reached":$ssspReached,""" +
-      s""""sssp_pregel_mismatches":$ssspMismatch,""" +
-      s""""longid_sec":${f(tBig)},"longid_arcs":$bigArcs,""" +
-      s""""longid_lpa_mismatches":$lpaMismatch,""" +
-      s""""checks":${corenessNodes == n.toLong && corenessViol == 0L &&
+    Seq("nodes" -> n, "arcs" -> mm, "shards" -> shards,
+      "bits_per_link" -> bitsPerLink, "write_sec" -> tWrite,
+      "meta_agg_sec" -> tMeta, "full_decode_sec" -> tFull,
+      "decode_mlinks_per_sec" -> m2 / tFull / 1e6,
+      "degree_scan_sec" -> tDeg, "id_slice_sec" -> tSlice,
+      "cold_slice_sec" -> tColdSlice,
+      "cold_slice_shards_opened" -> coldOpened,
+      "cold_slice_shards_covering" -> coveringShards,
+      "kcore_rounds" -> kcoreRounds, "kcore_sec" -> tKcore,
+      "coreness_sec" -> tCoreness, "coreness_nodes" -> corenessNodes,
+      "coreness_monotone_violations" -> corenessViol,
+      "coreness_hist_diff" -> corenessHistDiff,
+      "coreness_fixpoint_rounds" -> corenessFxRounds,
+      "coreness_converged" -> corenessConverged, "max_core" -> maxCore,
+      "louvain_sec" -> tLouvain, "louvain_coarse_edges" -> coarseEdges,
+      "louvain_q_scaled" -> Seq(q0s, q1s, q2s), "louvain_ok" -> louvainOk,
+      "runtime_join_sec" -> tRt, "runtime_join_edges" -> rtEdges,
+      "golomb_write_sec" -> tWriteGol,
+      "golomb_full_decode_sec" -> tFullGol,
+      "golomb_decode_mlinks_per_sec" -> mGol / tFullGol / 1e6,
+      "golomb_bits_per_link" -> bitsPerLinkGol,
+      "slice_edges" -> sliceEdges,
+      "scc_nodes" -> sccN, "scc_rounds" -> sccRounds, "scc_sec" -> tScc,
+      "scc_on_cycle" -> sccOnCycle,
+      "hyperball_sec" -> tHb, "hyperball_avg_ball2" -> hbAvgX100 / 100.0,
+      "pagerank_sec" -> tPr,
+      "advisor_sec" -> tAdv, "advisor_buckets" -> advRows.length,
+      "advisor_uniform_best_bits" -> advUniformBest,
+      "advisor_mixed_bits" -> advMixed,
+      "advisor_gain_pct" -> advGainPct,
+      "advisor_model_matches_encoder" -> modelOk,
+      "perm_sec" -> tPerm, "perm_bits_per_link" -> permBpl,
+      "msf_sec" -> tMsf, "msf_nodes" -> msfNodes,
+      "msf_chosen" -> msfChosen, "msf_components" -> msfComps,
+      "sssp_sec" -> tSssp, "sssp_reached" -> ssspReached,
+      "sssp_pregel_mismatches" -> ssspMismatch,
+      "longid_sec" -> tBig, "longid_arcs" -> bigArcs,
+      "longid_lpa_mismatches" -> lpaMismatch,
+      "checks" -> (corenessNodes == n.toLong && corenessViol == 0L &&
         corenessHistDiff == 0L && corenessConverged && maxCore >= 1L &&
         louvainOk && coarseEdges > 0L &&
         coldOpened == coveringShards.toLong && coldSliceEdges > 0L &&
@@ -632,7 +626,6 @@ object ScaleRehearsal {
         modelOk && permArcs == mm &&
         msfNodes - msfChosen == msfComps && msfChosen > 0 &&
         ssspMismatch == 0L && ssspReached > 1L &&
-        bigArcs == mm && bigPrOk && lpaMismatch == 0L}}""")
-    spark.stop()
+        bigArcs == mm && bigPrOk && lpaMismatch == 0L))
   }
 }

@@ -19,14 +19,16 @@ package graft
   * graft-owned `graft_scratch` subdirectory before any reaping happens:
   * the reaper deletes entries matching graft's own naming scheme, and a
   * shared dir (/tmp, a user-supplied SPARK_GRAFT_SCRATCH) may contain
-  * foreign files that happen to match `*_<digits>_<x>`. Bench/Verify
-  * point `spark.local.dir` here and the streaming replay harness keeps
+  * foreign files that happen to match `*_<digits>_<x>`. [[Graft.session]]
+  * points `spark.local.dir` here (so Bench, Verify, Profile, PlanAudit
+  * and the test suite spill here), and the streaming replay harness keeps
   * its per-query checkpoints here (deleted in `finally` — a leaked tmpfs
   * checkpoint would be leaked RAM, unlike a leaked /tmp file).
   * The SCALE REHEARSALS deliberately do NOT use this: at 50M nodes the
   * spill volume is a real fraction of RAM and tmpfs spill would compete
   * with the 48g heap — a production-shaped disk spill is the honest cost
-  * there.
+  * there. That decision lives in one place, [[Rehearsal.run]], which
+  * overrides `spark.local.dir` with the JVM tmpdir.
   */
 object Scratch {
   /** Resolved scratch base directory (created on first use). Entries are

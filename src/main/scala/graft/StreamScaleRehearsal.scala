@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import Rehearsal.timed
 
 /** Streaming scale rehearsal (r8 verdict item 6): nothing exercised the
   * state store past sf0.1 — the 18 oracle-gated stream_* queries replay a
@@ -30,34 +31,23 @@ import org.apache.spark.sql.streaming.Trigger
   * production state stores live on disk, and the honest cost includes
   * that I/O. */
 object StreamScaleRehearsal {
-  def main(args: Array[String]): Unit = {
-    val nEvents = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+  def main(args: Array[String]): Unit =
+    Rehearsal.run(args, defaultSize = 10000000L, conf = Map(
       // state-heavy shuffles: state store partition count == shuffle
       // partitions, pinned at the FIRST batch; 2x cores balances commit
       // parallelism against per-batch file churn (each partition writes
       // a changelog/commit per batch)
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      "spark.sql.shuffle.partitions" -> (Graft.cpus * 2).toString,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       // changelog checkpointing: commit the per-batch DELTA, snapshot in
       // the background — the production setting for frequent commits (a
       // full RocksDB snapshot per partition per batch measured ~1.1 s
       // each here, dominating wall-clock 15:1 over the actual work)
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true"))(rehearse)
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+  private def rehearse(spark: SparkSession, nEvents: Long): Seq[(String, Any)] = {
     val work = java.nio.file.Files.createTempDirectory("graft_stream_scale")
       .toString
 
@@ -129,19 +119,6 @@ object StreamScaleRehearsal {
     val nDistinct = dedupOut.head().getLong(0)
 
     val totalIn = nEvents + nEvents / 16
-    def f(v: Double): String = f"$v%.2f"
-    println(s"""{"events":$nEvents,"ingested_rows":$totalIn,""" +
-      s""""gen_sec":${f(tGen)},""" +
-      s""""agg_sec":${f(tAgg)},"agg_mrows_per_sec":${f(totalIn / tAgg / 1e6)},""" +
-      s""""agg_batches":$aggBatches,"agg_state_rows":$aggStateRows,""" +
-      s""""agg_commit_ms":$aggCommitMs,"agg_out_rows":$aggRows,""" +
-      s""""dedup_sec":${f(tDedup)},""" +
-      s""""dedup_mrows_per_sec":${f(totalIn / tDedup / 1e6)},""" +
-      s""""dedup_batches":$dedupBatches,"dedup_state_rows":$dedupStateRows,""" +
-      s""""dedup_commit_ms":$dedupCommitMs,""" +
-      s""""checks":${aggMismatch == 0L && aggRows > 0L &&
-        nDistinct == nEvents && aggBatches >= 8L && dedupBatches >= 8L &&
-        dedupStateRows >= nEvents}}""")
     // best-effort cleanup: 10M-event corpus + RocksDB checkpoints on disk
     def rm(p: java.io.File): Unit = {
       if (!java.nio.file.Files.isSymbolicLink(p.toPath)) {
@@ -150,6 +127,17 @@ object StreamScaleRehearsal {
       p.delete(): Unit
     }
     rm(new java.io.File(work))
-    spark.stop()
+    Seq("events" -> nEvents, "ingested_rows" -> totalIn,
+      "gen_sec" -> tGen,
+      "agg_sec" -> tAgg, "agg_mrows_per_sec" -> totalIn / tAgg / 1e6,
+      "agg_batches" -> aggBatches, "agg_state_rows" -> aggStateRows,
+      "agg_commit_ms" -> aggCommitMs, "agg_out_rows" -> aggRows,
+      "dedup_sec" -> tDedup,
+      "dedup_mrows_per_sec" -> totalIn / tDedup / 1e6,
+      "dedup_batches" -> dedupBatches, "dedup_state_rows" -> dedupStateRows,
+      "dedup_commit_ms" -> dedupCommitMs,
+      "checks" -> (aggMismatch == 0L && aggRows > 0L &&
+        nDistinct == nEvents && aggBatches >= 8L && dedupBatches >= 8L &&
+        dedupStateRows >= nEvents))
   }
 }

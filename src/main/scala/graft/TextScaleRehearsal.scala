@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Rehearsal.timed
 
 /** Text-pipeline scale rehearsal: drive the curation/dedup operators well
   * past the bench SF on a synthetic corpus, and print measured throughput
@@ -73,23 +74,11 @@ object TextScaleRehearsal {
     sb.toString
   }
 
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+  def main(args: Array[String]): Unit =
+    Rehearsal.run(args, defaultSize = 1000000L)(rehearse)
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+  private def rehearse(spark: SparkSession, n: Long): Seq[(String, Any)] = {
+    import spark.implicits._
 
     // distributed deterministic corpus; persisted because four stages
     // consume it (at 100 TB this is the parquet table itself)
@@ -320,30 +309,29 @@ object TextScaleRehearsal {
     corpus.unpersist(blocking = false)
     val expDup = n / 100L // planted exact groups == planted near pairs
     val expSpam = (n + 999L) / 1000L // ids ≡ 0 (mod 1000) incl. id 0
-    def f(v: Double): String = f"$v%.2f"
-    def rate(c: Long, t: Double): String = f(c / t / 1000.0)
+    def rate(c: Long, t: Double): Double = c / t / 1000.0
     // the cumsum's final offset must equal the exact token total — the
     // two-phase scheme is only worth rehearsing if it is provably lossless
-    println(s"""{"docs":$n,"total_tokens":$totTok,""" +
-      s""""c4_sec":${f(tC4)},"c4_kdocs_per_sec":${rate(nDocs, tC4)},""" +
-      s""""c4_kept":$nKept,""" +
-      s""""exact_sec":${f(tExact)},"exact_kdocs_per_sec":${rate(nDocs, tExact)},""" +
-      s""""exact_groups":$nGroups,"exact_dup_groups":$nDupGroups,""" +
-      s""""minhash_sec":${f(tMinhash)},"minhash_kdocs_per_sec":${rate(nDocs, tMinhash)},""" +
-      s""""minhash_pairs":$nPairs,""" +
-      s""""jaccard_sec":${f(tJaccard)},"jaccard_kdocs_per_sec":${rate(nDocs, tJaccard)},""" +
-      s""""jaccard_pairs":$nJacPairs,"hub_shingles":$nHub,"hub_max_df":$maxDf,""" +
-      s""""containment_sec":${f(tCont)},""" +
-      s""""containment_kdocs_per_sec":${rate(nDocs, tCont)},""" +
-      s""""containment_pairs":$nContPairs,""" +
-      s""""pack_sec":${f(tPack)},"pack_kdocs_per_sec":${rate(nDocs, tPack)},""" +
-      s""""cdc_sec":${f(tCdc)},"cdc_kdocs_per_sec":${rate(nDocs, tCdc)},""" +
-      s""""cdc_chunks":$totChunks,"cdc_full_dup_docs":$nFullDup,""" +
-      s""""reservoir_sec":${f(tRes)},"reservoir_rows":$resRows,""" +
-      s""""reservoir_sources":$resSources,""" +
-      s""""bpe_sec":${f(tBpe)},"bpe_rounds_ok":$bpeRounds,""" +
-      s""""bpe_applied":$bpeApplied,""" +
-      s""""checks":${resRows == 16L * 64L && resSources == 16L &&
+    Seq("docs" -> n, "total_tokens" -> totTok,
+      "c4_sec" -> tC4, "c4_kdocs_per_sec" -> rate(nDocs, tC4),
+      "c4_kept" -> nKept,
+      "exact_sec" -> tExact, "exact_kdocs_per_sec" -> rate(nDocs, tExact),
+      "exact_groups" -> nGroups, "exact_dup_groups" -> nDupGroups,
+      "minhash_sec" -> tMinhash, "minhash_kdocs_per_sec" -> rate(nDocs, tMinhash),
+      "minhash_pairs" -> nPairs,
+      "jaccard_sec" -> tJaccard, "jaccard_kdocs_per_sec" -> rate(nDocs, tJaccard),
+      "jaccard_pairs" -> nJacPairs, "hub_shingles" -> nHub, "hub_max_df" -> maxDf,
+      "containment_sec" -> tCont,
+      "containment_kdocs_per_sec" -> rate(nDocs, tCont),
+      "containment_pairs" -> nContPairs,
+      "pack_sec" -> tPack, "pack_kdocs_per_sec" -> rate(nDocs, tPack),
+      "cdc_sec" -> tCdc, "cdc_kdocs_per_sec" -> rate(nDocs, tCdc),
+      "cdc_chunks" -> totChunks, "cdc_full_dup_docs" -> nFullDup,
+      "reservoir_sec" -> tRes, "reservoir_rows" -> resRows,
+      "reservoir_sources" -> resSources,
+      "bpe_sec" -> tBpe, "bpe_rounds_ok" -> bpeRounds,
+      "bpe_applied" -> bpeApplied,
+      "checks" -> (resRows == 16L * 64L && resSources == 16L &&
         resPrefixOk && bpeRounds == 2L && bpeApplied > 0L &&
         nDocs == n && nGroups == n - expDup &&
         nDupGroups == expDup && nPairs == 2 * expDup &&
@@ -352,7 +340,6 @@ object TextScaleRehearsal {
         nPacked == n && lastEnd == totTok &&
         nKept == n - expSpam &&
         nPlantedFull == 2 * expDup && nFullDup >= 2 * expDup &&
-        totChunks * 16 < totChars && totChars < totChunks * 256}}""")
-    spark.stop()
+        totChunks * 16 < totChars && totChars < totChunks * 256))
   }
 }

@@ -1,11 +1,14 @@
 #!/bin/bash
-# Run all three scale rehearsals (graph / curation / relational), each of
-# which CHECKS its planted or closed-form expectations and exits non-zero
-# on any mismatch. Sizes are the SCALE.md-documented defaults; pass
-# smaller ones for a smoke run:
+# Run all five scale rehearsals (graph / curation / relational /
+# embeddings / streaming). Each CHECKS its planted or closed-form
+# expectations, prints one JSON line whose "checks" key is their
+# conjunction, and exits non-zero when it is false; pipefail carries that
+# status through the output filter, so the script stops at the first
+# failing rehearsal and exits non-zero. Sizes are the SCALE.md-documented
+# defaults; pass smaller ones for a smoke run:
 #   tools/run_rehearsals.sh [graphNodes] [textDocs] [relRows] [embVecs] [streamEvents]
-set -e
-cd /root/repo
+set -eo pipefail
+cd "$(dirname "$0")/.."
 GN=${1:-50000000}
 TD=${2:-1000000}
 RR=${3:-50000000}
@@ -26,8 +29,7 @@ run() {
   # ~250M-arc working set, and the long-id section carries a second full
   # graph — 48g OOM'd mid-run; ScaleRehearsal also defaults
   # shuffle.partitions to 4x cores so per-task hash tables stay bounded
-  java $ADD_OPENS -Xmx96g -Dspark.ui.enabled=false \
-    -Dspark.sql.session.timeZone=UTC \
+  java $ADD_OPENS -Xmx96g \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@" 2>/dev/null \
     | grep -E '^\{'
 }
