@@ -2,12 +2,19 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+  SparkToParquetSchemaConverter}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
   TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface over the `events` schema (SURVEY.md §2.3
   * "Streaming" row — absent in the reference, declared in the engine plan):
@@ -354,6 +361,36 @@ object StreamingOps {
   private def streamShufflePartitions: String =
     sys.env.getOrElse("GRAFT_STREAM_PARTS", "8")
 
+  /** Runs one replay query (`body` starts, drains and stops it) under
+    * the harnesses' three session overrides, each restored in `finally`:
+    *
+    *  - `shuffle.partitions` at [[streamShufflePartitions]]: the first
+    *    batch pins it into the query's offset metadata;
+    *  - no-data micro-batches OFF (optimization round 10): the flush
+    *    choreography already provides one DATA batch per stateful stage,
+    *    which is exactly the propagation a no-data batch performs. With
+    *    the default on, every watermark-advancing data batch was followed
+    *    by a redundant empty micro-batch paying the full commit path.
+    *    Results are identical by construction of the schedule; the oracle
+    *    gate and the batch-equality specs pin it per query;
+    *  - checkpoint `FileContext` on [[graft.hadoop.LocalFs]]: offset,
+    *    commit and source logs and every state-store delta, checksum and
+    *    `.crc` file are written without the `readlink`/`chmod` forks of
+    *    Hadoop's shell-based local filesystem (about 650 per query). */
+  private def withReplayConf[T](s: SparkSession)(body: => T): T = {
+    val overrides = Seq(
+      "spark.sql.shuffle.partitions" -> streamShufflePartitions,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+      "fs.AbstractFileSystem.file.impl" -> classOf[graft.hadoop.LocalFs].getName)
+    val prev = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
+    overrides.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   private def replayRows(s: SparkSession, d: String): Array[Replay] = {
     import s.implicits._
     graft.Tables.events(s, d)
@@ -382,8 +419,8 @@ object StreamingOps {
     *
     * The state store runs at 8 partitions (a few thousand keys do not
     * need 32 partitions of per-batch commit files; `shuffle.partitions`
-    * is pinned into the query's offset metadata at batch 0 and the
-    * session conf restored right after). The driver-side collect is the
+    * is pinned into the query's offset metadata at batch 0; the session
+    * overrides are [[withReplayConf]]'s). The driver-side collect is the
     * REPLAY HARNESS, not the operator: the streaming plan is the same
     * shuffle-once, bounded-state query a production `readStream` would
     * run — at 100 TB/day the source is Kafka or files and no collect
@@ -428,49 +465,44 @@ object StreamingOps {
       .withWatermark("ts", "10 minutes")
     val out = build(src)
     s.catalog.dropTempView(sink) // re-runs in one session replace the sink
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    // no-data micro-batches off — same argument as [[replayThroughFiles]]:
-    // the flush data batches perform every propagation an empty batch
-    // would, so the empty batches were pure per-trigger commit overhead
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = s.conf.get(noDataKey)
-    s.conf.set(noDataKey, "false")
     // explicit checkpoint on scratch (tmpfs when available): the default
     // temp checkpoint lands in /tmp on the OS disk, and the state store's
     // per-batch delta/commit files + offset log are the bulk of a short
     // replay's wall-clock there ([[graft.Scratch]]); deleted in finally —
     // a leaked tmpfs checkpoint is leaked RAM
     val ckpt = graft.Scratch.dir(s"ckpt_$sink")
-    val q = out.writeStream.format("memory").queryName(sink)
-      .option("checkpointLocation", ckpt)
-      .outputMode(outputMode).start()
-    try {
-      // batch 0 pins shuffle.partitions into the query's offset metadata;
-      // only after it has run is the session conf safe to restore
-      stream.addData(expand(b1.toSeq)); q.processAllAvailable()
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      stream.addData(expand(b2.toSeq) ++ sentinels(sentinelUs))
-      q.processAllAvailable()
-      // trailing sentinel batches under the advanced watermark flush all
-      // real state through the append sink; CHAINED stateful operators
-      // need one flush batch per extra stateful stage (operator k's final
-      // rows are produced in the batch where operator k-1 emitted them,
-      // so an n-deep chain drains over n batches)
-      for (i <- 1 to math.max(1, flushBatches)) {
-        stream.addData(sentinels(sentinelUs + i * 1000000L))
+    try withReplayConf(s) {
+      val q = out.writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode(outputMode).start()
+      try {
+        stream.addData(expand(b1.toSeq)); q.processAllAvailable()
+        stream.addData(expand(b2.toSeq) ++ sentinels(sentinelUs))
         q.processAllAvailable()
-      }
-    } finally {
-      // a throwing stop() must not leak the conf override or the tmpfs
-      // checkpoint (leaked tmpfs = leaked RAM)
-      try q.stop() finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set(noDataKey, prevNoData)
-        graft.Scratch.delete(ckpt)
-      }
-    }
+        // trailing sentinel batches under the advanced watermark flush all
+        // real state through the append sink; CHAINED stateful operators
+        // need one flush batch per extra stateful stage (operator k's final
+        // rows are produced in the batch where operator k-1 emitted them,
+        // so an n-deep chain drains over n batches)
+        for (i <- 1 to math.max(1, flushBatches)) {
+          stream.addData(sentinels(sentinelUs + i * 1000000L))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    } finally graft.Scratch.delete(ckpt) // also when stop() throws
     s.table(sink)
+  }
+
+  /** Writes `file` as a parquet file of `schema` with no row groups, the
+    * schema-only part file Spark's `write.parquet` of an empty frame
+    * emits. No Spark job and no Hadoop `FileSystem` call. */
+  private def writeEmptyParquet(schema: StructType, file: java.nio.file.Path): Unit = {
+    val w = new ParquetFileWriter(new LocalOutputFile(file),
+      new SparkToParquetSchemaConverter(SQLConf.get).convert(schema),
+      ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE,
+      ParquetWriter.MAX_PADDING_SIZE_DEFAULT, null, ParquetProperties.builder().build())
+    w.start()
+    w.end(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, schema.json))
   }
 
   /** FILE-SOURCE replay harness — the scale ingest path (at 100 TB/day
@@ -478,9 +510,15 @@ object StreamingOps {
     * watermark schedule as [[replayThroughStream]], but the source is
     * `readStream` over a parquet DIRECTORY the corpus is dropped into in
     * file batches, and NOTHING here collects a corpus row to the driver —
-    * the batch boundary comes from one 1-row min/max aggregate, the batch
-    * files are distributed writes, and per-trigger arrival is a file
-    * rename into the watched directory (atomic per file). Every batch-2
+    * the batch boundary comes from one 1-row min/max aggregate, every
+    * batch's files come from ONE distributed write partitioned by batch
+    * number (a batch with no rows gets one schema-only part file, so it
+    * still runs as a micro-batch), and per-trigger arrival is a file
+    * rename into the watched directory (atomic per file). Checkpoint I/O
+    * runs on [[graft.hadoop.LocalFs]] ([[withReplayConf]]): the offset,
+    * commit and source logs and the state store's delta files are written
+    * without process forks, with Spark's and Hadoop's checksums, `.crc`
+    * files and atomic renames unchanged. Every batch-2
     * row is strictly later than batch 1's max, so the watermark can never
     * drop a row and the streaming result equals the batch result by
     * construction; `flushBatches` trailing sentinel files drain chained
@@ -526,75 +564,55 @@ object StreamingOps {
     def sentinelDf(usv: Long) =
       sentinelTypes.map(t => (-1L, -1L, usv, 0L, t))
         .toDF("event_id", "user_id", "us", "v_cents", "event_type")
-    // distributed writes into staging; arrival = renaming the part
-    // files into the watched directory (atomic per file)
-    def staged(df: DataFrame, name: String): Seq[java.nio.file.Path] = {
-      val out = root.resolve(name)
-      df.write.parquet(out.toString)
+    // ONE distributed write stages every batch, partitioned by batch
+    // number; arrival = renaming a batch's part files into the watched
+    // directory (atomic per file)
+    val batches = Seq(expand(ev.filter(col("us") <= midUs)),
+      expand(ev.filter(col("us") > midUs)).unionByName(sentinelDf(sentinelUs))) ++
+      (1 to math.max(1, flushBatches)).map(i => sentinelDf(sentinelUs + i * 1000000L))
+    val stage = root.resolve("stage")
+    batches.zipWithIndex.map { case (df, i) => df.withColumn("batch", lit(i + 1)) }
+      .reduce(_ unionByName _)
+      .write.partitionBy("batch").parquet(stage.toString)
+    // a batch with no rows has no partition directory; it arrives as one
+    // schema-only part file, so it still runs as a (0-row) micro-batch
+    def staged(b: Int): Seq[java.nio.file.Path] = {
+      val dir = stage.resolve(s"batch=$b")
+      if (!java.nio.file.Files.isDirectory(dir)) {
+        java.nio.file.Files.createDirectories(dir)
+        writeEmptyParquet(ev.schema, dir.resolve("part-empty.parquet"))
+      }
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(out).iterator().asScala.toSeq
+      java.nio.file.Files.list(dir).iterator().asScala.toSeq
         .filter(_.getFileName.toString.endsWith(".parquet"))
     }
-    val b1 = staged(expand(ev.filter(col("us") <= midUs)), "b1")
-    val b2 = staged(expand(ev.filter(col("us") > midUs))
-      .unionByName(sentinelDf(sentinelUs)), "b2")
-    val flushes = (1 to math.max(1, flushBatches)).map(i =>
-      staged(sentinelDf(sentinelUs + i * 1000000L), s"b${2 + i}"))
-    def arrive(files: Seq[java.nio.file.Path], pfx: String): Unit =
-      files.zipWithIndex.foreach { case (f, i) =>
-        java.nio.file.Files.move(f, inDir.resolve(s"${pfx}_$i.parquet")) }
+    def arrive(b: Int): Unit =
+      staged(b).zipWithIndex.foreach { case (f, i) =>
+        java.nio.file.Files.move(f, inDir.resolve(s"b${b}_$i.parquet")) }
     val src = s.readStream.schema(ev.schema).parquet(inDir.toString)
       .withColumn("ts", timestamp_micros(col("us")))
       .withWatermark("ts", "10 minutes")
     s.catalog.dropTempView(sink)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    // No-data micro-batches OFF (optimization round 10): the harness's
-    // flush choreography already provides one DATA batch per stateful
-    // stage, which is exactly the propagation a no-data batch performs —
-    // with the default on, every watermark-advancing data batch was
-    // followed by a redundant empty micro-batch paying the full commit
-    // path (offset/commit log fsyncs + one state-store commit per
-    // partition per stateful operator). Results are identical BY
-    // CONSTRUCTION of the schedule (every emission a no-data batch would
-    // perform happens in the next flush data batch instead, and a flush
-    // batch exists for every stage); the oracle gate and the
-    // batch-equality specs pin it per query. At scale the same flag
-    // removes one cluster-wide barrier per trigger.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = s.conf.get(noDataKey)
-    s.conf.set(noDataKey, "false")
-    val q = build(src)
-      .writeStream.format("memory").queryName(sink)
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .outputMode(outputMode).start()
-    try {
-      // the FIRST batch that runs pins shuffle.partitions=8 into the
-      // query's offset metadata; an `expand` may leave batch 1 with zero
-      // files (the harness floor feeds empty data batches), so the
-      // restore happens in `finally` — nothing else in this function
-      // reads the session conf while the query drains
-      arrive(b1, "b1"); q.processAllAvailable()
-      arrive(b2, "b2"); q.processAllAvailable()
-      flushes.zipWithIndex.foreach { case (fs, i) =>
-        arrive(fs, s"b${3 + i}"); q.processAllAvailable()
-      }
-    } finally {
-      try q.stop()
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set(noDataKey, prevNoData)
-      }
+    withReplayConf(s) {
+      val q = build(src)
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .outputMode(outputMode).start()
+      try batches.indices.foreach { i => arrive(i + 1); q.processAllAvailable() }
+      finally q.stop()
     }
     s.table(sink)
   }
 
   /** The replay harness's OWN cost, isolated: the identical batch +
     * sentinel schedule every stream_* query runs — batch-boundary
-    * aggregate, staged parquet writes, file renames, checkpoint init,
-    * micro-batch commits, state-store plumbing, memory sink — driving a
+    * aggregate, the one partitioned staging write, file renames,
+    * checkpoint init, micro-batch commits (fork-free checkpoint I/O, as
+    * every replay), state-store plumbing, memory sink — driving a
     * minimal windowed count with ZERO real rows (every data batch is
-    * emptied by `expand`; only sentinels flow). Runs the FILE-SOURCE
+    * emptied by `expand`; only sentinels flow). It runs the same three
+    * micro-batches as `stream_session_window`: its empty batch 1 arrives
+    * as one schema-only part file and runs with 0 rows. Runs the FILE-SOURCE
     * path because that is what the declared stream surface runs (the two
     * MemoryStream twins kept for ingest-invariance carry a slightly
     * different floor — no staging writes, one driver collect instead).
@@ -848,7 +866,7 @@ object StreamingOps {
     //    100 TB/day events arrive as files or Kafka; unlike the
     //    MemoryStream replay harness, NOTHING here collects a corpus row
     //    to the driver: the batch boundary comes from one 1-row min/max
-    //    aggregate, the batch files are distributed writes, and
+    //    aggregate, the batch files come from one distributed write, and
     //    per-trigger arrival is a file rename into the watched
     //    directory). Same two-batch + sentinel watermark schedule — every
     //    batch-2 row is strictly later than batch 1's max, so the

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSessionFixture
@@ -97,13 +98,42 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("harnessFloor drains the file-source schedule with empty data batches") {
-    // the floor's `expand = _.limit(0)` leaves batch 1 with ZERO staged
-    // files (an empty parquet write emits no part files) — the harness
-    // must still start, drain the sentinel batches, and return an empty
-    // result, or Bench's stream_harness_floor measurement wedges
-    graft.Caches.hardSweep(spark)
-    val floor = graft.streaming.StreamingOps.harnessFloor(spark, sf0001)
-    assert(floor.count() == 0, "floor output must be empty by construction")
+    // the floor's `expand = _.limit(0)` leaves batch 1 with no rows. The
+    // partitioned staging write emits no directory for it, so the harness
+    // stages one schema-only part file (what Spark 4.1's empty
+    // `write.parquet` emits) and the floor's batch 0 runs with 0 rows. The
+    // floor must start, drain the sentinel batches and return an empty
+    // result on the same micro-batch schedule as the stream queries it
+    // prices, or Bench's stream_harness_floor measurement is off or wedges
+    val batches = new java.util.concurrent.ConcurrentHashMap[String, Set[Long]]()
+    val names = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
+    val terminated = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        names.put(e.runId, e.name)
+      // only an executed batch reports addBatch; idle progress does not
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.durationMs.containsKey("addBatch"))
+          batches.merge(e.progress.name, Set(e.progress.batchId), _ ++ _)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.put(names.getOrDefault(e.runId, "?"))
+    }
+    spark.streams.addListener(listener)
+    try {
+      graft.Caches.hardSweep(spark)
+      val floor = graft.streaming.StreamingOps.harnessFloor(spark, sf0001)
+      assert(floor.count() == 0, "floor output must be empty by construction")
+      graft.Caches.hardSweep(spark)
+      graft.SparkEntry.queries("stream_session_window")(spark, sf0001).count()
+      // a query's progress events precede its termination on the bus
+      val sinks = Seq("stream_harness_floor_sink", "stream_session_window_sink")
+      val done = Seq.fill(2)(terminated.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(done.toSet == sinks.toSet, s"terminations seen: $done")
+      val Seq(floorBatches, sessionBatches) = sinks.map(batches.getOrDefault(_, Set.empty).size)
+      assert(floorBatches == sessionBatches,
+        s"floor ran $floorBatches micro-batches, stream_session_window $sessionBatches")
+      assert(floorBatches == 3, s"floor ran $floorBatches micro-batches")
+    } finally spark.streams.removeListener(listener)
   }
 
   test("stream_session_window equals the batch session_window_agg row-for-row") {
