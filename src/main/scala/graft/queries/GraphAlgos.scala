@@ -181,21 +181,10 @@ object GraphAlgos {
     // instead of re-relaxing every reached node against all m edges.
     var frontier: DataFrame = dist
     var ids = Set.empty[Int]
-    // BROADCAST license (optimization round 11, the coreness-fixpoint
-    // r10 fix applied here): the frontier is node-sized (≤ one row per
-    // reached node) while `e` is edge-sized — but AQE only converts the
-    // join to broadcast AFTER both children's shuffle writes ran, so
-    // every round paid an edge-sized shuffle write regardless. One arc
-    // count on the caller's already-checkpointed edge frame licenses an
-    // explicit broadcast of the frontier for every round (frontier rows
-    // ≤ distinct nodes ≤ arcs); the message aggregate then partial-
-    // aggregates map-side and the per-round shuffle drops from 2
-    // edge-sized exchanges to one node-sized one. Crawl-scale graphs
-    // exceed the license and keep today's shuffled plans.
-    val bcastFrontier = e.count() <= 4L * 1000 * 1000
+    // the frontier is node-sized (≤ one row per reached node ≤ arcs)
+    val b = Licenses.broadcastWithin(e, Licenses.limits.broadcastArcs)
     for (_ <- 1 to rounds) {
-      val fr = frontier.withColumnRenamed("x", "a")
-      val msgs = e.join(if (bcastFrontier) broadcast(fr) else fr, "a")
+      val msgs = e.join(b(frontier.withColumnRenamed("x", "a")), "a")
         .select(col("b").as("x"), (col("dist") + col("w")).as("dist"))
       // FUSED round state (optimization round 10): the merge aggregate
       // carries the previous distance alongside the new minimum —
@@ -265,17 +254,11 @@ object GraphAlgos {
       checkpointEachIter: Boolean): DataFrame = {
     var pr = nodes.select(col("id"), lit(1.0).as("pr"))
     var prIds = Set.empty[Int]
-    // BROADCAST license + LAZY checkpoints (optimization round 11, the
-    // relaxRounds treatment): pr/outdeg are node-sized, e is edge-sized,
-    // and AQE only flips to broadcast after the edge side's shuffle
-    // write ran — so each iteration paid an edge-sized exchange for a
-    // node-sized build. One arc count licenses explicit broadcasts; the
-    // loop reads no per-iteration scalar, so the checkpoints are lazy
-    // and the whole chain materializes under the caller's terminal
-    // action (generations stay pinned until the deferred sweep — frames
-    // are node-sized).
-    val bcastPr = e.count() <= 4L * 1000 * 1000
-    def b(df: DataFrame): DataFrame = if (bcastPr) broadcast(df) else df
+    // pr/outdeg are node-sized ([[Licenses]]). LAZY checkpoints: the loop
+    // reads no per-iteration scalar, so the whole chain materializes
+    // under the caller's terminal action (generations stay pinned until
+    // the deferred sweep — frames are node-sized).
+    val b = Licenses.broadcastWithin(e, Licenses.limits.broadcastArcs)
     for (_ <- 1 to iters) {
       val contribs = e.join(b(pr.withColumnRenamed("id", "src")), "src")
         .join(b(outdeg), "src")
@@ -346,7 +329,7 @@ object GraphAlgos {
       n: Long): (DataFrame, Set[Int]) = {
     val k = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(1L, n - 1))) // ceil(log2 n), so 2^K >= n
-    val bcRows = 100000L // ~2.4 MB of (bi,bp,bm) — safely broadcastable
+    val bcRows = Licenses.limits.imageRows
     var st = st0
     var stIds = Set.empty[Int]
     var imgSmall = false
@@ -456,15 +439,8 @@ object GraphAlgos {
   private[graft] def boruvkaForest(s: SparkSession, we: DataFrame,
       rounds: Int, doublings: Int): (DataFrame, DataFrame, Set[Int]) = {
     val keep = scala.collection.mutable.Set.empty[Int]
-    // BROADCAST license (optimization round 11, the relaxRounds fix):
-    // comp/ptr/sel are node-sized while `we` is edge-sized, and AQE only
-    // flips to broadcast AFTER both children's shuffle writes — so every
-    // round paid edge-sized exchanges for node-sized build sides. One
-    // arc count on the caller's checkpointed frame licenses explicit
-    // broadcasts everywhere a node-sized frame joins; crawl-scale inputs
-    // exceed it and keep the shuffled plans.
-    val small = we.count() <= 4L * 1000 * 1000
-    def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    // comp/ptr/sel are node-sized wherever they join ([[Licenses]])
+    val b = Licenses.broadcastWithin(we, Licenses.limits.broadcastArcs)
     var comp = we.select(explode(array(col("u"), col("v"))).as("id"))
       .distinct().select(col("id"), col("id").as("comp"))
     var compIds = Set.empty[Int]
@@ -560,21 +536,13 @@ object GraphAlgos {
     val (st1, ids1) = checkpointWithIds(
       nb1.groupBy(col("x")).agg(kmvL(col("hv")).as("sk")))
     val (st2, ids2) = {
-      // BROADCAST license (optimization round 11): st1 is node-sized but
-      // carries k-long arrays (~150 B/row), so its own license is row
-      // count ≤ 1M (~150 MB build side), measured on the materialized
-      // checkpoint — NOT the shared 4M-arc license for plain-long
-      // frames. Without the hint AQE shuffles the edge-sized join input
-      // (2.8M array-carrying rows at sf0.1) before flipping to
-      // broadcast; with it the round-2 messages are produced map-side
-      // and the KmvUnion partial-aggregates them in the same stage, so
-      // the only exchange left is node-sized. Crawl-scale graphs exceed
-      // the license and keep the shuffled plan. Measured at sf0.1:
+      // st1 carries k-long arrays, so it has its own row license
+      // ([[Licenses]]), counted on the materialized checkpoint. With the
+      // hint the round-2 messages are produced map-side and KmvUnion
+      // partial-aggregates them in the same stage. Measured at sf0.1:
       // hyperball 5.5 -> 3.3 s, harmonic 6.5 -> 3.1 s warm.
-      val st1b = if (st1.count() <= 1000000L)
-        broadcast(st1.withColumnRenamed("x", "y"))
-      else st1.withColumnRenamed("x", "y")
-      val msgs = sym.join(st1b, "y")
+      val b = Licenses.broadcastWithin(st1, Licenses.limits.sketchRows)
+      val msgs = sym.join(b(st1.withColumnRenamed("x", "y")), "y")
         .select(col("x"), col("sk"))
       checkpointWithIds(
         msgs.unionByName(st1).groupBy(col("x")).agg(kmv(col("sk")).as("sk")))
@@ -650,6 +618,147 @@ object GraphAlgos {
     if (maxDeg > 2 * hmax) hIndexRoundHist(sym, h, hmax)
     else hIndexRoundSort(sym, h)
 
+  // ------------------------------------------ single-task kernel scaffold
+  // Shared by corenessExactSmall and louvainLadderKernel. Rows are
+  // gathered into growable primitive columns, ids are remapped to dense
+  // ints IN ID ORDER (sort, dedupe, binary search), and per-node state
+  // lives in primitive arrays indexed by dense id — no boxing anywhere.
+  // Because the remap preserves order, "ties go to the smaller neighbour
+  // id" compares dense ints and still picks the same node.
+
+  /** Growable primitive long column; `data` holds `size` live values. */
+  private[graft] final class LongCol {
+    var data = new Array[Long](1 << 16)
+    var size = 0
+    def add(v: Long): Unit = {
+      if (size == data.length) data = java.util.Arrays.copyOf(data, size * 2)
+      data(size) = v; size += 1
+    }
+  }
+
+  /** The distinct values among the first `n` of `a`, ascending. */
+  private[graft] def sortedUnique(a: Array[Long], n: Int): Array[Long] = {
+    val s = java.util.Arrays.copyOf(a, n)
+    java.util.Arrays.sort(s)
+    var k = 0; var i = 0
+    while (i < n) { if (k == 0 || s(i) != s(k - 1)) { s(k) = s(i); k += 1 }; i += 1 }
+    if (k == n) s else java.util.Arrays.copyOf(s, k)
+  }
+
+  /** The dense id space of `cols`: `ids` holds their distinct values
+    * ascending, and `apply(c)` maps each value of a column to its index
+    * in `ids` by a binary search narrowed to one bucket of a table over
+    * the top bits of `id - ids(0)` (about one id per bucket; offsets are
+    * unsigned, so any id range fits). */
+  private[graft] final class DenseIds(cols: LongCol*) {
+    val ids: Array[Long] = cols.map(c => sortedUnique(c.data, c.size)) match {
+      case Seq(one) => one
+      case many => val all = Array.concat(many: _*); sortedUnique(all, all.length)
+    }
+    def n: Int = ids.length
+    private val lo = if (n == 0) 0L else ids(0)
+    private val shift = { var sh = 0; while (n > 0 && ((ids(n - 1) - lo) >>> sh) >= n) sh += 1; sh }
+    private val first = { // first(b): index of the first id in bucket ≥ b
+      val f = new Array[Int](if (n == 0) 1 else ((ids(n - 1) - lo) >>> shift).toInt + 2)
+      var j = 0; var b = 0
+      while (b < f.length) {
+        while (j < n && ((ids(j) - lo) >>> shift) < b) j += 1
+        f(b) = j; b += 1
+      }
+      f
+    }
+    def apply(c: LongCol): Array[Int] = {
+      val out = new Array[Int](c.size)
+      var i = 0
+      while (i < c.size) {
+        val b = ((c.data(i) - lo) >>> shift).toInt
+        out(i) = java.util.Arrays.binarySearch(ids, first(b), first(b + 1), c.data(i))
+        i += 1
+      }
+      out
+    }
+  }
+
+  /** EXACT core numbers via the Batagelj–Zaversnik O(n+m) bucket peel,
+    * run as ONE narrow task on an executor (coalesce(1) over the
+    * already-materialized edge checkpoint — no driver collect, no
+    * shuffle, no barrier). Result-identical to [[corenessFixpoint]]
+    * (the h-index fixpoint IS the core number — Lü et al. 2016 — and
+    * CorenessLouvainSpec gates kernel == fixpoint == driver-side peel
+    * node-for-node at sf0.001). This is the scale-ADAPTIVE half of the
+    * coreness operator: a 1.4M-arc subproblem (sf0.1) has no business
+    * paying 38 synchronized rounds of a distributed fixpoint — at crawl
+    * scale `Licenses.limits.kernelArcs` keeps the semi-naive loop. `sym`
+    * must carry both directions of every edge. */
+  private[graft] def corenessExactSmall(s: SparkSession,
+      sym: DataFrame): DataFrame = {
+    import s.implicits._
+    sym.select(col("x").cast("long"), col("y").cast("long"))
+      .as[(Long, Long)]
+      .coalesce(1)
+      .mapPartitions { it =>
+        // the long columns die with load's frame; only ints stay live
+        def load(): (Array[Long], Array[Int], Array[Int]) = {
+          val xs = new LongCol; val ys = new LongCol
+          while (it.hasNext) { val (a, b) = it.next(); xs.add(a); ys.add(b) }
+          val d = new DenseIds(xs, ys)
+          (d.ids, d(xs), d(ys))
+        }
+        val (ids, ax, ay) = load()
+        val n = ids.length
+        val m = ax.length // both directions present => degree = arc count
+        // CSR over the x side
+        val deg = new Array[Int](n)
+        var i = 0
+        while (i < m) { deg(ax(i)) += 1; i += 1 }
+        val start = new Array[Int](n + 1)
+        i = 0; while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
+        val fill = java.util.Arrays.copyOf(start, n)
+        val adj = new Array[Int](m)
+        i = 0; while (i < m) { adj(fill(ax(i))) = ay(i); fill(ax(i)) += 1; i += 1 }
+        // Batagelj–Zaversnik: counting-sort nodes by degree, peel in
+        // order, demoting touched neighbors one bucket at a time
+        var maxDeg = 0
+        i = 0; while (i < n) { if (deg(i) > maxDeg) maxDeg = deg(i); i += 1 }
+        val bin = new Array[Int](maxDeg + 2)
+        i = 0; while (i < n) { bin(deg(i) + 1) += 1; i += 1 }
+        i = 1; while (i <= maxDeg + 1) { bin(i) += bin(i - 1); i += 1 }
+        val pos = new Array[Int](n); val vert = new Array[Int](n)
+        val binStart = java.util.Arrays.copyOf(bin, bin.length)
+        i = 0
+        while (i < n) {
+          pos(i) = binStart(deg(i)); vert(pos(i)) = i
+          binStart(deg(i)) += 1; i += 1
+        }
+        val d = deg // current degrees, peeled in place
+        i = 0
+        while (i < n) {
+          val v = vert(i)
+          var j = start(v)
+          val end = start(v + 1)
+          while (j < end) {
+            val u = adj(j)
+            if (d(u) > d(v)) {
+              // swap u with the first vertex of its bucket, shrink it
+              val du = d(u); val pu = pos(u)
+              val pw = bin(du); val w = vert(pw)
+              if (u != w) {
+                pos(u) = pw; vert(pw) = u
+                pos(w) = pu; vert(pu) = w
+              }
+              bin(du) += 1
+              d(u) = du - 1
+            }
+            j += 1
+          }
+          i += 1
+        }
+        // d(v) at peel time IS the core number
+        Iterator.tabulate(n)(v => (ids(v), d(v).toLong))
+      }
+      .toDF("x", "h")
+  }
+
   /** Run the h-index iteration to its FIXPOINT (= the exact core number
     * of every node — Lü et al. 2016), SEMI-NAIVE (delta) form: a node's
     * H-index can change in round i+1 only if some neighbor's h changed
@@ -709,115 +818,10 @@ object GraphAlgos {
     * is computed ONCE and reused via its broadcast exchange. Halves the
     * tail's barrier count; measured at sf0.1 the fixpoint went 43.5 s →
     * (see OPTIMIZATION_r10.md) with the same final histogram. */
-  /** Single-task arc license for [[corenessExactSmall]]: below it the
-    * whole symmetrized edge list fits one executor task's memory with
-    * room to spare (32M arcs ≈ 256 MB as two int CSR arrays + the id
-    * remap), so the exact O(n+m) peel beats ANY distributed iteration —
-    * the same decision rule the broadcast licenses embody, one level up:
-    * when the data fits a single hash table, stop shuffling; when the
-    * GRAPH fits a single task, stop iterating. Env-overridable so a
-    * memory-constrained deployment can lower it (GRAFT_GRAPH_KERNEL
-    * arcs). The 50M-node rehearsal graph (~500M arcs) exceeds it and
-    * keeps the distributed fixpoint path honest at scale. Shared by the
-    * coreness peel and the louvain-ladder kernel — one license, one
-    * definition of "fits a single task". */
-  private[graft] def graphKernelMaxArcs: Long =
-    sys.env.get("GRAFT_GRAPH_KERNEL").map(_.toLong)
-      .getOrElse(32L * 1000 * 1000)
-
-  /** EXACT core numbers via the Batagelj–Zaversnik O(n+m) bucket peel,
-    * run as ONE narrow task on an executor (coalesce(1) over the
-    * already-materialized edge checkpoint — no driver collect, no
-    * shuffle, no barrier). Result-identical to [[corenessFixpoint]]
-    * (the h-index fixpoint IS the core number — Lü et al. 2016 — and
-    * CorenessLouvainSpec gates kernel == fixpoint == driver-side peel
-    * node-for-node at sf0.001). This is the scale-ADAPTIVE half of the
-    * coreness operator: a 1.4M-arc subproblem (sf0.1) has no business
-    * paying 38 synchronized rounds of a distributed fixpoint — at crawl
-    * scale the same license keeps the semi-naive loop. `sym` must carry
-    * both directions of every edge. */
-  private[graft] def corenessExactSmall(s: SparkSession,
-      sym: DataFrame): DataFrame = {
-    import s.implicits._
-    sym.select(col("x").cast("long"), col("y").cast("long"))
-      .as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        // gather arcs (both directions present => degree = arc count)
-        val xs = new scala.collection.mutable.ArrayBuffer[Long](1 << 16)
-        val ys = new scala.collection.mutable.ArrayBuffer[Long](1 << 16)
-        while (it.hasNext) { val (a, b) = it.next(); xs += a; ys += b }
-        val m = xs.length
-        if (m == 0) Iterator.empty
-        else {
-          // dense remap
-          val idOf = new java.util.HashMap[Long, Int](m)
-          val ids = new scala.collection.mutable.ArrayBuffer[Long](1 << 12)
-          def dense(v: Long): Int = {
-            val got = idOf.getOrDefault(v, -1)
-            if (got >= 0) got
-            else { val i = ids.length; ids += v; idOf.put(v, i); i }
-          }
-          val ax = new Array[Int](m); val ay = new Array[Int](m)
-          var i = 0
-          while (i < m) { ax(i) = dense(xs(i)); ay(i) = dense(ys(i)); i += 1 }
-          val n = ids.length
-          // CSR over the x side
-          val deg = new Array[Int](n)
-          i = 0; while (i < m) { deg(ax(i)) += 1; i += 1 }
-          val start = new Array[Int](n + 1)
-          i = 0; while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
-          val fill = java.util.Arrays.copyOf(start, n)
-          val adj = new Array[Int](m)
-          i = 0; while (i < m) { adj(fill(ax(i))) = ay(i); fill(ax(i)) += 1; i += 1 }
-          // Batagelj–Zaversnik: counting-sort nodes by degree, peel in
-          // order, demoting touched neighbors one bucket at a time
-          val maxDeg = { var md = 0; i = 0
-            while (i < n) { if (deg(i) > md) md = deg(i); i += 1 }; md }
-          val bin = new Array[Int](maxDeg + 2)
-          i = 0; while (i < n) { bin(deg(i) + 1) += 1; i += 1 }
-          i = 1; while (i <= maxDeg + 1) { bin(i) += bin(i - 1); i += 1 }
-          val pos = new Array[Int](n); val vert = new Array[Int](n)
-          val binStart = java.util.Arrays.copyOf(bin, bin.length)
-          i = 0
-          while (i < n) {
-            pos(i) = binStart(deg(i)); vert(pos(i)) = i
-            binStart(deg(i)) += 1; i += 1
-          }
-          val d = java.util.Arrays.copyOf(deg, n) // current degrees
-          i = 0
-          while (i < n) {
-            val v = vert(i)
-            var j = start(v)
-            val end = start(v + 1)
-            while (j < end) {
-              val u = adj(j)
-              if (d(u) > d(v)) {
-                // swap u with the first vertex of its bucket, shrink it
-                val du = d(u); val pu = pos(u)
-                val pw = bin(du); val w = vert(pw)
-                if (u != w) {
-                  pos(u) = pw; vert(pw) = u
-                  pos(w) = pu; vert(pu) = w
-                }
-                bin(du) += 1
-                d(u) = du - 1
-              }
-              j += 1
-            }
-            i += 1
-          }
-          // d(v) at peel time IS the core number
-          (0 until n).iterator.map(v => (ids(v), d(v).toLong))
-        }
-      }
-      .toDF("x", "h")
-  }
-
   private[graft] def corenessFixpoint(s: SparkSession, sym: DataFrame,
       hmax: Long, maxDeg: Long, maxRounds: Int = 100,
       checkMonotone: Boolean = false): (DataFrame, Set[Int], Int, Boolean) = {
-    val bcastIds = 4L * 1000 * 1000 // ≤ ~32 MB of packed longs
+    val bcastIds = Licenses.limits.frontierRows
     // the h frame permanently carries two static per-node columns beside
     // the iterate: dg = degree and s2 = Σ_{y~x} deg(y). They make the
     // broadcast licenses EXACT sums instead of the loose changed·maxDeg
@@ -849,20 +853,19 @@ object GraphAlgos {
     def subRound(hdf: DataFrame, changedDf: DataFrame, cB: Boolean,
         fB: Boolean, tag: String, keep: Seq[String]): DataFrame = {
       val chs = changedDf.select(col("x").as("y"))
-      val frontier = sym.join(if (cB) broadcast(chs) else chs, "y")
+      val b = Licenses.broadcastIf(fB)
+      val frontier = sym.join(Licenses.broadcastIf(cB)(chs), "y")
         .select(col("x")).distinct()
-      val sub = sym.join(if (fB) broadcast(frontier) else frontier, "x")
-      val nhSub0 = hIndexRound(sub, hdf, hmax, maxDeg)
+      val sub = sym.join(b(frontier), "x")
+      val nhSub = hIndexRound(sub, hdf, hmax, maxDeg)
         .withColumnRenamed("h", "hn")
-      val nhSub = if (fB) broadcast(nhSub0) else nhSub0
-      hdf.join(nhSub, Seq("x"), "left")
+      hdf.join(b(nhSub), Seq("x"), "left")
         .select(Seq(col("x"), coalesce(col("hn"), col("h")).as("h"),
           col("dg"), col("s2")) ++ keep.map(col) ++ Seq(
           (col("hn").isNotNull && col("hn") =!= col("h")).as("chg" + tag),
           (col("hn") > col("h")).as("viol" + tag)): _*)
     }
     while (!converged && rounds < maxRounds) {
-      val tR = System.nanoTime()
       val cB = changedCnt <= bcastIds
       val f1B = math.min(nNodes, b1) <= bcastIds
       // FUSE two sub-rounds into one barrier when the 2-hop frontier is
@@ -890,13 +893,8 @@ object GraphAlgos {
         sum(when(col("viol1") ||
           (if (fuse) col("viol2") else lit(false)), 1L).otherwise(0L)),
         sum(when(col(lastChg), col("dg")).otherwise(0L)),
-        sum(when(col(lastChg), col("s2")).otherwise(0L)),
-        sum(when(col("chg1"), 1L).otherwise(0L))).head()
+        sum(when(col(lastChg), col("s2")).otherwise(0L))).head()
       rounds += (if (fuse) 2 else 1)
-      if (sys.env.contains("GRAFT_TRACE")) System.err.println(
-        f"corenessFixpoint round $rounds (fused=$fuse): " +
-          f"changed=${st.getLong(0)} (sub1=${st.getLong(4)}) " +
-          f"round_sec=${(System.nanoTime() - tR) / 1e9}%.2f")
       if (checkMonotone) require(st.getLong(1) == 0L,
         s"corenessFixpoint: h INCREASED on ${st.getLong(1)} nodes by round " +
           s"$rounds — the h-sequence must be non-increasing")
@@ -948,6 +946,30 @@ object GraphAlgos {
     (moved, mIds)
   }
 
+  /** ⌊√(2⁶³−1)⌋: the largest value whose square is a BIGINT. */
+  private val maxSquarable = 3037000499L
+
+  /** The exact-integer sweep's loud overflow guards (the requirePackedIds
+    * discipline for the cross-multiplied gain): 2m·w and d_u·d_v must
+    * stay inside BIGINT at ANY scale — a silent wrap would flip argmaxes
+    * quietly (wrong communities, right cardinality). At crawl scale
+    * rescale weights (divide by a common factor) before the sweep. */
+  private def requireSweepBounds(what: String, m2: Long, maxW: Long,
+      maxDeg: Long): Unit = {
+    require(maxW == 0 || m2 <= Long.MaxValue / math.max(1L, maxW),
+      s"$what: 2m*w overflows BIGINT (2m=$m2, max w=$maxW) — " +
+        "rescale edge weights before the sweep")
+    require(maxDeg <= maxSquarable,
+      s"$what: deg*deg overflows BIGINT (max weighted degree $maxDeg) — " +
+        "rescale edge weights before the sweep")
+  }
+
+  /** [[modularityScaled]]'s bound: m2·aIn and dc·dc need 2m ≤ ⌊√(2⁶³−1)⌋. */
+  private def requirePricingBound(m2: Long): Unit =
+    require(m2 <= maxSquarable,
+      s"modularityScaled: 2m = $m2 overflows BIGINT in m2*aIn / dc*dc — " +
+        "rescale weights or sample the graph before pricing modularity")
+
   /** The sweep plus its fused one-action statistics, shared by
     * [[louvainSweep]] and [[louvainSweepMonotone]]. The degree checkpoint
     * carries three extra per-node columns (max non-loop incident weight,
@@ -991,12 +1013,7 @@ object GraphAlgos {
       coalesce(sum(col("dw") * col("dw")), lit(0L)).cast("long")).head()
     val (m2, maxDeg, maxW) = (dst.getLong(0), dst.getLong(1), dst.getLong(2))
     val q0 = m2 * dst.getLong(3) - dst.getLong(4)
-    require(maxW == 0 || m2 <= Long.MaxValue / math.max(1L, maxW),
-      s"louvainSweep: 2m*w overflows BIGINT (2m=$m2, max w=$maxW) — " +
-        "rescale edge weights before the sweep")
-    require(maxDeg <= 3037000499L, // floor(sqrt(2^63 - 1))
-      s"louvainSweep: deg*deg overflows BIGINT (max weighted degree " +
-        s"$maxDeg) — rescale edge weights before the sweep")
+    requireSweepBounds("louvainSweep", m2, maxW, maxDeg)
     val sc = sym
       .join(deg.select(col("x"), col("dw").as("du")), "x")
       .join(deg.select(col("x").as("y"), col("dw").as("dv")), "y")
@@ -1043,6 +1060,10 @@ object GraphAlgos {
     }
   }
 
+  /** Weighted edges over dense node ids `0 until n` (self-loops allowed). */
+  private final case class DenseGraph(n: Int, u: Array[Int], v: Array[Int],
+      w: Array[Long])
+
   /** Single-task twin of the WHOLE declared louvain ladder (guarded
     * sweep → coarsen → guarded sweep → composed pricing), exact-integer
     * arithmetic identical to [[louvainSweepMonotone]] /
@@ -1050,13 +1071,15 @@ object GraphAlgos {
     * (self-loop A_uu = 2w), same argmax (max score, ties to the smaller
     * neighbor id, move iff score > 0), same monotone guard (keep moved
     * labels only when Q(moved) ≥ Q(singletons)), same overflow guards.
-    * Run as ONE narrow task under the same size license as
+    * Run as ONE narrow task under `Licenses.limits.kernelArcs`, like
     * [[corenessExactSmall]] — the ladder is ~16 driver actions over a
     * sub-million-row graph at bench SF, all barrier/planning floor; at
     * crawl scale the license fails and the distributed ladder (also
-    * exercised at 50M in the rehearsal) runs unchanged. Equality with
-    * the DataFrame ladder is pinned by CorenessLouvainSpec and by the
-    * query's oracle, which replays both sweeps in DuckDB from scratch. */
+    * exercised at 50M in the rehearsal) runs unchanged. Labels are dense
+    * node ids; coarsening keys each super-edge by the packed
+    * `(min << 32) | max` of its dense community ids. Equality with the
+    * DataFrame ladder is pinned by LicenseBoundarySpec and by the query's
+    * oracle, which replays both sweeps in DuckDB from scratch. */
   private[graft] def louvainLadderKernel(s: SparkSession,
       we: DataFrame): DataFrame = {
     import s.implicits._
@@ -1065,160 +1088,131 @@ object GraphAlgos {
       .as[(Long, Long, Long)]
       .coalesce(1)
       .mapPartitions { it =>
-        import scala.collection.mutable
-        val eu = new mutable.ArrayBuffer[Long](1 << 16)
-        val ev = new mutable.ArrayBuffer[Long](1 << 16)
-        val ew = new mutable.ArrayBuffer[Long](1 << 16)
-        while (it.hasNext) {
-          val (a, b, w) = it.next(); eu += a; ev += b; ew += w
+        def load(): DenseGraph = {
+          val us = new LongCol; val vs = new LongCol; val ws = new LongCol
+          while (it.hasNext) { val (a, b, w) = it.next(); us.add(a); vs.add(b); ws.add(w) }
+          val d = new DenseIds(us, vs)
+          DenseGraph(d.n, d(us), d(vs), java.util.Arrays.copyOf(ws.data, ws.size))
         }
-        type Labels = java.util.HashMap[Long, Long]
-        def nDistinct(us: mutable.ArrayBuffer[Long],
-            vs: mutable.ArrayBuffer[Long]): Long = {
-          val st = new java.util.HashSet[Long]()
-          var i = 0
-          while (i < us.length) { st.add(us(i)); st.add(vs(i)); i += 1 }
-          st.size.toLong
-        }
-        // strengths: dw(x) with A_uu = 2w; also max non-loop w
-        def strengths(eu: mutable.ArrayBuffer[Long],
-            ev: mutable.ArrayBuffer[Long], ew: mutable.ArrayBuffer[Long])
-            : (java.util.HashMap[Long, Long], Long, Long) = {
-          val dw = new java.util.HashMap[Long, Long]()
+        // strengths dw(x) with A_uu = 2w; also max non-loop w and Σ loop 2w
+        def strengths(g: DenseGraph): (Array[Long], Long, Long) = {
+          val dw = new Array[Long](g.n)
           var maxW = 0L; var sumLw = 0L
           var i = 0
-          while (i < eu.length) {
-            val u = eu(i); val v = ev(i); val w = ew(i)
-            if (u == v) {
-              dw.put(u, dw.getOrDefault(u, 0L) + 2 * w)
-              sumLw += 2 * w
-            } else {
-              dw.put(u, dw.getOrDefault(u, 0L) + w)
-              dw.put(v, dw.getOrDefault(v, 0L) + w)
-              if (w > maxW) maxW = w
-            }
+          while (i < g.u.length) {
+            val u = g.u(i); val v = g.v(i); val w = g.w(i)
+            if (u == v) { dw(u) += 2 * w; sumLw += 2 * w }
+            else { dw(u) += w; dw(v) += w; if (w > maxW) maxW = w }
             i += 1
           }
           (dw, maxW, sumLw)
         }
+        // exact-integer Q·(2m)² pricing + community count
+        def price(g: DenseGraph, lbl: Array[Int]): (Long, Long, Long) = {
+          var m2 = 0L; var aIn = 0L
+          var i = 0
+          while (i < g.u.length) {
+            m2 += 2 * g.w(i)
+            if (lbl(g.u(i)) == lbl(g.v(i))) aIn += 2 * g.w(i)
+            i += 1
+          }
+          requirePricingBound(m2)
+          val dw = strengths(g)._1
+          val dc = new Array[Long](g.n)
+          val seen = new Array[Boolean](g.n)
+          var nComm = 0L
+          var x = 0
+          while (x < g.n) {
+            val c = lbl(x)
+            dc(c) += dw(x)
+            if (!seen(c)) { seen(c) = true; nComm += 1 }
+            x += 1
+          }
+          var sumDc2 = 0L
+          x = 0; while (x < g.n) { sumDc2 += dc(x) * dc(x); x += 1 }
+          (m2 * aIn - sumDc2, m2, nComm)
+        }
         // one guarded sweep; returns (labels, q0, q1, m2, nComm)
-        def sweepMonotone(eu: mutable.ArrayBuffer[Long],
-            ev: mutable.ArrayBuffer[Long], ew: mutable.ArrayBuffer[Long])
-            : (Labels, Long, Long, Long, Long) = {
-          val (dw, maxW, sumLw) = strengths(eu, ev, ew)
+        def sweepMonotone(g: DenseGraph): (Array[Int], Long, Long, Long, Long) = {
+          val (dw, maxW, sumLw) = strengths(g)
           var m2 = 0L; var maxDeg = 0L; var sumDw2 = 0L
-          val dit = dw.values.iterator()
-          while (dit.hasNext) {
-            val d = dit.next(); m2 += d
+          var x = 0
+          while (x < g.n) {
+            val d = dw(x); m2 += d; sumDw2 += d * d
             if (d > maxDeg) maxDeg = d
-            sumDw2 += d * d
+            x += 1
           }
           val q0 = m2 * sumLw - sumDw2
-          require(maxW == 0 || m2 <= Long.MaxValue / math.max(1L, maxW),
-            s"louvainSweep: 2m*w overflows BIGINT (2m=$m2, max w=$maxW) — " +
-              "rescale edge weights before the sweep")
-          require(maxDeg <= 3037000499L,
-            s"louvainSweep: deg*deg overflows BIGINT (max weighted degree " +
-              s"$maxDeg) — rescale edge weights before the sweep")
+          requireSweepBounds("louvainSweep", m2, maxW, maxDeg)
           // argmax over non-loop incident edges, both directions
-          val bestScore = new java.util.HashMap[Long, Long]()
-          val bestY = new java.util.HashMap[Long, Long]()
-          def cand(x: Long, y: Long, w: Long): Unit = {
-            val sc = m2 * w - dw.get(x) * dw.get(y)
-            val cur = bestScore.getOrDefault(x, Long.MinValue)
-            if (sc > cur || (sc == cur && y < bestY.get(x))) {
-              bestScore.put(x, sc); bestY.put(x, y)
+          val bestScore = new Array[Long](g.n)
+          java.util.Arrays.fill(bestScore, Long.MinValue)
+          val bestY = new Array[Int](g.n)
+          def cand(x: Int, y: Int, w: Long): Unit = {
+            val sc = m2 * w - dw(x) * dw(y)
+            if (sc > bestScore(x) || (sc == bestScore(x) && y < bestY(x))) {
+              bestScore(x) = sc; bestY(x) = y
             }
           }
           var i = 0
-          while (i < eu.length) {
-            val u = eu(i); val v = ev(i); val w = ew(i)
-            if (u != v) { cand(u, v, w); cand(v, u, w) }
+          while (i < g.u.length) {
+            val u = g.u(i); val v = g.v(i)
+            if (u != v) { cand(u, v, g.w(i)); cand(v, u, g.w(i)) }
             i += 1
           }
-          val moved = new Labels()
-          val nit = dw.keySet.iterator()
-          while (nit.hasNext) {
-            val x = nit.next()
-            val bs = bestScore.getOrDefault(x, Long.MinValue)
-            moved.put(x, if (bs > 0) bestY.get(x) else x)
-          }
-          val (q1, m2b, nComm) = price(eu, ev, ew, moved)
+          val moved = Array.range(0, g.n)
+          x = 0
+          while (x < g.n) { if (bestScore(x) > 0) moved(x) = bestY(x); x += 1 }
+          val (q1, m2b, nComm) = price(g, moved)
           require(m2b == m2,
             s"louvainSweepMonotone: total strength moved under relabeling " +
               s"($m2b != $m2) — modularityScaled is broken")
           if (q1 >= q0) (moved, q0, q1, m2, nComm)
-          else {
-            val singles = new Labels()
-            val sit = dw.keySet.iterator()
-            while (sit.hasNext) { val x = sit.next(); singles.put(x, x) }
-            (singles, q0, q0, m2, dw.size.toLong)
-          }
+          else (Array.range(0, g.n), q0, q0, m2, g.n.toLong)
         }
-        // exact-integer Q·(2m)² pricing + community count
-        def price(eu: mutable.ArrayBuffer[Long],
-            ev: mutable.ArrayBuffer[Long], ew: mutable.ArrayBuffer[Long],
-            lbl: Labels): (Long, Long, Long) = {
-          var m2 = 0L; var aIn = 0L
+        // contract to the community super-graph: Σw per packed
+        // (min << 32) | max community pair, super-nodes remapped in id order
+        def coarsen(g: DenseGraph, lbl: Array[Int]): (DenseGraph, Array[Int]) = {
+          val keys = new LongCol
           var i = 0
-          while (i < eu.length) {
-            val u = eu(i); val v = ev(i); val w = ew(i)
-            m2 += 2 * w
-            if (lbl.get(u) == lbl.get(v)) aIn += 2 * w
+          while (i < g.u.length) {
+            val a = lbl(g.u(i)); val b = lbl(g.v(i))
+            keys.add((math.min(a, b).toLong << 32) | math.max(a, b))
             i += 1
           }
-          require(m2 <= 3037000499L,
-            s"modularityScaled: 2m = $m2 overflows BIGINT in m2*aIn / " +
-              "dc*dc — rescale weights or sample the graph before " +
-              "pricing modularity")
-          val (dw, _, _) = strengths(eu, ev, ew)
-          val dc = new java.util.HashMap[Long, Long]()
-          val nit = dw.entrySet.iterator()
-          while (nit.hasNext) {
-            val e = nit.next()
-            val c = lbl.get(e.getKey)
-            dc.put(c, dc.getOrDefault(c, 0L) + e.getValue)
+          val dk = new DenseIds(keys)
+          val ki = dk(keys)
+          val cw = new Array[Long](dk.n)
+          i = 0; while (i < ki.length) { cw(ki(i)) += g.w(i); i += 1 }
+          val isComm = new Array[Boolean](g.n)
+          var x = 0
+          while (x < g.n) { isComm(lbl(x)) = true; x += 1 }
+          val cIdx = new Array[Int](g.n) // community -> super-node id
+          var nc = 0
+          x = 0
+          while (x < g.n) { if (isComm(x)) { cIdx(x) = nc; nc += 1 }; x += 1 }
+          val cu = new Array[Int](dk.n); val cv = new Array[Int](dk.n)
+          i = 0
+          while (i < dk.n) {
+            cu(i) = cIdx((dk.ids(i) >>> 32).toInt); cv(i) = cIdx(dk.ids(i).toInt)
+            i += 1
           }
-          var sumDc2 = 0L
-          val cit = dc.values.iterator()
-          while (cit.hasNext) { val d = cit.next(); sumDc2 += d * d }
-          (m2 * aIn - sumDc2, m2, dc.size.toLong)
+          (DenseGraph(nc, cu, cv, cw), cIdx)
         }
-        val nWe = eu.length.toLong
-        val nNodes = nDistinct(eu, ev)
-        val (lbl1, q0, q1, m2, nComm1) = sweepMonotone(eu, ev, ew)
-        // coarsen: (least(cu,cv), greatest(cu,cv), Σw)
-        val cMap = new java.util.HashMap[(Long, Long), Long]()
-        var i = 0
-        while (i < eu.length) {
-          val cu = lbl1.get(eu(i)); val cv = lbl1.get(ev(i))
-          val k = if (cu <= cv) (cu, cv) else (cv, cu)
-          cMap.put(k, cMap.getOrDefault(k, 0L) + ew(i))
-          i += 1
-        }
-        val cu2 = new mutable.ArrayBuffer[Long](cMap.size)
-        val cv2 = new mutable.ArrayBuffer[Long](cMap.size)
-        val cw2 = new mutable.ArrayBuffer[Long](cMap.size)
-        val mit = cMap.entrySet.iterator()
-        while (mit.hasNext) {
-          val e = mit.next()
-          cu2 += e.getKey._1; cv2 += e.getKey._2; cw2 += e.getValue
-        }
-        val nCoarse = cu2.length.toLong
-        val nCoarseNodes = nDistinct(cu2, cv2)
-        val (lbl2, qc, q2, m2c, nComm2) = sweepMonotone(cu2, cv2, cw2)
-        val composed = new Labels()
-        val lit1 = lbl1.entrySet.iterator()
-        while (lit1.hasNext) {
-          val e = lit1.next()
-          composed.put(e.getKey, lbl2.get(e.getValue))
-        }
-        val (qComposed, m2comp, nComm4) = price(eu, ev, ew, composed)
+        val g = load()
+        val nWe = g.u.length.toLong
+        val (lbl1, q0, q1, m2, nComm1) = sweepMonotone(g)
+        val (cg, cIdx) = coarsen(g, lbl1)
+        val (lbl2, qc, q2, m2c, nComm2) = sweepMonotone(cg)
+        val composed = new Array[Int](g.n)
+        var x = 0
+        while (x < g.n) { composed(x) = lbl2(cIdx(lbl1(x))); x += 1 }
+        val (qComposed, m2comp, nComm4) = price(g, composed)
         Iterator(
-          (0L, q0, m2, nNodes, nWe),
+          (0L, q0, m2, g.n.toLong, nWe),
           (1L, q1, m2, nComm1, nWe),
-          (2L, qc, m2c, nCoarseNodes, nCoarse),
-          (3L, q2, m2c, nComm2, nCoarse),
+          (2L, qc, m2c, cg.n.toLong, cg.u.length.toLong),
+          (3L, q2, m2c, nComm2, cg.u.length.toLong),
           (4L, qComposed, m2comp, nComm4, nWe))
       }
       .toDF("level", "q_scaled", "m2", "n_comm", "n_edges")
@@ -1278,9 +1272,7 @@ object GraphAlgos {
       coalesce(sum(when(col("cu") === col("cv"), col("w") * 2)), lit(0L))
         .cast("long")).head()
     val (m2, aIn) = (ma.getLong(0), ma.getLong(1))
-    require(m2 <= 3037000499L, // floor(sqrt(2^63 - 1))
-      s"modularityScaled: 2m = $m2 overflows BIGINT in m2*aIn / dc*dc — " +
-        "rescale weights or sample the graph before pricing modularity")
+    requirePricingBound(m2)
     // strength per community: symmetrize + self-loop 2w, then sum per comm
     val strength = we.select(col("u").as("x"),
         when(col("u") === col("v"), col("w") * 2).otherwise(col("w")).as("s"))
@@ -1412,17 +1404,13 @@ object GraphAlgos {
       val nodes = sym.select(col("x")).distinct()
       var r = nodes.select(col("x"), (isSeed * lit(1000000000L)).as("r"))
       var rIds = Set.empty[Int]
-      // BROADCAST license + LAZY checkpoints (optimization round 11, the
-      // pageRankLoop treatment): r is node-sized, symDeg edge-sized; no
-      // per-round scalar is read, so the chain materializes under the
-      // terminal orderBy and the rank table broadcasts explicitly below
-      // the 4M-arc license instead of paying an edge-sized exchange per
-      // round waiting for AQE to notice.
-      val bcastR = symDeg.count() <= 4L * 1000 * 1000
+      // r is node-sized ([[Licenses]]); no per-round scalar is read, so
+      // the lazy chain materializes under the terminal orderBy
+      val b = Licenses.broadcastWithin(symDeg, Licenses.limits.broadcastArcs)
       for (_ <- 1 to 2) {
-        val rs = r.withColumnRenamed("x", "src").withColumnRenamed("r", "rs")
         val contrib = symDeg
-          .join(if (bcastR) broadcast(rs) else rs, "src")
+          .join(b(r.withColumnRenamed("x", "src").withColumnRenamed("r", "rs")),
+            "src")
           .select(col("y").as("x"),
             expr("(85 * rs) DIV (100 * dgs)").as("c"))
         val (ck, ids) = checkpointWithIdsLazy(
@@ -1467,15 +1455,11 @@ object GraphAlgos {
       val nodes = sym.select(col("x")).distinct()
       var dcur = nodes.select(col("x"), lit(0L).as("d"))
       var ids = Set.empty[Int]
-      // BROADCAST license + LAZY checkpoints (optimization round 11, the
-      // pageRankLoop treatment): dcur is node-sized, dir edge-sized, no
-      // per-round scalar — the depth table broadcasts below the 4M-arc
-      // license and the 3-round chain materializes under the terminal
-      // orderBy instead of paying one eager job + edge exchange per round.
-      val bcastD = dir.count() <= 4L * 1000 * 1000
+      // dcur is node-sized ([[Licenses]]); no per-round scalar is read,
+      // so the lazy 3-round chain materializes under the terminal orderBy
+      val b = Licenses.broadcastWithin(dir, Licenses.limits.broadcastArcs)
       for (_ <- 1 to 3) {
-        val dc = dcur.withColumnRenamed("x", "s")
-        val msgs = dir.join(if (bcastD) broadcast(dc) else dc, "s")
+        val msgs = dir.join(b(dcur.withColumnRenamed("x", "s")), "s")
           .select(col("t").as("x"), (col("d") + lit(1L)).as("d"))
         val (ck, nIds) = checkpointWithIdsLazy(
           dcur.unionByName(msgs).groupBy(col("x")).agg(max(col("d")).as("d")))
@@ -2496,16 +2480,16 @@ object GraphAlgos {
       val arcs = dst.getLong(0) // |sym| = 2m
       val hmax = math.sqrt(arcs.toDouble).toLong
       val maxDeg = dst.getLong(1)
-      // SCALE-ADAPTIVE algorithm selection (optimization round 11): the
+      // SCALE-ADAPTIVE algorithm selection (`Licenses.limits.kernelArcs`): the
       // exact peel and the h-index fixpoint compute the SAME core
       // numbers (Lü et al. 2016; gated node-for-node in
-      // CorenessLouvainSpec and by this query's oracle, which replays
-      // the h-index iteration to convergence in DuckDB). Below the
-      // single-task license the O(n+m) peel runs as one narrow task —
-      // a 1.4M-arc subproblem must not pay 38 synchronized distributed
-      // rounds; above it (the 50M rehearsal, any crawl) the semi-naive
-      // broadcast-licensed fixpoint runs unchanged.
-      val h = if (arcs <= graphKernelMaxArcs) {
+      // CorenessLouvainSpec, LicenseBoundarySpec and by this query's
+      // oracle, which replays the h-index iteration to convergence in
+      // DuckDB). Below the license the O(n+m) peel runs as one narrow
+      // task — a 1.4M-arc subproblem must not pay 38 synchronized
+      // distributed rounds; above it (the 50M rehearsal, any crawl) the
+      // semi-naive broadcast-licensed fixpoint runs unchanged.
+      val h = if (arcs <= Licenses.limits.kernelArcs) {
         corenessExactSmall(s, sym)
       } else {
         val (hf, hIds, rounds, converged) = corenessFixpoint(s, sym, hmax,
@@ -2560,19 +2544,8 @@ object GraphAlgos {
       // 2m + max w: one bounded 1-row scalar (total edge weight, doubled)
       val gs = we.agg(sum(col("w")).cast("long"), max(col("w"))).head()
       val m2 = gs.getLong(0) * 2L
-      // loud-failure overflow guards (the requirePackedIds discipline for
-      // the cross-multiplied gain): 2m·w and d_u·d_v must stay inside
-      // BIGINT at ANY scale — a silent wrap would flip argmaxes quietly
-      // (wrong communities, right cardinality). At crawl scale rescale
-      // weights (divide by a common factor) before the sweep.
-      val maxW = gs.getLong(1)
-      require(maxW == 0 || m2 <= Long.MaxValue / maxW,
-        s"graph_louvain: 2m*w overflows BIGINT (2m=$m2, max w=$maxW) — " +
-          "rescale edge weights before the sweep")
-      val maxDeg = deg.agg(max(col("dw"))).head().getLong(0)
-      require(maxDeg <= 3037000499L, // floor(sqrt(2^63 - 1))
-        s"graph_louvain: deg*deg overflows BIGINT (max weighted degree " +
-          s"$maxDeg) — rescale edge weights before the sweep")
+      requireSweepBounds("graph_louvain", m2, maxW = gs.getLong(1),
+        maxDeg = deg.agg(max(col("dw"))).head().getLong(0))
       val sc = sym
         .join(deg.select(col("x"), col("dw").as("du")), "x")
         .join(deg.select(col("x").as("y"), col("dw").as("dv")), "y")
@@ -2627,14 +2600,14 @@ object GraphAlgos {
         (r.getLong(0), r.getLong(1))
       }
       val (nWe, nNodes) = edgeNodeCounts(we)
-      // SCALE-ADAPTIVE algorithm selection (optimization round 11), the
+      // SCALE-ADAPTIVE algorithm selection (`Licenses.limits.kernelArcs`), the
       // corenessExactSmall decision one operator over: below the
-      // single-task license the whole ladder (2 guarded sweeps + coarsen
+      // license the whole ladder (2 guarded sweeps + coarsen
       // + 3 pricings, ~16 driver actions whose cost at bench SF is
       // barrier/planning floor, not data) runs as one narrow task with
       // IDENTICAL exact-integer arithmetic; above it the distributed
       // ladder below runs unchanged (and at 50M in the rehearsal).
-      if (nWe <= graphKernelMaxArcs) {
+      if (nWe <= Licenses.limits.kernelArcs) {
         val out = louvainLadderKernel(s, we)
         graft.Caches.defer(s)(freeRdds(s, weIds))
         out
@@ -2663,10 +2636,6 @@ object GraphAlgos {
 
     "graph_kcore" -> ((s, d) => {
       val rounds = 6
-      val dbg = sys.props.get("graft.debug").contains("1")
-      val t0 = System.nanoTime()
-      def mark(phase: String): Unit = if (dbg)
-        println(f"[kcore] $phase @${(System.nanoTime() - t0) / 1e9}%.2fs")
       // the u<v edge list is the ONLY pinned relation: symmetric degrees
       // come from an endpoint explode instead of materializing e ∪ swap(e),
       // which would compute the edge build twice and double every
@@ -2682,10 +2651,8 @@ object GraphAlgos {
       // identity filters — is just deg ≥ k. Saves two full edge-set
       // aggregations vs computing m/n and round 1 separately.
       val (deg, degIds) = checkpoint(degOf(e))
-      mark("deg checkpoint (e materialized)")
       val mn = deg.agg((sum(col("deg")) / 2).cast("long").as("m"),
         count(lit(1)).as("n")).head()
-      mark("m/n agg")
       val k = math.max(1L, mn.getLong(0) / mn.getLong(1))
       // alive₁ is a 2-node plan over the deg leaf — no checkpoint needed;
       // its backing store is deg's RDD, freed when the next round lands
@@ -2704,7 +2671,6 @@ object GraphAlgos {
         val (next, nextIds) = checkpoint(
           degOf(survivors).filter(col("deg") >= k).select(col("u").as("id")))
         val nNext = next.count()
-        mark(s"round: alive $nAlive -> $nNext")
         if (nNext == nAlive) { converged = true; free(nextIds) }
         else {
           free(aliveIds) // previous generation: folded into next
@@ -2716,7 +2682,6 @@ object GraphAlgos {
       val fin = alive
       val finIds = aliveIds
       graft.Caches.defer(s)(free(finIds))
-      mark("loop done")
       degOf(e
           .join(fin.select(col("id").as("u")), "u")
           .join(fin.select(col("id").as("v")), "v"))

@@ -213,10 +213,6 @@ object SimilarityQueries {
       : (DataFrame, IndexedSeq[Seq[(Long, Seq[Long])]],
          Seq[(Long, IndexedSeq[Seq[Long]])]) = {
     val m = 4; val sd = 16; val k = 8
-    val dbg = sys.props.get("graft.debug").contains("1")
-    val t0 = System.nanoTime()
-    def mark(phase: String): Unit = if (dbg)
-      println(f"[pq] $phase @${(System.nanoTime() - t0) / 1e9}%.2fs")
     // the entire 4-subspace argmin is ONE native expression (PqEncode)
     // whose codebooks enter the generated code as REFERENCE OBJECTS:
     // earlier formulations (per-centroid when-chains over literal
@@ -241,7 +237,6 @@ object SimilarityQueries {
     // bounded driver scalars: k init rows, then k×m×16 codebook ints
     val init = subs(e).filter(col("vec_id") < k).collect()
       .map(r => r.getLong(0) -> subVecs(r)).sortBy(_._1).toSeq
-    mark("init collect")
     val c0 = (0 until m).map(j => init.map { case (cid, ss) => cid -> ss(j) })
     // EAGER checkpoint between the code computation and the explode:
     // without the barrier, CollapseProject folds the 36-dot argmin tree
@@ -272,12 +267,10 @@ object SimilarityQueries {
         x => x.getField("cd")).as("cs"))
       .collect()
     GraphAlgos.freeRdds(e.sparkSession, a1Ids)
-    mark("codebook update collect")
     val cb = (0 until m).map(j => upd.filter(_.getInt(0) == j)
       .map(r => r.getLong(1) -> r.getSeq[Long](2).toSeq).sortBy(_._1).toSeq)
     val probes = subs(e).filter(col("vec_id") < 4).collect()
       .map(r => r.getLong(0) -> subVecs(r)).sortBy(_._1).toSeq
-    mark("probes collect")
     (withCodes(subs(e), cb), cb, probes)
   }
 

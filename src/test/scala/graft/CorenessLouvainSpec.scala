@@ -222,5 +222,13 @@ class CorenessLouvainSpec extends AnyFunSuite {
       GraphAlgos.modularityScaled(we, singles)
     }
     assert(e.getMessage.contains("overflows BIGINT"), e.getMessage)
+    // the single-task ladder prices the same input in its task: it must
+    // fail closed with the same guard, not return wrapped integers
+    val k = intercept[Exception] {
+      GraphAlgos.louvainLadderKernel(spark, we).collect()
+    }
+    assert(Iterator.iterate(k: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("overflows BIGINT")), k.toString)
   }
 }
