@@ -235,21 +235,19 @@ final class BitInput(bytes: SeekableBytes, bufferSize: Int = 1 << 16) {
   * `writtenBits` feeds the offsets stream.
   *
   * Every code below is built from three primitives: `writeLong`,
-  * `writeUnary` and `writeOnes`. [[BitOutput.counting]] overrides only
-  * those to add up lengths, so the encoder's cost dry runs share the code
-  * definitions with the real output and cannot disagree with it about a
-  * code's length.
+  * `writeUnary` and `writeOnes`. [[CodeLength]] gives each code's length
+  * without writing it.
   */
-class BitOutput(out: java.io.OutputStream) {
+final class BitOutput(out: java.io.OutputStream) {
   private val buf = new Array[Byte](BitOutput.BufferBytes)
   private var pos: Int = 0 // bytes pending in buf
   private var acc: Long = 0L // the low `fill` bits are pending, oldest first
   private var fill: Int = 0 // < 8 between calls
-  protected var written: Long = 0L
+  private var written: Long = 0L
 
-  final def writtenBits: Long = written
+  def writtenBits: Long = written
 
-  final def writeBit(b: Int): Unit = writeLong(b.toLong, 1)
+  def writeBit(b: Int): Unit = writeLong(b.toLong, 1)
 
   /** Write the low `len` bits of x (0 <= len <= 64), MSB first. */
   def writeLong(x: Long, len: Int): Unit = {
@@ -276,7 +274,7 @@ class BitOutput(out: java.io.OutputStream) {
     writeLong(1L, zeros + 1)
   }
 
-  final def writeGamma(n: Long): Unit = {
+  def writeGamma(n: Long): Unit = {
     require(n >= 0, s"gamma needs n >= 0, got $n")
     val v = n + 1
     val msb = 63 - java.lang.Long.numberOfLeadingZeros(v)
@@ -284,7 +282,7 @@ class BitOutput(out: java.io.OutputStream) {
     writeLong(v, msb) // v without its MSB, in msb bits (writeLong masks)
   }
 
-  final def writeDelta(n: Long): Unit = {
+  def writeDelta(n: Long): Unit = {
     require(n >= 0)
     val v = n + 1
     val msb = 63 - java.lang.Long.numberOfLeadingZeros(v)
@@ -292,7 +290,7 @@ class BitOutput(out: java.io.OutputStream) {
     writeLong(v, msb)
   }
 
-  final def writeZeta(n: Long, k: Int): Unit = {
+  def writeZeta(n: Long, k: Int): Unit = {
     require(n >= 0)
     val v = n + 1
     val msb = 63 - java.lang.Long.numberOfLeadingZeros(v)
@@ -304,12 +302,12 @@ class BitOutput(out: java.io.OutputStream) {
   }
 
   /** Minimal binary for x in [0, b) — see [[BitInput.readMinimalBinary]]. */
-  final def writeMinimalBinary(x: Int, b: Int): Unit =
+  def writeMinimalBinary(x: Int, b: Int): Unit =
     writeLongMinimalBinary(x.toLong, b.toLong)
 
   /** Long-bound variant (b < 2^62) — see
     * [[BitInput.readLongMinimalBinary]]. */
-  final def writeLongMinimalBinary(x: Long, b: Long): Unit = {
+  def writeLongMinimalBinary(x: Long, b: Long): Unit = {
     require(b > 0 && x >= 0 && x < b, s"minimal binary needs 0 <= $x < $b")
     val log2b = 63 - java.lang.Long.numberOfLeadingZeros(b)
     val m = (1L << (log2b + 1)) - b
@@ -317,9 +315,9 @@ class BitOutput(out: java.io.OutputStream) {
     else writeLong(x + m, log2b + 1)
   }
 
-  final def writeGolomb(x: Int, b: Int): Unit = writeGolomb(x.toLong, b)
+  def writeGolomb(x: Int, b: Int): Unit = writeGolomb(x.toLong, b)
 
-  final def writeGolomb(x: Long, b: Int): Unit = {
+  def writeGolomb(x: Long, b: Int): Unit = {
     require(b > 0 && x >= 0)
     val q = x / b
     require(q <= Int.MaxValue, s"golomb quotient $q overflows the unary run")
@@ -327,9 +325,9 @@ class BitOutput(out: java.io.OutputStream) {
     writeMinimalBinary((x % b).toInt, b)
   }
 
-  final def writeSkewedGolomb(x: Int, b: Int): Unit = writeSkewedGolomb(x.toLong, b)
+  def writeSkewedGolomb(x: Int, b: Int): Unit = writeSkewedGolomb(x.toLong, b)
 
-  final def writeSkewedGolomb(x: Long, b: Int): Unit = {
+  def writeSkewedGolomb(x: Long, b: Int): Unit = {
     require(b > 0 && x >= 0)
     val i = 63 - java.lang.Long.numberOfLeadingZeros(x / b + 1)
     writeUnary(i)
@@ -338,7 +336,7 @@ class BitOutput(out: java.io.OutputStream) {
     writeLongMinimalBinary(x - m, (1L << i) * b)
   }
 
-  final def writeNibble(n: Long): Unit = {
+  def writeNibble(n: Long): Unit = {
     require(n >= 0)
     val msb = if (n == 0) 0 else 63 - java.lang.Long.numberOfLeadingZeros(n)
     var h = msb / 3
@@ -386,21 +384,43 @@ class BitOutput(out: java.io.OutputStream) {
 object BitOutput {
   /** Bytes buffered between writes to the underlying stream. */
   private[bv] val BufferBytes = 1 << 16
+}
 
-  /** A bit output that only adds up code lengths: after any sequence of
-    * writes its `writtenBits` equals a real writer's, but no bit is
-    * shifted or stored. The encoder prices reference candidates with it. */
-  private[bv] def counting(): BitOutput = new Counting
+/** The number of bits each [[BitOutput]] code takes, computed without
+  * writing it: the encoder prices reference candidates with these. Each
+  * takes the arguments of the `BitOutput` write of the same name. */
+object CodeLength {
+  private def msb(v: Long): Int = 63 - java.lang.Long.numberOfLeadingZeros(v)
 
-  private final class Counting extends BitOutput(null) {
-    override def writeLong(x: Long, len: Int): Unit = written += len
-    override def writeUnary(n: Int): Unit = {
-      require(n >= 0, s"unary needs n >= 0, got $n")
-      written += n + 1L
-    }
-    override def writeOnes(n: Long): Unit = written += n
-    override def flush(): Unit = written = (written + 7) & ~7L
+  def unary(n: Long): Long = n + 1
+
+  def gamma(n: Long): Long = 2L * msb(n + 1) + 1
+
+  def delta(n: Long): Long = {
+    val m = msb(n + 1)
+    gamma(m) + m
   }
+
+  def zeta(n: Long, k: Int): Long = {
+    val v = n + 1
+    val h = msb(v) / k
+    val left = 1L << (h * k)
+    (h + 1L) + h * k + k - (if (v - left < left) 1 else 0)
+  }
+
+  def minimalBinary(x: Long, b: Long): Long = {
+    val log2b = msb(b)
+    if (x < (1L << (log2b + 1)) - b) log2b else log2b + 1L
+  }
+
+  def golomb(x: Long, b: Int): Long = x / b + 1 + minimalBinary(x % b, b)
+
+  def skewedGolomb(x: Long, b: Int): Long = {
+    val i = msb(x / b + 1)
+    i + 1L + minimalBinary(x - ((1L << i) - 1L) * b, (1L << i) * b)
+  }
+
+  def nibble(n: Long): Long = 4L * ((if (n == 0) 0 else msb(n)) / 3 + 1)
 }
 
 object ZigZag {

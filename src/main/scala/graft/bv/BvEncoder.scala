@@ -22,12 +22,12 @@ import ZigZag.int2nat
   * Encoding per node (mirror image of [[BvGraph.decodeNode]]):
   * outdegree → reference + copy-blocks → intervals → residuals. Reference
   * selection is cost-based: "no reference" and each candidate in the window
-  * (subject to the `maxRefCount` chain-length cap) are dry-encoded through
-  * [[BitOutput.counting]], which adds up code lengths without producing
-  * bits, and the strictly cheapest wins (a tie keeps the choice priced
-  * first: no reference, then the nearest candidate). The dry runs and the
-  * real encode share one code path and the [[Stream]]'s primitive scratch
-  * arrays, so pricing a candidate allocates nothing.
+  * (subject to the `maxRefCount` chain-length cap) are priced exactly, and
+  * the strictly cheapest wins (a tie keeps the choice priced first: no
+  * reference, then the nearest candidate). A price is one merge pass over
+  * the list and the candidate that adds up [[CodeLength]]s as it finds
+  * copy blocks, intervals and residuals, and stops once it reaches the
+  * best price so far. Only the chosen reference is encoded.
   */
 final class BvEncoder(props: BvProperties) {
   private val windowSize = props.windowSize
@@ -52,6 +52,44 @@ final class BvEncoder(props: BvProperties) {
     case c => throw new IllegalStateException(s"coding $c unsupported")
   }
 
+  /** The bits `writeCoded(_, coding, v)` writes. */
+  private def codedBits(coding: Int, v: Long): Long = coding match {
+    case Coding.GAMMA => CodeLength.gamma(v)
+    case Coding.DELTA => CodeLength.delta(v)
+    case Coding.ZETA => CodeLength.zeta(v, zetaK)
+    case Coding.UNARY => CodeLength.unary(v)
+    case Coding.NIBBLE => CodeLength.nibble(v)
+    case Coding.GOLOMB => CodeLength.golomb(v, golombB)
+    case Coding.SKEWED_GOLOMB => CodeLength.skewedGolomb(v, golombB)
+    case c => throw new IllegalStateException(s"coding $c unsupported")
+  }
+
+  /** `codedBits(coding, _)` from a table. γ, δ and ζ lengths depend only
+    * on the highest set bit of `v + 1`, so their table has one entry per
+    * bit position; other codings look up `v` below 1024 and compute the
+    * rest. That table is empty for a coding the writer rejects, which then
+    * fails on its first write as before. */
+  private final class Lengths(coding: Int) {
+    private val byTopBit =
+      coding == Coding.GAMMA || coding == Coding.DELTA || coding == Coding.ZETA
+    private val table =
+      if (byTopBit) Array.tabulate(64)(b => codedBits(coding, (1L << b) - 1).toInt)
+      else try Array.tabulate(1024)(v => codedBits(coding, v.toLong).toInt)
+      catch { case _: RuntimeException => Array.emptyIntArray }
+
+    def apply(v: Long): Long =
+      if (byTopBit) table(63 - java.lang.Long.numberOfLeadingZeros(v + 1))
+      else if (v < table.length) table(v.toInt)
+      else codedBits(coding, v)
+  }
+
+  // the lengths pricing adds up, one per coded stream of a node record
+  private val outdegreeBits = new Lengths(codings.outdegree)
+  private val referenceBits = new Lengths(codings.reference)
+  private val blockCountBits = new Lengths(codings.blockCount)
+  private val blockBits = new Lengths(codings.block)
+  private val residualBits = new Lengths(codings.residual)
+
   /** Stateful one-node-at-a-time encoder: nodes are appended in ascending
     * id order and the bit stream grows incrementally — this is what lets a
     * Spark `DataWriter` encode its partition's node range without
@@ -59,7 +97,6 @@ final class BvEncoder(props: BvProperties) {
     * graft.sources write path). */
   final class Stream(graphOut: java.io.OutputStream) {
     private val out = new BitOutput(graphOut)
-    private val counter = BitOutput.counting()
     private val cyclic = math.max(windowSize + 1, 1)
     private val window = new Array[Array[Long]](cyclic)
     private val refCounts = new Array[Int](cyclic)
@@ -155,12 +192,13 @@ final class BvEncoder(props: BvProperties) {
     }
 
     /** Encode node `x`'s list given a chosen reference (0 = none) and the
-      * referenced list, into the real output or the counting one. */
-    private def encodeNode(out: BitOutput, succ: Array[Long], ref: Int,
+      * referenced list. */
+    private[bv] def encodeNode(out: BitOutput, succ: Array[Long], ref: Int,
         refList: Array[Long]): Unit = {
       writeCoded(out, codings.outdegree, succ.length.toLong)
       if (succ.length == 0) return
       if (windowSize > 0) writeCoded(out, codings.reference, ref.toLong)
+      ensureScratch(succ.length)
 
       var rest = succ
       var restLen = succ.length
@@ -203,10 +241,96 @@ final class BvEncoder(props: BvProperties) {
       }
     }
 
-    private def costOf(succ: Array[Long], ref: Int, refList: Array[Long]): Long = {
-      val before = counter.writtenBits
-      encodeNode(counter, succ, ref, refList)
-      counter.writtenBits - before
+    /** The bits [[encodeNode]] writes for `succ` with reference `ref`
+      * (0 = none) to `refList`, from one merge pass over both lists; or
+      * some value `>= bound` once the running total reaches `bound`.
+      *
+      * The merge finds the copy blocks as [[copyBlocks]] does. Each
+      * successor the copy leaves over extends the open run of consecutive
+      * ids or closes it; a closed run is priced as [[intervalize]] splits
+      * it: one interval if it is long enough, else that many residuals. */
+    private[bv] def price(succ: Array[Long], ref: Int, refList: Array[Long],
+        bound: Long): Long = {
+      val n = succ.length
+      var bits = outdegreeBits(n.toLong)
+      if (n == 0) return bits
+      if (windowSize > 0) bits += referenceBits(ref.toLong)
+      val base = firstNode + x
+      val refLen = if (ref > 0) refList.length else 0
+      var j = 0 // index into refList
+      var blocks = 0 // copy blocks emitted
+      var curr = 0 // length of the current copy or skip run
+      var copying = true
+      var runStart = 0L // the open run of leftover ids
+      var runLen = 0
+      var intervals = 0
+      var prevEnd = 0L
+      var residuals = false
+      var prevResidual = 0L
+      var i = 0
+      while (i <= n) { // i == n closes the last run
+        var v = 0L
+        var extend = false // v is copied or extends the open run
+        if (i < n) {
+          v = succ(i)
+          // refList entries below v are not in succ: each extends a skip run
+          while (j < refLen && refList(j) < v) {
+            if (copying) {
+              bits += blockBits(if (blocks == 0) curr else curr - 1)
+              blocks += 1; copying = false; curr = 1
+            } else curr += 1
+            j += 1
+          }
+          if (j < refLen && refList(j) == v) {
+            if (copying) curr += 1
+            else { bits += blockBits(curr - 1); blocks += 1; copying = true; curr = 1 }
+            j += 1
+            extend = true
+          } else if (runLen > 0 && v == runStart + runLen) {
+            runLen += 1
+            extend = true
+          }
+        }
+        if (!extend) {
+          if (runLen >= minIntervalLength && minIntervalLength != 0) {
+            bits += CodeLength.gamma(if (intervals == 0) int2nat(runStart - base)
+              else runStart - prevEnd - 1)
+            bits += CodeLength.gamma((runLen - minIntervalLength).toLong)
+            intervals += 1
+            prevEnd = runStart + runLen
+          } else if (runLen > 0) {
+            bits += residualBits(if (residuals) runStart - prevResidual - 1
+              else int2nat(runStart - base))
+            bits += (runLen - 1) * residualBits(0L)
+            residuals = true
+            prevResidual = runStart + runLen - 1
+          }
+          if (bits >= bound) return bits
+          runStart = v
+          runLen = 1
+        }
+        i += 1
+      }
+      if (ref > 0) {
+        // the refList tail is one more skip run: it closes a copy run
+        if (j < refLen && copying) {
+          bits += blockBits(if (blocks == 0) curr else curr - 1)
+          blocks += 1
+        }
+        bits += blockCountBits(blocks.toLong)
+      }
+      // every leftover went into an interval or a residual
+      if (minIntervalLength != 0 && (intervals > 0 || residuals))
+        bits += CodeLength.gamma(intervals.toLong)
+      bits
+    }
+
+    /** The list `r` nodes back if node `x` may reference it (nonempty,
+      * under the `maxRefCount` chain cap), else null; `1 <= r <= x`. */
+    private[bv] def candidate(r: Int): Array[Long] = {
+      val cand = window((x - r) % cyclic)
+      if (cand != null && cand.nonEmpty && refCounts((x - r) % cyclic) < maxRefCount) cand
+      else null
     }
 
     private def recordOffset(): Unit = {
@@ -214,27 +338,31 @@ final class BvEncoder(props: BvProperties) {
       offsets(x) = out.writtenBits
     }
 
-    /** Append node `x` (implicit: call order defines ids 0,1,2,…). */
+    /** Append node `x` (implicit: call order defines ids 0,1,2,…). `succ`
+      * must be strictly ascending. */
     def append(succ: Array[Long]): Unit = {
+      var k = 1
+      while (k < succ.length) {
+        require(succ(k) > succ(k - 1),
+          s"successors of node $x must be strictly ascending: ${succ(k - 1)} then ${succ(k)}")
+        k += 1
+      }
       recordOffset()
       arcs += succ.length
-      ensureScratch(succ.length)
       var bestRef = 0
-      var bestCost = Long.MaxValue
       if (succ.nonEmpty && windowSize > 0) {
-        bestCost = costOf(succ, 0, null)
+        var bestCost = price(succ, 0, null, Long.MaxValue)
         var r = 1
         while (r <= math.min(windowSize, x)) {
-          val cand = window((x - r) % cyclic)
-          if (cand != null && cand.nonEmpty && refCounts((x - r) % cyclic) < maxRefCount) {
-            val c = costOf(succ, r, cand)
+          val cand = candidate(r)
+          if (cand != null) {
+            val c = price(succ, r, cand, bestCost)
             if (c < bestCost) { bestCost = c; bestRef = r }
           }
           r += 1
         }
       }
-      encodeNode(out, succ,
-        bestRef, if (bestRef > 0) window((x - bestRef) % cyclic) else null)
+      encodeNode(out, succ, bestRef, if (bestRef > 0) candidate(bestRef) else null)
       if (windowSize > 0) {
         window(x % cyclic) = succ
         refCounts(x % cyclic) =

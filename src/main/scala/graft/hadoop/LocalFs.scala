@@ -22,6 +22,17 @@ import org.apache.hadoop.fs.permission.FsPermission
 class LocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new LocalFs.RawFs(uri, conf))
 
+/** The `FileSystem`-API twin of [[LocalFs]]: Hadoop's `file:`
+  * `FileSystem` (`org.apache.hadoop.fs.LocalFileSystem`, a
+  * `ChecksumFileSystem` over a raw local filesystem) over
+  * [[LocalFs.RawFileSystem]]. Every `create` and `mkdirs` then sets its
+  * mode in-process instead of forking `chmod`, once for the file and once
+  * for its `.crc`. Checksums, `.crc` files and renames are Hadoop's own.
+  * Selecting it with `fs.file.impl` needs `fs.file.impl.disable.cache=true`
+  * next to it, or Hadoop's FileSystem cache hands the instance to every
+  * later `file:` user of the JVM. */
+class LocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(new LocalFs.RawFileSystem)
+
 object LocalFs {
   private val rwx = PosixFilePermission.values() // owner r, w, x ... others x
 

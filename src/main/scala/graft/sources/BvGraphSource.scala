@@ -3,7 +3,7 @@ package graft.sources
 import java.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FsConstants, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -700,6 +700,24 @@ object HadoopConf {
     val c = new Configuration()
     c.size() // load the default resources now, so copies never re-parse
     c
+  }
+
+  /** One JVM-wide fork-free `file:` filesystem, built here rather than
+    * through `FileSystem.get`, so Hadoop's FileSystem cache never holds
+    * it. */
+  private lazy val localFs: FileSystem = {
+    val fs = new graft.hadoop.LocalFileSystem
+    fs.initialize(FsConstants.LOCAL_FS_URI, shared)
+    fs
+  }
+
+  /** The filesystem the sink writes `p` through: [[localFs]] for `file:`
+    * paths (a scheme-less path takes the default filesystem's scheme), so
+    * no created file or directory forks `chmod`; `p.getFileSystem(shared)`
+    * for every other scheme. */
+  def writeFs(p: Path): FileSystem = {
+    val scheme = Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(shared).getScheme)
+    if (scheme == FsConstants.LOCAL_FS_URI.getScheme) localFs else p.getFileSystem(shared)
   }
 }
 

@@ -109,7 +109,7 @@ class BvBatchWrite(basename: String, schema: StructType, padNodes: Option[Long],
       case _ =>
     }
     val manifest = new Path(basename + ".shards")
-    val fs = manifest.getFileSystem(HadoopConf.shared)
+    val fs = HadoopConf.writeFs(manifest)
     // `nodes` option: fill every boundary gap (leading, inter-shard,
     // trailing) with empty shards so the graph round-trips as dense [0, n)
     val shards: Seq[BvShardCommit] = padNodes match {
@@ -166,7 +166,7 @@ class BvBatchWrite(basename: String, schema: StructType, padNodes: Option[Long],
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(basename + ".d")
-    val fs = dir.getFileSystem(HadoopConf.shared)
+    val fs = HadoopConf.writeFs(dir)
     if (fs.exists(dir)) fs.delete(dir, true)
     BvShards.invalidate(basename)
   }
@@ -367,7 +367,7 @@ class BvShardWriter(basename: String, partitionId: Int, taskId: Long,
     extends DataWriter[InternalRow] {
   private val finalBase = BvShards.shardBase(basename, partitionId)
   private val tmpBase = s"$finalBase.attempt-$taskId"
-  private val fs = new Path(finalBase + ".graph").getFileSystem(HadoopConf.shared)
+  private val fs = HadoopConf.writeFs(new Path(finalBase + ".graph"))
 
   private var enc: BvEncoder#Stream = _
   private var graphOut: org.apache.hadoop.fs.FSDataOutputStream = _

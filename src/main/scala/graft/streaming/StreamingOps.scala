@@ -349,22 +349,19 @@ object StreamingOps {
     }
   }
 
-  /** State-store parallelism for the replay harnesses, parameterised
-    * (GRAFT_STREAM_PARTS): a production deployment sizes state
-    * partitions to keys/sec, never to the box's core count — batch 0
-    * pins the value into the checkpoint's offset metadata either way,
-    * so it is a per-pipeline choice. 8 stays the local default: the r11
-    * A/B at 4 read within run-to-run noise (18.2 vs 19.7 s over the
-    * 5-query stream sample), so there is no local win to chase and the
-    * committed records stay comparable. Results are
+  /** State-store parallelism of the replay harnesses. Batch 0 pins it
+    * into the checkpoint's offset metadata, so it is a per-pipeline
+    * choice: a production deployment sizes state partitions to keys/sec,
+    * never to the box's core count. The r11 A/B at 4 read within
+    * run-to-run noise (18.2 vs 19.7 s over the 5-query stream sample), so
+    * 8 stays and the committed records stay comparable. Results are
     * partition-count-invariant (the oracle gate pins that). */
-  private def streamShufflePartitions: String =
-    sys.env.getOrElse("GRAFT_STREAM_PARTS", "8")
+  private val StreamShufflePartitions = 8
 
-  /** Runs one replay query (`body` starts, drains and stops it) under
-    * the harnesses' three session overrides, each restored in `finally`:
+  /** Runs one replay (`body` stages, starts, drains and stops it) under
+    * the harnesses' session overrides, each restored in `finally`:
     *
-    *  - `shuffle.partitions` at [[streamShufflePartitions]]: the first
+    *  - `shuffle.partitions` at [[StreamShufflePartitions]]: the first
     *    batch pins it into the query's offset metadata;
     *  - no-data micro-batches OFF (optimization round 10): the flush
     *    choreography already provides one DATA batch per stateful stage,
@@ -373,15 +370,27 @@ object StreamingOps {
     *    by a redundant empty micro-batch paying the full commit path.
     *    Results are identical by construction of the schedule; the oracle
     *    gate and the batch-equality specs pin it per query;
-    *  - checkpoint `FileContext` on [[graft.hadoop.LocalFs]]: offset,
-    *    commit and source logs and every state-store delta, checksum and
-    *    `.crc` file are written without the `readlink`/`chmod` forks of
-    *    Hadoop's shell-based local filesystem (about 650 per query). */
+    *  - `file:` I/O without process forks: the checkpoint `FileContext`
+    *    on [[graft.hadoop.LocalFs]] (offset, commit and source logs, every
+    *    state-store delta, checksum and `.crc` file; about 650 `readlink`
+    *    and `chmod` forks per query before) and the `FileSystem` API on
+    *    [[graft.hadoop.LocalFileSystem]] (the staging write and the file
+    *    source's listing; about 22 `chmod` forks before). The FileSystem
+    *    cache is off for `file:` meanwhile, so Hadoop's cache neither
+    *    hands out nor keeps the fork-free instance;
+    *  - artifact isolation OFF: each query start clones the session, and
+    *    an isolated clone gets a fresh executor classloader. Spark's
+    *    codegen cache is keyed on (classloader, code), so every run
+    *    compiled its micro-batch classes again (about 22 per
+    *    `stream_session_window`); the clone now shares the parent's. */
   private def withReplayConf[T](s: SparkSession)(body: => T): T = {
     val overrides = Seq(
-      "spark.sql.shuffle.partitions" -> streamShufflePartitions,
+      "spark.sql.shuffle.partitions" -> StreamShufflePartitions.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-      "fs.AbstractFileSystem.file.impl" -> classOf[graft.hadoop.LocalFs].getName)
+      "fs.AbstractFileSystem.file.impl" -> classOf[graft.hadoop.LocalFs].getName,
+      "fs.file.impl" -> classOf[graft.hadoop.LocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true",
+      "spark.sql.artifact.isolation.enabled" -> "false")
     val prev = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
     overrides.foreach { case (k, v) => s.conf.set(k, v) }
     try body
@@ -571,9 +580,6 @@ object StreamingOps {
       expand(ev.filter(col("us") > midUs)).unionByName(sentinelDf(sentinelUs))) ++
       (1 to math.max(1, flushBatches)).map(i => sentinelDf(sentinelUs + i * 1000000L))
     val stage = root.resolve("stage")
-    batches.zipWithIndex.map { case (df, i) => df.withColumn("batch", lit(i + 1)) }
-      .reduce(_ unionByName _)
-      .write.partitionBy("batch").parquet(stage.toString)
     // a batch with no rows has no partition directory; it arrives as one
     // schema-only part file, so it still runs as a (0-row) micro-batch
     def staged(b: Int): Seq[java.nio.file.Path] = {
@@ -589,11 +595,14 @@ object StreamingOps {
     def arrive(b: Int): Unit =
       staged(b).zipWithIndex.foreach { case (f, i) =>
         java.nio.file.Files.move(f, inDir.resolve(s"b${b}_$i.parquet")) }
-    val src = s.readStream.schema(ev.schema).parquet(inDir.toString)
-      .withColumn("ts", timestamp_micros(col("us")))
-      .withWatermark("ts", "10 minutes")
     s.catalog.dropTempView(sink)
     withReplayConf(s) {
+      batches.zipWithIndex.map { case (df, i) => df.withColumn("batch", lit(i + 1)) }
+        .reduce(_ unionByName _)
+        .write.partitionBy("batch").parquet(stage.toString)
+      val src = s.readStream.schema(ev.schema).parquet(inDir.toString)
+        .withColumn("ts", timestamp_micros(col("us")))
+        .withWatermark("ts", "10 minutes")
       val q = build(src)
         .writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", root.resolve("ckpt").toString)

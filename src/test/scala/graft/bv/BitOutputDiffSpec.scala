@@ -94,14 +94,15 @@ object BitOutputDiffSpec {
     }
   }
 
+  /** One write, applied to both writers; `bits` is its [[CodeLength]]. */
   private final case class Op(name: String, real: BitOutput => Unit,
-      oracle: OracleBitOutput => Unit)
+      oracle: OracleBitOutput => Unit, bits: Long)
 }
 
 /** Differential test of [[BitOutput]] against a bit-at-a-time writer kept
   * here as the oracle: random sequences of every code must yield the same
   * bytes after `flush()` and the same `writtenBits` after every write, and
-  * [[BitOutput.counting]] must report the same `writtenBits` as both.
+  * each write must add the bits [[CodeLength]] gives for it.
   */
 class BitOutputDiffSpec extends AnyFunSuite {
 
@@ -113,47 +114,49 @@ class BitOutputDiffSpec extends AnyFunSuite {
   private def randomOp(rnd: java.util.Random): Op = rnd.nextInt(12) match {
     case 0 =>
       val (x, len) = (rnd.nextLong(), rnd.nextInt(65))
-      Op(s"writeLong($x, $len)", _.writeLong(x, len), _.writeLong(x, len))
+      Op(s"writeLong($x, $len)", _.writeLong(x, len), _.writeLong(x, len), len)
     case 1 =>
       val n = rnd.nextInt(201)
-      Op(s"writeUnary($n)", _.writeUnary(n), _.writeUnary(n))
+      Op(s"writeUnary($n)", _.writeUnary(n), _.writeUnary(n), CodeLength.unary(n))
     case 2 =>
       val n = anyNat(rnd)
-      Op(s"writeGamma($n)", _.writeGamma(n), _.writeGamma(n))
+      Op(s"writeGamma($n)", _.writeGamma(n), _.writeGamma(n), CodeLength.gamma(n))
     case 3 =>
       val n = anyNat(rnd)
-      Op(s"writeDelta($n)", _.writeDelta(n), _.writeDelta(n))
+      Op(s"writeDelta($n)", _.writeDelta(n), _.writeDelta(n), CodeLength.delta(n))
     case 4 =>
       // below 2^(62-k), so the longest ζ_k word stays within 64 bits
       val k = 1 + rnd.nextInt(7)
       val n = anyNat(rnd) >>> k
-      Op(s"writeZeta($n, $k)", _.writeZeta(n, k), _.writeZeta(n, k))
+      Op(s"writeZeta($n, $k)", _.writeZeta(n, k), _.writeZeta(n, k), CodeLength.zeta(n, k))
     case 5 =>
       val b = 1 + rnd.nextInt(1024)
       val x = (rnd.nextInt(200 * b)).toLong
-      Op(s"writeGolomb($x, $b)", _.writeGolomb(x, b), _.writeGolomb(x, b))
+      Op(s"writeGolomb($x, $b)", _.writeGolomb(x, b), _.writeGolomb(x, b),
+        CodeLength.golomb(x, b))
     case 6 =>
       val (x, b) = (anyNat(rnd) >>> 20, 1 + rnd.nextInt(1024))
-      Op(s"writeSkewedGolomb($x, $b)", _.writeSkewedGolomb(x, b), _.writeSkewedGolomb(x, b))
+      Op(s"writeSkewedGolomb($x, $b)", _.writeSkewedGolomb(x, b), _.writeSkewedGolomb(x, b),
+        CodeLength.skewedGolomb(x, b))
     case 7 =>
       val n = anyNat(rnd)
-      Op(s"writeNibble($n)", _.writeNibble(n), _.writeNibble(n))
+      Op(s"writeNibble($n)", _.writeNibble(n), _.writeNibble(n), CodeLength.nibble(n))
     case 8 =>
       val b = 1 + rnd.nextInt(100000)
       val x = rnd.nextInt(b)
       Op(s"writeMinimalBinary($x, $b)", _.writeMinimalBinary(x, b),
-        _.writeLongMinimalBinary(x.toLong, b.toLong))
+        _.writeLongMinimalBinary(x.toLong, b.toLong), CodeLength.minimalBinary(x, b))
     case 9 =>
       val b = 1L + (anyNat(rnd) >>> 1)
       val x = (rnd.nextLong() >>> 1) % b
       Op(s"writeLongMinimalBinary($x, $b)", _.writeLongMinimalBinary(x, b),
-        _.writeLongMinimalBinary(x, b))
+        _.writeLongMinimalBinary(x, b), CodeLength.minimalBinary(x, b))
     case 10 =>
       val n = rnd.nextInt(100).toLong
-      Op(s"writeOnes($n)", _.writeOnes(n), _.writeOnes(n))
+      Op(s"writeOnes($n)", _.writeOnes(n), _.writeOnes(n), n)
     case _ =>
       val b = rnd.nextInt(2)
-      Op(s"writeBit($b)", _.writeBit(b), _.writeBit(b))
+      Op(s"writeBit($b)", _.writeBit(b), _.writeBit(b), 1)
   }
 
   /** An unaligned start, then a run of ones spanning one to three buffers. */
@@ -162,23 +165,22 @@ class BitOutputDiffSpec extends AnyFunSuite {
     val n = 8L * BitOutput.BufferBytes * (1 + rnd.nextInt(3)) + rnd.nextInt(8)
     Op(s"writeLong(0, $head) + writeOnes($n)",
       o => { o.writeLong(0L, head); o.writeOnes(n) },
-      o => { o.writeLong(0L, head); o.writeOnes(n) })
+      o => { o.writeLong(0L, head); o.writeOnes(n) }, head + n)
   }
 
   private def runBoth(ops: Seq[Op]): Long = {
     val realBytes = new java.io.ByteArrayOutputStream()
     val oracleBytes = new java.io.ByteArrayOutputStream()
     val real = new BitOutput(realBytes)
-    val counting = BitOutput.counting()
     val oracle = new OracleBitOutput(oracleBytes)
     ops.zipWithIndex.foreach { case (op, i) =>
-      op.real(real); op.real(counting); op.oracle(oracle)
+      val before = oracle.writtenBits
+      op.real(real); op.oracle(oracle)
       assert(real.writtenBits == oracle.writtenBits, s"writtenBits after op $i ${op.name}")
-      assert(counting.writtenBits == oracle.writtenBits, s"counting writtenBits after op $i ${op.name}")
+      assert(oracle.writtenBits - before == op.bits, s"CodeLength of op $i ${op.name}")
     }
-    real.flush(); counting.flush(); oracle.flush()
-    assert(real.writtenBits == oracle.writtenBits && counting.writtenBits == oracle.writtenBits,
-      "writtenBits after flush")
+    real.flush(); oracle.flush()
+    assert(real.writtenBits == oracle.writtenBits, "writtenBits after flush")
     val (got, want) = (realBytes.toByteArray, oracleBytes.toByteArray)
     assert(got.length == want.length, "byte count after flush")
     val firstDiff = got.indices.find(i => got(i) != want(i))
@@ -207,9 +209,33 @@ class BitOutputDiffSpec extends AnyFunSuite {
     for (head <- 0 to 7; n <- Seq(0L, 1L, 7L, 8L, 9L, 8L * BitOutput.BufferBytes - 3,
         8L * BitOutput.BufferBytes + 13)) {
       runBoth(Seq(
-        Op(s"writeLong(5, $head)", _.writeLong(5L, head), _.writeLong(5L, head)),
-        Op(s"writeOnes($n)", _.writeOnes(n), _.writeOnes(n)),
-        Op("writeGamma(5)", _.writeGamma(5L), _.writeGamma(5L))))
+        Op(s"writeLong(5, $head)", _.writeLong(5L, head), _.writeLong(5L, head), head),
+        Op(s"writeOnes($n)", _.writeOnes(n), _.writeOnes(n), n),
+        Op("writeGamma(5)", _.writeGamma(5L), _.writeGamma(5L), CodeLength.gamma(5L))))
     }
+  }
+
+  test("CodeLength at every code's boundaries: small values and 2^k - 1, 2^k, 2^k + 1") {
+    val values = (0L to 300L) ++
+      (2 to 60).flatMap(k => Seq((1L << k) - 1, 1L << k, (1L << k) + 1))
+    val ops = values.flatMap { n =>
+      Seq(
+        Op(s"writeGamma($n)", _.writeGamma(n), _.writeGamma(n), CodeLength.gamma(n)),
+        Op(s"writeDelta($n)", _.writeDelta(n), _.writeDelta(n), CodeLength.delta(n)),
+        Op(s"writeNibble($n)", _.writeNibble(n), _.writeNibble(n), CodeLength.nibble(n))) ++
+        (1 to 7).filter(k => n < (1L << (62 - k))).map(k =>
+          Op(s"writeZeta($n, $k)", _.writeZeta(n, k), _.writeZeta(n, k), CodeLength.zeta(n, k))) ++
+        Seq(1, 2, 3, 5, 8, 255, 1000).filter(b => n / b < 4096).flatMap(b => Seq(
+          Op(s"writeGolomb($n, $b)", _.writeGolomb(n, b), _.writeGolomb(n, b),
+            CodeLength.golomb(n, b)),
+          Op(s"writeSkewedGolomb($n, $b)", _.writeSkewedGolomb(n, b),
+            _.writeSkewedGolomb(n, b), CodeLength.skewedGolomb(n, b)))) ++
+        (if (n > 0) Seq(Op(s"writeLongMinimalBinary(${n - 1}, $n)",
+          _.writeLongMinimalBinary(n - 1, n), _.writeLongMinimalBinary(n - 1, n),
+          CodeLength.minimalBinary(n - 1, n))) else Nil) ++
+        (if (n <= 4096) Seq(Op(s"writeUnary($n)", _.writeUnary(n.toInt),
+          _.writeUnary(n.toInt), CodeLength.unary(n))) else Nil)
+    }
+    runBoth(ops)
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * modern single thread should land well under 1 us/link; this guards
   * against accidental hot-path regressions (e.g. buffering bugs) with a
   * generous bound, and prints the measured figure for BENCH context. The
-  * encode, which dry-runs every reference candidate in the window, gets a
+  * encode, which prices every reference candidate in the window, gets a
   * bound of 2 us/link. */
 class ThroughputSpec extends AnyFunSuite {
 

@@ -13,8 +13,9 @@ import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileSta
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[LocalFs]] answers Hadoop's `file:` calls exactly as Hadoop's own
-  * `LocalFs` does, without forking; no Spark session. */
+/** [[LocalFs]] and [[LocalFileSystem]] answer Hadoop's `file:` calls
+  * exactly as Hadoop's own `LocalFs` and `LocalFileSystem` do, without
+  * forking; no Spark session. */
 class LocalFsSpec extends AnyFunSuite {
 
   private def rawFs(fs: RawLocalFileSystem): RawLocalFileSystem = {
@@ -65,7 +66,6 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("setPermission leaves the same POSIX mode as RawLocalFileSystem's chmod") {
-    def mode(p: JPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0x0fff
     withTempDir { dir =>
       val cases = Seq(0x180 -> false, 0x1a4 -> false, 0x1c0 -> false, 0x1ed -> false,
         0x3ff -> true) // 0600, 0644, 0700, 0755 on files; 1777 on a directory
@@ -126,6 +126,61 @@ class LocalFsSpec extends AnyFunSuite {
       // open(path, bufferSize) is ChecksumFs's checked open; Hadoop's
       // FilterFs routes the one-argument open to the raw stream
       val in = fc.open(p, 4096)
+      try intercept[ChecksumException](in.readAllBytes()) finally in.close()
+    }
+  }
+
+  private def fileSystem(graft: Boolean): org.apache.hadoop.fs.LocalFileSystem = {
+    val fs = if (graft) new LocalFileSystem else new org.apache.hadoop.fs.LocalFileSystem
+    fs.initialize(URI.create("file:///"), new Configuration())
+    fs
+  }
+
+  private def mode(p: JPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0x0fff
+
+  test("graft.hadoop.LocalFileSystem leaves Hadoop LocalFileSystem's files and modes, .crc included") {
+    def layout(graft: Boolean): Seq[(String, Int)] =
+      withTempDir { dir =>
+        val fs = fileSystem(graft)
+        assert(fs.getRawFileSystem.isInstanceOf[LocalFs.RawFileSystem] == graft)
+        // create makes the missing parent directories, as the sink's
+        // first shard does for `<basename>.d`
+        def put(p: Path, text: String): Unit = {
+          val out = fs.create(p, true)
+          try out.write(text.getBytes) finally out.close()
+        }
+        val tmp = hpath(dir.resolve("g.d/part-00000.attempt-7.graph"))
+        put(tmp, "shard")
+        val dst = hpath(dir.resolve("g.d/part-00000.graph"))
+        put(dst, "old")
+        assert(fs.delete(dst, false))
+        assert(fs.rename(tmp, dst))
+        put(hpath(dir.resolve("g.shards")), "shards=1\n")
+        assert(fs.mkdirs(hpath(dir.resolve("empty/sub"))))
+        val in = fs.open(dst)
+        try assert(new String(in.readAllBytes()) == "shard") finally in.close()
+        Files.walk(dir).iterator().asScala.filter(_ != dir)
+          .map(p => dir.relativize(p).toString -> mode(p)).toSeq.sorted
+      }
+    val ours = layout(graft = true)
+    assert(ours == layout(graft = false))
+    assert(ours == Seq("empty" -> 0x1ed, "empty/sub" -> 0x1ed, "g.d" -> 0x1ed,
+      "g.d/.part-00000.graph.crc" -> 0x1a4, "g.d/part-00000.graph" -> 0x1a4,
+      ".g.shards.crc" -> 0x1a4, "g.shards" -> 0x1a4).sorted) // 0755 dirs, 0644 files
+  }
+
+  test("a flipped data byte fails graft.hadoop.LocalFileSystem's checksummed read") {
+    withTempDir { dir =>
+      val fs = fileSystem(graft = true)
+      val p = hpath(dir.resolve("data"))
+      val out = fs.create(p, true)
+      try out.write(Array.tabulate[Byte](2000)(_.toByte)) finally out.close()
+      val raw = dir.resolve("data")
+      val bytes = Files.readAllBytes(raw)
+      bytes(1234) = (bytes(1234) ^ 0x40).toByte
+      Files.write(raw, bytes)
+      assert(Files.exists(dir.resolve(".data.crc")))
+      val in = fs.open(p)
       try intercept[ChecksumException](in.readAllBytes()) finally in.close()
     }
   }

@@ -103,6 +103,36 @@ class BvWriteSpec extends AnyFunSuite {
       back(x + off).sameElements(adj(x).map(_ + off)), s"node $x"))
   }
 
+  test("a file: write goes through the fork-free FileSystem and leaves Hadoop's cache alone") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val conf = HadoopConf.shared
+    val cached = FileSystem.get(java.net.URI.create("file:///"), conf)
+    val adj = randomAdj(500, 5L)
+    val dir = java.nio.file.Files.createTempDirectory("bvw")
+    val base = dir.toString + "/g"
+    // `nodes` past the last id adds a driver-written pad shard
+    adjDf(adj).write.format("bvgraph").option("basename", base).option("shards", 3)
+      .option("nodes", 600).mode("overwrite").save()
+    val fs = HadoopConf.writeFs(new Path(base))
+    assert(fs.isInstanceOf[graft.hadoop.LocalFileSystem])
+    assert(HadoopConf.writeFs(new Path("file:" + base)) eq fs, "one instance per JVM")
+    val now = FileSystem.get(java.net.URI.create("file:///"), conf)
+    assert(now eq cached, "the sink replaced the cached file: FileSystem")
+    assert(!now.isInstanceOf[graft.hadoop.LocalFileSystem])
+    // every shard file and the manifest carry Hadoop's checksum file
+    val mf = BvShards.readManifest(base).get
+    assert(mf.shards.length == 4 && mf.nodes == 600)
+    for (sh <- mf.shards; sfx <- Seq(".graph", ".offsets", ".properties")) {
+      val f = java.nio.file.Paths.get(sh.base + sfx)
+      assert(java.nio.file.Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), f)
+    }
+    assert(java.nio.file.Files.exists(dir.resolve(".g.shards.crc")))
+    val back = spark.read.format("bvgraph").option("basename", base).load()
+      .collect().map(r => r.getInt(0) -> r.getSeq[Int](1).toArray).toMap
+    assert(back.size == 600)
+    adj.indices.foreach(x => assert(back(x).sameElements(adj(x)), s"node $x"))
+  }
+
   test("sharded read: scan parallelism equals shard count; pruned id scan works") {
     val adj = randomAdj(600, 5L)
     val base = java.nio.file.Files.createTempDirectory("bvw").toString + "/g"

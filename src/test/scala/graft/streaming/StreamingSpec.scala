@@ -136,6 +136,33 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("a replay leaves the cached file: FileSystem in place and reuses its compiled classes") {
+    // withReplayConf swaps in fork-free file: I/O and shares the session's
+    // executor classloader for one replay only: afterwards Hadoop's cache
+    // still hands out the file: FileSystem it held before, and a second
+    // run of the same query finds every generated class in Spark's
+    // codegen cache
+    def localFs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val before = localFs
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache",
+      "fs.AbstractFileSystem.file.impl", "spark.sql.artifact.isolation.enabled")
+    val conf = keys.map(spark.conf.getOption)
+    def run(): Long = {
+      graft.Caches.hardSweep(spark)
+      val c0 = compiles
+      graft.SparkEntry.queries("stream_session_window")(spark, sf0001).count()
+      compiles - c0
+    }
+    run()
+    val second = run()
+    assert(second == 0, s"the second stream_session_window run compiled $second classes")
+    assert(!localFs.isInstanceOf[graft.hadoop.LocalFileSystem])
+    assert(localFs eq before, "the replay replaced the cached file: FileSystem")
+    assert(keys.map(spark.conf.getOption) == conf, "the replay's overrides were not restored")
+  }
+
   test("stream_session_window equals the batch session_window_agg row-for-row") {
     // the oracle-gated streaming query: its deterministic replay schedule
     // (midpoint batch split + sentinel watermark flush) must reproduce the
