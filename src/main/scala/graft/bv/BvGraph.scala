@@ -4,7 +4,7 @@ import ZigZag.nat2int
 
 /** Decoder for BVGraph-compressed graphs — a clean-room Scala
   * implementation of the decode walk specified by
-  * /root/reference/.../patched/HdfsBVGraph.java:99-201 (itself upstream
+  * patched/HdfsBVGraph.java:99-201 in the reference (itself upstream
   * it.unimi.dsi.webgraph.BVGraph). Eager per-node decode: adjacency lists
   * average a handful of ints, so the reference's lazy 3-way iterator
   * machinery buys nothing under Spark's row-at-a-time pull.
@@ -12,6 +12,12 @@ import ZigZag.nat2int
   * Random access (offsets + reference-chain recursion) powers mid-split
   * window warm-up, which is what makes the format splittable for parallel
   * scan (SURVEY.md §2.1 D1/D4).
+  *
+  * One kernel serves both id widths, as one encoder does: successor
+  * values decode as Long ([[decodeNode]], [[nodeIteratorLong]]). The Int
+  * API ([[nodeIterator]], [[successorArray]], [[iterator]]) is a narrowing
+  * view over the same walk that throws on a value past Int range instead
+  * of wrapping it.
   */
 final class BvGraph(
     val props: BvProperties,
@@ -26,6 +32,10 @@ final class BvGraph(
   private val zetaK = props.zetaK
   private val codings = props.codings
   private val cyclicBufferSize = windowSize + 1
+  private val golombB = props.golombModulus
+  // shard base (sidecar `firstnode`, 0 for unsharded): value-coded deltas
+  // are anchored at the GLOBAL id firstNode + x — see BvEncoder.encodeNode
+  private val firstNode = props.firstNode
 
   /** Bit offsets of each node's record, plus the end-of-stream sentinel
     * (n+1 entries). Decoded once per `BvGraph` instance — executors share
@@ -39,7 +49,13 @@ final class BvGraph(
   val offsets: BvGraph.Offsets = {
     if (offsetsSrc eq BvGraph.NoOffsets) null // sequential-only mode
     else {
-      val raw = BvGraph.decodeOffsets(offsetsSrc, props)
+      // D5: offsets file = coded bit-length gaps, prefix-summed to n+1
+      // absolute bit offsets (patched/HdfsBVGraph.java:410-436)
+      val in = new BitInput(offsetsSrc)
+      val raw = new Array[Long](n + 1)
+      var off = 0L
+      var i = 0
+      while (i <= n) { off += readCoded(in, codings.offset); raw(i) = off; i += 1 }
       val useEf = efOffsets.getOrElse(raw.length > BvGraph.EF_THRESHOLD)
       if (useEf) new BvGraph.EfOffsets(EliasFanoLongList(raw))
       else new BvGraph.PlainOffsets(raw)
@@ -54,23 +70,10 @@ final class BvGraph(
       "graph opened without an offsets index (sequential-only mode — " +
         "regenerate the index with BvOffsets.regenerate)")
 
-  private val golombB = props.golombModulus
-  // shard base (sidecar `firstnode`, 0 for unsharded): value-coded deltas
-  // are anchored at the GLOBAL id firstNode + x — see BvEncoder.encodeNode
-  private val firstNode = props.firstNode
-
-  private def readCoded(in: BitInput, coding: Int): Int = coding match {
-    case Coding.GAMMA => in.readGamma()
-    case Coding.DELTA => in.readDelta()
-    case Coding.ZETA => in.readZeta(zetaK)
-    case Coding.UNARY => in.readUnary()
-    case Coding.NIBBLE => in.readNibble()
-    case Coding.GOLOMB => in.readGolomb(golombB)
-    case Coding.SKEWED_GOLOMB => in.readSkewedGolomb(golombB)
-    case c => throw new IllegalStateException(s"coding $c unsupported")
-  }
-
-  private def readCodedLong(in: BitInput, coding: Int): Long = coding match {
+  /** One decode for every value-sized read: successor values, gaps and
+    * offsets are Long; callers narrow counts (outdegree, reference,
+    * blocks) with `.toInt`, which equals the Int reader bit for bit. */
+  private def readCoded(in: BitInput, coding: Int): Long = coding match {
     case Coding.GAMMA => in.readLongGamma()
     case Coding.DELTA => in.readLongDelta()
     case Coding.ZETA => in.readLongZeta(zetaK)
@@ -117,44 +120,48 @@ final class BvGraph(
     require(x >= 0 && x < n, s"Node index out of range: $x")
     requireIndex()
     in.position(offsets(x))
-    readCoded(in, codings.outdegree)
+    readCoded(in, codings.outdegree).toInt
   }
+
+  /** Random-access successors as Int ids: [[successorArrayLong]] narrowed
+    * by [[BvGraph.narrow]], which throws on a value outside Int range. */
+  def successorArray(x: Int): Array[Int] = BvGraph.narrow(x, successorArrayLong(x))
 
   /** Random-access successor decode; reference chains resolved recursively
     * with fresh bit streams (depth bounded by maxrefcount at encode time —
-    * mirrors /root/reference/.../patched/HdfsBVGraph.java:238-243).
+    * mirrors patched/HdfsBVGraph.java:238-243).
     */
-  def successorArray(x: Int): Array[Int] = {
+  def successorArrayLong(x: Int): Array[Long] = {
     requireIndex()
     val in = newBitInput(4096)
     in.position(offsets(x))
-    decodeNode(x, in, y => successorArray(y))
+    decodeNode(x, in, y => successorArrayLong(y))
   }
 
   /** The BV decode kernel: outdegree → reference copy-blocks → intervals →
     * residuals → 3-way merge. `resolveRef` supplies the referenced node's
     * full successor list (window lookup when scanning sequentially,
-    * recursion for random access).
+    * recursion for random access). Successor VALUES are Long, local node
+    * indexes and counts Int: a shard holds fewer than 2³¹ nodes, but on a
+    * big graph its global ids, and the gaps between them, pass 2³¹.
     */
-  def decodeNode(x: Int, in: BitInput, resolveRef: Int => Array[Int]): Array[Int] = {
-    val d = readCoded(in, codings.outdegree)
+  def decodeNode(x: Int, in: BitInput, resolveRef: Int => Array[Long]): Array[Long] = {
+    val d = readCoded(in, codings.outdegree).toInt
     if (d == 0) return BvGraph.EMPTY
 
-    val ref = if (windowSize > 0) readCoded(in, codings.reference) else 0
+    val ref = if (windowSize > 0) readCoded(in, codings.reference).toInt else 0
 
     // 1. masked copy from the referenced list
-    var copied: Array[Int] = BvGraph.EMPTY
+    var copied: Array[Long] = BvGraph.EMPTY
+    var nCopied = 0
     if (ref > 0) {
       val refList = resolveRef(x - ref)
-      val blockCount = readCoded(in, codings.blockCount)
-      val out = new Array[Int](d)
-      var nCopied = 0
+      val blockCount = readCoded(in, codings.blockCount).toInt
+      val out = new Array[Long](d)
       var pos = 0
-      var total = 0
       var i = 0
       while (i < blockCount) {
-        val b = readCoded(in, codings.block) + (if (i == 0) 0 else 1)
-        total += b
+        val b = readCoded(in, codings.block).toInt + (if (i == 0) 0 else 1)
         if ((i & 1) == 0) { // copy block
           var j = 0
           while (j < b) { out(nCopied) = refList(pos + j); nCopied += 1; j += 1 }
@@ -166,40 +173,39 @@ final class BvGraph(
         var j = pos
         while (j < refList.length) { out(nCopied) = refList(j); nCopied += 1; j += 1 }
       }
-      copied = java.util.Arrays.copyOf(out, nCopied)
+      copied = out
     }
 
-    var extraCount = d - copied.length
+    var extraCount = d - nCopied
 
     // 2. intervals (γ throughout, first left extreme zigzagged against x)
-    var intervals: Array[Int] = BvGraph.EMPTY
+    var intervals: Array[Long] = BvGraph.EMPTY
+    var nIntervals = 0
     if (extraCount > 0 && minIntervalLength != 0) {
       val intervalCount = in.readGamma()
       if (intervalCount != 0) {
-        val vals = new Array[Int](extraCount)
-        var nv = 0
-        var prev = 0
+        intervals = new Array[Long](extraCount)
+        var prev = 0L
         var i = 0
         while (i < intervalCount) {
           val left =
-            if (i == 0) (nat2int(in.readLongGamma()) + firstNode + x).toInt
-            else in.readGamma() + prev + 1
+            if (i == 0) nat2int(in.readLongGamma()) + firstNode + x
+            else in.readLongGamma() + prev + 1
           val len = in.readGamma() + minIntervalLength
           var v = left
-          while (v < left + len) { vals(nv) = v; nv += 1; v += 1 }
+          while (v < left + len) { intervals(nIntervals) = v; nIntervals += 1; v += 1 }
           prev = left + len
           extraCount -= len
           i += 1
         }
-        intervals = java.util.Arrays.copyOf(vals, nv)
       }
     }
 
     // 3. residuals (first zigzagged against x, then +1-gap coded)
-    var residuals: Array[Int] = BvGraph.EMPTY
+    var residuals: Array[Long] = BvGraph.EMPTY
     if (extraCount > 0) {
-      residuals = new Array[Int](extraCount)
-      var prev = (firstNode + x + nat2int(readCodedLong(in, codings.residual))).toInt
+      residuals = new Array[Long](extraCount)
+      var prev = firstNode + x + nat2int(readCoded(in, codings.residual))
       residuals(0) = prev
       var i = 1
       while (i < extraCount) {
@@ -210,149 +216,20 @@ final class BvGraph(
     }
 
     // 4. merge three ascending, disjoint sequences
-    BvGraph.merge3(copied, intervals, residuals, d)
+    BvGraph.merge3(copied, nCopied, intervals, nIntervals, residuals, d)
   }
 
-  /** Long-valued random-access successors — the >2³¹ global-id ("big")
-    * decode path. Bit-compatible with [[successorArray]]: universal codes
-    * are width-agnostic, so the SAME stream decodes through either kernel
-    * as long as values fit the narrower type; this one never narrows. */
-  def successorArrayLong(x: Int): Array[Long] = {
-    requireIndex()
-    val in = newBitInput(4096)
-    in.position(offsets(x))
-    decodeNodeLong(x, in, y => successorArrayLong(y))
-  }
-
-  /** The decode kernel with Long successor VALUES (local node indexes stay
-    * Int — a shard holds <2³¹ nodes; its global ids don't). Mirrors
-    * [[decodeNode]] exactly, but every value-sized read (interval-left
-    * gaps, residual gaps) uses the Long reader: on a >2³¹-id graph a gap
-    * can exceed Int.MaxValue and the Int kernel would silently wrap. */
-  def decodeNodeLong(x: Int, in: BitInput, resolveRef: Int => Array[Long]): Array[Long] = {
-    val d = readCoded(in, codings.outdegree)
-    if (d == 0) return BvGraph.EMPTY_L
-
-    val ref = if (windowSize > 0) readCoded(in, codings.reference) else 0
-
-    // 1. masked copy from the referenced list
-    var copied: Array[Long] = BvGraph.EMPTY_L
-    if (ref > 0) {
-      val refList = resolveRef(x - ref)
-      val blockCount = readCoded(in, codings.blockCount)
-      val out = new Array[Long](d)
-      var nCopied = 0
-      var pos = 0
-      var i = 0
-      while (i < blockCount) {
-        val b = readCoded(in, codings.block) + (if (i == 0) 0 else 1)
-        if ((i & 1) == 0) { // copy block
-          var j = 0
-          while (j < b) { out(nCopied) = refList(pos + j); nCopied += 1; j += 1 }
-        }
-        pos += b
-        i += 1
-      }
-      if ((blockCount & 1) == 0) { // implicit trailing copy block
-        var j = pos
-        while (j < refList.length) { out(nCopied) = refList(j); nCopied += 1; j += 1 }
-      }
-      copied = java.util.Arrays.copyOf(out, nCopied)
-    }
-
-    var extraCount = d - copied.length
-
-    // 2. intervals (γ throughout, first left extreme zigzagged against x)
-    var intervals: Array[Long] = BvGraph.EMPTY_L
-    if (extraCount > 0 && minIntervalLength != 0) {
-      val intervalCount = in.readGamma()
-      if (intervalCount != 0) {
-        val vals = new Array[Long](extraCount)
-        var nv = 0
-        var prev = 0L
-        var i = 0
-        while (i < intervalCount) {
-          val left =
-            if (i == 0) nat2int(in.readLongGamma()) + firstNode + x
-            else in.readLongGamma() + prev + 1
-          val len = in.readGamma() + minIntervalLength
-          var v = left
-          while (v < left + len) { vals(nv) = v; nv += 1; v += 1 }
-          prev = left + len
-          extraCount -= len
-          i += 1
-        }
-        intervals = java.util.Arrays.copyOf(vals, nv)
-      }
-    }
-
-    // 3. residuals (first zigzagged against x, then +1-gap coded)
-    var residuals: Array[Long] = BvGraph.EMPTY_L
-    if (extraCount > 0) {
-      residuals = new Array[Long](extraCount)
-      var prev = firstNode + x + nat2int(readCodedLong(in, codings.residual))
-      residuals(0) = prev
-      var i = 1
-      while (i < extraCount) {
-        prev += readCodedLong(in, codings.residual) + 1
-        residuals(i) = prev
-        i += 1
-      }
-    }
-
-    // 4. merge three ascending, disjoint sequences
-    BvGraph.merge3Long(copied, intervals, residuals, d)
-  }
+  /** Sequential scan over nodes [from, until) as Int ids: the
+    * [[nodeIteratorLong]] walk, each list narrowed by [[BvGraph.narrow]].
+    * The range checks run eagerly, at the call. */
+  def nodeIterator(from: Int, until: Int,
+      bufferSize: Int = 1 << 20): Iterator[(Int, Array[Int])] =
+    nodeIteratorLong(from, until, bufferSize).map { case (x, succ) => (x, BvGraph.narrow(x, succ)) }
 
   /** Sequential scan over nodes [from, until): the splittable-read
     * primitive. Mid-stream starts warm the decode window by random access
     * for the `windowSize` predecessors, exactly as the reference's
-    * node-iterator constructor does
-    * (/root/reference/.../patched/HdfsBVGraph.java:221-229).
-    */
-  def nodeIterator(from: Int, until: Int,
-      bufferSize: Int = 1 << 20): Iterator[(Int, Array[Int])] = {
-    require(from >= 0 && from <= n, s"Node index out of range: $from")
-    if (from > 0) requireIndex() // mid-split warm-up needs random access
-    val hi = math.min(until, n)
-    if (from >= hi) return Iterator.empty
-    val in = newBitInput(bufferSize)
-    val window = new Array[Array[Int]](cyclicBufferSize)
-    if (from > 0 && windowSize > 0) {
-      var i = 1
-      while (i < math.min(from + 1, cyclicBufferSize)) {
-        window((from - i) % cyclicBufferSize) = successorArray(from - i)
-        i += 1
-      }
-    }
-    in.position(if (from == 0) 0L else offsets(from))
-    new Iterator[(Int, Array[Int])] {
-      private var curr = from
-      def hasNext: Boolean = curr < hi
-      def next(): (Int, Array[Int]) = {
-        val succ = decodeNode(curr, in, y => window(y % cyclicBufferSize))
-        // Integrity: node x's record must end exactly where offsets says
-        // node x+1 begins. A truncated/corrupt stream zero-pads, and zeros
-        // decode as plausible empty nodes — without this check a damaged
-        // split would SILENTLY feed wrong adjacency downstream. (Skipped
-        // in sequential-only mode — there is no index to check against.)
-        if (offsets != null && in.bitPosition != offsets(curr + 1))
-          throw new java.io.EOFException(
-            s"decode desync at node $curr: ended at bit ${in.bitPosition}, " +
-              s"offsets say ${offsets(curr + 1)} (truncated or corrupt .graph?)")
-        if (windowSize > 0) window(curr % cyclicBufferSize) = succ
-        val r = (curr, succ)
-        curr += 1
-        r
-      }
-    }
-  }
-
-  /** [[nodeIterator]]'s Long-valued twin for >2³¹-global-id shards: same
-    * splittable sequential scan (mid-split window warm-up by random
-    * access), successor values decoded wide. Kept as a separate kernel so
-    * the classic path pays zero widening cost — Int adjacency is the hot
-    * path for every <2³¹ graph.
+    * node-iterator constructor does (patched/HdfsBVGraph.java:221-229).
     */
   def nodeIteratorLong(from: Int, until: Int,
       bufferSize: Int = 1 << 20): Iterator[(Int, Array[Long])] = {
@@ -374,7 +251,12 @@ final class BvGraph(
       private var curr = from
       def hasNext: Boolean = curr < hi
       def next(): (Int, Array[Long]) = {
-        val succ = decodeNodeLong(curr, in, y => window(y % cyclicBufferSize))
+        val succ = decodeNode(curr, in, y => window(y % cyclicBufferSize))
+        // Integrity: node x's record must end exactly where offsets says
+        // node x+1 begins. A truncated/corrupt stream zero-pads, and zeros
+        // decode as plausible empty nodes — without this check a damaged
+        // split would SILENTLY feed wrong adjacency downstream. (Skipped
+        // in sequential-only mode — there is no index to check against.)
         if (offsets != null && in.bitPosition != offsets(curr + 1))
           throw new java.io.EOFException(
             s"decode desync at node $curr: ended at bit ${in.bitPosition}, " +
@@ -393,8 +275,6 @@ final class BvGraph(
     * /root/reference/.../patched/HdfsBVGraph.java:393-407). Works in
     * sequential-only mode (no .offsets file needed). */
   def rebuildOffsets(bufferSize: Int = 1 << 20): Array[Long] = {
-    // Long kernel: regeneration must be value-safe on >2³¹-id shards too,
-    // and this is a cold path (one pass per lost index) — widening is free.
     val in = newBitInput(bufferSize)
     in.position(0L)
     val window = new Array[Array[Long]](cyclicBufferSize)
@@ -402,7 +282,7 @@ final class BvGraph(
     var x = 0
     while (x < n) {
       out(x) = in.bitPosition
-      val succ = decodeNodeLong(x, in, y => window(y % cyclicBufferSize))
+      val succ = decodeNode(x, in, y => window(y % cyclicBufferSize))
       if (windowSize > 0) window(x % cyclicBufferSize) = succ
       x += 1
     }
@@ -415,8 +295,8 @@ final class BvGraph(
 }
 
 object BvGraph {
-  private val EMPTY = new Array[Int](0)
-  private val EMPTY_L = new Array[Long](0)
+  private val EMPTY = new Array[Long](0)
+  private val EMPTY_INT = new Array[Int](0)
 
   /** Sentinel offsets source: opens the graph in sequential-only mode (no
     * index decoded; random access and mid-split starts throw). Used by
@@ -452,72 +332,48 @@ object BvGraph {
       new FileBytes(java.nio.file.Paths.get(basename + ".offsets")))
   }
 
-  /** D5: offsets file = (coding-dependent, γ default) delta-coded gaps;
-    * prefix-sum to n+1 absolute bit offsets
-    * (/root/reference/.../patched/HdfsBVGraph.java:410-436).
+  /** 3-way merge of ascending disjoint sequences — the first `na` of `a`,
+    * the first `nb` of `b` and all of `c` — into one ascending array of
+    * exactly `d` elements. A part that holds all `d` values is returned
+    * as it is: `a` and `b` are allocated `d` long in that case, and the
+    * result must be, since it serves later nodes as a reference list.
     */
-  private def decodeOffsets(src: SeekableBytes, props: BvProperties): Array[Long] = {
-    val in = new BitInput(src)
-    val n = props.nodes
-    val out = new Array[Long](n + 1)
-    var off = 0L
-    var i = 0
-    while (i <= n) {
-      val gap = props.codings.offset match {
-        case Coding.GAMMA => in.readLongGamma()
-        case Coding.DELTA => in.readLongDelta()
-        case Coding.ZETA => in.readLongZeta(props.zetaK)
-        case Coding.UNARY => in.readUnary().toLong
-        case Coding.NIBBLE => in.readLongNibble()
-        case Coding.GOLOMB => in.readLongGolomb(props.golombModulus)
-        case Coding.SKEWED_GOLOMB => in.readLongSkewedGolomb(props.golombModulus)
-        case c => throw new IllegalStateException(s"offset coding $c unsupported")
-      }
-      off += gap
-      out(i) = off
-      i += 1
-    }
-    out
-  }
-
-  /** 3-way merge of ascending disjoint arrays into one ascending array of
-    * exactly `d` elements.
-    */
-  private[bv] def merge3(a: Array[Int], b: Array[Int], c: Array[Int],
-      d: Int): Array[Int] = {
-    if (b.isEmpty && c.isEmpty) return a
-    if (a.isEmpty && c.isEmpty) return b
-    if (a.isEmpty && b.isEmpty) return c
-    val out = new Array[Int](d)
-    var (i, j, k, o) = (0, 0, 0, 0)
-    while (o < d) {
-      val va = if (i < a.length) a(i) else Int.MaxValue
-      val vb = if (j < b.length) b(j) else Int.MaxValue
-      val vc = if (k < c.length) c(k) else Int.MaxValue
-      if (va <= vb && va <= vc) { out(o) = va; i += 1 }
-      else if (vb <= vc) { out(o) = vb; j += 1 }
-      else { out(o) = vc; k += 1 }
-      o += 1
-    }
-    out
-  }
-
-  /** [[merge3]] for Long-valued lists (the big decode path). */
-  private[bv] def merge3Long(a: Array[Long], b: Array[Long], c: Array[Long],
-      d: Int): Array[Long] = {
-    if (b.isEmpty && c.isEmpty) return a
-    if (a.isEmpty && c.isEmpty) return b
-    if (a.isEmpty && b.isEmpty) return c
+  private[bv] def merge3(a: Array[Long], na: Int, b: Array[Long], nb: Int,
+      c: Array[Long], d: Int): Array[Long] = {
+    if (na == d) return a
+    if (nb == d) return b
+    if (c.length == d) return c
     val out = new Array[Long](d)
-    var (i, j, k, o) = (0, 0, 0, 0)
+    var i = 0
+    var j = 0
+    var k = 0
+    var o = 0
     while (o < d) {
-      val va = if (i < a.length) a(i) else Long.MaxValue
-      val vb = if (j < b.length) b(j) else Long.MaxValue
+      val va = if (i < na) a(i) else Long.MaxValue
+      val vb = if (j < nb) b(j) else Long.MaxValue
       val vc = if (k < c.length) c(k) else Long.MaxValue
       if (va <= vb && va <= vc) { out(o) = va; i += 1 }
       else if (vb <= vc) { out(o) = vb; j += 1 }
       else { out(o) = vc; k += 1 }
       o += 1
+    }
+    out
+  }
+
+  /** Node `x`'s successors as Int ids, for the Int views and INT-schema
+    * scans. Fails closed: a value outside Int range (a big shard read
+    * through the Int API) throws instead of wrapping into a wrong id. */
+  def narrow(x: Int, succ: Array[Long]): Array[Int] = {
+    if (succ.length == 0) return EMPTY_INT
+    val out = new Array[Int](succ.length)
+    var i = 0
+    while (i < succ.length) {
+      val v = succ(i)
+      if (v.toInt != v)
+        throw new ArithmeticException(s"node $x: successor $v does not fit an Int id " +
+          "(read the graph as Long: nodeIteratorLong, or a scan of an idwidth=long manifest)")
+      out(i) = v.toInt
+      i += 1
     }
     out
   }

@@ -2,7 +2,7 @@ package graft.hadoop
 
 import java.net.URI
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
+import java.nio.file.attribute.{GroupPrincipal, PosixFilePermission, UserPrincipal}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
@@ -13,10 +13,11 @@ import org.apache.hadoop.fs.permission.FsPermission
 /** Hadoop's `file:` `AbstractFileSystem` (`org.apache.hadoop.fs.local.LocalFs`:
   * `ChecksumFs` over a raw local delegate) without its process forks.
   * Without libhadoop, `RawLocalFileSystem` shells out `readlink` for every
-  * `getFileLinkStatus`, which each `FileContext` rename calls, and `chmod`
-  * for every `setPermission`; Spark's `FileContext` checkpoint manager
+  * `getFileLinkStatus`, which each `FileContext` rename calls, `chmod`
+  * for every `setPermission`, and `ls -ld` for the first permission, owner
+  * or group read of a status; Spark's `FileContext` checkpoint manager
   * pays about a dozen forks per state-store delta commit. [[LocalFs.RawFileSystem]]
-  * answers both calls in-process. Checksums, `.crc` files and atomic
+  * answers these calls in-process. Checksums, `.crc` files and atomic
   * renames are Hadoop's own. Select it with
   * `fs.AbstractFileSystem.file.impl=graft.hadoop.LocalFs`. */
 class LocalFs(uri: URI, conf: Configuration)
@@ -36,10 +37,12 @@ class LocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(new LocalFs.R
 object LocalFs {
   private val rwx = PosixFilePermission.values() // owner r, w, x ... others x
 
-  /** `RawLocalFileSystem` with `setPermission` through `java.nio` and
+  /** `RawLocalFileSystem` with `setPermission` through `java.nio`,
     * `getFileLinkStatus` of a non-symlink equal to `getFileStatus`, which
-    * is what Hadoop returns when `readlink` prints nothing. Sticky bits,
-    * real symlinks and non-POSIX filesystems fall through to Hadoop. */
+    * is what Hadoop returns when `readlink` prints nothing, and statuses
+    * whose mode, owner and group come from the file's POSIX attributes
+    * (what Hadoop parses out of `ls -ld`). Setting a sticky bit, real
+    * symlinks and non-POSIX filesystems fall through to Hadoop. */
   class RawFileSystem extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val mode = permission.toShort.toInt
@@ -51,6 +54,28 @@ object LocalFs {
         case _: UnsupportedOperationException => super.setPermission(p, permission)
       }
     }
+
+    /** Hadoop's status, built without loading permissions, completed from
+      * the attributes of the resolved file, which is what Hadoop runs
+      * `ls -ld` on. The `unix` view is the POSIX view plus the mode word,
+      * which carries the sticky bit that `PosixFileAttributes` drops. */
+    override def getFileStatus(f: Path): FileStatus = {
+      val st = super.getFileStatus(f)
+      val attrs =
+        try Files.readAttributes(pathToFile(f).toPath, "unix:mode,owner,group")
+        catch { case _: UnsupportedOperationException => return st }
+      new FileStatus(st.getLen, st.isDirectory, st.getReplication, st.getBlockSize,
+        st.getModificationTime, st.getAccessTime,
+        new FsPermission((attrs.get("mode").asInstanceOf[Int] & 0x3ff).toShort),
+        attrs.get("owner").asInstanceOf[UserPrincipal].getName,
+        attrs.get("group").asInstanceOf[GroupPrincipal].getName, st.getPath)
+    }
+
+    /** A directory's entries come through [[getFileStatus]] already;
+      * Hadoop answers a plain file with the same status `getFileStatus`
+      * gives. */
+    override def listStatus(f: Path): Array[FileStatus] =
+      if (pathToFile(f).isDirectory) super.listStatus(f) else Array(getFileStatus(f))
 
     override def getFileLinkStatus(f: Path): FileStatus =
       if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)

@@ -66,7 +66,7 @@ class BvCatalog extends TableCatalog {
   private def exists(basename: String): Boolean = {
     def isFile(suffix: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(basename + suffix)
-      try p.getFileSystem(HadoopConf.shared).exists(p) catch { case _: Exception => false }
+      try HadoopConf.fs(p).exists(p) catch { case _: Exception => false }
     }
     isFile(".shards") || isFile(".properties")
   }

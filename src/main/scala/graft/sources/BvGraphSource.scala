@@ -199,21 +199,9 @@ class BvGraphScanBuilder(basename: String, splits: Option[Int],
     * nodes). All filters are also left as residuals for Spark to
     * re-evaluate, so partial/overlapping predicates stay correct. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def num(v: Any): Option[Long] = v match {
-      case i: Int => Some(i.toLong)
-      case l: Long => Some(l)
-      case s: Short => Some(s.toLong)
-      case _ => None
-    }
-    accepted = filters.filter {
-      case GreaterThan("id", v) => num(v).exists { x => lo = math.max(lo, x + 1); true }
-      case GreaterThanOrEqual("id", v) => num(v).exists { x => lo = math.max(lo, x); true }
-      case LessThan("id", v) => num(v).exists { x => hi = math.min(hi, x); true }
-      case LessThanOrEqual("id", v) => num(v).exists { x => hi = math.min(hi, x + 1); true }
-      case EqualTo("id", v) =>
-        num(v).exists { x => lo = math.max(lo, x); hi = math.min(hi, x + 1); true }
-      case _ => false
-    }
+    accepted = filters.filter(f => BvGraphScan.idBounds(f).exists { case (l, h) =>
+      lo = math.max(lo, l); hi = math.min(hi, h); true
+    })
     filters // every filter is re-evaluated post-scan
   }
 
@@ -247,31 +235,19 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
       org.apache.spark.sql.connector.expressions.NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("id"))
 
-  override def filter(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    import org.apache.spark.sql.sources._
-    def num(v: Any): Option[Long] = v match {
-      case i: Int => Some(i.toLong)
-      case l: Long => Some(l)
-      case s: Short => Some(s.toLong)
-      case _ => None
-    }
+  override def filter(filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
     filters.foreach {
-      case In("id", vs) =>
-        val ids = vs.flatMap(num(_))
+      case org.apache.spark.sql.sources.In("id", vs) =>
+        val ids = vs.flatMap(BvGraphScan.num(_))
         if (ids.nonEmpty && ids.length == vs.length) {
           rtLo = math.max(rtLo, ids.min)
           rtHi = math.min(rtHi, ids.max + 1)
         }
-      case EqualTo("id", v) => num(v).foreach { x =>
-        rtLo = math.max(rtLo, x); rtHi = math.min(rtHi, x + 1)
+      // an unsupported runtime filter leaves the scan unpruned (safe)
+      case f => BvGraphScan.idBounds(f).foreach { case (l, h) =>
+        rtLo = math.max(rtLo, l); rtHi = math.min(rtHi, h)
       }
-      case GreaterThan("id", v) => num(v).foreach(x => rtLo = math.max(rtLo, x + 1))
-      case GreaterThanOrEqual("id", v) => num(v).foreach(x => rtLo = math.max(rtLo, x))
-      case LessThan("id", v) => num(v).foreach(x => rtHi = math.min(rtHi, x))
-      case LessThanOrEqual("id", v) => num(v).foreach(x => rtHi = math.min(rtHi, x + 1))
-      case _ => () // unsupported runtime filter: scan stays unpruned (safe)
     }
-  }
 
   override def readSchema(): StructType = pushedAggs match {
     case Some(aggs) => StructType(aggs.zipWithIndex.map { case (a, i) =>
@@ -362,12 +338,12 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
     * listing; the listing runs once per manifest version, not once per
     * call (Spark calls this method twice per query), and never as a
     * per-shard `getFileStatus` loop (10k shards would mean 10k serial
-    * NameNode RPCs before the first task launches). Caching matters even
-    * on the local filesystem: each `LocatedFileStatus` there forks
-    * `ls -ld` to load permissions, and every Hadoop call reuses
-    * [[HadoopConf.shared]] because a fresh `Configuration` costs about
-    * 6 ms of XML parsing. Cached hosts may be stale after a block move;
-    * they are only a locality hint. */
+    * NameNode RPCs before the first task launches). Every Hadoop call
+    * goes through [[HadoopConf.fs]], whose `file:` filesystem loads a
+    * status's permissions in-process, and reuses [[HadoopConf.shared]]
+    * because a fresh `Configuration` costs about 6 ms of XML parsing.
+    * Cached hosts may be stale after a block move; they are only a
+    * locality hint. */
   override def planInputPartitions(): Array[InputPartition] = {
     pushedAggs.foreach { aggs =>
       // metadata-only answer from the ACTUAL shard id ranges (see
@@ -415,7 +391,7 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
         else {
           // int-schema ceiling (classic graphs only): a scanned shard's
           // global ids must fit the INT id column. Long-id manifests
-          // surface BIGINT and take the Long decode kernel instead.
+          // surface BIGINT columns instead.
           require(big || gu - 1 <= Int.MaxValue.toLong,
             s"shard [${sh.from},${sh.until}) holds ids beyond Int.MaxValue " +
               "but the manifest lacks idwidth=long; rewrite through the " +
@@ -454,7 +430,7 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
     val numSplits = (if (limit.isDefined) None else splits).getOrElse(
       math.max(1, math.ceil((totalBits / 8.0) / BvGraphTable.TARGET_SPLIT_BYTES).toInt))
     val graphPath = new Path(basename + ".graph")
-    val fs = graphPath.getFileSystem(HadoopConf.shared)
+    val fs = HadoopConf.fs(graphPath)
     val status = fs.getFileStatus(graphPath)
 
     byteBalancedCuts(g, scanFrom, scanUntil, numSplits).map { case (from, until) =>
@@ -505,6 +481,29 @@ case class BvTaskMetric(metricName: String, metricValue: Long)
 }
 
 object BvGraphScan {
+  import org.apache.spark.sql.sources._
+
+  /** An integral filter literal as Long; None for any other type. */
+  private[sources] def num(v: Any): Option[Long] = v match {
+    case i: Int => Some(i.toLong)
+    case l: Long => Some(l)
+    case s: Short => Some(s.toLong)
+    case _ => None
+  }
+
+  /** The id range [lo, hi) one comparison on `id` admits, for planning
+    * (`pushFilters`) and runtime pruning (`filter`) alike; None for any
+    * other filter. The bounds only narrow the scan: Spark re-evaluates
+    * every filter on the rows. */
+  private[sources] def idBounds(f: Filter): Option[(Long, Long)] = f match {
+    case GreaterThan("id", v) => num(v).map(x => (x + 1, Long.MaxValue))
+    case GreaterThanOrEqual("id", v) => num(v).map(x => (x, Long.MaxValue))
+    case LessThan("id", v) => num(v).map(x => (Long.MinValue, x))
+    case LessThanOrEqual("id", v) => num(v).map(x => (Long.MinValue, x + 1))
+    case EqualTo("id", v) => num(v).map(x => (x, x + 1))
+    case _ => None
+  }
+
   sealed trait PushedAgg
   case object CountStar extends PushedAgg { override def toString = "COUNT(*)" }
   case object SumOutdegree extends PushedAgg { override def toString = "SUM(outdegree)" }
@@ -547,9 +546,16 @@ class BvAggReaderFactory extends PartitionReaderFactory {
 case class BvInputPartition(basename: String, from: Int, until: Int,
     idOffset: Long, hosts: Array[String]) extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
+
+  /** Write local node `x`'s global id into `row(i)`: BIGINT when `big`,
+    * else INT (planning checked that the partition's ids fit). */
+  def putId(row: GenericInternalRow, i: Int, x: Int, big: Boolean): Unit =
+    if (big) row.update(i, x + idOffset) else row.update(i, (x + idOffset).toInt)
 }
 
-/** `fields` is the pruned read schema in output order. Reader selection:
+/** `fields` is the pruned read schema in output order; `big` (the
+  * manifest's `idwidth=long`) only picks BIGINT or INT for the id and
+  * successor columns. Reader selection:
   *  - `successors` required → full sequential decode (D1/D2);
   *  - only `outdegree` (+`id`) → random-access outdegree walk (D3): one γ
   *    per node via the offsets index, successor data never decoded;
@@ -559,10 +565,7 @@ class BvGraphReaderFactory(fields: Array[String], big: Boolean = false)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[BvInputPartition]
-    if (fields.contains("successors")) {
-      if (big) new BvGraphPartitionReaderLong(p, fields)
-      else new BvGraphPartitionReader(p, fields)
-    }
+    if (fields.contains("successors")) new BvGraphPartitionReader(p, fields, big)
     else if (fields.contains("outdegree")) new BvOutdegreeReader(p, fields, big)
     else new BvIdOnlyReader(p, fields.length, big)
   }
@@ -576,10 +579,7 @@ class BvIdOnlyReader(p: BvInputPartition, nFields: Int, big: Boolean = false)
   private val row = new GenericInternalRow(nFields)
   override def next(): Boolean = { curr += 1; curr < p.until }
   override def get(): InternalRow = {
-    if (nFields > 0) {
-      if (big) row.update(0, curr + p.idOffset)
-      else row.update(0, (curr + p.idOffset).toInt)
-    }
+    if (nFields > 0) p.putId(row, 0, curr, big)
     row
   }
   override def close(): Unit = ()
@@ -601,10 +601,7 @@ class BvOutdegreeReader(p: BvInputPartition, fields: Array[String],
 
   override def next(): Boolean = { curr += 1; curr < p.until }
   override def get(): InternalRow = {
-    if (idIdx >= 0) {
-      if (big) row.update(idIdx, curr + p.idOffset)
-      else row.update(idIdx, (curr + p.idOffset).toInt)
-    }
+    if (idIdx >= 0) p.putId(row, idIdx, curr, big)
     row.update(outIdx, graph.outdegree(curr, in))
     nodes += 1
     row
@@ -615,45 +612,13 @@ class BvOutdegreeReader(p: BvInputPartition, fields: Array[String],
   override def close(): Unit = graph.release()
 }
 
-class BvGraphPartitionReader(p: BvInputPartition, fields: Array[String])
-    extends PartitionReader[InternalRow] {
-  private val graph = BvGraphCache.acquire(p.basename)
-  private val iter = graph.nodeIterator(p.from, p.until)
-  private val idIdx = fields.indexOf("id")
-  private val succIdx = fields.indexOf("successors")
-  private val outIdx = fields.indexOf("outdegree")
-  private var curr: (Int, Array[Int]) = _
-  private val row = new GenericInternalRow(fields.length)
-
-  private var nodes = 0L
-  private var arcs = 0L
-
-  override def next(): Boolean = {
-    if (!iter.hasNext) return false
-    curr = iter.next()
-    nodes += 1
-    arcs += curr._2.length
-    true
-  }
-
-  override def get(): InternalRow = {
-    if (idIdx >= 0) row.update(idIdx, (curr._1 + p.idOffset).toInt)
-    if (succIdx >= 0) row.update(succIdx, UnsafeArrayData.fromPrimitiveArray(curr._2))
-    if (outIdx >= 0) row.update(outIdx, curr._2.length)
-    row
-  }
-
-  override def currentMetricsValues(): Array[
-      org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(BvTaskMetric("bvNodesDecoded", nodes), BvTaskMetric("bvArcsDecoded", arcs))
-
-  override def close(): Unit = graph.release()
-}
-
-/** [[BvGraphPartitionReader]]'s Long twin for idwidth=long manifests:
-  * same splittable sequential decode, Long node ids and successor values
-  * (the big decode kernel — see [[graft.bv.BvGraph.nodeIteratorLong]]). */
-class BvGraphPartitionReaderLong(p: BvInputPartition, fields: Array[String])
+/** Full scan: one sequential walk of the split's node range through the
+  * one decode kernel ([[graft.bv.BvGraph.nodeIteratorLong]]). `big` only
+  * decides how the row is written: BIGINT ids and successors as decoded,
+  * or INT ones narrowed by [[graft.bv.BvGraph.narrow]], which throws on a
+  * value outside Int range. */
+class BvGraphPartitionReader(p: BvInputPartition, fields: Array[String],
+    big: Boolean = false)
     extends PartitionReader[InternalRow] {
   private val graph = BvGraphCache.acquire(p.basename)
   private val iter = graph.nodeIteratorLong(p.from, p.until)
@@ -675,9 +640,12 @@ class BvGraphPartitionReaderLong(p: BvInputPartition, fields: Array[String])
   }
 
   override def get(): InternalRow = {
-    if (idIdx >= 0) row.update(idIdx, curr._1 + p.idOffset)
-    if (succIdx >= 0) row.update(succIdx, UnsafeArrayData.fromPrimitiveArray(curr._2))
-    if (outIdx >= 0) row.update(outIdx, curr._2.length)
+    val (x, succ) = curr
+    if (idIdx >= 0) p.putId(row, idIdx, x, big)
+    if (succIdx >= 0) row.update(succIdx,
+      if (big) UnsafeArrayData.fromPrimitiveArray(succ)
+      else UnsafeArrayData.fromPrimitiveArray(BvGraph.narrow(x, succ)))
+    if (outIdx >= 0) row.update(outIdx, succ.length)
     row
   }
 
@@ -711,11 +679,12 @@ object HadoopConf {
     fs
   }
 
-  /** The filesystem the sink writes `p` through: [[localFs]] for `file:`
-    * paths (a scheme-less path takes the default filesystem's scheme), so
-    * no created file or directory forks `chmod`; `p.getFileSystem(shared)`
-    * for every other scheme. */
-  def writeFs(p: Path): FileSystem = {
+  /** The filesystem every `bvgraph` read and write of `p` goes through:
+    * [[localFs]] for `file:` paths (a scheme-less path takes the default
+    * filesystem's scheme), so no created file forks `chmod` and no status
+    * or listing forks `ls`; `p.getFileSystem(shared)` for every other
+    * scheme. */
+  def fs(p: Path): FileSystem = {
     val scheme = Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(shared).getScheme)
     if (scheme == FsConstants.LOCAL_FS_URI.getScheme) localFs else p.getFileSystem(shared)
   }
@@ -725,8 +694,8 @@ object HadoopConf {
   * equivalent of the reference's HdfsRepositionableStream
   * (io/HdfsRepositionableStream.java:9-24). `read(position, ...)` is
   * thread-safe, so one open stream serves all readers in the executor. */
-class HadoopBytes(path: Path, conf: Configuration) extends SeekableBytes {
-  private val fs = path.getFileSystem(conf)
+class HadoopBytes(path: Path) extends SeekableBytes {
+  private val fs = HadoopConf.fs(path)
   private val len = fs.getFileStatus(path).getLen
   private val in = fs.open(path)
   def length: Long = len
@@ -742,7 +711,7 @@ class HadoopBytes(path: Path, conf: Configuration) extends SeekableBytes {
   * the cache is LRU-bounded so scans over many shards/graphs can't pin
   * unbounded offsets indexes in executor memory. A warm lookup costs one
   * `getFileStatus` of `.properties` and no `Configuration` construction
-  * (it reads through [[HadoopConf.shared]]) — it runs for every executor
+  * (it reads through [[HadoopConf.fs]]) — it runs for every executor
   * task and every `WebGraphInputFormat.getSplits`.
   *
   * Lifetime: entries are reference-counted (see [[graft.bv.BvGraph]]).
@@ -774,9 +743,8 @@ object BvGraphCache {
     })
 
   private def lookup(basename: String, pin: Boolean): BvGraph = {
-    val conf = HadoopConf.shared
     val propsPath = new Path(basename + ".properties")
-    val fs = propsPath.getFileSystem(conf)
+    val fs = HadoopConf.fs(propsPath)
     val mtime = fs.getFileStatus(propsPath).getModificationTime
     cache.compute(basename, (b, cached) => {
       val entry =
@@ -793,8 +761,8 @@ object BvGraphCache {
           val props = BvProperties.parse(propsText)
           coldOpens.incrementAndGet(): Unit
           (mtime, new BvGraph(props,
-            new HadoopBytes(new Path(b + ".graph"), conf),
-            new HadoopBytes(new Path(b + ".offsets"), conf)))
+            new HadoopBytes(new Path(b + ".graph")),
+            new HadoopBytes(new Path(b + ".offsets"))))
         }
       // pin while still under the map's lock: a concurrent put's eviction
       // can only target the ELDEST entry, and this access just made the

@@ -109,7 +109,7 @@ class BvBatchWrite(basename: String, schema: StructType, padNodes: Option[Long],
       case _ =>
     }
     val manifest = new Path(basename + ".shards")
-    val fs = HadoopConf.writeFs(manifest)
+    val fs = HadoopConf.fs(manifest)
     // `nodes` option: fill every boundary gap (leading, inter-shard,
     // trailing) with empty shards so the graph round-trips as dense [0, n)
     val shards: Seq[BvShardCommit] = padNodes match {
@@ -166,7 +166,7 @@ class BvBatchWrite(basename: String, schema: StructType, padNodes: Option[Long],
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(basename + ".d")
-    val fs = HadoopConf.writeFs(dir)
+    val fs = HadoopConf.fs(dir)
     if (fs.exists(dir)) fs.delete(dir, true)
     BvShards.invalidate(basename)
   }
@@ -181,17 +181,20 @@ object BvShards {
     f"$basename.d/part-$part%05d"
 
   /** Global id ranges are Long: the BV codec caps a single shard at 2^31
-    * nodes (and successor VALUES at 2^31 — the remaining format ceiling,
-    * see SCALE.md §1 "Ceilings"), but the sharded layout itself addresses
-    * an unbounded global id space. `bytes` is the shard's `.graph` size
+    * nodes (SCALE.md §1 "Ceilings"), but the sharded layout itself
+    * addresses an unbounded global id space, and successor values decode
+    * as Long. `bytes` is the shard's `.graph` size
     * recorded at commit (-1 when absent — manifests written before the
     * field existed); planning falls back to one batched directory listing,
     * never per-shard RPCs. */
   case class Shard(base: String, from: Long, until: Long, bytes: Long = -1L)
-  /** `big`: ids must surface as BIGINT and decode through the Long kernel
-    * — set by the `idwidth=long` manifest line (written when the sink's
-    * input schema was LONG) or inferred when any shard range crosses 2^31
-    * (such a manifest is unscannable narrow no matter what it claims). */
+  /** `big`: ids and successors surface as BIGINT — set by the
+    * `idwidth=long` manifest line (written when the sink's input schema
+    * was LONG) or inferred when any shard range crosses 2^31 (such a
+    * manifest is unscannable narrow no matter what it claims). This is
+    * the one place the id width is decided: every graph decodes through
+    * the one Long-valued kernel, and only the scan's row building reads
+    * `big`, narrowing INT rows with a check. */
   case class Manifest(nodes: Long, arcs: Long, shards: Seq[Shard],
       big: Boolean = false)
 
@@ -211,7 +214,7 @@ object BvShards {
       listings.incrementAndGet()
       val dir = new Path(basename + ".d")
       try {
-        val it = dir.getFileSystem(HadoopConf.shared).listLocatedStatus(dir)
+        val it = HadoopConf.fs(dir).listLocatedStatus(dir)
         val b = Map.newBuilder[String, LocatedFileStatus]
         while (it.hasNext) {
           val st = it.next()
@@ -239,7 +242,7 @@ object BvShards {
     * never depends on mtime resolution. */
   def lookup(basename: String): Option[ManifestVersion] = {
     val p = new Path(basename + ".shards")
-    val fs = p.getFileSystem(HadoopConf.shared)
+    val fs = HadoopConf.fs(p)
     val st =
       try fs.getFileStatus(p)
       catch { case _: java.io.FileNotFoundException => invalidate(basename); return None }
@@ -367,7 +370,7 @@ class BvShardWriter(basename: String, partitionId: Int, taskId: Long,
     extends DataWriter[InternalRow] {
   private val finalBase = BvShards.shardBase(basename, partitionId)
   private val tmpBase = s"$finalBase.attempt-$taskId"
-  private val fs = HadoopConf.writeFs(new Path(finalBase + ".graph"))
+  private val fs = HadoopConf.fs(new Path(finalBase + ".graph"))
 
   private var enc: BvEncoder#Stream = _
   private var graphOut: org.apache.hadoop.fs.FSDataOutputStream = _

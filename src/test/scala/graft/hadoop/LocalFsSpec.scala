@@ -57,6 +57,37 @@ class LocalFsSpec extends AnyFunSuite {
     }
   }
 
+  test("statuses and listLocatedStatus carry RawLocalFileSystem's length, mode, owner and group") {
+    withTempDir { dir =>
+      val file = Files.write(dir.resolve("file"), Array[Byte](1, 2, 3))
+      val sub = Files.createDirectory(dir.resolve("dir"))
+      val sticky = Files.createDirectory(dir.resolve("sticky"))
+      hadoopRaw.setPermission(hpath(sticky), new FsPermission(0x3ff.toShort)) // 1777
+      for (p <- Seq(file, sub, sticky)) {
+        val ours = graftRaw.getFileStatus(hpath(p))
+        // a plain FileStatus: Hadoop's own loads its permissions by `ls -ld`
+        assert(ours.getClass == classOf[FileStatus], p)
+        assert(fields(ours) == fields(hadoopRaw.getFileStatus(hpath(p))), p)
+      }
+      assert(graftRaw.listStatus(hpath(file)).map(fields).toSeq ==
+        hadoopRaw.listStatus(hpath(file)).map(fields).toSeq)
+      val out = fileSystem(graft = true).create(hpath(dir.resolve("data")), true)
+      try out.write("data".getBytes) finally out.close()
+      // the checksummed filesystems hide `.data.crc` alike
+      def listing(graft: Boolean) = {
+        val it = fileSystem(graft).listLocatedStatus(hpath(dir))
+        val b = Seq.newBuilder[(String, Long, FsPermission, String, String)]
+        while (it.hasNext) {
+          val st = it.next()
+          b += ((st.getPath.getName, st.getLen, st.getPermission, st.getOwner, st.getGroup))
+        }
+        b.result().sortBy(_._1)
+      }
+      assert(listing(graft = true).map(_._1) == Seq("data", "dir", "file", "sticky"))
+      assert(listing(graft = true) == listing(graft = false))
+    }
+  }
+
   test("getFileLinkStatus of a missing path throws FileNotFoundException in both") {
     withTempDir { dir =>
       val missing = hpath(dir.resolve("missing"))

@@ -130,6 +130,23 @@ class BvBigSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(before, after))
   }
 
+  test("the Int views of a big shard throw naming node and value; nodeIteratorLong returns the lists") {
+    val (base, adj) = writeFixture(200, 2)
+    val sh = BvShards.readManifest(base).get.shards.head
+    val g = graft.bv.BvGraph.load(sh.base)
+    try {
+      val written = (0 until g.n).map(x => adj.getOrElse(sh.from + x, Seq.empty))
+      val x = written.indexWhere(_.nonEmpty)
+      val v = written(x).head
+      assert(v > Int.MaxValue)
+      val e = intercept[ArithmeticException](g.nodeIterator(0, g.n).foreach(_ => ()))
+      assert(e.getMessage.contains(s"node $x: successor $v "), e.getMessage)
+      intercept[ArithmeticException](g.successorArray(x))
+      val got = g.nodeIteratorLong(0, g.n).map { case (y, s) => y -> s.toSeq }.toSeq
+      assert(got == written.zipWithIndex.map { case (s, y) => y -> s })
+    } finally g.release()
+  }
+
   test("classic INT graphs are unaffected: no idwidth line, INT schema") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("bvbig_int").toString

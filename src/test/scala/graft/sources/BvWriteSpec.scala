@@ -113,9 +113,9 @@ class BvWriteSpec extends AnyFunSuite {
     // `nodes` past the last id adds a driver-written pad shard
     adjDf(adj).write.format("bvgraph").option("basename", base).option("shards", 3)
       .option("nodes", 600).mode("overwrite").save()
-    val fs = HadoopConf.writeFs(new Path(base))
+    val fs = HadoopConf.fs(new Path(base))
     assert(fs.isInstanceOf[graft.hadoop.LocalFileSystem])
-    assert(HadoopConf.writeFs(new Path("file:" + base)) eq fs, "one instance per JVM")
+    assert(HadoopConf.fs(new Path("file:" + base)) eq fs, "one instance per JVM")
     val now = FileSystem.get(java.net.URI.create("file:///"), conf)
     assert(now eq cached, "the sink replaced the cached file: FileSystem")
     assert(!now.isInstanceOf[graft.hadoop.LocalFileSystem])
