@@ -2,10 +2,11 @@ package graft.bv
 
 import java.io.EOFException
 
-/** Random-access byte source for the bit streams. Implementations must be
-  * cheap to instantiate per reader (the decoder opens a fresh stream per
-  * reference-chain recursion, mirroring the reference's temp-stream pool —
-  * /root/reference/.../patched/HdfsBVGraph.java:45-49).
+/** Random-access byte source for the bit streams. One source serves every
+  * reader of a graph; each decode walk reads it through its own
+  * [[BitInput]]s (one sequential, one for reference chains — the
+  * reference's temp-stream pool, patched/HdfsBVGraph.java:45-49).
+  * `toString` names the source in decode errors.
   */
 trait SeekableBytes {
   def length: Long
@@ -20,6 +21,7 @@ trait SeekableBytes {
 
 final class ArrayBytes(data: Array[Byte]) extends SeekableBytes {
   def length: Long = data.length.toLong
+  override def toString: String = s"<${data.length} bytes in memory>"
   def readAt(pos: Long, buf: Array[Byte], off: Int, len: Int): Int = {
     if (pos >= data.length) return -1
     val n = math.min(len.toLong, data.length - pos).toInt
@@ -32,6 +34,7 @@ final class FileBytes(path: java.nio.file.Path) extends SeekableBytes {
   private val ch = java.nio.channels.FileChannel.open(path,
     java.nio.file.StandardOpenOption.READ)
   def length: Long = ch.size()
+  override def toString: String = path.toString
   def readAt(pos: Long, buf: Array[Byte], off: Int, len: Int): Int =
     ch.read(java.nio.ByteBuffer.wrap(buf, off, len), pos)
   override def close(): Unit = ch.close()
@@ -43,11 +46,15 @@ final class FileBytes(path: java.nio.file.Path) extends SeekableBytes {
   * primitive (offsets are bit positions —
   * /root/reference/.../patched/HdfsBVGraph.java:75).
   *
-  * Hot path: a 64-bit accumulator holds up to 56 look-ahead bits so γ/ζ
-  * reads are a couple of shifts in the common case.
+  * Hot path: a 64-bit accumulator holds up to 63 look-ahead bits so γ/ζ
+  * reads are a couple of shifts in the common case. It is topped up with
+  * one big-endian 8-byte load while at least 8 buffered bytes remain; the
+  * last 7 bytes of a buffer, EOF (zero-padded) and short `readAt` returns
+  * take the byte-at-a-time path, so both paths consume the same bits.
   */
 final class BitInput(bytes: SeekableBytes, bufferSize: Int = 1 << 16) {
   private val buf = new Array[Byte](bufferSize)
+  private val words = java.nio.ByteBuffer.wrap(buf) // big-endian view of buf
   private lazy val maxUnaryBits = 8L * bytes.length
   private var bufStart: Long = 0L // absolute byte pos of buf(0)
   private var bufLen: Int = 0 // valid bytes in buf
@@ -90,12 +97,25 @@ final class BitInput(bytes: SeekableBytes, bufferSize: Int = 1 << 16) {
     * the final byte must see zeros, and a read truly past EOF is a caller
     * bug caught by the unary guard below.
     */
-  private def ensure(n: Int): Unit = {
-    while (fill < n) {
-      val b = nextByte()
-      acc = (acc << 8) | (if (b < 0) 0L else b.toLong)
-      fill += 8
+  private def ensure(n: Int): Unit =
+    if (fill < n) {
+      if (ptr + 8 <= bufLen) loadWord()
+      else
+        while (fill < n) {
+          val b = nextByte()
+          acc = (acc << 8) | (if (b < 0) 0L else b.toLong)
+          fill += 8
+        }
     }
+
+  /** Top the accumulator up from the next 8 buffered bytes (the caller
+    * checked that they are there): as many whole bytes as fit under 64
+    * bits, k in [1, 7], so fill >= 56 afterwards. */
+  private def loadWord(): Unit = {
+    val k = (63 - fill) >>> 3
+    acc = (acc << (k << 3)) | (words.getLong(ptr) >>> (64 - (k << 3)))
+    ptr += k
+    fill += k << 3
   }
 
   def readLong(len: Int): Long = {

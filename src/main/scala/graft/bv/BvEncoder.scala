@@ -19,7 +19,7 @@ import ZigZag.int2nat
   * BVGraph/big-BVGraph split (it.unimi.dsi.big.webgraph widens values,
   * not per-segment counts).
   *
-  * Encoding per node (mirror image of [[BvGraph.decodeNode]]):
+  * Encoding per node (mirror image of [[BvGraph.Walk]]):
   * outdegree → reference + copy-blocks → intervals → residuals. Reference
   * selection is cost-based: "no reference" and each candidate in the window
   * (subject to the `maxRefCount` chain-length cap) are priced exactly, and
@@ -38,7 +38,7 @@ final class BvEncoder(props: BvProperties) {
 
   private val golombB = props.golombModulus
   // shard base: value-coded deltas anchor at the GLOBAL id (firstNode + x),
-  // matching [[BvGraph.decodeNode]]; 0 for unsharded graphs
+  // matching [[BvGraph.Walk]]; 0 for unsharded graphs
   private val firstNode = props.firstNode
 
   private def writeCoded(out: BitOutput, coding: Int, v: Long): Unit = coding match {
@@ -133,7 +133,7 @@ final class BvEncoder(props: BvProperties) {
     /** Copy-block decomposition of `succ` against `refList` into `blocks`
       * and `extras`: alternating copy/skip run lengths over refList,
       * starting with a copy run, with a trailing copy run left implicit
-      * (the decoder's even-blockCount rule, see [[BvGraph.decodeNode]]);
+      * (the decoder's even-blockCount rule, see [[BvGraph.Walk]]);
       * extras are the successors the copy does not cover.
       */
     private def copyBlocks(succ: Array[Long], refList: Array[Long]): Unit = {

@@ -9,15 +9,17 @@ import ZigZag.nat2int
   * average a handful of ints, so the reference's lazy 3-way iterator
   * machinery buys nothing under Spark's row-at-a-time pull.
   *
-  * Random access (offsets + reference-chain recursion) powers mid-split
-  * window warm-up, which is what makes the format splittable for parallel
+  * Random access (offsets + reference-chain recursion) lets a walk start
+  * mid-stream, which is what makes the format splittable for parallel
   * scan (SURVEY.md §2.1 D1/D4).
   *
   * One kernel serves both id widths, as one encoder does: successor
-  * values decode as Long ([[decodeNode]], [[nodeIteratorLong]]). The Int
-  * API ([[nodeIterator]], [[successorArray]], [[iterator]]) is a narrowing
-  * view over the same walk that throws on a value past Int range instead
-  * of wrapping it.
+  * values decode as Long into a [[Walk]]'s reused buffers, and every
+  * consumer reads them from there — the iterators ([[nodeIteratorLong]],
+  * and the Int views [[nodeIterator]], [[successorArray]], [[iterator]])
+  * copy each list out at its exact length, the scan readers write it
+  * straight into their row. The Int copies go through [[BvGraph.intId]],
+  * which throws on a value past Int range instead of wrapping it.
   */
 final class BvGraph(
     val props: BvProperties,
@@ -96,7 +98,18 @@ final class BvGraph(
   private val refs = new java.util.concurrent.atomic.AtomicInteger(1)
 
   /** Pin this graph for an active reader. Must be balanced by [[release]]. */
-  def acquire(): BvGraph = { refs.incrementAndGet(); this }
+  def acquire(): BvGraph = {
+    if (!tryAcquire()) throw new IllegalStateException("graph already closed")
+    this
+  }
+
+  /** Pin unless the last holder has already let go (the sources are
+    * closed); true when pinned. */
+  def tryAcquire(): Boolean = {
+    var r = refs.get()
+    while (r > 0 && !refs.compareAndSet(r, r + 1)) r = refs.get()
+    r > 0
+  }
 
   /** Drop one reference; closes the underlying byte sources (two OS
     * handles) when the last holder lets go. Called by
@@ -123,68 +136,203 @@ final class BvGraph(
     readCoded(in, codings.outdegree).toInt
   }
 
-  /** Random-access successors as Int ids: [[successorArrayLong]] narrowed
-    * by [[BvGraph.narrow]], which throws on a value outside Int range. */
-  def successorArray(x: Int): Array[Int] = BvGraph.narrow(x, successorArrayLong(x))
+  /** Random-access successors as Int ids, each checked by
+    * [[BvGraph.intId]], which throws on a value outside Int range. */
+  def successorArray(x: Int): Array[Int] = at(x).ints()
 
-  /** Random-access successor decode; reference chains resolved recursively
-    * with fresh bit streams (depth bounded by maxrefcount at encode time —
-    * mirrors patched/HdfsBVGraph.java:238-243).
-    */
-  def successorArrayLong(x: Int): Array[Long] = {
+  /** Random-access successor decode. A reference chain resolves through
+    * the walk's one random-access input (depth bounded by maxrefcount at
+    * encode time — mirrors patched/HdfsBVGraph.java:238-243). */
+  def successorArrayLong(x: Int): Array[Long] = at(x).longs()
+
+  private def at(x: Int): Walk = {
     requireIndex()
-    val in = newBitInput(4096)
-    in.position(offsets(x))
-    decodeNode(x, in, y => successorArrayLong(y))
+    val w = new Walk(x, x + 1, x, 4096)
+    w.next()
+    w
   }
 
-  /** The BV decode kernel: outdegree → reference copy-blocks → intervals →
-    * residuals → 3-way merge. `resolveRef` supplies the referenced node's
-    * full successor list (window lookup when scanning sequentially,
-    * recursion for random access). Successor VALUES are Long, local node
-    * indexes and counts Int: a shard holds fewer than 2³¹ nodes, but on a
-    * big graph its global ids, and the gaps between them, pass 2³¹.
-    */
-  def decodeNode(x: Int, in: BitInput, resolveRef: Int => Array[Long]): Array[Long] = {
-    val d = readCoded(in, codings.outdegree).toInt
-    if (d == 0) return BvGraph.EMPTY
+  /** Sequential scan over nodes [from, until) as Int ids: the [[walk]],
+    * each list copied out through [[BvGraph.intId]]. The range checks
+    * and the mid-split warm-up run eagerly, at the call. */
+  def nodeIterator(from: Int, until: Int,
+      bufferSize: Int = 1 << 20): Iterator[(Int, Array[Int])] = {
+    val w = walk(from, until, bufferSize)
+    new Iterator[(Int, Array[Int])] {
+      def hasNext: Boolean = w.hasNext
+      def next(): (Int, Array[Int]) = { w.next(); (w.node, w.ints()) }
+    }
+  }
 
-    val ref = if (windowSize > 0) readCoded(in, codings.reference).toInt else 0
+  /** Sequential scan over nodes [from, until) as Long ids: the [[walk]],
+    * each list copied out at its exact length. */
+  def nodeIteratorLong(from: Int, until: Int,
+      bufferSize: Int = 1 << 20): Iterator[(Int, Array[Long])] = {
+    val w = walk(from, until, bufferSize)
+    new Iterator[(Int, Array[Long])] {
+      def hasNext: Boolean = w.hasNext
+      def next(): (Int, Array[Long]) = { w.next(); (w.node, w.longs()) }
+    }
+  }
 
-    // 1. masked copy from the referenced list
-    var copied: Array[Long] = BvGraph.EMPTY
-    var nCopied = 0
-    if (ref > 0) {
-      val refList = resolveRef(x - ref)
-      val blockCount = readCoded(in, codings.blockCount).toInt
-      val out = new Array[Long](d)
-      var pos = 0
-      var i = 0
-      while (i < blockCount) {
-        val b = readCoded(in, codings.block).toInt + (if (i == 0) 0 else 1)
-        if ((i & 1) == 0) { // copy block
-          var j = 0
-          while (j < b) { out(nCopied) = refList(pos + j); nCopied += 1; j += 1 }
-        }
-        pos += b
-        i += 1
-      }
-      if ((blockCount & 1) == 0) { // implicit trailing copy block
-        var j = pos
-        while (j < refList.length) { out(nCopied) = refList(j); nCopied += 1; j += 1 }
-      }
-      copied = out
+  /** The splittable-read primitive: a sequential decode of nodes
+    * [from, until). A mid-stream start first decodes the `windowSize`
+    * predecessors of `from` in order, so the window is warm as the
+    * reference's node-iterator constructor makes it
+    * (patched/HdfsBVGraph.java:221-229); only references that point
+    * below those predecessors are decoded by random access. */
+  def walk(from: Int, until: Int, bufferSize: Int = 1 << 20): Walk = {
+    require(from >= 0 && from <= n, s"Node index out of range: $from")
+    if (from > 0) requireIndex() // mid-split warm-up needs random access
+    val hi = math.min(until, n)
+    new Walk(from, hi, if (from < hi) from - math.min(from, windowSize) else from, bufferSize)
+  }
+
+  /** One decode walk and all its scratch. Nodes [start, from) are decoded
+    * but not emitted (the warm-up); [[next]] decodes node [[node]], whose
+    * list is the first [[outdegree]] values of [[successors]] until the
+    * next call. Per node it allocates nothing: the parts decode into
+    * scratch arrays and merge into the node's window slot, all grown on
+    * demand and reused. A reference to a node below `start` is decoded
+    * into the spare slot through one random-access input, whose position
+    * is saved and restored around each nested resolution.
+    *
+    * A node resolves its reference before it touches the scratch, and it
+    * has copied the referenced list out before it writes its own slot, so
+    * one set of scratch arrays and one spare slot serve every depth of a
+    * reference chain. */
+  final class Walk private[BvGraph] (from: Int, until: Int, start: Int, bufferSize: Int) {
+    private val in = newBitInput(
+      if (offsets == null || start >= until) bufferSize
+      else math.min(bufferSize.toLong, ((offsets(until) - offsets(start)) >>> 3) + 16).toInt)
+    private var random: BitInput = _ // references below `start`, opened on first use
+    private val spare = cyclicBufferSize
+    private val lists = Array.fill(cyclicBufferSize + 1)(BvGraph.EMPTY)
+    private val lens = new Array[Int](cyclicBufferSize + 1)
+    private var copyBuf, intervalBuf, residualBuf = BvGraph.EMPTY
+    private var curr = start
+    private var slot = 0
+
+    if (start < until) {
+      in.position(if (start == 0) 0L else offsets(start))
+      while (curr < from) next()
     }
 
-    var extraCount = d - nCopied
+    def hasNext: Boolean = curr < until
+    def node: Int = curr - 1
+    def outdegree: Int = lens(slot)
+    def successors: Array[Long] = lists(slot)
+    private[bv] def bitPosition: Long = in.bitPosition
 
-    // 2. intervals (γ throughout, first left extreme zigzagged against x)
-    var intervals: Array[Long] = BvGraph.EMPTY
-    var nIntervals = 0
-    if (extraCount > 0 && minIntervalLength != 0) {
-      val intervalCount = in.readGamma()
-      if (intervalCount != 0) {
-        intervals = new Array[Long](extraCount)
+    /** The current list at its exact length, as Long ids. */
+    def longs(): Array[Long] =
+      if (lens(slot) == 0) BvGraph.EMPTY else java.util.Arrays.copyOf(lists(slot), lens(slot))
+
+    /** The current list at its exact length, as Int ids ([[BvGraph.intId]]). */
+    def ints(): Array[Int] = {
+      val d = lens(slot)
+      if (d == 0) return BvGraph.EMPTY_INT
+      val s = lists(slot)
+      val out = new Array[Int](d)
+      var i = 0
+      while (i < d) { out(i) = BvGraph.intId(curr - 1, s(i)); i += 1 }
+      out
+    }
+
+    def next(): Unit = {
+      if (curr >= until) throw new NoSuchElementException(s"walk ended at node $until")
+      val x = curr
+      slot = x % cyclicBufferSize
+      decodeNode(x, in, slot)
+      // Integrity: node x's record must end exactly where offsets says
+      // node x+1 begins. A truncated/corrupt stream zero-pads, and zeros
+      // decode as plausible empty nodes — without this check a damaged
+      // split would SILENTLY feed wrong adjacency downstream. (Skipped
+      // in sequential-only mode — there is no index to check against.)
+      if (offsets != null && in.bitPosition != offsets(x + 1))
+        throw new java.io.EOFException(
+          s"decode desync at node $x: ended at bit ${in.bitPosition}, " +
+            s"offsets say ${offsets(x + 1)} (truncated or corrupt .graph?)")
+      curr += 1
+    }
+
+    /** The slot that holds node y's list: its window slot once this walk
+      * has decoded it, else the spare slot, decoded by random access. */
+    private def listOf(y: Int, reading: BitInput): Int =
+      if (y >= start) y % cyclicBufferSize
+      else {
+        if (random == null) random = newBitInput(4096)
+        val resume = if (reading eq random) random.bitPosition else -1L
+        random.position(offsets(y))
+        decodeNode(y, random, spare)
+        if (resume >= 0) random.position(resume)
+        spare
+      }
+
+    private def corrupt(x: Int, in: BitInput, what: String): Nothing =
+      throw new java.io.IOException(
+        s"corrupt record in $graph at node $x, bit ${in.bitPosition}: $what")
+
+    /** The BV decode kernel: outdegree → reference copy-blocks → intervals
+      * → residuals → 3-way merge into `lists(dst)`. Successor VALUES are
+      * Long, local node indexes and counts Int: a shard holds fewer than
+      * 2³¹ nodes, but on a big graph its global ids, and the gaps between
+      * them, pass 2³¹. A block or interval that would write past the
+      * outdegree throws instead of landing in the longer scratch. */
+    private def decodeNode(x: Int, in: BitInput, dst: Int): Unit = {
+      val d = readCoded(in, codings.outdegree).toInt
+      if (d <= 0) {
+        if (d < 0) corrupt(x, in, s"outdegree $d")
+        lens(dst) = 0
+        return
+      }
+      val ref = if (windowSize > 0) readCoded(in, codings.reference).toInt else 0
+      if (ref < 0 || ref > windowSize || ref > x) corrupt(x, in, s"reference $ref outside the window")
+      val refSlot = if (ref > 0) listOf(x - ref, in) else spare // resolves before the scratch is touched
+      if (copyBuf.length < d) {
+        val cap = math.max(d, copyBuf.length << 1)
+        copyBuf = new Array[Long](cap)
+        intervalBuf = new Array[Long](cap)
+        residualBuf = new Array[Long](cap)
+      }
+      val copied = copyBuf
+      val intervals = intervalBuf
+      val residuals = residualBuf
+
+      // 1. masked copy from the referenced list
+      var nCopied = 0
+      if (ref > 0) {
+        val refList = lists(refSlot)
+        val refLen = lens(refSlot)
+        val blockCount = readCoded(in, codings.blockCount).toInt
+        var pos = 0
+        var i = 0
+        while (i < blockCount) {
+          val b = readCoded(in, codings.block).toInt + (if (i == 0) 0 else 1)
+          if (b < 0 || b > refLen - pos)
+            corrupt(x, in, s"block $i of length $b runs past the $refLen-long list of node ${x - ref}")
+          if ((i & 1) == 0) { // copy block
+            if (b > d - nCopied) corrupt(x, in, s"copy block $i of length $b runs past outdegree $d")
+            System.arraycopy(refList, pos, copied, nCopied, b)
+            nCopied += b
+          }
+          pos += b
+          i += 1
+        }
+        if ((blockCount & 1) == 0) { // implicit trailing copy block
+          val b = refLen - pos
+          if (b > d - nCopied) corrupt(x, in, s"implicit trailing copy of length $b runs past outdegree $d")
+          System.arraycopy(refList, pos, copied, nCopied, b)
+          nCopied += b
+        }
+      }
+
+      var extraCount = d - nCopied
+
+      // 2. intervals (γ throughout, first left extreme zigzagged against x)
+      var nIntervals = 0
+      if (extraCount > 0 && minIntervalLength != 0) {
+        val intervalCount = in.readGamma()
         var prev = 0L
         var i = 0
         while (i < intervalCount) {
@@ -192,80 +340,32 @@ final class BvGraph(
             if (i == 0) nat2int(in.readLongGamma()) + firstNode + x
             else in.readLongGamma() + prev + 1
           val len = in.readGamma() + minIntervalLength
-          var v = left
-          while (v < left + len) { intervals(nIntervals) = v; nIntervals += 1; v += 1 }
+          if (len < 0 || len > extraCount)
+            corrupt(x, in, s"interval $i of length $len runs past the $extraCount successors left")
+          var k = 0
+          while (k < len) { intervals(nIntervals) = left + k; nIntervals += 1; k += 1 }
           prev = left + len
           extraCount -= len
           i += 1
         }
       }
-    }
 
-    // 3. residuals (first zigzagged against x, then +1-gap coded)
-    var residuals: Array[Long] = BvGraph.EMPTY
-    if (extraCount > 0) {
-      residuals = new Array[Long](extraCount)
-      var prev = firstNode + x + nat2int(readCoded(in, codings.residual))
-      residuals(0) = prev
-      var i = 1
-      while (i < extraCount) {
-        prev += readCoded(in, codings.residual) + 1
-        residuals(i) = prev
-        i += 1
+      // 3. residuals (first zigzagged against x, then +1-gap coded)
+      if (extraCount > 0) {
+        var prev = firstNode + x + nat2int(readCoded(in, codings.residual))
+        residuals(0) = prev
+        var i = 1
+        while (i < extraCount) {
+          prev += readCoded(in, codings.residual) + 1
+          residuals(i) = prev
+          i += 1
+        }
       }
-    }
 
-    // 4. merge three ascending, disjoint sequences
-    BvGraph.merge3(copied, nCopied, intervals, nIntervals, residuals, d)
-  }
-
-  /** Sequential scan over nodes [from, until) as Int ids: the
-    * [[nodeIteratorLong]] walk, each list narrowed by [[BvGraph.narrow]].
-    * The range checks run eagerly, at the call. */
-  def nodeIterator(from: Int, until: Int,
-      bufferSize: Int = 1 << 20): Iterator[(Int, Array[Int])] =
-    nodeIteratorLong(from, until, bufferSize).map { case (x, succ) => (x, BvGraph.narrow(x, succ)) }
-
-  /** Sequential scan over nodes [from, until): the splittable-read
-    * primitive. Mid-stream starts warm the decode window by random access
-    * for the `windowSize` predecessors, exactly as the reference's
-    * node-iterator constructor does (patched/HdfsBVGraph.java:221-229).
-    */
-  def nodeIteratorLong(from: Int, until: Int,
-      bufferSize: Int = 1 << 20): Iterator[(Int, Array[Long])] = {
-    require(from >= 0 && from <= n, s"Node index out of range: $from")
-    if (from > 0) requireIndex() // mid-split warm-up needs random access
-    val hi = math.min(until, n)
-    if (from >= hi) return Iterator.empty
-    val in = newBitInput(bufferSize)
-    val window = new Array[Array[Long]](cyclicBufferSize)
-    if (from > 0 && windowSize > 0) {
-      var i = 1
-      while (i < math.min(from + 1, cyclicBufferSize)) {
-        window((from - i) % cyclicBufferSize) = successorArrayLong(from - i)
-        i += 1
-      }
-    }
-    in.position(if (from == 0) 0L else offsets(from))
-    new Iterator[(Int, Array[Long])] {
-      private var curr = from
-      def hasNext: Boolean = curr < hi
-      def next(): (Int, Array[Long]) = {
-        val succ = decodeNode(curr, in, y => window(y % cyclicBufferSize))
-        // Integrity: node x's record must end exactly where offsets says
-        // node x+1 begins. A truncated/corrupt stream zero-pads, and zeros
-        // decode as plausible empty nodes — without this check a damaged
-        // split would SILENTLY feed wrong adjacency downstream. (Skipped
-        // in sequential-only mode — there is no index to check against.)
-        if (offsets != null && in.bitPosition != offsets(curr + 1))
-          throw new java.io.EOFException(
-            s"decode desync at node $curr: ended at bit ${in.bitPosition}, " +
-              s"offsets say ${offsets(curr + 1)} (truncated or corrupt .graph?)")
-        if (windowSize > 0) window(curr % cyclicBufferSize) = succ
-        val r = (curr, succ)
-        curr += 1
-        r
-      }
+      // 4. merge three ascending, disjoint sequences into the node's slot
+      if (lists(dst).length < d) lists(dst) = new Array[Long](math.max(d, lists(dst).length << 1))
+      BvGraph.merge3(copied, nCopied, intervals, nIntervals, residuals, extraCount, lists(dst))
+      lens(dst) = d
     }
   }
 
@@ -275,18 +375,15 @@ final class BvGraph(
     * /root/reference/.../patched/HdfsBVGraph.java:393-407). Works in
     * sequential-only mode (no .offsets file needed). */
   def rebuildOffsets(bufferSize: Int = 1 << 20): Array[Long] = {
-    val in = newBitInput(bufferSize)
-    in.position(0L)
-    val window = new Array[Array[Long]](cyclicBufferSize)
+    val w = walk(0, n, bufferSize)
     val out = new Array[Long](n + 1)
     var x = 0
     while (x < n) {
-      out(x) = in.bitPosition
-      val succ = decodeNode(x, in, y => window(y % cyclicBufferSize))
-      if (windowSize > 0) window(x % cyclicBufferSize) = succ
+      out(x) = w.bitPosition
+      w.next()
       x += 1
     }
-    out(n) = in.bitPosition
+    out(n) = w.bitPosition
     out
   }
 
@@ -333,17 +430,14 @@ object BvGraph {
   }
 
   /** 3-way merge of ascending disjoint sequences — the first `na` of `a`,
-    * the first `nb` of `b` and all of `c` — into one ascending array of
-    * exactly `d` elements. A part that holds all `d` values is returned
-    * as it is: `a` and `b` are allocated `d` long in that case, and the
-    * result must be, since it serves later nodes as a reference list.
-    */
+    * the first `nb` of `b` and the first `nc` of `c` — into the front of
+    * `out`. */
   private[bv] def merge3(a: Array[Long], na: Int, b: Array[Long], nb: Int,
-      c: Array[Long], d: Int): Array[Long] = {
-    if (na == d) return a
-    if (nb == d) return b
-    if (c.length == d) return c
-    val out = new Array[Long](d)
+      c: Array[Long], nc: Int, out: Array[Long]): Unit = {
+    // one non-empty part (residuals alone, or a whole copy) is one copy
+    if (nb == 0 && nc == 0) { System.arraycopy(a, 0, out, 0, na); return }
+    if (na == 0 && nb == 0) { System.arraycopy(c, 0, out, 0, nc); return }
+    val d = na + nb + nc
     var i = 0
     var j = 0
     var k = 0
@@ -351,30 +445,24 @@ object BvGraph {
     while (o < d) {
       val va = if (i < na) a(i) else Long.MaxValue
       val vb = if (j < nb) b(j) else Long.MaxValue
-      val vc = if (k < c.length) c(k) else Long.MaxValue
+      val vc = if (k < nc) c(k) else Long.MaxValue
       if (va <= vb && va <= vc) { out(o) = va; i += 1 }
       else if (vb <= vc) { out(o) = vb; j += 1 }
       else { out(o) = vc; k += 1 }
       o += 1
     }
-    out
   }
 
-  /** Node `x`'s successors as Int ids, for the Int views and INT-schema
-    * scans. Fails closed: a value outside Int range (a big shard read
-    * through the Int API) throws instead of wrapping into a wrong id. */
-  def narrow(x: Int, succ: Array[Long]): Array[Int] = {
-    if (succ.length == 0) return EMPTY_INT
-    val out = new Array[Int](succ.length)
-    var i = 0
-    while (i < succ.length) {
-      val v = succ(i)
-      if (v.toInt != v)
-        throw new ArithmeticException(s"node $x: successor $v does not fit an Int id " +
-          "(read the graph as Long: nodeIteratorLong, or a scan of an idwidth=long manifest)")
-      out(i) = v.toInt
-      i += 1
-    }
-    out
+  /** Successor `v` of node `x` as an Int id, for the Int views and
+    * INT-schema scans. Fails closed: a value outside Int range (a big
+    * shard read through the Int API) throws instead of wrapping into a
+    * wrong id. */
+  def intId(x: Int, v: Long): Int = {
+    if (v.toInt != v) notAnInt(x, v)
+    v.toInt
   }
+
+  private def notAnInt(x: Int, v: Long): Nothing =
+    throw new ArithmeticException(s"node $x: successor $v does not fit an Int id " +
+      "(read the graph as Long: nodeIteratorLong, or a scan of an idwidth=long manifest)")
 }

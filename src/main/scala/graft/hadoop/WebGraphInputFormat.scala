@@ -168,13 +168,14 @@ object WebGraphInputFormat {
     context.getConfiguration.get(SPLIT_LAW_PROPERTY, SPLIT_LAW_NODE)
 }
 
-/** Record reader: one sequential decode pass over the split's node range,
-  * Writables reused per record (standard Hadoop contract — callers copy
-  * if they retain, exactly as with the reference's reader). */
+/** Record reader: one sequential [[graft.bv.BvGraph.Walk]] over the split's
+  * node range, Writables reused per record (standard Hadoop contract —
+  * callers copy if they retain, exactly as with the reference's reader).
+  * Per node it allocates only the value's exact-size `int[]`. */
 class WebGraphRecordReader extends RecordReader[IntWritable, IntArrayWritable] {
   private val key = new IntWritable()
   private val values = new IntArrayWritable()
-  private var iter: Iterator[(Int, Array[Int])] = _
+  private var walk: graft.bv.BvGraph#Walk = _
   private var graph: graft.bv.BvGraph = _
   private var total = 0
   private var done = 0
@@ -194,14 +195,14 @@ class WebGraphRecordReader extends RecordReader[IntWritable, IntArrayWritable] {
       if (split.getUntil >= 0) split.getUntil
       else math.min(from + splitSize, graph.n)
     total = math.max(1, until - from)
-    iter = graph.nodeIterator(from, until)
+    walk = graph.walk(from, until)
   }
 
   override def nextKeyValue(): Boolean =
-    if (iter.hasNext) {
-      val (id, succ) = iter.next()
-      key.set(id)
-      values.set(succ)
+    if (walk.hasNext) {
+      walk.next()
+      key.set(walk.node)
+      values.set(walk.ints())
       done += 1
       true
     } else false
@@ -213,28 +214,48 @@ class WebGraphRecordReader extends RecordReader[IntWritable, IntArrayWritable] {
 }
 
 /** `ArrayWritable` of ints with the reference's accessor surface
-  * (io/IntArrayWritable.java:6-40): `values`/`getValues` return a plain
-  * `int[]`, `set(int[])` boxes. */
+  * (io/IntArrayWritable.java:6-40), backed by a plain `int[]` the way
+  * `ArrayWritable` holds its array: `set(int[])` keeps the array and
+  * `values`/`getValues` return it, with no boxing either way. The wire
+  * form is `ArrayWritable`'s — an int count, then the ints — and the
+  * `Writable` views (`get()`, `set(Writable[])`, `toStrings`, `toArray`)
+  * box and unbox on demand. */
 class IntArrayWritable() extends ArrayWritable(classOf[IntWritable]) {
+  private var ids: Array[Int] = Array.emptyIntArray
+
   def this(values: Array[IntWritable]) = { this(); set(values.map(identity[Writable])) }
 
   // (Java's covariant-array override of get() is not expressible in
   // Scala; the int accessors below are the reference surface users call)
-  def getValues: Array[Int] = {
-    val w = super.get()
-    val out = new Array[Int](w.length)
+  def getValues: Array[Int] = ids
+
+  def values: Array[Int] = ids
+
+  def set(vals: Array[Int]): Unit = ids = vals
+
+  override def set(vals: Array[Writable]): Unit =
+    ids = vals.map(_.asInstanceOf[IntWritable].get())
+
+  override def get(): Array[Writable] = ids.map(v => new IntWritable(v): Writable)
+
+  override def toArray: AnyRef = ids.map(new IntWritable(_))
+
+  override def toStrings: Array[String] = ids.map(_.toString)
+
+  override def toString: String =
+    s"ArrayWritable [valueClass=$getValueClass, values=${ids.mkString("[", ", ", "]")}]"
+
+  override def write(out: DataOutput): Unit = {
+    out.writeInt(ids.length)
     var i = 0
-    while (i < w.length) { out(i) = w(i).asInstanceOf[IntWritable].get(); i += 1 }
-    out
+    while (i < ids.length) { out.writeInt(ids(i)); i += 1 }
   }
 
-  def values: Array[Int] = getValues
-
-  def set(vals: Array[Int]): Unit = {
-    val w = new Array[Writable](vals.length)
+  override def readFields(in: DataInput): Unit = {
+    val vals = new Array[Int](in.readInt())
     var i = 0
-    while (i < vals.length) { w(i) = new IntWritable(vals(i)); i += 1 }
-    set(w)
+    while (i < vals.length) { vals(i) = in.readInt(); i += 1 }
+    ids = vals
   }
 }
 

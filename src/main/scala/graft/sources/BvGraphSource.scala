@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 
 import graft.bv.{BitInput, BvGraph, BvProperties, SeekableBytes}
 
@@ -612,40 +613,47 @@ class BvOutdegreeReader(p: BvInputPartition, fields: Array[String],
   override def close(): Unit = graph.release()
 }
 
-/** Full scan: one sequential walk of the split's node range through the
-  * one decode kernel ([[graft.bv.BvGraph.nodeIteratorLong]]). `big` only
-  * decides how the row is written: BIGINT ids and successors as decoded,
-  * or INT ones narrowed by [[graft.bv.BvGraph.narrow]], which throws on a
-  * value outside Int range. */
+/** Full scan: one sequential [[graft.bv.BvGraph.Walk]] of the split's node
+  * range through the one decode kernel. Each row's successors are written
+  * from the walk's reused buffer straight into the row's array: BIGINT as
+  * decoded, or INT through [[graft.bv.BvGraph.intId]], which throws on a
+  * value outside Int range. Per node nothing is allocated but the row's
+  * array and its boxed values. */
 class BvGraphPartitionReader(p: BvInputPartition, fields: Array[String],
     big: Boolean = false)
     extends PartitionReader[InternalRow] {
   private val graph = BvGraphCache.acquire(p.basename)
-  private val iter = graph.nodeIteratorLong(p.from, p.until)
+  private val walk = graph.walk(p.from, p.until)
   private val idIdx = fields.indexOf("id")
   private val succIdx = fields.indexOf("successors")
   private val outIdx = fields.indexOf("outdegree")
-  private var curr: (Int, Array[Long]) = _
   private val row = new GenericInternalRow(fields.length)
 
   private var nodes = 0L
   private var arcs = 0L
 
   override def next(): Boolean = {
-    if (!iter.hasNext) return false
-    curr = iter.next()
+    if (!walk.hasNext) return false
+    walk.next()
     nodes += 1
-    arcs += curr._2.length
+    arcs += walk.outdegree
     true
   }
 
   override def get(): InternalRow = {
-    val (x, succ) = curr
+    val x = walk.node
+    val d = walk.outdegree
     if (idIdx >= 0) p.putId(row, idIdx, x, big)
     if (succIdx >= 0) row.update(succIdx,
-      if (big) UnsafeArrayData.fromPrimitiveArray(succ)
-      else UnsafeArrayData.fromPrimitiveArray(BvGraph.narrow(x, succ)))
-    if (outIdx >= 0) row.update(outIdx, succ.length)
+      if (big) UnsafeArrayData.fromPrimitiveArray(walk.successors, Platform.LONG_ARRAY_OFFSET, d, 8)
+      else {
+        val succ = walk.successors
+        val a = UnsafeArrayData.createFreshArray(d, 4)
+        var i = 0
+        while (i < d) { a.setInt(i, BvGraph.intId(x, succ(i))); i += 1 }
+        a
+      })
+    if (outIdx >= 0) row.update(outIdx, d)
     row
   }
 
@@ -699,6 +707,7 @@ class HadoopBytes(path: Path) extends SeekableBytes {
   private val len = fs.getFileStatus(path).getLen
   private val in = fs.open(path)
   def length: Long = len
+  override def toString: String = path.toString
   def readAt(pos: Long, buf: Array[Byte], off: Int, n: Int): Int =
     if (pos >= len) -1 else in.read(pos, buf, off, n)
   override def close(): Unit = in.close()
@@ -716,9 +725,16 @@ class HadoopBytes(path: Path) extends SeekableBytes {
   *
   * Lifetime: entries are reference-counted (see [[graft.bv.BvGraph]]).
   * The cache holds one reference; [[acquire]] pins one more for an active
-  * reader (the pin happens INSIDE the synchronized compute, atomic with
-  * any eviction), so eviction under shard churn merely drops the cache's
-  * reference — file handles close only when the last reader releases. */
+  * reader, so eviction under shard churn merely drops the cache's
+  * reference — file handles close only when the last reader releases. A
+  * pin never races an eviction: it is a compare-and-set that fails once
+  * the count has reached zero, and a lookup whose pin fails looks up
+  * again and finds a fresh entry.
+  *
+  * Cold opens run outside the map's lock: the map only hands out an
+  * [[Entry]], and the first lookup of that entry opens the graph under the
+  * entry's own lock. Tasks opening different shards open them in
+  * parallel; tasks opening the same shard wait for one open. */
 object BvGraphCache {
   /** Cold constructions (shard opens) in this JVM — instrumentation for
     * the "a pruned id-range scan opens ONLY the covering shards" gate
@@ -729,47 +745,65 @@ object BvGraphCache {
     * cluster each executor counts its own). */
   val coldOpens = new java.util.concurrent.atomic.AtomicLong()
 
+  /** The graph of `basename` as of `mtime`, opened at most once. */
+  private final class Entry(basename: String, val mtime: Long) {
+    @volatile private var graph: BvGraph = _
+    private var dropped = false
+
+    def get(): BvGraph = {
+      val g = graph
+      if (g != null) g else open()
+    }
+
+    private def open(): BvGraph = synchronized {
+      if (graph == null) {
+        val propsPath = new Path(basename + ".properties")
+        val in = HadoopConf.fs(propsPath).open(propsPath)
+        val props = try BvProperties.parse(new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.ISO_8859_1)) finally in.close()
+        val g = new BvGraph(props,
+          new HadoopBytes(new Path(basename + ".graph")),
+          new HadoopBytes(new Path(basename + ".offsets")))
+        coldOpens.incrementAndGet(): Unit
+        if (dropped) g.release() // left the map while opening
+        graph = g
+      }
+      graph
+    }
+
+    /** Drop the cache's reference: the entry left the map (LRU eviction,
+      * or the graph was rewritten in place). */
+    def drop(): Unit = synchronized {
+      dropped = true
+      if (graph != null) try graph.release() catch { case _: Exception => }
+    }
+  }
+
   private val MAX_ENTRIES = 64
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Long, BvGraph)](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, BvGraph)]): Boolean = {
+    new java.util.LinkedHashMap[String, Entry](32, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean = {
         val evict = size() > MAX_ENTRIES
-        // drop the cache's reference — handles close now iff no active
-        // reader still pins the graph (each pins via acquire()).
-        if (evict) try e.getValue._2.release() catch { case _: Exception => }
+        if (evict) e.getValue.drop()
         evict
       }
     })
 
   private def lookup(basename: String, pin: Boolean): BvGraph = {
     val propsPath = new Path(basename + ".properties")
-    val fs = HadoopConf.fs(propsPath)
-    val mtime = fs.getFileStatus(propsPath).getModificationTime
-    cache.compute(basename, (b, cached) => {
-      val entry =
-        if (cached != null && cached._1 == mtime) cached
+    val mtime = HadoopConf.fs(propsPath).getFileStatus(propsPath).getModificationTime
+    var graph: BvGraph = null
+    while (graph == null) {
+      val entry = cache.compute(basename, (_, cached) =>
+        if (cached != null && cached.mtime == mtime) cached
         else {
-          // stale entry (graph rewritten in place): drop the cache's ref
-          if (cached != null) try cached._2.release() catch { case _: Exception => }
-          val propsText = {
-            val in = fs.open(propsPath)
-            try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.ISO_8859_1)
-            finally in.close()
-          }
-          val props = BvProperties.parse(propsText)
-          coldOpens.incrementAndGet(): Unit
-          (mtime, new BvGraph(props,
-            new HadoopBytes(new Path(b + ".graph")),
-            new HadoopBytes(new Path(b + ".offsets"))))
-        }
-      // pin while still under the map's lock: a concurrent put's eviction
-      // can only target the ELDEST entry, and this access just made the
-      // entry most-recently-used, so the pin cannot race an eviction.
-      if (pin) entry._2.acquire()
-      entry
-    })._2
+          if (cached != null) cached.drop() // stale: graph rewritten in place
+          new Entry(basename, mtime)
+        })
+      val g = entry.get()
+      if (!pin || g.tryAcquire()) graph = g
+    }
+    graph
   }
 
   /** Pin-and-get for partition readers: the returned graph's handles stay

@@ -61,6 +61,74 @@ class CorruptionSpec extends AnyFunSuite {
     }
   }
 
+  /** A default-coded graph whose node records are written by hand, saved
+    * as a basename triple: node 0 is {1, 2, 3} (residuals only). */
+  private def handBuilt(node1: BitOutput => Unit): String = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new BitOutput(bytes)
+    out.writeGamma(3) // outdegree
+    out.writeUnary(0) // no reference
+    out.writeGamma(0) // no intervals
+    out.writeZeta(ZigZag.int2nat(1), 3) // residual 1 = 0 + 1, then gaps 0, 0
+    out.writeZeta(0, 3)
+    out.writeZeta(0, 3)
+    val node1Start = out.writtenBits
+    node1(out)
+    val end = out.writtenBits
+    out.flush()
+    val offsets = new java.io.ByteArrayOutputStream()
+    val o = new BitOutput(offsets)
+    Seq(0L, node1Start, end - node1Start).foreach(o.writeGamma)
+    o.flush()
+    val base = java.nio.file.Files.createTempDirectory("bvcorrupt").toString + "/g"
+    java.nio.file.Files.write(java.nio.file.Paths.get(base + ".graph"), bytes.toByteArray)
+    java.nio.file.Files.write(java.nio.file.Paths.get(base + ".offsets"), offsets.toByteArray)
+    java.nio.file.Files.write(java.nio.file.Paths.get(base + ".properties"),
+      BvProperties(2, 4L).render.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    base
+  }
+
+  /** Node 1 must fail with an IOException naming the shard, the node and
+    * the bit position, through the sequential walk and random access. */
+  private def assertCorruptNode1(base: String, what: String): Unit = {
+    val g = BvGraph.load(base)
+    try {
+      for (decode <- Seq(() => g.iterator.foreach(_ => ()), () => g.successorArray(1))) {
+        val e = intercept[java.io.IOException](decode())
+        assert(e.getMessage.contains(base + ".graph"), e.getMessage)
+        assert(e.getMessage.contains("node 1, bit "), e.getMessage)
+        assert(e.getMessage.contains(what), e.getMessage)
+      }
+    } finally g.release()
+  }
+
+  test("a copy block that runs past the outdegree throws") {
+    assertCorruptNode1(handBuilt { out =>
+      out.writeGamma(1) // outdegree 1
+      out.writeUnary(1) // reference: node 0
+      out.writeGamma(1) // one block
+      out.writeGamma(3) // copy all three of node 0's successors
+    }, "copy block 0 of length 3 runs past outdegree 1")
+  }
+
+  test("an implicit trailing copy that runs past the outdegree throws") {
+    assertCorruptNode1(handBuilt { out =>
+      out.writeGamma(1) // outdegree 1
+      out.writeUnary(1) // reference: node 0
+      out.writeGamma(0) // no blocks: copy the whole list
+    }, "implicit trailing copy of length 3 runs past outdegree 1")
+  }
+
+  test("an interval that runs past the remaining count throws") {
+    assertCorruptNode1(handBuilt { out =>
+      out.writeGamma(2) // outdegree 2
+      out.writeUnary(0) // no reference
+      out.writeGamma(1) // one interval
+      out.writeGamma(ZigZag.int2nat(5)) // left extreme 1 + 5
+      out.writeGamma(0) // length minIntervalLength = 4 > 2
+    }, "interval 0 of length 4 runs past the 2 successors left")
+  }
+
   test("malformed properties are rejected with clear errors") {
     intercept[IllegalArgumentException](BvProperties.parse("graphclass=Foo\n"))
     intercept[IllegalArgumentException](BvProperties.parse(
