@@ -280,9 +280,12 @@ final class BvGraph(
       * them, pass 2³¹. A block or interval that would write past the
       * outdegree throws instead of landing in the longer scratch. */
     private def decodeNode(x: Int, in: BitInput, dst: Int): Unit = {
-      val d = readCoded(in, codings.outdegree).toInt
-      if (d <= 0) {
-        if (d < 0) corrupt(x, in, s"outdegree $d")
+      val deg = readCoded(in, codings.outdegree)
+      // before any scratch grows: a flipped outdegree would size three
+      // arrays of up to 2^31 entries
+      if (deg < 0 || deg > m) corrupt(x, in, s"outdegree $deg outside [0, $m], the graph's arc count")
+      val d = deg.toInt
+      if (d == 0) {
         lens(dst) = 0
         return
       }

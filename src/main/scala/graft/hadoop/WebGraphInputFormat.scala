@@ -3,11 +3,10 @@ package graft.hadoop
 import java.io.{DataInput, DataOutput, IOException}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{ArrayWritable, IntWritable, Text, Writable}
 import org.apache.hadoop.mapreduce._
 
-import graft.sources.BvGraphCache
+import graft.sources.{BvGraphCache, BvShards}
 
 /** Hadoop `InputFormat` compatibility shim — the reference's namesake API
   * (io/WebGraphInputFormat.java:16-156) re-expressed over graft's codec,
@@ -38,14 +37,10 @@ import graft.sources.BvGraphCache
   *
   * This shim exists for verbatim ports of reference jobs; new code
   * should use `spark.read.format("bvgraph")` (pruning, pushdown,
-  * byte-balanced splits, sharded + long-id graphs). Sharded manifests
-  * are NOT supported here — the reference API predates them.
-  *
-  * Opt-in escape from the reference's skew: `setSplitLaw(conf, "bytes")`
-  * switches split planning to equal COMPRESSED-BYTE ranges (the DSv2
-  * source's law) so verbatim-ported jobs on power-law graphs don't
-  * inherit the node-uniform law's hub-dense straggler split. Default
-  * behavior is unchanged ("node" — the reference's exact law).
+  * byte-balanced splits, sharded + long-id graphs). It plans from the
+  * same one-shard layout as that source ([[graft.sources.BvShards.layout]]);
+  * a sharded manifest is rejected, because the reference API predates
+  * them.
   */
 class WebGraphInputFormat extends InputFormat[IntWritable, IntArrayWritable] {
   import WebGraphInputFormat._
@@ -54,62 +49,16 @@ class WebGraphInputFormat extends InputFormat[IntWritable, IntArrayWritable] {
     val basename = getBasename(context)
     val numSplits = getNumberOfSplits(context)
     val splits = new java.util.ArrayList[InputSplit](numSplits)
-    val graph = BvGraphCache.get(basename)
+    val layout = BvShards.layout(basename)
+    val shard = layout.manifest.shards match {
+      case Seq(sh) if sh.base == basename => sh
+      case _ => throw new IllegalArgumentException(s"$basename is a sharded graph; " +
+        "the InputFormat reads unsharded graphs, read it with spark.read.format(\"bvgraph\")")
+    }
+    val graph = BvGraphCache.get(shard.base)
     val n = graph.n
     if (n == 0 && numSplits == 0) return splits
     if (numSplits < 1) throw new IllegalArgumentException("numberOfSplits < 0")
-
-    val conf = context.getConfiguration
-    val graphPath = new Path(basename + ".graph")
-    val fs = graphPath.getFileSystem(conf)
-    val status = fs.getFileStatus(graphPath)
-    val byteLaw = getSplitLaw(context) == SPLIT_LAW_BYTES && n > 0
-    def addSplit(from: Int, until: Int): Unit = {
-      val startByte = graph.offsets(from) >>> 3
-      val endByte =
-        if (until == n) status.getLen else graph.offsets(until) >>> 3
-      val hosts =
-        try fs.getFileBlockLocations(status, startByte,
-            math.max(1L, endByte - startByte))
-          .flatMap(_.getHosts).distinct
-        catch { case _: Exception => Array.empty[String] }
-      splits.add(new NodeIteratorInputSplit(from, endByte - startByte, hosts,
-        if (byteLaw) until else -1))
-    }
-    if (byteLaw) {
-      // BYTE-BALANCED split law (opt-in, graft.webgraph.splitlaw=bytes):
-      // boundaries land where the COMPRESSED BYTE prefix crosses the
-      // equal-byte targets k·len/numSplits (binary search on the offsets
-      // index, O(splits·log n)), so a power-law graph's hub-dense prefix
-      // no longer lands in one task while the tail splits sit idle — the
-      // skew the reference's node-uniform law inherits on real crawls.
-      // Ranges that would be empty (one giant node spanning several
-      // targets) are skipped, so fewer-than-numSplits splits can result;
-      // coverage of [0, n) stays exact. Splits carry their `until`
-      // explicitly — the node-uniform reader derivation can't reproduce
-      // uneven boundaries.
-      def lowerBound(targetByte: Long): Int = {
-        var lo = 0; var hi = n
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if ((graph.offsets(mid) >>> 3) < targetByte) lo = mid + 1
-          else hi = mid
-        }
-        lo
-      }
-      val totalLen = status.getLen
-      var from = 0
-      var si = 1
-      while (si <= numSplits) {
-        val until =
-          if (si == numSplits) n
-          else math.min(n, math.max(from + 1,
-            lowerBound(si * totalLen / numSplits)))
-        if (until > from) { addSplit(from, until); from = until }
-        si += 1
-      }
-      return splits
-    }
 
     // same node-uniform split law as the reference: ceil(n/splits) nodes
     // per range, last range short; byte spans from the offsets index
@@ -117,7 +66,10 @@ class WebGraphInputFormat extends InputFormat[IntWritable, IntArrayWritable] {
     var from = 0
     while (from < n || (from == 0 && n == 0)) {
       val until = math.min(from + splitSize, n)
-      addSplit(from, until)
+      val startByte = graph.offsets(from) >>> 3
+      val endByte = if (until == n) shard.bytes else graph.offsets(until) >>> 3
+      splits.add(new NodeIteratorInputSplit(from, endByte - startByte,
+        layout.hosts(shard.base, startByte, math.max(startByte + 1, endByte))))
       if (n == 0) return splits
       from = until
     }
@@ -147,25 +99,6 @@ object WebGraphInputFormat {
     setNumberOfSplits(job.getConfiguration, splits)
   def getNumberOfSplits(context: JobContext): Int =
     context.getConfiguration.getInt(SPLITS_PROPERTY, DEFAULT_SPLITS)
-
-  /** Split law: `node` (default — the reference's ceil(n/splits) node
-    * ranges, verbatim-port fidelity) or `bytes` (equal COMPRESSED-BYTE
-    * ranges from the offsets index — what the DSv2 source does; opt in
-    * for power-law graphs where the node-uniform law concentrates the
-    * hub-dense prefix into one straggler task). */
-  val SPLIT_LAW_PROPERTY = "graft.webgraph.splitlaw"
-  val SPLIT_LAW_NODE = "node"
-  val SPLIT_LAW_BYTES = "bytes"
-
-  def setSplitLaw(conf: Configuration, law: String): Unit = {
-    require(law == SPLIT_LAW_NODE || law == SPLIT_LAW_BYTES,
-      s"unknown split law '$law' (expected $SPLIT_LAW_NODE|$SPLIT_LAW_BYTES)")
-    conf.set(SPLIT_LAW_PROPERTY, law)
-  }
-  def setSplitLaw(job: Job, law: String): Unit =
-    setSplitLaw(job.getConfiguration, law)
-  def getSplitLaw(context: JobContext): String =
-    context.getConfiguration.get(SPLIT_LAW_PROPERTY, SPLIT_LAW_NODE)
 }
 
 /** Record reader: one sequential [[graft.bv.BvGraph.Walk]] over the split's
@@ -186,14 +119,11 @@ class WebGraphRecordReader extends RecordReader[IntWritable, IntArrayWritable] {
     val basename = WebGraphInputFormat.getBasename(context)
     val numSplits = WebGraphInputFormat.getNumberOfSplits(context)
     graph = BvGraphCache.acquire(basename)
-    // node-uniform law: re-derive the range length from conf, like the
-    // reference (WebGraphInputFormat.java:42-44): from + ceil(n/splits).
-    // Byte-balanced law: the split carries its own `until`.
+    // re-derive the range length from conf, like the reference
+    // (WebGraphInputFormat.java:42-44): from + ceil(n/splits)
     val splitSize = math.ceil(graph.n.toDouble / numSplits.toDouble).toInt
     val from = split.getFrom
-    val until =
-      if (split.getUntil >= 0) split.getUntil
-      else math.min(from + splitSize, graph.n)
+    val until = math.min(from + splitSize, graph.n)
     total = math.max(1, until - from)
     walk = graph.walk(from, until)
   }
@@ -261,23 +191,17 @@ class IntArrayWritable() extends ArrayWritable(classOf[IntWritable]) {
 
 /** Split descriptor: node-range start + byte length + block hosts,
   * Writable-serialized driver→task (io/NodeIteratorInputSplit.java:11-50).
-  * Under the default node-uniform law it carries only `from` (`until` is
-  * -1) — the reader recomputes the range end from conf, preserving the
-  * reference's exact split law. Under the opt-in byte-balanced law
-  * `until` rides explicitly, because uneven boundaries cannot be
-  * re-derived from ceil(n/splits). */
+  * It carries only `from`: the reader recomputes the range end from conf,
+  * preserving the reference's exact split law. */
 class NodeIteratorInputSplit(private var from: Int, private var length: Long,
-    private var hosts: Array[String], private var until: Int = -1)
+    private var hosts: Array[String])
     extends InputSplit with Writable {
   def this() = this(0, 0L, Array.empty)
 
   def getFrom: Int = from
-  /** Explicit range end (byte-balanced law), or -1 = derive from conf. */
-  def getUntil: Int = until
 
   override def write(out: DataOutput): Unit = {
     out.writeInt(from)
-    out.writeInt(until)
     out.writeLong(length)
     out.writeInt(hosts.length)
     hosts.foreach(h => Text.writeString(out, h))
@@ -285,7 +209,6 @@ class NodeIteratorInputSplit(private var from: Int, private var length: Long,
 
   override def readFields(in: DataInput): Unit = {
     from = in.readInt()
-    until = in.readInt()
     length = in.readLong()
     hosts = Array.fill(in.readInt())(Text.readString(in))
   }

@@ -1358,8 +1358,7 @@ object GraphAlgos {
     //    replays all 3 iterations as chained CTEs over generate_series.
     "bv_pagerank" -> ((s, d) => {
       val base = GraphQueries.bvFixture(s, d)
-      def bv = s.read.format("bvgraph").option("basename", base)
-        .option("splits", 8).load()
+      def bv = s.read.format("bvgraph").option("basename", base).load()
       val e = graft.Caches.pin(bv
         .select(col("id").cast("long").as("src"),
           explode(col("successors")).as("dq"))

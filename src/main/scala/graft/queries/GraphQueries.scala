@@ -265,7 +265,7 @@ object GraphQueries {
     //    splittable decoder are both value-gated by DuckDB.
     "bv_roundtrip" -> ((s, d) => {
       val base = bvFixture(s, d)
-      s.read.format("bvgraph").option("basename", base).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", base).load()
         .select(col("id").cast("long").as("src"),
           explode(col("successors")).as("d"))
         .select(col("src"), col("d").cast("long").as("dst"))
@@ -278,7 +278,7 @@ object GraphQueries {
     //    sinks.
     "bv_degrees" -> ((s, d) => {
       val base = bvFixture(s, d)
-      s.read.format("bvgraph").option("basename", base).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", base).load()
         .select(col("id").cast("long").as("id"),
           col("outdegree").cast("long").as("outdeg"))
     }),
@@ -292,7 +292,7 @@ object GraphQueries {
     //    ("id in [lo,hi)" in the scan description).
     "bv_id_slice" -> ((s, d) => {
       val base = bvFixture(s, d)
-      s.read.format("bvgraph").option("basename", base).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", base).load()
         .filter(col("id") >= 100 && col("id") < 600)
         .select(col("id").cast("long").as("src"),
           explode(col("successors")).as("dd"))
@@ -339,7 +339,7 @@ object GraphQueries {
     //    value-gated.
     "bv_enrich_join" -> ((s, d) => {
       val base = bvFixture(s, d)
-      s.read.format("bvgraph").option("basename", base).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", base).load()
         .filter(col("outdegree") > 0) // custkey nodes; orderkey ids are sinks
         .select(col("id").cast("long").as("custkey"),
           col("outdegree").cast("long").as("n_orders"))
@@ -374,7 +374,7 @@ object GraphQueries {
           .write.format("bvgraph").option("basename", tbase)
           .option("shards", 8).option("nodes", n).mode("overwrite").save()
       }
-      s.read.format("bvgraph").option("basename", tbase).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", tbase).load()
         .select(col("id").cast("long").as("src"),
           explode(col("successors")).as("d"))
         .select(col("src"), col("d").cast("long").as("dst"))
@@ -437,7 +437,7 @@ object GraphQueries {
           .write.format("bvgraph").option("basename", sbase)
           .option("shards", 8).option("nodes", n).mode("overwrite").save()
       }
-      s.read.format("bvgraph").option("basename", sbase).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", sbase).load()
         .select(col("id").cast("long").as("src"),
           explode(col("successors")).as("d"))
         .select(col("src"), col("d").cast("long").as("dst"))
@@ -474,7 +474,7 @@ object GraphQueries {
           .write.format("bvgraph").option("basename", pbase)
           .option("shards", 8).option("nodes", n).mode("overwrite").save()
       }
-      s.read.format("bvgraph").option("basename", pbase).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", pbase).load()
         .select(col("id").cast("long").as("src"),
           explode(col("successors")).as("d"))
         .select(col("src"), col("d").cast("long").as("dst"))
@@ -513,7 +513,7 @@ object GraphQueries {
           .write.format("bvgraph").option("basename", pbase)
           .option("shards", 8).option("nodes", n).mode("overwrite").save()
       }
-      s.read.format("bvgraph").option("basename", pbase).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", pbase).load()
         .select(col("id").cast("long").as("src"),
           explode(col("successors")).as("d"))
         .select(col("src"), col("d").cast("long").as("dst"))
@@ -544,7 +544,7 @@ object GraphQueries {
           .write.format("bvgraph").option("basename", ubase)
           .option("shards", 8).option("nodes", n).mode("overwrite").save()
       }
-      s.read.format("bvgraph").option("basename", ubase).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", ubase).load()
         .select(col("id").cast("long").as("src"),
           explode(col("successors")).as("d"))
         .select(col("src"), col("d").cast("long").as("dst"))
@@ -577,7 +577,7 @@ object GraphQueries {
         sbase
       }
       def edgesOf(b: String): DataFrame =
-        s.read.format("bvgraph").option("basename", b).option("splits", 4).load()
+        s.read.format("bvgraph").option("basename", b).load()
           .select(col("id").cast("long").as("src"),
             explode(col("successors")).as("dd"))
           .select(col("src"), col("dd").cast("long").as("dst"))
@@ -603,8 +603,7 @@ object GraphQueries {
     //    partial agg; the report is manifest-sized at any graph size.
     "bv_check" -> ((s, d) => {
       val base = bvFixture(s, d)
-      val g = s.read.format("bvgraph").option("basename", base)
-        .option("splits", 8).load()
+      val g = s.read.format("bvgraph").option("basename", base).load()
       val n = g.agg(max(col("id"))).head().getInt(0) + 1
       g.select(expr("id div 2048").as("bkt"),
           col("outdegree").cast("long").as("odeg"),
@@ -639,8 +638,7 @@ object GraphQueries {
     //    manifest-sized — per-shard coding choice stays free at 100 TB.
     "bv_coding_advisor" -> ((s, d) => {
       val base = bvFixture(s, d)
-      val g = s.read.format("bvgraph").option("basename", base)
-        .option("splits", 8).load()
+      val g = s.read.format("bvgraph").option("basename", base).load()
         .select(col("id").cast("long").as("id"),
           col("outdegree").cast("long").as("odeg"),
           col("successors").as("succ"))
@@ -695,7 +693,7 @@ object GraphQueries {
     //    so the exchange carries host pairs, never page edges.
     "host_graph" -> ((s, d) => {
       val base = bvFixture(s, d)
-      s.read.format("bvgraph").option("basename", base).option("splits", 8).load()
+      s.read.format("bvgraph").option("basename", base).load()
         .select(expr("CAST(id AS BIGINT) div 64").as("src_host"),
           explode(col("successors")).as("dd"))
         .select(col("src_host"), expr("CAST(dd AS BIGINT) div 64").as("dst_host"))

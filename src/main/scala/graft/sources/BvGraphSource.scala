@@ -24,12 +24,15 @@ import graft.bv.{BitInput, BvGraph, BvProperties, SeekableBytes}
   * (/root/reference/src/main/java/de/l3s/mapreduce/webgraph/io/WebGraphInputFormat.java:16-25).
   *
   * Scale design (SURVEY.md §2.1 S1-S4, §4.3):
-  *  - One `InputPartition` per node range; ranges are **byte-balanced** using
-  *    the offsets index (equal compressed bytes, not equal node counts), so
-  *    skewed graphs don't produce straggler tasks. `splits` option overrides
-  *    the default of one split per ~32 MiB of compressed graph.
-  *  - `preferredLocations` from `FileSystem.getFileBlockLocations` — HDFS
-  *    locality exactly like the reference's `NodeIteratorInputSplit`.
+  *  - One planner for every layout ([[BvShards.layout]]): an unsharded
+  *    graph is a one-shard manifest. Each shard's node range becomes
+  *    **byte-balanced** partitions cut on its offsets index (equal
+  *    compressed bytes, not equal node counts), so skewed graphs don't
+  *    produce straggler tasks. By default a shard of up to 64 MiB is one
+  *    partition and a larger one gets one per ~32 MiB; the `splits` option
+  *    cuts every scanned shard into that many parts.
+  *  - `preferredLocations` from the `.graph` files' located statuses —
+  *    HDFS locality exactly like the reference's `NodeIteratorInputSplit`.
   *  - Per-executor JVM cache of the decoded offsets index (the reference
   *    re-reads `.offsets` per task — SURVEY.md §2.1 "Per-task graph reload"
   *    note; we load once per executor and share across tasks).
@@ -264,13 +267,6 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
       limit.map(l => s", PushedLimit: $l").getOrElse("") +
       pushedAggs.map(a => s", PushedAggregates: ${a.mkString(",")}").getOrElse("") + ")"
 
-  /** Clamp a node range to the pushed id bounds. */
-  private def clamp(from: Int, until: Int): (Int, Int) = {
-    val f = math.max(from.toLong, idLo)
-    val u = math.min(until.toLong, idHi)
-    if (f >= u) (0, 0) else (f.toInt, u.toInt)
-  }
-
   /** The ACTUAL materialized global id ranges after pushed-filter clamping.
     * Sharded graphs are not required to tile [0, nodes) — leading and
     * inter-shard gaps are legal unless the write used the `nodes` pad
@@ -278,27 +274,20 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
     * shard ranges, never from a dense [0, nodes) assumption (a graph whose
     * ids start at 1000 would otherwise report COUNT(*) = nodes and
     * MIN(id) = 0, silently diverging from the unpushed scan). */
-  private def clampedRanges(): Seq[(Long, Long)] = (manifest match {
-    case Some(mf) => mf.shards.map(sh => (sh.from, sh.until))
-    case None => Seq((0L, graph.n.toLong))
-  }).map { case (f, u) => (math.max(f, idLo), math.min(u, idHi)) }
-    .filter { case (f, u) => f < u }
+  private def clampedRanges(): Seq[(Long, Long)] =
+    manifest.shards.map(sh => (math.max(sh.from, idLo), math.min(sh.until, idHi)))
+      .filter { case (f, u) => f < u }
 
-  // Loaded lazily on the driver for planning (offsets for byte-balancing,
-  // properties for stats). The per-executor cache is separate. Sharded
-  // graphs (written by the distributed sink) are planned from one cached
-  // manifest version instead, so both planInputPartitions calls of a
-  // query see the same manifest and block hosts.
-  private lazy val planned: Option[BvShards.ManifestVersion] =
-    BvShards.lookup(basename)
-  private def manifest: Option[BvShards.Manifest] = planned.map(_.manifest)
-  private lazy val graph: BvGraph = BvGraphCache.get(basename)
+  // Every layout plans from one layout version ([[BvShards.layout]]),
+  // taken once per scan: a sharded graph's manifest, or an unsharded graph
+  // as one shard. Both planInputPartitions calls of a query see the same
+  // shards and hosts. The per-executor graph cache is separate.
+  private lazy val planned: BvShards.ManifestVersion = BvShards.layout(basename)
+  private def manifest: BvShards.Manifest = planned.manifest
 
   override def estimateStatistics(): Statistics = new Statistics {
-    private val (n, m) = manifest match {
-      case Some(mf) => (mf.shards.map(s => s.until - s.from).sum, mf.arcs)
-      case None => (graph.n.toLong, graph.m)
-    }
+    private val n = manifest.shards.map(s => s.until - s.from).sum
+    private val m = manifest.arcs
     override def sizeInBytes(): util.OptionalLong =
       // decompressed relational size: 4 B id + ~4 B per successor
       util.OptionalLong.of(4L * n + 4L * m)
@@ -331,117 +320,82 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
     (0 until cuts.length - 1).map(i => (cuts(i), cuts(i + 1)))
   }
 
-  /** Planning I/O. Sharded graphs plan from [[BvShards.lookup]]: the
-    * parsed manifest plus ONE batched `listLocatedStatus` of the shard
-    * directory for block hosts, both cached per JVM under the `.shards`
-    * file's (mtime, length). A steady-state read of an unchanged graph
-    * costs one `getFileStatus` of `.shards` per manifest lookup and no
-    * listing; the listing runs once per manifest version, not once per
-    * call (Spark calls this method twice per query), and never as a
-    * per-shard `getFileStatus` loop (10k shards would mean 10k serial
-    * NameNode RPCs before the first task launches). Every Hadoop call
-    * goes through [[HadoopConf.fs]], whose `file:` filesystem loads a
-    * status's permissions in-process, and reuses [[HadoopConf.shared]]
-    * because a fresh `Configuration` costs about 6 ms of XML parsing.
-    * Cached hosts may be stale after a block move; they are only a
-    * locality hint. */
+  /** One planner for every layout: each shard's id-clamped,
+    * limit-truncated node range becomes byte-balanced partitions.
+    *
+    *  - `splits` = k (and no pushed limit) cuts every scanned shard into k
+    *    parts on its offsets index. An unsharded graph is one shard, so
+    *    there k is the whole scan's partition count.
+    *  - Otherwise a shard whose recorded bytes are at most twice
+    *    [[BvGraphTable.TARGET_SPLIT_BYTES]] is one partition and costs no
+    *    I/O; a larger one is cut into ceil(clamped bytes / target) parts,
+    *    so no single task scans an oversized shard alone. A pushed limit
+    *    never shreds its k-node prefix into the caller's split count.
+    *
+    * Planning I/O is the layout's ([[BvShards.layout]]). A sharded graph
+    * costs one `getFileStatus` of `.shards` per lookup, and its shard
+    * directory is listed once per manifest version with one batched
+    * `listLocatedStatus`, never as a per-shard `getFileStatus` loop (10k
+    * shards would mean 10k serial NameNode RPCs before the first task
+    * launches). An unsharded graph costs its cached `.properties` status
+    * and one `listLocatedStatus` of its `.graph`. Every Hadoop call goes
+    * through [[HadoopConf.fs]]. Cached hosts may be stale after a block
+    * move; they are only a locality hint. */
   override def planInputPartitions(): Array[InputPartition] = {
     pushedAggs.foreach { aggs =>
       // metadata-only answer from the ACTUAL shard id ranges (see
       // clampedRanges — dense [0, nodes) is not assumed)
       val ranges = clampedRanges()
       val count = ranges.map { case (f, u) => u - f }.sum
-      val m = manifest.map(_.arcs).getOrElse(graph.m)
       val values: Array[java.lang.Long] = aggs.map {
         case BvGraphScan.CountStar => java.lang.Long.valueOf(count)
         case _ if count == 0L => null // SUM/MIN/MAX over zero rows
-        case BvGraphScan.SumOutdegree => java.lang.Long.valueOf(m)
+        case BvGraphScan.SumOutdegree => java.lang.Long.valueOf(manifest.arcs)
         case BvGraphScan.MinId => java.lang.Long.valueOf(ranges.map(_._1).min)
         case BvGraphScan.MaxId => java.lang.Long.valueOf(ranges.map(_._2).max - 1)
       }.toArray
       return Array(BvAggResultPartition(values))
     }
-    planned.foreach { pv =>
-      val mf = pv.manifest
-      // One partition per shard (each is an independently decodable
-      // graph); pushed id bounds drop/narrow shards at planning time, and
-      // a shard written oversized (misconfigured write) is sub-split on
-      // its own offsets index so no single task scans it alone.
-      // Shard byte sizes come from the manifest (recorded at commit),
-      // block hosts from the manifest version's cached directory listing.
-      def statusFor(base: String) =
-        pv.located.get(new Path(base + ".graph").toUri.getPath)
-      // hosts of the blocks overlapping [startByte, endByte) — same
-      // locality contract as the reference's NodeIteratorInputSplit
-      // (io/NodeIteratorInputSplit.java:48-50) and our unsharded path
-      def hostsFor(base: String, startByte: Long, endByte: Long): Array[String] =
-        statusFor(base).map(_.getBlockLocations
-          .filter(b => b.getOffset < endByte && b.getOffset + b.getLength > startByte)
-          .flatMap(_.getHosts).distinct).getOrElse(Array.empty)
-
-      // pushed LIMIT: truncate the clamped shard walk after `limit` nodes
-      // (one row per node) — a prefix scan, usually a single partition
-      var remaining: Long = limit.map(_.toLong).getOrElse(Long.MaxValue)
-      return mf.shards.flatMap { sh =>
-        val gf = math.max(sh.from, idLo)
-        val gu0 = math.min(sh.until, idHi)
-        // saturating: gf + Long.MaxValue must not wrap when no limit is set
-        val gu = if (remaining >= gu0 - gf) gu0 else gf + math.max(0L, remaining)
-        if (gf < gu) remaining -= (gu - gf)
-        if (gf >= gu) Nil
+    val pv = planned
+    // a pushed limit keeps the byte rule: see the scaladoc
+    val perShard = if (limit.isDefined) None else splits
+    // pushed LIMIT: truncate the clamped shard walk after `limit` nodes
+    // (one row per node) — a prefix scan, usually a single partition
+    var remaining: Long = limit.map(_.toLong).getOrElse(Long.MaxValue)
+    manifest.shards.flatMap { sh =>
+      val gf = math.max(sh.from, idLo)
+      val gu0 = math.min(sh.until, idHi)
+      // saturating: gf + Long.MaxValue must not wrap when no limit is set
+      val gu = if (remaining >= gu0 - gf) gu0 else gf + math.max(0L, remaining)
+      if (gf < gu) remaining -= (gu - gf)
+      if (gf >= gu) Nil
+      else {
+        // int-schema ceiling (classic graphs only): a scanned shard's
+        // global ids must fit the INT id column. Long-id manifests
+        // surface BIGINT columns instead.
+        require(big || gu - 1 <= Int.MaxValue.toLong,
+          s"shard [${sh.from},${sh.until}) holds ids beyond Int.MaxValue " +
+            "but the manifest lacks idwidth=long; rewrite through the " +
+            "sink with a BIGINT id schema (see SCALE.md Ceilings)")
+        val localFrom = (gf - sh.from).toInt
+        val localUntil = (gu - sh.from).toInt
+        val graphBytes =
+          if (sh.bytes >= 0) sh.bytes // recorded at commit — no I/O
+          else pv.status(sh.base).map(_.getLen).getOrElse(0L)
+        if (perShard.isEmpty && graphBytes <= 2 * BvGraphTable.TARGET_SPLIT_BYTES)
+          Seq(BvInputPartition(sh.base, localFrom, localUntil,
+            sh.from, pv.hosts(sh.base, 0L, Long.MaxValue)): InputPartition)
         else {
-          // int-schema ceiling (classic graphs only): a scanned shard's
-          // global ids must fit the INT id column. Long-id manifests
-          // surface BIGINT columns instead.
-          require(big || gu - 1 <= Int.MaxValue.toLong,
-            s"shard [${sh.from},${sh.until}) holds ids beyond Int.MaxValue " +
-              "but the manifest lacks idwidth=long; rewrite through the " +
-              "sink with a BIGINT id schema (see SCALE.md Ceilings)")
-          val localFrom = (gf - sh.from).toInt
-          val localUntil = (gu - sh.from).toInt
-          val graphBytes =
-            if (sh.bytes >= 0) sh.bytes // recorded at commit — no I/O
-            else statusFor(sh.base).map(_.getLen).getOrElse(0L)
-          if (graphBytes <= 2 * BvGraphTable.TARGET_SPLIT_BYTES)
-            Seq(BvInputPartition(sh.base, localFrom, localUntil,
-              sh.from, hostsFor(sh.base, 0L, Long.MaxValue)): InputPartition)
-          else {
-            val sub = math.ceil(graphBytes.toDouble / BvGraphTable.TARGET_SPLIT_BYTES).toInt
-            val g = BvGraphCache.get(sh.base)
-            byteBalancedCuts(g, localFrom, localUntil, sub).map { case (a, b) =>
-              BvInputPartition(sh.base, a, b, sh.from,
-                hostsFor(sh.base, g.offsets(a) >>> 3, (g.offsets(b) >>> 3) + 1)): InputPartition
-            }
+          val g = BvGraphCache.get(sh.base)
+          val parts = perShard.getOrElse(math.max(1, math.ceil(
+            ((g.offsets(localUntil) - g.offsets(localFrom)) / 8.0) /
+              BvGraphTable.TARGET_SPLIT_BYTES).toInt))
+          byteBalancedCuts(g, localFrom, localUntil, parts).map { case (a, b) =>
+            BvInputPartition(sh.base, a, b, sh.from,
+              pv.hosts(sh.base, g.offsets(a) >>> 3, (g.offsets(b) >>> 3) + 1)): InputPartition
           }
         }
-      }.toArray
-    }
-    val g = graph
-    val n = g.n
-    val (scanFrom, scanUntil0) = clamp(0, n)
-    // pushed LIMIT on an unsharded graph: a [scanFrom, scanFrom+k) prefix
-    val scanUntil = limit match {
-      case Some(l) => math.min(scanUntil0.toLong, scanFrom.toLong + l).toInt
-      case None => scanUntil0
-    }
-    if (scanFrom >= scanUntil) return Array.empty
-    val totalBits = g.offsets(scanUntil) - g.offsets(scanFrom)
-    // under a pushed limit the byte-based count rules (a k-node prefix
-    // should not be shredded into the caller's full-scan split count)
-    val numSplits = (if (limit.isDefined) None else splits).getOrElse(
-      math.max(1, math.ceil((totalBits / 8.0) / BvGraphTable.TARGET_SPLIT_BYTES).toInt))
-    val graphPath = new Path(basename + ".graph")
-    val fs = HadoopConf.fs(graphPath)
-    val status = fs.getFileStatus(graphPath)
-
-    byteBalancedCuts(g, scanFrom, scanUntil, numSplits).map { case (from, until) =>
-      val startByte = g.offsets(from) >>> 3
-      val endByte = (g.offsets(until) >>> 3) + 1
-      val hosts =
-        try fs.getFileBlockLocations(status, startByte,
-          math.max(1L, endByte - startByte)).flatMap(_.getHosts).distinct
-        catch { case _: Exception => Array.empty[String] }
-      BvInputPartition(basename, from, until, 0, hosts): InputPartition
+      }
     }.toArray
   }
 

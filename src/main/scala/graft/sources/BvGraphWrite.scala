@@ -204,25 +204,40 @@ object BvShards {
     * graph must not list its shard directory again. */
   val listings = new java.util.concurrent.atomic.AtomicLong()
 
-  /** One version of a sharded graph's metadata: the parsed manifest and,
-    * on first use, its shard directory's located listing (path → status,
-    * for `.graph` sizes and block hosts). The listing is one batched
-    * `listLocatedStatus` — O(1) RPCs in the shard count. */
-  final class ManifestVersion private[BvShards] (basename: String,
-      val manifest: Manifest) {
-    lazy val located: Map[String, LocatedFileStatus] = {
-      listings.incrementAndGet()
-      val dir = new Path(basename + ".d")
-      try {
-        val it = HadoopConf.fs(dir).listLocatedStatus(dir)
-        val b = Map.newBuilder[String, LocatedFileStatus]
-        while (it.hasNext) {
-          val st = it.next()
-          b += st.getPath.toUri.getPath -> st
-        }
-        b.result()
-      } catch { case _: Exception => Map.empty }
-    }
+  /** One version of a graph's read layout: the parsed manifest and, on
+    * first use, the located statuses of its shards' `.graph` files (path →
+    * status, for sizes and block hosts). A sharded graph lists its shard
+    * directory once, with one batched `listLocatedStatus`: O(1) RPCs in
+    * the shard count. */
+  final class ManifestVersion private[BvShards] (val manifest: Manifest,
+      list: () => Map[String, LocatedFileStatus]) {
+    lazy val located: Map[String, LocatedFileStatus] = list()
+
+    /** The listed status of shard `base`'s `.graph`, if any. */
+    def status(base: String): Option[LocatedFileStatus] =
+      located.get(new Path(base + ".graph").toUri.getPath)
+
+    /** Hosts of the blocks of shard `base`'s `.graph` that overlap
+      * [startByte, endByte): the reference's split locality
+      * (io/NodeIteratorInputSplit.java:48-50). */
+    def hosts(base: String, startByte: Long, endByte: Long): Array[String] =
+      status(base).map(_.getBlockLocations
+        .filter(b => b.getOffset < endByte && b.getOffset + b.getLength > startByte)
+        .flatMap(_.getHosts).distinct).getOrElse(Array.empty)
+  }
+
+  private def listShards(basename: String): Map[String, LocatedFileStatus] = {
+    listings.incrementAndGet()
+    val dir = new Path(basename + ".d")
+    try {
+      val it = HadoopConf.fs(dir).listLocatedStatus(dir)
+      val b = Map.newBuilder[String, LocatedFileStatus]
+      while (it.hasNext) {
+        val st = it.next()
+        b += st.getPath.toUri.getPath -> st
+      }
+      b.result()
+    } catch { case _: Exception => Map.empty }
   }
 
   private val MAX_VERSIONS = 64
@@ -251,8 +266,20 @@ object BvShards {
     val key = (st.getModificationTime, st.getLen)
     Some(versions.compute(basename, (_, cached) =>
       if (cached != null && cached._1 == key) cached
-      else (key, new ManifestVersion(basename, parse(fs, p)))
+      else (key, new ManifestVersion(parse(fs, p), () => listShards(basename)))
     )._2)
+  }
+
+  /** The read layout of `basename`, which every read plans from: the
+    * cached manifest version of a sharded graph, else the unsharded graph
+    * as one shard [0, n) of the graph's own `.properties` counts, whose
+    * `.graph` status is one `listLocatedStatus` of that file. */
+  def layout(basename: String): ManifestVersion = lookup(basename).getOrElse {
+    val g = BvGraphCache.get(basename)
+    val graphPath = new Path(basename + ".graph")
+    val st = HadoopConf.fs(graphPath).listLocatedStatus(graphPath).next()
+    new ManifestVersion(Manifest(g.n, g.m, Seq(Shard(basename, 0, g.n, st.getLen))),
+      () => Map(graphPath.toUri.getPath -> st))
   }
 
   /** Forget the cached manifest version of `basename`. */

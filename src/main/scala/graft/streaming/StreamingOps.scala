@@ -1153,8 +1153,6 @@ object StreamingOps {
         java.nio.file.Files.list(out).iterator().asScala.toSeq
           .filter(_.getFileName.toString.endsWith(".parquet"))
       }
-      val b1 = staged(ev.filter(col("us") <= midUs), "b1")
-      val b2 = staged(ev.filter(col("us") > midUs), "b2")
       def arrive(files: Seq[java.nio.file.Path], pfx: String): Unit =
         files.zipWithIndex.foreach { case (f, i) =>
           java.nio.file.Files.move(f, inDir.resolve(s"${pfx}_$i.parquet")) }
@@ -1164,39 +1162,45 @@ object StreamingOps {
             col("v_cents")),
           struct(col("us"), col("event_id"))).as("r"))
       var cur: Option[String] = None
-      val q = s.readStream.schema(ev.schema).parquet(inDir.toString)
-        .writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-            id: Long) =>
-          val bl = latest(batch.toDF()).withColumnRenamed("r", "d")
-          val merged = cur match {
-            case None => bl.withColumnRenamed("d", "w")
-            case Some(dir) =>
-              val st = batch.sparkSession.read.parquet(dir)
-                .withColumnRenamed("w", "s")
-              st.join(bl, Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  when(col("s").isNull || (col("d").isNotNull &&
-                    struct(col("d.us"), col("d.event_id")) >
-                      struct(col("s.us"), col("s.event_id"))), col("d"))
-                    .otherwise(col("s")).as("w"))
+      // staging writes and the query run fork-free and share the
+      // session's classloader, as every other file replay does
+      withReplayConf(s) {
+        val b1 = staged(ev.filter(col("us") <= midUs), "b1")
+        val b2 = staged(ev.filter(col("us") > midUs), "b2")
+        val q = s.readStream.schema(ev.schema).parquet(inDir.toString)
+          .writeStream
+          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
+              id: Long) =>
+            val bl = latest(batch.toDF()).withColumnRenamed("r", "d")
+            val merged = cur match {
+              case None => bl.withColumnRenamed("d", "w")
+              case Some(dir) =>
+                val st = batch.sparkSession.read.parquet(dir)
+                  .withColumnRenamed("w", "s")
+                st.join(bl, Seq("user_id"), "full_outer")
+                  .select(col("user_id"),
+                    when(col("s").isNull || (col("d").isNotNull &&
+                      struct(col("d.us"), col("d.event_id")) >
+                        struct(col("s.us"), col("s.event_id"))), col("d"))
+                      .otherwise(col("s")).as("w"))
+            }
+            val next = s"$base/v$id"
+            merged.write.mode("overwrite").parquet(next)
+            val prev = cur
+            cur = Some(next)
+            // the superseded snapshot has no readers once `cur` moves on —
+            // delete it so the version chain holds exactly one live dir
+            // (plus the in-flight write), not one per batch forever
+            prev.foreach(StreamingOps.deleteRecursively)
+            ()
           }
-          val next = s"$base/v$id"
-          merged.write.mode("overwrite").parquet(next)
-          val prev = cur
-          cur = Some(next)
-          // the superseded snapshot has no readers once `cur` moves on —
-          // delete it so the version chain holds exactly one live dir
-          // (plus the in-flight write), not one per batch forever
-          prev.foreach(StreamingOps.deleteRecursively)
-          ()
-        }
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .start()
-      try {
-        arrive(b1, "b1"); q.processAllAvailable()
-        arrive(b2, "b2"); q.processAllAvailable()
-      } finally q.stop()
+          .option("checkpointLocation", root.resolve("ckpt").toString)
+          .start()
+        try {
+          arrive(b1, "b1"); q.processAllAvailable()
+          arrive(b2, "b2"); q.processAllAvailable()
+        } finally q.stop()
+      }
       // the final snapshot must outlive THIS query's consumption only —
       // defer the scratch-root removal to the session's next sweep (the
       // same post-consumption hook that unpins caches), so repeated

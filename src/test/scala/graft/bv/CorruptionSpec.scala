@@ -102,6 +102,12 @@ class CorruptionSpec extends AnyFunSuite {
     } finally g.release()
   }
 
+  test("an outdegree above the graph's arc count throws before any scratch grows") {
+    assertCorruptNode1(handBuilt { out =>
+      out.writeGamma(Int.MaxValue.toLong) // a flipped γ outdegree; the graph has 4 arcs
+    }, s"outdegree ${Int.MaxValue} outside [0, 4], the graph's arc count")
+  }
+
   test("a copy block that runs past the outdegree throws") {
     assertCorruptNode1(handBuilt { out =>
       out.writeGamma(1) // outdegree 1

@@ -86,56 +86,4 @@ class WebGraphCompatSpec extends AnyFunSuite {
     val perPart = rdd.mapPartitions(it => Iterator(it.size)).collect()
     assert(perPart.take(6).forall(_ == 86) && perPart.last == 600 - 6 * 86)
   }
-
-  test("byte-balanced split law: equal-byte splits on a skewed graph, same rows, default unchanged") {
-    // power-law-ish fixture: the first 40 nodes are dense hubs (~300
-    // successors each), the remaining 760 nearly empty — the shape where
-    // the reference's node-uniform law puts ~all bytes in split 0
-    val rnd = new scala.util.Random(7L)
-    val n = 800
-    val adj = Array.tabulate(n) { i =>
-      val d = if (i < 40) 300 else 2
-      val s = scala.collection.mutable.SortedSet.empty[Int]
-      while (s.size < d) s += rnd.nextInt(n)
-      s.toArray
-    }
-    val dir = java.nio.file.Files.createTempDirectory("wgbytes").toString
-    val base = s"$dir/g"
-    graft.bv.BvEncoder().write(base, adj)
-    val sc = spark.sparkContext
-    def rdd(law: Option[String]) = {
-      val conf = new org.apache.hadoop.conf.Configuration(
-        sc.hadoopConfiguration)
-      WebGraphInputFormat.setBasename(conf, base)
-      WebGraphInputFormat.setNumberOfSplits(conf, 8)
-      law.foreach(WebGraphInputFormat.setSplitLaw(conf, _))
-      sc.newAPIHadoopRDD(conf, classOf[WebGraphInputFormat],
-        classOf[IntWritable], classOf[IntArrayWritable])
-    }
-    // same rows under both laws (Writables are reused — copy per record)
-    def rows(r: org.apache.spark.rdd.RDD[(IntWritable, IntArrayWritable)]) =
-      r.map { case (id, out) => (id.get, out.values.toSeq) }
-        .collect().sortBy(_._1)
-    val nodeRows = rows(rdd(None))
-    val byteRows = rows(rdd(Some(WebGraphInputFormat.SPLIT_LAW_BYTES)))
-    assert(nodeRows.length == n && byteRows.sameElements(nodeRows))
-    // split BYTE spans: node-uniform law is wildly skewed on this
-    // fixture; byte-balanced law is within 2x of the mean
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration))
-    WebGraphInputFormat.setBasename(job, base)
-    WebGraphInputFormat.setNumberOfSplits(job, 8)
-    import scala.jdk.CollectionConverters._
-    val nodeLens = new WebGraphInputFormat().getSplits(job)
-      .asScala.map(_.getLength).toSeq
-    WebGraphInputFormat.setSplitLaw(job, WebGraphInputFormat.SPLIT_LAW_BYTES)
-    val byteLens = new WebGraphInputFormat().getSplits(job)
-      .asScala.map(_.getLength).toSeq
-    assert(nodeLens.max > 3 * (nodeLens.sum / nodeLens.length),
-      s"fixture not skewed enough to discriminate: $nodeLens")
-    assert(byteLens.sum == nodeLens.sum, "laws must cover the same bytes")
-    val mean = byteLens.sum.toDouble / byteLens.length
-    assert(byteLens.forall(l => l <= 2 * mean),
-      s"byte law left a straggler: $byteLens (mean $mean)")
-  }
 }
