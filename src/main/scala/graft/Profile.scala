@@ -20,22 +20,21 @@ object Profile {
   // sub-plan probes for decomposition (not part of the query surface)
   private val extras: Map[String, (SparkSession, String) => DataFrame] =
     Map("_copurchase" -> ((s, d) => queries.GraphAlgos.coPurchaseEdges(s, d)),
-      // architectural floor of one iteration round: lazy localCheckpoint
+      // architectural floor of one iteration round: lazy checkpoint
       // of a trivially-transformed 20k-row frame + 1-row agg action,
       // 20 rounds — isolates the per-barrier cost every iterative query
       // pays from any real operator work
       "_roundfloor" -> ((s, _) => {
         import org.apache.spark.sql.functions._
         var df = s.range(20000).select(col("id").as("x"), col("id").as("h"))
-        var ids = Set.empty[Int]
         for (r <- 1 to 20) {
           val t0 = System.nanoTime()
-          val (ck, nIds) = queries.GraphAlgos.checkpointWithIdsLazy(
-            df.select(col("x"), (col("h") + r).as("h")))
+          val ck = Caches.checkpoint(
+            df.select(col("x"), (col("h") + r).as("h")), eager = false)
           val st = ck.agg(sum(col("h"))).head()
           require(!st.isNullAt(0))
-          queries.GraphAlgos.freeRdds(s, ids)
-          df = ck; ids = nIds
+          if (r > 1) Caches.release(df)
+          df = ck
           println(f"[floor] round $r: ${(System.nanoTime() - t0) / 1e9}%.3f s")
         }
         df

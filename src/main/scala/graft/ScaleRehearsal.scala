@@ -100,33 +100,27 @@ object ScaleRehearsal {
       g.filter(col("id") >= lo && col("id") < hi)
         .select(explode(col("successors"))).count())
 
-    // iterative peel (the round-5 kcore shape): eager localCheckpoint per
-    // round keeps the logical plan flat, so driver-side planning stays
+    // iterative peel (the round-5 kcore shape): an eager Caches.checkpoint
+    // per round keeps the logical plan flat, so driver-side planning stays
     // O(1) per round at ANY data size — this is the measured evidence
-    // that the fix scales, not just that it passed at sf0.1
-    val sc = spark.sparkContext
-    // the shared clamped checkpoint (GraphAlgos.checkpointWithIds):
-    // inherited stats are capped so iterative loops can't compound them
-    // into driver-melting BigInt products (see Checkpoints.clampStats)
-    def checkpoint(df: org.apache.spark.sql.DataFrame) =
-      queries.GraphAlgos.checkpointWithIds(df)
-    def free(ids: Set[Int]): Unit = ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
+    // that the fix scales, not just that it passed at sf0.1. The
+    // rehearsal never sweeps between sections on its own, so each section
+    // releases its checkpoints once they are dead: peak storage at 50M
+    // nodes depends on it.
     val (kcoreRounds, tKcore) = timed {
       val e = g.select(col("id").as("u"), explode(col("successors")).as("v"))
       val eP = e.persist()
-      val (deg, degIds) = checkpoint(
+      val deg = Caches.checkpoint(
         eP.select(explode(array(col("u"), col("v"))).as("x"))
           .groupBy(col("x")).agg(count(lit(1)).as("deg")))
       val k = 2L * avgDeg // peel threshold above the mean: rounds do work
       var alive = deg.filter(col("deg") >= k).select(col("x").as("id"))
-      var aliveIds = degIds
+      var aliveCk = deg
       var nAlive = alive.count()
       var rounds = 0
       var converged = false
       for (_ <- 1 to 6 if !converged) {
-        val (next, nextIds) = checkpoint(eP
+        val next = Caches.checkpoint(eP
           .join(alive.select(col("id").as("u")), "u")
           .join(alive.select(col("id").as("v")), "v")
           .select(explode(array(col("u"), col("v"))).as("x"))
@@ -134,10 +128,10 @@ object ScaleRehearsal {
           .filter(col("deg") >= k).select(col("x").as("id")))
         val nNext = next.count()
         rounds += 1
-        if (nNext == nAlive) { converged = true; free(nextIds) }
-        else { free(aliveIds); alive = next; aliveIds = nextIds; nAlive = nNext }
+        if (nNext == nAlive) { converged = true; Caches.release(next) }
+        else { Caches.release(aliveCk); alive = next; aliveCk = next; nAlive = nNext }
       }
-      free(aliveIds)
+      Caches.release(aliveCk)
       eP.unpersist(blocking = false)
       rounds
     }
@@ -170,7 +164,7 @@ object ScaleRehearsal {
       val nNodes = dst.getLong(0)
       val hmax = math.sqrt(dst.getLong(1).toDouble).toLong
       val maxDeg = dst.getLong(2)
-      val (h0, h0Ids) = checkpoint(
+      val h0 = Caches.checkpoint(
         symP.groupBy(col("x")).agg(count(lit(1)).as("h")))
       val hs = queries.GraphAlgos.hIndexRoundSort(symP, h0)
       val hh = queries.GraphAlgos.hIndexRoundHist(symP, h0, hmax)
@@ -181,12 +175,12 @@ object ScaleRehearsal {
       val viol = hs.withColumnRenamed("h", "h1").join(h0, "x")
         .agg(sum(when(col("h1") > col("h"), 1L).otherwise(0L)))
         .head().getLong(0)
-      free(h0Ids)
-      val (hf, hfIds, fxRounds, fxConverged) =
-        queries.GraphAlgos.corenessFixpoint(spark, symP, hmax, maxDeg,
+      Caches.release(h0)
+      val (hf, fxRounds, fxConverged) =
+        queries.GraphAlgos.corenessFixpoint(symP, hmax, maxDeg,
           maxRounds = 100, checkMonotone = true)
       val mc = hf.agg(max(col("h"))).head().getLong(0)
-      free(hfIds)
+      Caches.sweep(spark) // the fixpoint's last generation
       symP.unpersist(blocking = false)
       (nNodes, viol, histDiff, fxRounds, fxConverged, mc)
     }
@@ -211,22 +205,21 @@ object ScaleRehearsal {
       val e = g.select(col("id").cast("long").as("u"),
         explode(col("successors")).as("v0"))
         .select(col("u"), col("v0").cast("long").as("v"))
-      val we = e.filter(col("u") =!= col("v"))
+      val we = Caches.checkpoint(e.filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).as("u"),
           greatest(col("u"), col("v")).as("v"))
-        .distinct().select(col("u"), col("v"), lit(1L).as("w"))
-        .localCheckpoint(true)
-      val (lbl1, ids1, q0, q1, m2a, _) =
-        queries.GraphAlgos.louvainSweepMonotone(spark, we)
-      val coarse = queries.GraphAlgos.coarsen(we, lbl1).localCheckpoint(true)
+        .distinct().select(col("u"), col("v"), lit(1L).as("w")))
+      val (lbl1, q0, q1, m2a, _) =
+        queries.GraphAlgos.louvainSweepMonotone(we)
+      val coarse = Caches.checkpoint(queries.GraphAlgos.coarsen(we, lbl1))
       val cSingles = coarse.select(col("u").as("x"))
         .unionByName(coarse.select(col("v").as("x"))).distinct()
         .select(col("x"), col("x").as("comm"))
       val (qc, m2c) = queries.GraphAlgos.modularityScaled(coarse, cSingles)
       val cEdges = coarse.count()
-      val (lbl2, ids2, qc2, q2, _, _) =
-        queries.GraphAlgos.louvainSweepMonotone(spark, coarse)
-      free(ids1); free(ids2)
+      val (lbl2, qc2, q2, _, _) =
+        queries.GraphAlgos.louvainSweepMonotone(coarse)
+      Seq(we, lbl1, coarse, lbl2).foreach(Caches.release)
       val ok = m2a == m2c && q1 >= q0 && qc == q1 && qc2 == qc && q2 >= q1
       (ok, cEdges, q0, q1, q2)
     }
@@ -274,7 +267,7 @@ object ScaleRehearsal {
     // pointer-doubling rehearsal (graph_scc's primitive): ceil(log2 n)
     // rounds over an n-row state frame on the arithmetic functional graph
     // f(i) = (i²+1) mod n — each round one self-join + eager
-    // localCheckpoint, previous generation freed as the next lands, and
+    // checkpoint, previous generation freed as the next lands, and
     // the adaptive image-restricted broadcast kicks in once the pointer
     // image collapses toward the cycle set (see GraphAlgos.pointerDoubling
     // — un-restricted, the tail rounds hash-exchange the whole state onto
@@ -292,9 +285,9 @@ object ScaleRehearsal {
         .select(col("i"),
           ((col("i") * col("i") + 1L) % lit(sccN)).as("p"),
           col("i").as("m"))
-      val (st, ids) = GraphAlgos.pointerDoubling(spark, st0, sccN)
+      val st = GraphAlgos.pointerDoubling(st0, sccN)
       val onCycle = st.select(col("p")).distinct().count()
-      GraphAlgos.freeRdds(spark, ids)
+      Caches.release(st)
       val k = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, sccN - 1L))
       (k, onCycle)
     }
@@ -316,15 +309,13 @@ object ScaleRehearsal {
         .select(col("x"),
           array((col("x") * lit(2654435761L)) % lit(1000000007L) + lit(1L))
             .as("sk"))
-      var stIds = Set.empty[Int]
-      for (_ <- 1 to 2) {
+      for (r <- 1 to 2) {
         val msgs = eDir.join(st.withColumnRenamed("x", "y"), "y")
           .select(col("x"), col("sk"))
-        val (ck, ids) = checkpoint(
+        val ck = Caches.checkpoint(
           msgs.unionByName(st).groupBy(col("x")).agg(kmv(col("sk")).as("sk")))
-        free(stIds)
+        if (r > 1) Caches.release(st)
         st = ck
-        stIds = ids
       }
       val est = st.select(
         when(size(col("sk")) < 16, size(col("sk")).cast("long"))
@@ -332,7 +323,7 @@ object ScaleRehearsal {
           .as("est"))
       val r = est.agg(
         floor(avg(col("est")) * 100).cast("long"), min(col("est"))).head()
-      free(stIds)
+      Caches.release(st)
       (r.getLong(0), r.getLong(1))
     }
 
@@ -355,7 +346,7 @@ object ScaleRehearsal {
       val outdeg = g.filter(col("outdegree") > 0)
         .select(col("id").cast("long").as("src"),
           col("outdegree").cast("long").as("odeg")).persist()
-      val pr = GraphAlgos.pageRankLoop(spark, e, nodes, outdeg, iters = 3,
+      val pr = GraphAlgos.pageRankLoop(e, nodes, outdeg, iters = 3,
         checkpointEachIter = true)
       val r = pr.agg(count(lit(1)), min(col("pr_e9"))).head()
       e.unpersist(blocking = false); nodes.unpersist(blocking = false)
@@ -452,19 +443,19 @@ object ScaleRehearsal {
         .select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
         .filter(col("u") =!= col("v")).distinct()
-      val (we, weIds) = checkpoint(und.select(col("u"), col("v"),
+      val we = Caches.checkpoint(und.select(col("u"), col("v"),
         (((col("u") * 2654435761L + col("v")) % 997 + 1)
           * (1L << (2 * idBits))
           + col("u") * (1L << idBits) + col("v")).as("pk")))
       val doublings = math.max(1,
         64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1L)))
-      val (chosen, comps, loopIds) = graft.queries.GraphAlgos
-        .boruvkaForest(spark, we, rounds = 3, doublings = doublings)
+      val (chosen, comps) = graft.queries.GraphAlgos
+        .boruvkaForest(we, rounds = 3, doublings = doublings)
       val nNodes = we.select(explode(array(col("u"), col("v"))).as("id"))
         .distinct().count()
       val nChosen = chosen.count()
       val nComps = comps.select(col("comp")).distinct().count()
-      free(weIds); free(loopIds)
+      Caches.sweep(spark) // we and every Borůvka generation
       (nNodes, nChosen, nComps)
     }
 
@@ -544,7 +535,7 @@ object ScaleRehearsal {
       val outdegB = gb.filter(col("outdegree") > 0)
         .select(col("id").cast("long").as("src"),
           col("outdegree").cast("long").as("odeg")).persist()
-      val prB = graft.queries.GraphAlgos.pageRankLoop(spark, eb
+      val prB = graft.queries.GraphAlgos.pageRankLoop(eb
           .select(col("src").cast("long").as("src"),
             col("dst").cast("long").as("dst")),
         nodesB, outdegB, iters = 3, checkpointEachIter = true)

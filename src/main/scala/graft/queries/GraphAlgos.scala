@@ -30,54 +30,6 @@ object GraphAlgos {
 
   private val OFF = 1000000L
 
-  /** Eager localCheckpoint + the set of RDD ids it registered, so the
-    * caller can release exactly this generation later. localCheckpoint
-    * registers its RDD with the context but not the SQL cache manager, so
-    * releases must go through the RDD handle — captured by diffing the
-    * persistent-RDD set around the (eager) checkpoint. This is the ONLY
-    * sound lineage cut for iterative DataFrame loops: persist()+count()
-    * cuts execution lineage but leaves the full LOGICAL plan for the
-    * analyzer to re-canonicalize every round (the round-3/4 kcore trap:
-    * 121 s of driver-side planning at sf0.1).
-    *
-    * The inherited Statistics are CLAMPED
-    * ([[org.apache.spark.sql.graftbridge.Checkpoints.clampStats]]):
-    * localCheckpoint copies the child plan's estimated sizeInBytes into
-    * the LogicalRDD, and in a loop that joins the previous generation
-    * the estimate multiplies round over round — digit counts double per
-    * round until the driver melts in BigInteger multiplication inside
-    * stats estimation (hit live by the 50M coreness fixpoint at ~round
-    * 20+). Capping at 10^18 changes no real plan decision (real sizes
-    * are far below; the cap is ~defaultSizeInBytes) and bounds every
-    * future round's stats math. */
-  private[graft] def checkpointWithIds(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val out = org.apache.spark.sql.graftbridge.Checkpoints.clampStats(
-      df.localCheckpoint(eager = true))
-    (out, sc.getPersistentRDDs.keySet.toSet.diff(before))
-  }
-
-  /** [[checkpointWithIds]] with eager=false: the checkpoint RDD
-    * materializes on the CALLER'S first action, so an iteration loop can
-    * fuse "materialize this generation" and "read its convergence
-    * aggregate" into one job instead of two — per-round job count is the
-    * whole cost of a fixpoint tail whose frontiers hold a few dozen
-    * nodes. Same id-tracking contract; the ids are registered (persist
-    * is marked) before materialization, so freeing them later works
-    * whether or not an action ever ran. */
-  private[graft] def checkpointWithIdsLazy(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val out = org.apache.spark.sql.graftbridge.Checkpoints.clampStats(
-      df.localCheckpoint(eager = false))
-    (out, sc.getPersistentRDDs.keySet.toSet.diff(before))
-  }
-
-  private[graft] def freeRdds(s: SparkSession, ids: Set[Int]): Unit =
-    ids.foreach(id => s.sparkContext.getPersistentRDDs.get(id)
-      .foreach(_.unpersist(blocking = false)))
-
   /** Fail-fast guard for BIGINT-packed composite keys (msf's pk, mis's
     * prio, random_walk's argmin key): packing total-orders its fields ONLY
     * while each stays under its shift width — out-of-range inputs would
@@ -180,7 +132,6 @@ object GraphAlgos {
     // the reached set, so the edge join probes thousands of rows
     // instead of re-relaxing every reached node against all m edges.
     var frontier: DataFrame = dist
-    var ids = Set.empty[Int]
     // the frontier is node-sized (≤ one row per reached node ≤ arcs)
     val b = Licenses.broadcastWithin(e, Licenses.limits.broadcastArcs)
     for (_ <- 1 to rounds) {
@@ -206,7 +157,7 @@ object GraphAlgos {
       // per round. Every generation stays pinned until the deferred
       // sweep (frames are node-sized; freeing mid-chain would kill a
       // truncated lineage before its first compute).
-      val (ck, nIds) = checkpointWithIdsLazy(
+      val ck = graft.Caches.checkpoint(
         dist.select(col("x"), col("dist"), lit(true).as("old"))
           .unionByName(msgs.select(col("x"), col("dist"),
             lit(false).as("old")))
@@ -214,12 +165,11 @@ object GraphAlgos {
           .agg(min(col("dist")).as("dist"),
             min(when(col("old"), col("dist"))).as("pd"))
           .select(col("x"), col("dist"),
-            (col("pd").isNull || col("dist") < col("pd")).as("imp")))
+            (col("pd").isNull || col("dist") < col("pd")).as("imp")),
+        eager = false)
       dist = ck.select(col("x"), col("dist"))
       frontier = ck.filter(col("imp")).select(col("x"), col("dist"))
-      ids = ids ++ nIds
     }
-    graft.Caches.defer(s)(freeRdds(s, ids))
     dist
   }
 
@@ -242,18 +192,16 @@ object GraphAlgos {
       .union(e.select(col("dst").as("id"))).distinct())
     val outdeg = graft.Caches.pin(
       e.groupBy("src").agg(count(lit(1)).as("odeg")))
-    pageRankLoop(s, e, nodes, outdeg, iters, checkpointEachIter)
+    pageRankLoop(e, nodes, outdeg, iters, checkpointEachIter)
   }
 
   /** The iteration itself, over caller-pinned (src,dst) / (id) / (src,odeg)
     * frames — shared by the orders-graph `graph_pagerank` and the
     * BV-source `bv_pagerank` so both run the IDENTICAL loop (checkpoint
     * hygiene included) over different graph sources. */
-  private[graft] def pageRankLoop(s: SparkSession, e: DataFrame,
-      nodes: DataFrame, outdeg: DataFrame, iters: Int,
-      checkpointEachIter: Boolean): DataFrame = {
+  private[graft] def pageRankLoop(e: DataFrame, nodes: DataFrame,
+      outdeg: DataFrame, iters: Int, checkpointEachIter: Boolean): DataFrame = {
     var pr = nodes.select(col("id"), lit(1.0).as("pr"))
-    var prIds = Set.empty[Int]
     // pr/outdeg are node-sized ([[Licenses]]). LAZY checkpoints: the loop
     // reads no per-iteration scalar, so the whole chain materializes
     // under the caller's terminal action (generations stay pinned until
@@ -267,13 +215,9 @@ object GraphAlgos {
       val next = nodes.join(sums, Seq("id"), "left")
         .select(col("id"),
           (lit(0.15) + lit(0.85) * coalesce(col("csum"), lit(0.0))).as("pr"))
-      if (checkpointEachIter) {
-        val (ck, ids) = checkpointWithIdsLazy(next)
-        pr = ck
-        prIds = prIds ++ ids
-      } else pr = next
+      pr = if (checkpointEachIter) graft.Caches.checkpoint(next, eager = false)
+        else next
     }
-    if (prIds.nonEmpty) graft.Caches.defer(s)(freeRdds(s, prIds))
     pr.select(col("id"),
       floor(col("pr") * lit(1000000000.0)).cast("long").as("pr_e9"))
       .orderBy("id")
@@ -288,7 +232,7 @@ object GraphAlgos {
     * min f^(0..2^k-1)(i)) composes with itself via ONE self-join, so
     * K = ceil(log2 n) rounds reach every horizon ≥ n — 15 rounds cover a
     * 30k-node graph, 40 rounds a trillion-node one. Each round is eagerly
-    * localCheckpoint'ed (kcore hygiene: flat logical plan, previous
+    * checkpointed (kcore hygiene: flat logical plan, previous
     * generation freed as the next lands). A node is on a cycle iff it
     * survives in the image of f^(2^K); its SCC id is the cycle's min
     * label, already carried in m. The dense index itself is built with the
@@ -300,7 +244,7 @@ object GraphAlgos {
   /** The pointer-doubling loop itself, shared with the scale rehearsal:
     * state (i, p, m) with p = f^(2^k)(i), m = min f^(0..2^k-1)(i),
     * composed with itself for ceil(log2 n) rounds, eagerly
-    * localCheckpoint'ed per round.
+    * checkpointed per round.
     *
     * SKEW: doubling funnels every pointer onto the (tiny) cycle set, so
     * the self-join key's distinct count collapses round over round —
@@ -323,15 +267,13 @@ object GraphAlgos {
     * the build to the broadcast image and broadcast the restricted build
     * into the main join. From that round on the state is never
     * exchanged — each tail round is a narrow map-side hash join +
-    * checkpoint. Returns the final state plus the RDD ids of its
-    * checkpoint generation (caller frees them). */
-  private[graft] def pointerDoubling(s: SparkSession, st0: DataFrame,
-      n: Long): (DataFrame, Set[Int]) = {
+    * checkpoint. Returns the final state, a checkpoint the caller may
+    * [[graft.Caches.release]] early. */
+  private[graft] def pointerDoubling(st0: DataFrame, n: Long): DataFrame = {
     val k = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(1L, n - 1))) // ceil(log2 n), so 2^K >= n
     val bcRows = Licenses.limits.imageRows
     var st = st0
-    var stIds = Set.empty[Int]
     var imgSmall = false
     for (r <- 1 to k) {
       // expected image before round r is image(f^(2^(r-1))) ~ 2n/2^(r-1)
@@ -351,12 +293,11 @@ object GraphAlgos {
           .select(col("i"), col("bp").as("p"),
             least(col("m"), col("bm")).as("m"))
       }
-      val (ck, ids) = checkpointWithIds(nxt)
-      freeRdds(s, stIds)
+      val ck = graft.Caches.checkpoint(nxt)
+      if (r > 1) graft.Caches.release(st)
       st = ck
-      stIds = ids
     }
-    (st, stIds)
+    st
   }
 
   private[graft] def sccFunctional(s: SparkSession, d: String): DataFrame = {
@@ -370,7 +311,7 @@ object GraphAlgos {
       .withColumn("base", coalesce(sum(col("c")).over(wB), lit(0L)))
       .select("bkt", "base")
     val wIn = Window.partitionBy("bkt").orderBy("pk")
-    val (idx, idxIds) = checkpointWithIds(
+    val idx = graft.Caches.checkpoint(
       bk.join(broadcast(bases), "bkt")
         .withColumn("i", (col("base") + row_number().over(wIn) - 1)
           .cast("long"))
@@ -378,14 +319,13 @@ object GraphAlgos {
     val n = idx.count() // bounded driver scalar: node count sets K
     val st0 = idx.select(col("i"),
       ((col("i") * col("i") + 1L) % lit(n)).as("p"), col("i").as("m"))
-    val (st, stIds) = pointerDoubling(s, st0, n)
+    val st = pointerDoubling(st0, n)
     val onCyc = st.select(col("p").as("i")).distinct()
       .withColumn("oc", lit(1L))
     val res = st.join(onCyc, Seq("i"), "left")
       .select(col("i"),
         coalesce(col("oc"), lit(0L)).as("on_cycle"),
         when(col("oc").isNotNull, col("m")).otherwise(col("i")).as("scc_i"))
-    graft.Caches.defer(s)(freeRdds(s, stIds ++ idxIds))
     res.join(idx, Seq("i"))
       .join(idx.select(col("i").as("scc_i"), col("pk").as("scc_node")),
         Seq("scc_i"))
@@ -433,17 +373,15 @@ object GraphAlgos {
     * by the distinct-key Borůvka argument), pointer-doubling relabel to
     * the selection-forest roots (early exit at the fixpoint —
     * result-identical to running all `doublings`). Returns the chosen
-    * edges (round, pk), the final component labels (id, comp), and the
-    * RDD ids backing both (caller frees them after its terminal action).
+    * edges (round, pk) and the final component labels (id, comp); the
+    * checkpoints backing both stay until the next [[graft.Caches.sweep]].
     */
-  private[graft] def boruvkaForest(s: SparkSession, we: DataFrame,
-      rounds: Int, doublings: Int): (DataFrame, DataFrame, Set[Int]) = {
-    val keep = scala.collection.mutable.Set.empty[Int]
+  private[graft] def boruvkaForest(we: DataFrame, rounds: Int,
+      doublings: Int): (DataFrame, DataFrame) = {
     // comp/ptr/sel are node-sized wherever they join ([[Licenses]])
     val b = Licenses.broadcastWithin(we, Licenses.limits.broadcastArcs)
     var comp = we.select(explode(array(col("u"), col("v"))).as("id"))
       .distinct().select(col("id"), col("id").as("comp"))
-    var compIds = Set.empty[Int]
     var chosen = List.empty[DataFrame]
     for (r <- 1 to rounds) {
       val ec = we
@@ -452,9 +390,9 @@ object GraphAlgos {
         .filter(col("cu") =!= col("cv"))
       val inc = ec.select(col("cu").as("c"), col("cv").as("o"), col("pk"))
         .unionByName(ec.select(col("cv").as("c"), col("cu").as("o"), col("pk")))
-      val (sel, selIds) = checkpointWithIds(inc.groupBy(col("c"))
+      // chosen's lineage roots here until the sweep
+      val sel = graft.Caches.checkpoint(inc.groupBy(col("c"))
         .agg(min_by(col("o"), col("pk")).as("p"), min(col("pk")).as("mk")))
-      keep ++= selIds // chosen's lineage roots here until the caller's action
       chosen ::= sel.select(lit(r.toLong).as("round"), col("mk").as("pk"))
         .distinct()
       val brk = sel.select(col("c"), col("p"))
@@ -465,7 +403,8 @@ object GraphAlgos {
       val isolated = comp.select(col("comp").as("c")).distinct()
         .join(b(sel.select(col("c"))), Seq("c"), "left_anti")
         .select(col("c"), col("c").as("p"))
-      var (ptr, ptrIds) = checkpointWithIds(brk.unionByName(isolated))
+      var ptrCk = graft.Caches.checkpoint(brk.unionByName(isolated))
+      var ptr = ptrCk
       var changed = true
       var k = 0
       while (k < doublings && changed) {
@@ -473,27 +412,26 @@ object GraphAlgos {
         // changed test rides the materializing aggregate instead of a
         // separate limit(1).count() job — halves the per-doubling
         // barrier count, result-identical (same ≠ predicate)
-        val (nxt, nxtIds) = checkpointWithIdsLazy(
+        val nxt = graft.Caches.checkpoint(
           ptr.join(b(ptr.select(col("c").as("p"), col("p").as("p2"))), "p")
-            .select(col("c"), col("p").as("old"), col("p2").as("p")))
+            .select(col("c"), col("p").as("old"), col("p2").as("p")),
+          eager = false)
         val chg = nxt.agg(
           sum(when(col("p") =!= col("old"), 1L).otherwise(0L))).head()
         changed = !chg.isNullAt(0) && chg.getLong(0) > 0
-        freeRdds(s, ptrIds)
+        graft.Caches.release(ptrCk)
+        ptrCk = nxt
         ptr = nxt.select(col("c"), col("p"))
-        ptrIds = nxtIds
         k += 1
       }
-      val (nextComp, nextCompIds) = checkpointWithIds(
+      val nextComp = graft.Caches.checkpoint(
         comp.join(b(ptr.select(col("c").as("comp"), col("p"))), "comp")
           .select(col("id"), col("p").as("comp")))
-      freeRdds(s, ptrIds)
-      freeRdds(s, compIds)
+      graft.Caches.release(ptrCk)
+      if (r > 1) graft.Caches.release(comp)
       comp = nextComp
-      compIds = nextCompIds
     }
-    keep ++= compIds
-    (chosen.reduce(_ unionByName _), comp, keep.toSet)
+    (chosen.reduce(_ unionByName _), comp)
   }
 
   /** KMV ball-sketch loop shared by graph_hyperball / graph_harmonic /
@@ -508,16 +446,15 @@ object GraphAlgos {
     * per-round shuffle profile as pagerank (the 100 TB point; exact
     * all-node balls cost Σdeg² rows).
     * Hashes are modular (h = x·2654435761 mod (1e9+7) + 1, 0 kept free).
-    * Both generations are localCheckpoint'ed and freed at the next
-    * Caches.defer sweep.
+    * Both generations are checkpointed and freed at the next
+    * Caches.sweep.
     */
   private val kmvK = 16
   private val kmvM = 1000000007L
   private def kmvBallSketches(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val kmv = udaf(new graft.functions.SketchAggs.KmvUnion(kmvK))
     val kmvL = udaf(new graft.functions.SketchAggs.KmvAddLong(kmvK))
-    val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-    graft.Caches.defer(s)(freeRdds(s, eIds))
+    val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
     val sym = e.select(col("u").as("x"), col("v").as("y"))
       .unionByName(e.select(col("v").as("x"), col("u").as("y")))
     def h(c: Column): Column = (c * lit(2654435761L)) % lit(kmvM) + lit(1L)
@@ -533,9 +470,9 @@ object GraphAlgos {
     // Result-identical: same distinct hash set per node, same bottom-k.
     val nb1 = sym.select(col("x"), h(col("y")).as("hv"))
       .unionByName(sym.select(col("x"), h(col("x")).as("hv")))
-    val (st1, ids1) = checkpointWithIds(
+    val st1 = graft.Caches.checkpoint(
       nb1.groupBy(col("x")).agg(kmvL(col("hv")).as("sk")))
-    val (st2, ids2) = {
+    val st2 = {
       // st1 carries k-long arrays, so it has its own row license
       // ([[Licenses]]), counted on the materialized checkpoint. With the
       // hint the round-2 messages are produced map-side and KmvUnion
@@ -544,11 +481,9 @@ object GraphAlgos {
       val b = Licenses.broadcastWithin(st1, Licenses.limits.sketchRows)
       val msgs = sym.join(b(st1.withColumnRenamed("x", "y")), "y")
         .select(col("x"), col("sk"))
-      checkpointWithIds(
+      graft.Caches.checkpoint(
         msgs.unionByName(st1).groupBy(col("x")).agg(kmv(col("sk")).as("sk")))
     }
-    graft.Caches.defer(s)(freeRdds(s, ids1))
-    graft.Caches.defer(s)(freeRdds(s, ids2))
     (st1, st2)
   }
 
@@ -818,9 +753,8 @@ object GraphAlgos {
     * is computed ONCE and reused via its broadcast exchange. Halves the
     * tail's barrier count; measured at sf0.1 the fixpoint went 43.5 s →
     * (see OPTIMIZATION_r10.md) with the same final histogram. */
-  private[graft] def corenessFixpoint(s: SparkSession, sym: DataFrame,
-      hmax: Long, maxDeg: Long, maxRounds: Int = 100,
-      checkMonotone: Boolean = false): (DataFrame, Set[Int], Int, Boolean) = {
+  private[graft] def corenessFixpoint(sym: DataFrame, hmax: Long,
+      maxDeg: Long, maxRounds: Int = 100, checkMonotone: Boolean = false): (DataFrame, Int, Boolean) = {
     val bcastIds = Licenses.limits.frontierRows
     // the h frame permanently carries two static per-node columns beside
     // the iterate: dg = degree and s2 = Σ_{y~x} deg(y). They make the
@@ -830,11 +764,12 @@ object GraphAlgos {
     // round — each round's convergence aggregate reads them off the same
     // action. s2 costs one extra edge-sized join at init, once.
     val deg0 = sym.groupBy(col("x")).agg(count(lit(1)).as("h"))
-    var (h, hIds) = checkpointWithIds(
+    var hCk = graft.Caches.checkpoint(
       deg0.join(
         sym.join(deg0.select(col("x").as("y"), col("h").as("dgy")), "y")
           .groupBy(col("x")).agg(sum(col("dgy")).as("s2")), Seq("x"))
         .select(col("x"), col("h"), col("h").as("dg"), col("s2")))
+    var h = hCk
     // round 1's frontier is every node; `changed` always rides the
     // current h checkpoint, so freeing the previous generation after the
     // new one lands releases both
@@ -885,7 +820,7 @@ object GraphAlgos {
           "2", Seq("chg1", "viol1"))
         (m2, "chg2")
       } else (m1, "chg1")
-      val (nh, nhIds) = checkpointWithIdsLazy(m)
+      val nh = graft.Caches.checkpoint(m, eager = false)
       // ONE action: materializes the lazy checkpoint and reads every
       // counter and the next round's licenses off it
       val st = nh.agg(
@@ -898,16 +833,16 @@ object GraphAlgos {
       if (checkMonotone) require(st.getLong(1) == 0L,
         s"corenessFixpoint: h INCREASED on ${st.getLong(1)} nodes by round " +
           s"$rounds — the h-sequence must be non-increasing")
-      freeRdds(s, hIds)
+      graft.Caches.release(hCk)
+      hCk = nh
       h = nh.select(col("x"), col("h"), col("dg"), col("s2"))
-      hIds = nhIds
       changed = nh.filter(col(lastChg)).select(col("x"))
       changedCnt = st.getLong(0)
       b1 = st.getLong(2)
       b2 = st.getLong(3)
       if (changedCnt == 0L) converged = true
     }
-    (h.select(col("x"), col("h")), hIds, rounds, converged)
+    (h.select(col("x"), col("h")), rounds, converged)
   }
 
   // -------------------------------------------------- louvain machinery
@@ -926,7 +861,7 @@ object GraphAlgos {
     * id), with the same loud BIGINT overflow guards. Super-nodes whose
     * only incident weight is their self-loop have no neighbor candidates
     * and keep their own label (the left join). Returns the (x, comm)
-    * labels plus backing RDD ids (caller frees).
+    * labels, a checkpoint.
     *
     * CAVEAT — synchronous moves are a HEURISTIC, not monotone: each
     * node's gain assumes every OTHER node stays put, so simultaneous
@@ -940,11 +875,8 @@ object GraphAlgos {
     * [[louvainSweepMonotone]], which makes monotonicity true BY
     * CONSTRUCTION (keep the moved labels only when their exact-integer
     * Q is at least the input labeling's, else keep singletons). */
-  private[graft] def louvainSweep(s: SparkSession,
-      we0: DataFrame): (DataFrame, Set[Int]) = {
-    val (moved, mIds, _, _) = louvainSweepStats(s, we0)
-    (moved, mIds)
-  }
+  private[graft] def louvainSweep(we0: DataFrame): DataFrame =
+    louvainSweepStats(we0)._1
 
   /** ⌊√(2⁶³−1)⌋: the largest value whose square is a BIGINT. */
   private val maxSquarable = 3037000499L
@@ -986,20 +918,19 @@ object GraphAlgos {
     * integers; equality with the labeled pricing is pinned by
     * CorenessLouvainSpec's ladder invariants).
     *
-    * Returns (moved labels, their RDD ids, 2m, Q₀·(2m)²). The Q₀ slot is
+    * Returns (moved labels, 2m, Q₀·(2m)²). The Q₀ slot is
     * meaningful only under the m2 ≤ ⌊√(2⁶³−1)⌋ bound the PRICING path
     * guards ([[modularityScaled]]'s require) — the raw-sweep caller
     * discards it, and the monotone caller prices the moved labels first,
     * which fails loudly on the same bound before Q₀ is ever compared. */
-  private def louvainSweepStats(s: SparkSession,
-      we0: DataFrame): (DataFrame, Set[Int], Long, Long) = {
+  private def louvainSweepStats(we0: DataFrame): (DataFrame, Long, Long) = {
     val loops = we0.filter(col("u") === col("v"))
       .select(col("u").as("x"), (col("w") * 2).as("w"),
         lit(null).cast("long").as("ew"))
     val we = we0.filter(col("u") =!= col("v"))
     val sym = we.select(col("u").as("x"), col("v").as("y"), col("w"))
       .unionByName(we.select(col("v").as("x"), col("u").as("y"), col("w")))
-    val (deg, degIds) = checkpointWithIds(
+    val deg = graft.Caches.checkpoint(
       sym.select(col("x"), col("w"), col("w").as("ew")).unionByName(loops)
         .groupBy(col("x")).agg(sum(col("w")).as("dw"),
           max(col("ew")).as("mw"),
@@ -1021,12 +952,12 @@ object GraphAlgos {
     val lbl = sc.groupBy(col("x")).agg(
       max_by(col("y"), struct(col("score"), -col("y"))).as("best"),
       max(col("score")).as("bs"))
-    val (moved, mIds) = checkpointWithIds(
+    val moved = graft.Caches.checkpoint(
       deg.select(col("x")).join(lbl, Seq("x"), "left")
         .select(col("x"),
           when(col("bs") > 0, col("best")).otherwise(col("x")).as("comm")))
-    freeRdds(s, degIds)
-    (moved, mIds, m2, q0)
+    graft.Caches.release(deg)
+    (moved, m2, q0)
   }
 
   /** [[louvainSweep]] with monotonicity GUARANTEED by construction:
@@ -1041,22 +972,22 @@ object GraphAlgos {
     * edge-sized joins + node-sized aggregations ending in 1-row driver
     * scalars). On real community-structured data the guard is a no-op —
     * the sweep improves Q and the moved labels pass through.
-    * Returns (labels, backing RDD ids, Q·(2m)² before, after, 2m). */
-  private[graft] def louvainSweepMonotone(s: SparkSession,
-      we: DataFrame): (DataFrame, Set[Int], Long, Long, Long, Long) = {
-    val (lbl, ids, m2, q0) = louvainSweepStats(s, we)
+    * Returns (labels, Q·(2m)² before, after, 2m, community count). */
+  private[graft] def louvainSweepMonotone(
+      we: DataFrame): (DataFrame, Long, Long, Long, Long) = {
+    val (lbl, m2, q0) = louvainSweepStats(we)
     val (q1, m2b, nComm) = modularityScaledN(we, lbl)
     require(m2b == m2,
       s"louvainSweepMonotone: total strength moved under relabeling " +
         s"($m2b != $m2) — modularityScaled is broken")
-    if (q1 >= q0) (lbl, ids, q0, q1, m2, nComm)
+    if (q1 >= q0) (lbl, q0, q1, m2, nComm)
     else {
-      freeRdds(s, ids)
+      graft.Caches.release(lbl)
       val singles = we.select(col("u").as("x"))
         .unionByName(we.select(col("v").as("x"))).distinct()
         .select(col("x"), col("x").as("comm"))
-      val (sl, sIds) = checkpointWithIds(singles)
-      (sl, sIds, q0, q0, m2, sl.count())
+      val sl = graft.Caches.checkpoint(singles)
+      (sl, q0, q0, m2, sl.count())
     }
   }
 
@@ -1306,11 +1237,11 @@ object GraphAlgos {
     //    partial-aggregated argmin on the component key, then
     //    comp-table-sized doubling self-joins — the EDGE set is touched
     //    once per round, all iteration state is node-sized, every round
-    //    eagerly localCheckpoint'ed (kcore hygiene). Early exit when the
+    //    eagerly checkpointed (kcore hygiene). Early exit when the
     //    pointers stop changing is result-identical to running all 15
     //    doublings (fixpoint of an idempotent map).
     "graph_msf" -> ((s, d) => {
-      val (we, weIds) = checkpointWithIds(
+      val we = graft.Caches.checkpoint(
         weightedCoPurchase(s, d).select(col("u"), col("v"), col("w"),
           (col("w") * lit(1L << 44) + col("u") * lit(1L << 22) + col("v"))
             .as("pk")))
@@ -1320,9 +1251,7 @@ object GraphAlgos {
       // (2·idBits + 10)-bit packing.
       requirePackedIds("graph_msf pk", we,
         "u" -> (1L << 22), "v" -> (1L << 22), "w" -> (1L << 19))
-      val (chosen, _, loopIds) = boruvkaForest(s, we, rounds = 2,
-        doublings = 15)
-      graft.Caches.defer(s)(freeRdds(s, weIds ++ loopIds))
+      val (chosen, _) = boruvkaForest(we, rounds = 2, doublings = 15)
       chosen
         .join(we.select(col("pk"), col("u"), col("v"), col("w")), "pk")
         .select(col("round"), col("u"), col("v"), col("w"))
@@ -1367,7 +1296,7 @@ object GraphAlgos {
       val outdeg = graft.Caches.pin(bv.filter(col("outdegree") > 0)
         .select(col("id").cast("long").as("src"),
           col("outdegree").cast("long").as("odeg")))
-      pageRankLoop(s, e, nodes, outdeg, iters = 3, checkpointEachIter = true)
+      pageRankLoop(e, nodes, outdeg, iters = 3, checkpointEachIter = true)
     }),
 
     // -- PERSONALIZED PageRank with restart to a seed set (id ≡ 0 mod 17),
@@ -1384,8 +1313,7 @@ object GraphAlgos {
     //    join + one partial-aggregated integer sum — pagerank's exact
     //    shuffle profile.
     "graph_ppr" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val sym = e.select(col("u").as("x"), col("v").as("y"))
         .unionByName(e.select(col("v").as("x"), col("u").as("y")))
       val deg = sym.groupBy(col("x")).agg(count(lit(1)).as("dg"))
@@ -1394,15 +1322,13 @@ object GraphAlgos {
       // the iteration then pays one m-sized join + one partial-aggregated
       // sum per round instead of two m-sized joins. At 10 iterations and
       // 100x scale that is 2 vs 3 shuffles per round on the edge set.
-      val (symDeg, sdIds) = checkpointWithIds(sym
+      val symDeg = graft.Caches.checkpoint(sym
         .join(deg.withColumnRenamed("x", "dsrc")
           .withColumnRenamed("dg", "dgs"), col("x") === col("dsrc"))
         .select(col("x").as("src"), col("y"), col("dgs")))
-      graft.Caches.defer(s)(freeRdds(s, sdIds))
       val isSeed = (col("x") % 17 === 0).cast("long")
       val nodes = sym.select(col("x")).distinct()
       var r = nodes.select(col("x"), (isSeed * lit(1000000000L)).as("r"))
-      var rIds = Set.empty[Int]
       // r is node-sized ([[Licenses]]); no per-round scalar is read, so
       // the lazy chain materializes under the terminal orderBy
       val b = Licenses.broadcastWithin(symDeg, Licenses.limits.broadcastArcs)
@@ -1412,16 +1338,14 @@ object GraphAlgos {
             "src")
           .select(col("y").as("x"),
             expr("(85 * rs) DIV (100 * dgs)").as("c"))
-        val (ck, ids) = checkpointWithIdsLazy(
+        r = graft.Caches.checkpoint(
           nodes.join(contrib.groupBy(col("x")).agg(sum(col("c")).as("sc")),
               Seq("x"), "left")
             .select(col("x"),
               (isSeed * lit(150000000L) + coalesce(col("sc"), lit(0L)))
-                .as("r")))
-        r = ck
-        rIds = rIds ++ ids
+                .as("r")),
+          eager = false)
       }
-      graft.Caches.defer(s)(freeRdds(s, rIds))
       r.select(col("x").as("node"), col("r").as("ppr_e9")).orderBy("node")
     }),
 
@@ -1436,12 +1360,11 @@ object GraphAlgos {
     //    pagerank's exact shuffle profile, node-sized state, checkpointed
     //    per round (kcore hygiene).
     "graph_topo_layers" -> ((s, d) => {
-      val (e0, e0Ids) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, e0Ids))
+      val e0 = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val sym = e0.select(col("u").as("x"), col("v").as("y"))
         .unionByName(e0.select(col("v").as("x"), col("u").as("y")))
       val deg = sym.groupBy(col("x")).agg(count(lit(1)).as("dg"))
-      val (dir, dirIds) = checkpointWithIds(e0
+      val dir = graft.Caches.checkpoint(e0
         .join(deg.select(col("x").as("u"), col("dg").as("du")), "u")
         .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
         .select(
@@ -1450,22 +1373,18 @@ object GraphAlgos {
             struct(col("u").as("s"), col("v").as("t")))
             .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
         .select(col("e.s").as("s"), col("e.t").as("t")))
-      graft.Caches.defer(s)(freeRdds(s, dirIds))
       val nodes = sym.select(col("x")).distinct()
       var dcur = nodes.select(col("x"), lit(0L).as("d"))
-      var ids = Set.empty[Int]
       // dcur is node-sized ([[Licenses]]); no per-round scalar is read,
       // so the lazy 3-round chain materializes under the terminal orderBy
       val b = Licenses.broadcastWithin(dir, Licenses.limits.broadcastArcs)
       for (_ <- 1 to 3) {
         val msgs = dir.join(b(dcur.withColumnRenamed("x", "s")), "s")
           .select(col("t").as("x"), (col("d") + lit(1L)).as("d"))
-        val (ck, nIds) = checkpointWithIdsLazy(
-          dcur.unionByName(msgs).groupBy(col("x")).agg(max(col("d")).as("d")))
-        dcur = ck
-        ids = ids ++ nIds
+        dcur = graft.Caches.checkpoint(
+          dcur.unionByName(msgs).groupBy(col("x")).agg(max(col("d")).as("d")),
+          eager = false)
       }
-      graft.Caches.defer(s)(freeRdds(s, ids))
       dcur.select(col("x").as("node"), col("d").as("depth3")).orderBy("node")
     }),
 
@@ -1493,10 +1412,9 @@ object GraphAlgos {
             y => struct(x.as("u"), y.as("v")))))).as("p"))
         .groupBy(col("p.u").as("u"), col("p.v").as("v"))
         .agg(count(lit(1)).as("w"))
-      val (e, eIds) = checkpointWithIds(
+      val e = graft.Caches.checkpoint(
         w0.select(col("u").as("a"), col("v").as("b"), col("w"))
           .unionByName(w0.select(col("v").as("a"), col("u").as("b"), col("w"))))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
       val srcId = e.agg(min(col("a"))).head().getLong(0) // bounded scalar
       relaxRounds(s, e, srcId, rounds = 4)
         .select(col("x").as("node"), col("dist")).orderBy("node")
@@ -1514,12 +1432,11 @@ object GraphAlgos {
     //    distance histogram of the second sweep — its max row IS the
     //    bound.
     "graph_diameter_sweep" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds {
+      val e = graft.Caches.checkpoint {
         val e0 = coPurchaseEdges(s, d)
         e0.select(col("u").as("a"), col("v").as("b"))
           .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
       }
-      graft.Caches.defer(s)(freeRdds(s, eIds))
       val ew = e.withColumn("w", lit(1L))
       val src = e.agg(min(col("a"))).head().getLong(0) // bounded scalar
       val far = relaxRounds(s, ew, src, rounds = 4)
@@ -1602,12 +1519,12 @@ object GraphAlgos {
     //    the oracle use the simpler symmetric wedge join.
     "graph_truss" -> ((s, d) => {
       val km2 = 8L
-      var (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
+      var e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       for (_ <- 1 to 2) {
-        val (next, nIds) = checkpointWithIds(
+        val next = graft.Caches.checkpoint(
           triangleSupport(e).filter(col("sup") >= km2).select("u", "v"))
-        freeRdds(s, eIds)
-        e = next; eIds = nIds
+        graft.Caches.release(e)
+        e = next
       }
       // the last generation stays pinned until the caller's terminal
       // action; Caches.sweep releases it before the next query builds
@@ -1913,7 +1830,7 @@ object GraphAlgos {
     //
     //    Scale shape: `und` partitions once (cached); each round is two
     //    key-partitioned hash joins + a partial count agg, CHECKPOINTED
-    //    eagerly (localCheckpoint) so both its execution lineage AND its
+    //    eagerly (Caches.checkpoint) so both its execution lineage AND its
     //    logical plan stop at a LogicalRDD leaf. persist()+count() is NOT
     //    enough here: it cuts execution lineage but each round's LOGICAL
     //    plan still embeds the previous alive twice (two join arms), so the
@@ -1940,8 +1857,7 @@ object GraphAlgos {
       // the winner gets charged the whole co-purchase build (driver bench:
       // 8.6 s vs 2.9 s profiled) — checkpoint it EAGERLY instead, like
       // kcore's deg pass, so the build runs exactly once, up front
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy(col("x")).agg(count(lit(1)).as("deg"))
       val j = e
@@ -1971,8 +1887,7 @@ object GraphAlgos {
     //    edge partitioning, the same shuffle profile as one pagerank step;
     //    score frames are node-sized so AQE broadcasts them while small.
     "graph_hits" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val a1 = e.groupBy(col("v")).agg(count(lit(1)).as("a1"))
       val h1 = e.join(a1, "v").groupBy(col("u")).agg(sum(col("a1")).as("h1"))
       val a2 = e.join(h1, "u").groupBy(col("v")).agg(sum(col("h1")).as("a2"))
@@ -1999,8 +1914,7 @@ object GraphAlgos {
     //    (node, min) pair per partition, and the label frame broadcasts
     //    while small.
     "graph_lpa" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val sym = e.select(col("u").as("x"), col("v").as("y"))
         .unionByName(e.select(col("v").as("x"), col("u").as("y")))
       // round 1 folds init l0=id: l1(x) = min(x, min over neighbors)
@@ -2032,8 +1946,7 @@ object GraphAlgos {
     //    and two node-sized anti-joins; the edge set is touched once per
     //    round and shrinks to the undecided-induced subgraph.
     "graph_mis" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       // prio packs (hash, id) into one BIGINT; needs id < 2^22
       // ([[requirePackedIds]] — at bigger spaces widen the shift).
       requirePackedIds("graph_mis prio", e,
@@ -2148,8 +2061,7 @@ object GraphAlgos {
     //    with the 1-row edge count broadcast — the corpus-sized data
     //    sees three partial-aggregated passes and nothing else.
     "graph_modularity" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val sym = e.select(col("u").as("x"), col("v").as("y"))
         .unionByName(e.select(col("v").as("x"), col("u").as("y")))
       val l1 = graft.Caches.pin(sym.groupBy(col("x"))
@@ -2191,8 +2103,7 @@ object GraphAlgos {
     //    registers merged with zip_with-max — the distinct_kmv machinery —
     //    to cover every node approximately).
     "graph_ball2" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val sym = e.select(col("u").as("x"), col("v").as("y"))
         .unionByName(e.select(col("v").as("x"), col("u").as("y")))
       val d1 = sym.filter(col("x") % 17 === 0)
@@ -2228,8 +2139,7 @@ object GraphAlgos {
     //    σ is one partial-aggregated count on (s,t); the dependency
     //    accumulation is one partial-aggregated sum on w.
     "graph_betweenness2" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val sym = e.select(col("u").as("x"), col("v").as("y"))
         .unionByName(e.select(col("v").as("x"), col("u").as("y")))
       val d1 = sym.filter(col("x") % 17 === 0)
@@ -2274,8 +2184,7 @@ object GraphAlgos {
     //    top-100 is TakeOrderedAndProject — only 100 rows ever reach
     //    the driver at any graph size.
     "graph_adamic_adar" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val sym = e.select(col("u").as("x"), col("v").as("y"))
         .unionByName(e.select(col("v").as("x"), col("u").as("y")))
       val deg = sym.groupBy(col("x")).agg(count(lit(1)).as("dg"))
@@ -2306,8 +2215,7 @@ object GraphAlgos {
     //    aggregation ships one (walker, min) pair per partition; walks
     //    are embarrassingly parallel in the walker key.
     "graph_random_walk" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       // the argmin key packs h·10⁹ + nbr — a total order ONLY while
       // nbr < 10⁹ ([[requirePackedIds]]; widen the 10⁹ stride past it)
       requirePackedIds("graph_random_walk argmin key", e,
@@ -2423,24 +2331,20 @@ object GraphAlgos {
     //    a hub never pays a degree-sized per-key sort), and
     //    [[hIndexRound]] auto-selects it by max degree.
     "graph_coreness" -> ((s, d) => {
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      graft.Caches.defer(s)(freeRdds(s, eIds))
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
       val sym = e.select(col("u").as("x"), col("v").as("y"))
         .unionByName(e.select(col("v").as("x"), col("u").as("y")))
       var h = sym.groupBy(col("x")).agg(count(lit(1)).as("h"))
-      var hIds = Set.empty[Int] // generation 0 rides on e's checkpoint
-      for (_ <- 1 to 2) {
+      for (r <- 1 to 2) {
         // sort form always here: the benched graphs have no crawl-scale
         // hubs, and the oracle replays this exact shape; the histogram
         // twin ([[hIndexRoundHist]]) is equality-gated at sf0.001
         // (CorenessSpec) and at 50M (ScaleRehearsal), and
         // [[hIndexRound]] auto-selects it past maxDeg > 2·√(2m)
-        val (nh, nhIds) = checkpointWithIds(hIndexRoundSort(sym, h))
-        freeRdds(s, hIds)
+        val nh = graft.Caches.checkpoint(hIndexRoundSort(sym, h))
+        if (r > 1) graft.Caches.release(h) // generation 0 rides on e's checkpoint
         h = nh
-        hIds = nhIds
       }
-      graft.Caches.defer(s)(freeRdds(s, hIds))
       h.select(col("x").cast("long").as("node"), col("h").as("core_h2"))
         .orderBy("node")
     }),
@@ -2469,11 +2373,11 @@ object GraphAlgos {
     //    every generation eagerly checkpointed and the previous freed.
     "graph_coreness_fixpoint" -> ((s, d) => {
       import s.implicits._
-      val (e, eIds) = checkpointWithIds(coPurchaseEdges(s, d))
-      val (sym, symIds) = checkpointWithIds(
+      val e = graft.Caches.checkpoint(coPurchaseEdges(s, d))
+      val sym = graft.Caches.checkpoint(
         e.select(col("u").as("x"), col("v").as("y"))
           .unionByName(e.select(col("v").as("x"), col("u").as("y"))))
-      freeRdds(s, eIds)
+      graft.Caches.release(e)
       val dst = sym.groupBy(col("x")).agg(count(lit(1)).as("deg"))
         .agg(sum(col("deg")), max(col("deg"))).head()
       val arcs = dst.getLong(0) // |sym| = 2m
@@ -2491,14 +2395,12 @@ object GraphAlgos {
       val h = if (arcs <= Licenses.limits.kernelArcs) {
         corenessExactSmall(s, sym)
       } else {
-        val (hf, hIds, rounds, converged) = corenessFixpoint(s, sym, hmax,
+        val (hf, rounds, converged) = corenessFixpoint(sym, hmax,
           maxDeg, maxRounds = 100, checkMonotone = true)
         require(converged,
           s"corenessFixpoint did not converge within $rounds rounds")
-        graft.Caches.defer(s)(freeRdds(s, hIds))
         hf
       }
-      graft.Caches.defer(s)(freeRdds(s, symIds))
       h.groupBy(col("h").cast("long").as("k")).agg(count(lit(1)).as("cnt"))
         .unionByName(Seq((-1L, 0L)).toDF("k", "cnt"))
         .orderBy("k")
@@ -2530,16 +2432,14 @@ object GraphAlgos {
     //    both as exact-integer equalities) at 50M nodes in the scale
     //    rehearsal and at sf0.001 in CorenessSpec.
     "graph_louvain" -> ((s, d) => {
-      val (we, weIds) = checkpointWithIds(weightedCoPurchase(s, d))
-      graft.Caches.defer(s)(freeRdds(s, weIds))
+      val we = graft.Caches.checkpoint(weightedCoPurchase(s, d))
       val sym = we.select(col("u").as("x"), col("v").as("y"), col("w"))
         .unionByName(we.select(col("v").as("x"), col("u").as("y"), col("w")))
       // deg is consumed three times (overflow guard + both argmax join
       // sides) — checkpoint the node-sized frame once instead of paying
       // the edge-sized aggregation per consumer
-      val (deg, degIds) = checkpointWithIds(
+      val deg = graft.Caches.checkpoint(
         sym.groupBy(col("x")).agg(sum(col("w")).as("dw")))
-      graft.Caches.defer(s)(freeRdds(s, degIds))
       // 2m + max w: one bounded 1-row scalar (total edge weight, doubled)
       val gs = we.agg(sum(col("w")).cast("long"), max(col("w"))).head()
       val m2 = gs.getLong(0) * 2L
@@ -2552,9 +2452,8 @@ object GraphAlgos {
       val lbl = sc.groupBy(col("x")).agg(
         max_by(col("y"), struct(col("score"), -col("y"))).as("best"),
         max(col("score")).as("bs"))
-      val (moved, mIds) = checkpointWithIds(lbl.select(col("x"),
+      val moved = graft.Caches.checkpoint(lbl.select(col("x"),
         when(col("bs") > 0, col("best")).otherwise(col("x")).as("comm")))
-      graft.Caches.defer(s)(freeRdds(s, mIds))
       val internal = we
         .join(moved.select(col("x").as("u"), col("comm").as("cu")), "u")
         .join(moved.select(col("x").as("v"), col("comm").as("cv")), "v")
@@ -2589,7 +2488,7 @@ object GraphAlgos {
     //    smaller graph; every Q pricing ends in 1-row driver scalars.
     "graph_louvain_ladder" -> ((s, d) => {
       import s.implicits._
-      val (we, weIds) = checkpointWithIds(weightedCoPurchase(s, d))
+      val we = graft.Caches.checkpoint(weightedCoPurchase(s, d))
       // edge count + node count in ONE pass (each edge contributes two
       // exploded endpoint rows, self-loops included)
       def edgeNodeCounts(g: DataFrame): (Long, Long) = {
@@ -2606,22 +2505,19 @@ object GraphAlgos {
       // barrier/planning floor, not data) runs as one narrow task with
       // IDENTICAL exact-integer arithmetic; above it the distributed
       // ladder below runs unchanged (and at 50M in the rehearsal).
-      if (nWe <= Licenses.limits.kernelArcs) {
-        val out = louvainLadderKernel(s, we)
-        graft.Caches.defer(s)(freeRdds(s, weIds))
-        out
-      } else {
-      val (lbl1, ids1, q0, q1, m2, nComm1) = louvainSweepMonotone(s, we)
-      val (coarse, coarseIds) = checkpointWithIds(coarsen(we, lbl1))
+      if (nWe <= Licenses.limits.kernelArcs) louvainLadderKernel(s, we)
+      else {
+      val (lbl1, q0, q1, m2, nComm1) = louvainSweepMonotone(we)
+      val coarse = graft.Caches.checkpoint(coarsen(we, lbl1))
       val (nCoarse, nCoarseNodes) = edgeNodeCounts(coarse)
-      val (lbl2, ids2, qc, q2, m2c, nComm2) = louvainSweepMonotone(s, coarse)
+      val (lbl2, qc, q2, m2c, nComm2) = louvainSweepMonotone(coarse)
       val composed = lbl1.select(col("x"), col("comm").as("c1"))
         .join(lbl2.select(col("x").as("c1"), col("comm")), "c1")
         .select(col("x"), col("comm"))
       val (qComposed, m2comp, nComm4) = modularityScaledN(we, composed)
       // every value below is a bounded driver scalar already computed —
       // all backing blocks can go now
-      freeRdds(s, weIds ++ ids1 ++ coarseIds ++ ids2)
+      Seq(we, lbl1, coarse, lbl2).foreach(graft.Caches.release)
       Seq(
         (0L, q0, m2, nNodes, nWe),
         (1L, q1, m2, nComm1, nWe),
@@ -2643,20 +2539,18 @@ object GraphAlgos {
       def degOf(edges: DataFrame): DataFrame = edges
         .select(explode(array(col("u"), col("v"))).as("u"))
         .groupBy(col("u")).agg(count(lit(1)).as("deg"))
-      def checkpoint(df: DataFrame): (DataFrame, Set[Int]) = checkpointWithIds(df)
-      def free(ids: Set[Int]): Unit = freeRdds(s, ids)
       // ONE degree pass feeds everything up front: m = Σdeg/2, n = |deg|,
       // and round 1 — whose two alive-joins against the full node set are
       // identity filters — is just deg ≥ k. Saves two full edge-set
       // aggregations vs computing m/n and round 1 separately.
-      val (deg, degIds) = checkpoint(degOf(e))
+      val deg = graft.Caches.checkpoint(degOf(e))
       val mn = deg.agg((sum(col("deg")) / 2).cast("long").as("m"),
         count(lit(1)).as("n")).head()
       val k = math.max(1L, mn.getLong(0) / mn.getLong(1))
       // alive₁ is a 2-node plan over the deg leaf — no checkpoint needed;
       // its backing store is deg's RDD, freed when the next round lands
       var alive = deg.filter(col("deg") >= k).select(col("u").as("id"))
-      var aliveIds = degIds
+      var aliveCk = deg
       var nAlive = alive.count()
       // fixpoint early-exit is RESULT-IDENTICAL to running all rounds:
       // next ⊆ alive always, so equal counts ⇒ equal sets ⇒ every later
@@ -2667,23 +2561,20 @@ object GraphAlgos {
         val survivors = e
           .join(alive.select(col("id").as("u")), "u")
           .join(alive.select(col("id").as("v")), "v")
-        val (next, nextIds) = checkpoint(
+        val next = graft.Caches.checkpoint(
           degOf(survivors).filter(col("deg") >= k).select(col("u").as("id")))
         val nNext = next.count()
-        if (nNext == nAlive) { converged = true; free(nextIds) }
+        if (nNext == nAlive) { converged = true; graft.Caches.release(next) }
         else {
-          free(aliveIds) // previous generation: folded into next
+          graft.Caches.release(aliveCk) // previous generation: folded into next
           alive = next
-          aliveIds = nextIds
+          aliveCk = next
           nAlive = nNext
         }
       }
-      val fin = alive
-      val finIds = aliveIds
-      graft.Caches.defer(s)(free(finIds))
       degOf(e
-          .join(fin.select(col("id").as("u")), "u")
-          .join(fin.select(col("id").as("v")), "v"))
+          .join(alive.select(col("id").as("u")), "u")
+          .join(alive.select(col("id").as("v")), "v"))
         .select(col("u").cast("long").as("node"), col("deg").as("core_deg"))
         .orderBy("node")
     }))

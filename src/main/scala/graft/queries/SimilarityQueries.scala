@@ -245,7 +245,7 @@ object SimilarityQueries {
     // evaluate interpreted per row (measured 30s vs 1s for the same
     // update at 1M×64). The checkpoint pins the codes once, the explode
     // reads 5 flat columns, and the generation is freed right after.
-    val (a1, a1Ids) = GraphAlgos.checkpointWithIds(
+    val a1 = graft.Caches.checkpoint(
       withCodes(subs(e), c0).select(
         col("xs") +: (0 until m).map(j => col(s"c$j")): _*))
     // ONE posexplode over the raw 64 dims (subspace and in-subspace dim
@@ -266,7 +266,7 @@ object SimilarityQueries {
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("cd")))),
         x => x.getField("cd")).as("cs"))
       .collect()
-    GraphAlgos.freeRdds(e.sparkSession, a1Ids)
+    graft.Caches.release(a1)
     val cb = (0 until m).map(j => upd.filter(_.getInt(0) == j)
       .map(r => r.getLong(1) -> r.getSeq[Long](2).toSeq).sortBy(_._1).toSeq)
     val probes = subs(e).filter(col("vec_id") < 4).collect()

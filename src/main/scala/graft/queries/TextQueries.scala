@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Exprs
 import graft.Tables._
 import graft.functions.Fnv64
+import DedupQueries.{norm, tokens}
 
 /** Text-analysis operators over `documents` (builder brief, SURVEY.md
   * §2.4): language ID (stopword-overlap heuristic), quality scoring,
@@ -20,10 +21,6 @@ import graft.functions.Fnv64
 object TextQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private def norm(c: Column): Column =
-    regexp_replace(lower(trim(c)), "\\s+", " ")
-  private def toks(c: Column): Column = split(norm(c), " ")
-
   private val STOP_EN = Seq("the", "and", "of", "to", "in", "is", "it", "for", "on", "with")
   private val STOP_ES = Seq("el", "la", "de", "que", "y", "en", "un", "por", "con", "los")
   private val STOP_DE = Seq("der", "die", "und", "das", "nicht", "ist", "ich", "ein", "mit", "von")
@@ -37,7 +34,7 @@ object TextQueries {
     "text_stats" -> ((s, d) => {
       documents(s, d)
         .select(col("lang"), col("source"), col("n_chars"),
-          size(toks(col("text"))).cast("long").as("n_tok"))
+          size(tokens(col("text"))).cast("long").as("n_tok"))
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"),
@@ -49,7 +46,7 @@ object TextQueries {
     // -- per-doc quality scoring: type/token ratio, mean token length,
     //    stopword density, length prior — integer-quantized blend.
     "text_quality" -> ((s, d) => {
-      val t = toks(col("text"))
+      val t = tokens(col("text"))
       documents(s, d)
         .select(col("doc_id"),
           size(t).cast("long").as("n_tokens"),
@@ -73,7 +70,7 @@ object TextQueries {
     //    profiles; argmax with fixed priority en>es>de>fr>zh, 'und' when
     //    no profile hits.
     "lang_id" -> ((s, d) => {
-      val tset = array_distinct(toks(col("text")))
+      val tset = array_distinct(tokens(col("text")))
       def score(ws: Seq[String]): Column = size(array_intersect(tset, litArray(ws)))
       documents(s, d)
         .select(col("doc_id"), col("lang").as("declared_lang"),
@@ -100,7 +97,7 @@ object TextQueries {
     "token_count" -> ((s, d) => {
       documents(s, d)
         .select(col("doc_id"),
-          size(toks(col("text"))).cast("long").as("n_ws"),
+          size(tokens(col("text"))).cast("long").as("n_ws"),
           size(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
             .cast("long").as("n_bpe"),
           length(col("text")).cast("long").as("n_chars"))
@@ -159,7 +156,7 @@ object TextQueries {
       import org.apache.spark.sql.expressions.Window
       val docs = documents(s, d)
       val n = docs.count()
-      val tf = docs.select(col("doc_id"), explode(toks(col("text"))).as("t"))
+      val tf = docs.select(col("doc_id"), explode(tokens(col("text"))).as("t"))
         .filter(col("t") =!= "")
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
       val df = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
@@ -208,7 +205,7 @@ object TextQueries {
     "vocab_encode" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val K = 20
-      val base = documents(s, d).select(col("doc_id"), toks(col("text")).as("w"))
+      val base = documents(s, d).select(col("doc_id"), tokens(col("text")).as("w"))
       val vocab = base.select(explode(col("w")).as("t"))
         .groupBy("t").agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("t")).limit(K)
@@ -244,9 +241,9 @@ object TextQueries {
     "bm25_search" -> ((s, d) => {
       val terms = Seq("dup", "join", "spark") // rare / common / common df mix
       val base = documents(s, d)
-        .select(col("doc_id") +: size(toks(col("text"))).cast("long").as("dl") +:
+        .select(col("doc_id") +: size(tokens(col("text"))).cast("long").as("dl") +:
           terms.zipWithIndex.map { case (t, i) =>
-            size(filter(toks(col("text")), x => x === t)).cast("long")
+            size(filter(tokens(col("text")), x => x === t)).cast("long")
               .as(s"tf${i + 1}") }: _*)
       val statCols = count(lit(1)).as("n") +: sum(col("dl")).as("t") +:
         terms.indices.map(i =>
@@ -292,7 +289,7 @@ object TextQueries {
     //    supported-bigram relation is orders of magnitude smaller than
     //    the token stream.
     "text_collocations" -> ((s, d) => {
-      val base = documents(s, d).select(toks(col("text")).as("w"))
+      val base = documents(s, d).select(tokens(col("text")).as("w"))
       val uni = base.select(explode(col("w")).as("t"))
         .groupBy("t").agg(count(lit(1)).as("c"))
       val tot = uni.agg(sum(col("c")).as("n"))
@@ -329,7 +326,7 @@ object TextQueries {
     "text_rake" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val tok = documents(s, d)
-        .select(col("doc_id"), posexplode(toks(col("text"))).as(Seq("pos", "t")))
+        .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
         .filter(col("t") =!= "")
       val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       val members = tok
@@ -378,7 +375,7 @@ object TextQueries {
     "vocab_bpe_merges" -> ((s, d) => {
       import s.implicits._
       var t = graft.Caches.pin(
-        documents(s, d).select(explode(toks(col("text"))).as("w"))
+        documents(s, d).select(explode(tokens(col("text"))).as("w"))
           .filter(length(col("w")) > 0)
           .groupBy("w").agg(count(lit(1)).as("n"))
           .withColumn("syms", expr(

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.Dataset
@@ -27,7 +28,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the cap, so plan choices are untouched — only the pathological
   * products clamp, and with every generation's inputs ≤ 10^18 the next
   * round's products stay ≤ ~10^72: trivial BigInt math forever, any
-  * round count. */
+  * round count.
+  *
+  * [[rdd]] hands [[graft.Caches]] the RDD a local checkpoint persisted:
+  * the `LogicalRDD`'s own, so no diff of the persistent-RDD set is
+  * needed to find it. */
 object Checkpoints {
   private val Cap = BigInt(10).pow(18)
 
@@ -46,4 +51,12 @@ object Checkpoints {
             session, Some(clamped), None))
       case _ => df
     }
+
+  /** The locally checkpointed RDD behind a checkpoint frame; None for any
+    * frame whose analyzed plan is not exactly such a `LogicalRDD`. */
+  def rdd(df: DataFrame): Option[RDD[_]] = df.queryExecution.analyzed match {
+    case lr: LogicalRDD if lr.rdd.checkpointData.exists(
+        _.isInstanceOf[LocalRDDCheckpointData[_]]) => Some(lr.rdd)
+    case _ => None
+  }
 }

@@ -42,8 +42,9 @@ class CorenessLouvainSpec extends AnyFunSuite {
         .filter(col("a").isNull || col("b").isNull || col("a") =!= col("b"))
         .count()
       assert(diff == 0, s"round $round: $diff nodes differ between forms")
-      h = hs.localCheckpoint(true)
+      h = Caches.checkpoint(hs)
     }
+    Caches.sweep(spark)
   }
 
   test("histogram round's plan: partial-agg histogram feeds the window, no degree-sized sort input") {
@@ -62,8 +63,8 @@ class CorenessLouvainSpec extends AnyFunSuite {
   }
 
   test("corenessFixpoint converges monotonically to the exact core numbers") {
-    val (h, hIds, rounds, converged) = GraphAlgos.corenessFixpoint(
-      spark, sym, hmax, maxDeg, maxRounds = 100, checkMonotone = true)
+    val (h, rounds, converged) = GraphAlgos.corenessFixpoint(
+      sym, hmax, maxDeg, maxRounds = 100, checkMonotone = true)
     assert(converged, s"no fixpoint after $rounds rounds")
     assert(rounds >= 1)
     // driver-side exact peel (Matula–Beck): repeatedly remove the
@@ -87,7 +88,7 @@ class CorenessLouvainSpec extends AnyFunSuite {
     }
     val got = h.collect().map(r =>
       (r.getAs[Number]("x").longValue, r.getAs[Long]("h"))).toMap
-    GraphAlgos.freeRdds(spark, hIds)
+    Caches.sweep(spark)
     assert(got.keySet == core.keySet)
     val bad = got.filter { case (n, hv) => hv != core(n).toLong }
     assert(bad.isEmpty,
@@ -108,29 +109,26 @@ class CorenessLouvainSpec extends AnyFunSuite {
     // a loop that joins its own previous generation MULTIPLIES the
     // estimate per round — digits double until the driver wedges in
     // BigInteger math inside stats estimation (hit live at 50M, round
-    // ~20+). The clamp in checkpointWithIds bounds every generation.
+    // ~20+). The clamp in Caches.checkpoint bounds every generation.
     import spark.implicits._
     val cap = BigInt(10).pow(18)
-    var (df, ids0) = GraphAlgos.checkpointWithIds(
-      Seq(1L, 2L, 3L).toDF("x"))
-    // generations are freed at the END here: this test's subject is the
-    // STATS clamp (the per-round-free discipline over real data is what
-    // the fixpoint test above exercises), and 60 trivial generations are
-    // a few KB of blocks
-    val all = scala.collection.mutable.Set.empty[Int] ++= ids0
+    var df = Caches.checkpoint(Seq(1L, 2L, 3L).toDF("x"))
+    // generations are freed at the END here (the sweep): this test's
+    // subject is the STATS clamp (the per-round-free discipline over real
+    // data is what the fixpoint test above exercises), and 60 trivial
+    // generations are a few KB of blocks
     val t0 = System.nanoTime()
     for (_ <- 1 to 60) {
-      val (nd, nids) = GraphAlgos.checkpointWithIds(
+      df = Caches.checkpoint(
         df.join(df.withColumnRenamed("x", "y"), expr("x = y"))
           .join(df.withColumnRenamed("x", "z"), expr("x = z"))
           .select(col("x")))
-      df = nd; all ++= nids
       assert(df.queryExecution.analyzed.stats.sizeInBytes <= cap,
         "checkpointed stats exceed the clamp")
     }
     val sec = (System.nanoTime() - t0) / 1e9
     assert(df.count() == 3)
-    GraphAlgos.freeRdds(spark, all.toSet)
+    Caches.sweep(spark)
     // unclamped, round ~25+ alone takes minutes of driver-side BigInt
     // math; the whole loop must stay planning-cheap (generous bound for
     // a loaded CI box)
@@ -141,10 +139,9 @@ class CorenessLouvainSpec extends AnyFunSuite {
     // The ladder runs the GUARDED sweep (louvainSweepMonotone): the raw
     // synchronous sweep's q1 >= q0 is NOT a theorem (see the path
     // counterexample test below), but max(q0, q1) selection makes it one.
-    val we = GraphAlgos.weightedCoPurchase(spark, sf0001)
-      .localCheckpoint(true)
-    val (lbl1, ids1, qSingle, qSweep1, m2a, nComm1) =
-      GraphAlgos.louvainSweepMonotone(spark, we)
+    val we = Caches.checkpoint(GraphAlgos.weightedCoPurchase(spark, sf0001))
+    val (lbl1, qSingle, qSweep1, m2a, nComm1) =
+      GraphAlgos.louvainSweepMonotone(we)
     // the fused community count must equal the labels' own distinct count
     assert(nComm1 == lbl1.select(col("comm")).distinct().count(),
       "modularityScaledN's folded community count drifted from the labels")
@@ -155,7 +152,7 @@ class CorenessLouvainSpec extends AnyFunSuite {
     // ladder trivially singleton-only and the test vacuous)
     assert(qSweep1 > qSingle,
       s"sweep made no move on the co-purchase fixture ($qSweep1 == $qSingle)")
-    val coarse = GraphAlgos.coarsen(we, lbl1).localCheckpoint(true)
+    val coarse = Caches.checkpoint(GraphAlgos.coarsen(we, lbl1))
     // coarsening preserves total strength exactly
     val (qCoarseSingle, m2c) = GraphAlgos.modularityScaled(coarse,
       coarse.select(col("u").as("x")).unionByName(coarse.select(col("v").as("x")))
@@ -165,8 +162,8 @@ class CorenessLouvainSpec extends AnyFunSuite {
     // original (each super-node IS a community): Q must carry over exactly
     assert(qCoarseSingle == qSweep1,
       s"coarsening is not modularity-invariant: $qCoarseSingle != $qSweep1")
-    val (lbl2, ids2, qc2, qSweep2, _, _) =
-      GraphAlgos.louvainSweepMonotone(spark, coarse)
+    val (lbl2, qc2, qSweep2, _, _) =
+      GraphAlgos.louvainSweepMonotone(coarse)
     assert(qc2 == qCoarseSingle,
       s"monotone sweep's own singleton pricing disagrees: $qc2 != $qCoarseSingle")
     assert(qSweep2 >= qSweep1,
@@ -178,7 +175,7 @@ class CorenessLouvainSpec extends AnyFunSuite {
     val (qComposed, _) = GraphAlgos.modularityScaled(we, composed)
     assert(qComposed == qSweep2,
       s"composed labels lose modularity invariance: $qComposed != $qSweep2")
-    GraphAlgos.freeRdds(spark, ids1 ++ ids2)
+    Seq(we, lbl1, coarse, lbl2).foreach(Caches.release)
   }
 
   test("louvain synchronous-move counterexample: raw sweep regresses, guarded sweep does not") {
@@ -188,28 +185,27 @@ class CorenessLouvainSpec extends AnyFunSuite {
     // singletons' −6. This pins the raw sweep's known non-monotonicity
     // (its scaladoc caveat) and proves the guard restores the theorem.
     import spark.implicits._
-    val we = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("u", "v", "w")
-      .localCheckpoint(true)
+    val we = Caches.checkpoint(Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("u", "v", "w"))
     val singles = we.select(col("u").as("x")).unionByName(
       we.select(col("v").as("x"))).distinct()
       .select(col("x"), col("x").as("comm"))
     val (q0, m2) = GraphAlgos.modularityScaled(we, singles)
     assert(m2 == 4L && q0 == -6L, s"fixture arithmetic drifted: m2=$m2 q0=$q0")
-    val (rawLbl, rawIds) = GraphAlgos.louvainSweep(spark, we)
+    val rawLbl = GraphAlgos.louvainSweep(we)
     val (qRaw, _) = GraphAlgos.modularityScaled(we, rawLbl)
     assert(qRaw == -8L,
       s"raw synchronous sweep no longer regresses on the path ($qRaw) — " +
         "update the counterexample if the tie-break rule changed")
-    GraphAlgos.freeRdds(spark, rawIds)
-    val (gLbl, gIds, gq0, gq1, _, gn) =
-      GraphAlgos.louvainSweepMonotone(spark, we)
+    Caches.release(rawLbl)
+    val (gLbl, gq0, gq1, _, gn) =
+      GraphAlgos.louvainSweepMonotone(we)
     assert(gn == 3L, s"fallback community count must be the node count: $gn")
     assert(gq0 == -6L && gq1 == -6L,
       s"guarded sweep must fall back to singletons here: q0=$gq0 q1=$gq1")
     val kept = gLbl.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(kept == Map(1L -> 1L, 2L -> 2L, 3L -> 3L),
       s"guarded sweep returned non-singleton labels: $kept")
-    GraphAlgos.freeRdds(spark, gIds)
+    Seq(gLbl, we).foreach(Caches.release)
   }
 
   test("modularityScaled fails loudly past the 2m BIGINT bound") {

@@ -14,7 +14,10 @@ import graft.queries.Licenses
   * own: every `BroadcastExchange` seen is then one a license asked for.
   * Plans are the executed plans of every action the query ran (license
   * counts, checkpoints, the final collect), caught by a
-  * QueryExecutionListener. */
+  * QueryExecutionListener. After every run [[Caches.sweep]] alone must
+  * bring the persisted-RDD set back to its pre-run state: every
+  * generation a licensed loop checkpoints or pins is registered with the
+  * sweep, whichever side of its license it ran on. */
 class LicenseBoundarySpec extends AnyFunSuite {
   import SparkSessionFixture._
 
@@ -23,7 +26,8 @@ class LicenseBoundarySpec extends AnyFunSuite {
   private val autoBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold",
     "spark.sql.adaptive.autoBroadcastJoinThreshold")
 
-  /** Sorted result rows and the executed plans of `query` under `limits`. */
+  /** Sorted result rows and the executed plans of `query` under `limits`;
+    * fails if the query leaves a persisted RDD the sweep does not free. */
   private def run(query: String, limits: Licenses.Limits)
       : (Seq[String], Seq[String]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -33,6 +37,7 @@ class LicenseBoundarySpec extends AnyFunSuite {
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     Caches.hardSweep(spark)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val saved = autoBroadcast.map(k => k -> spark.conf.getOption(k))
     autoBroadcast.foreach(spark.conf.set(_, "-1"))
     spark.listenerManager.register(listener)
@@ -41,6 +46,11 @@ class LicenseBoundarySpec extends AnyFunSuite {
         SparkEntry.queries(query)(spark, sf0001).collect()
       }
       ListenerBusDrain(spark.sparkContext)
+      Caches.sweep(spark)
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      assert(left == persisted, s"$query under $limits: the sweep left " +
+        s"persisted RDDs ${(left -- persisted).toSeq.sorted} " +
+        s"(and dropped ${(persisted -- left).toSeq.sorted})")
       (rows.map(_.toString).toSeq.sorted, plans.asScala.toSeq)
     } finally {
       spark.listenerManager.unregister(listener)
