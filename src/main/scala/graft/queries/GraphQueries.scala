@@ -283,13 +283,15 @@ object GraphQueries {
           col("outdegree").cast("long").as("outdeg"))
     }),
 
-    // -- id-range predicate pushdown THROUGH the DSv2 scan: the filter on
-    //    `id` reaches the source (pushedFilters -> clamped node ranges),
-    //    so skipped nodes cost ZERO decode I/O — the offsets index makes
-    //    any id range directly addressable. At 100 TB this is the
-    //    difference between decoding the whole graph and seeking straight
-    //    to the queried slice. Plan shape gated in BvSourceSpec
-    //    ("id in [lo,hi)" in the scan description).
+    // -- id-range predicate pushdown THROUGH the DSv2 scan: the source
+    //    consumes both comparisons on `id` (clamped node ranges, no
+    //    post-scan Filter), so skipped nodes cost ZERO decode I/O — the
+    //    offsets index makes any id range directly addressable — and
+    //    every slice plans the same Project over the scan, whose generated
+    //    code Spark compiles once. At 100 TB this is the difference
+    //    between decoding the whole graph and seeking straight to the
+    //    queried slice. Plan shape gated in PlanQualitySpec ("id in
+    //    [lo,hi)" in the scan description) and BvPushdownSpec (no Filter).
     "bv_id_slice" -> ((s, d) => {
       val base = bvFixture(s, d)
       s.read.format("bvgraph").option("basename", base).load()

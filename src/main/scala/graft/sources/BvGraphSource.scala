@@ -146,23 +146,28 @@ class BvGraphScanBuilder(basename: String, splits: Option[Int],
     * rows" a planning-time range truncation — one partition, zero decode
     * I/O past the k-th record — instead of launching a full-range scan
     * that the LocalLimit then abandons. Spark only offers the limit when
-    * no post-scan filters remain, and this source always re-evaluates
-    * pushed filters as residuals, so a pushed limit implies a bare
-    * (possibly column-pruned) scan — prefix truncation is exact. Spark
-    * still applies its own GlobalLimit above (isPartiallyPushed default),
-    * which is a no-op on the truncated output. */
+    * no post-scan filter remains, that is when [[pushFilters]] consumed
+    * every filter. The scan's rows are then exactly the nodes of the
+    * clamped id ranges, so truncating their walk after k nodes returns k
+    * rows that all pass the query's filters. Spark still applies its own
+    * GlobalLimit above (isPartiallyPushed default), which is a no-op on
+    * the truncated output. */
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Metadata-answerable aggregates never scan: COUNT(*) is the (id-
-    * clamped) node-range size, SUM(outdegree) is `arcs` from the
-    * properties/manifest, MIN/MAX(id) are the range bounds. Only pushed
-    * when no grouping and every aggregate in the query is answerable
-    * (SUM(outdegree) additionally requires an unfiltered scan — arcs is
-    * a whole-graph stat). At 100 TB, `SELECT count(*) FROM graph` is
-    * O(1) instead of a full decode. */
+  /** Metadata-answerable aggregates never scan: COUNT(*) is the size of
+    * the id-clamped node ranges, SUM(outdegree) is `arcs` from the
+    * properties/manifest, MIN/MAX(id) are the clamped ranges' bounds.
+    * Only pushed when no grouping and every aggregate in the query is
+    * answerable. Spark offers aggregates only when no post-scan filter
+    * remains, so every filter of the query was an exact id range that
+    * [[pushFilters]] consumed: the clamped ranges hold exactly the rows
+    * the aggregates see. SUM(outdegree) additionally requires an
+    * unclamped scan, because `arcs` is a whole-graph stat. At 100 TB,
+    * `SELECT count(*) FROM graph WHERE id < x` is O(1) instead of a
+    * decode. */
   private def resolve(agg: Aggregation): Option[Seq[BvGraphScan.PushedAgg]] = {
     if (agg.groupByExpressions().nonEmpty) return None
     val unfiltered = lo == Long.MinValue && hi == Long.MaxValue
@@ -198,15 +203,22 @@ class BvGraphScanBuilder(basename: String, splits: Option[Int],
     }
   }
 
-  /** Range predicates on `id` prune node ranges at planning time (offsets
-    * make any id range directly addressable — zero I/O for skipped
-    * nodes). All filters are also left as residuals for Spark to
-    * re-evaluate, so partial/overlapping predicates stay correct. */
+  /** Predicates on `id` clamp the scanned node ranges at planning time
+    * (offsets make any id range directly addressable — zero I/O for
+    * skipped nodes). The contract is exact pushdown: a filter whose id
+    * range [[BvGraphScan.idBounds]] marks exact (`>`, `>=`, `<`, `<=`,
+    * `=` on `id` with an integral literal) is consumed, because the
+    * clamped scan returns exactly the rows that pass it; it is not
+    * returned, so Spark plans no `Filter` above the scan. Every other
+    * filter is returned as a residual for Spark to evaluate on the rows.
+    * An `id IN (...)` residual still narrows the scan to its [min, max]
+    * envelope. `pushedFilters` reports every filter that clamped the
+    * scan, consumed or not. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    accepted = filters.filter(f => BvGraphScan.idBounds(f).exists { case (l, h) =>
-      lo = math.max(lo, l); hi = math.min(hi, h); true
-    })
-    filters // every filter is re-evaluated post-scan
+    val bounded = filters.map(f => f -> BvGraphScan.idBounds(f))
+    bounded.flatMap(_._2).foreach { b => lo = math.max(lo, b.lo); hi = math.min(hi, b.hi) }
+    accepted = bounded.collect { case (f, Some(_)) => f }
+    bounded.collect { case (f, b) if !b.exists(_.exact) => f } // the residuals
   }
 
   override def pushedFilters(): Array[Filter] = accepted
@@ -240,17 +252,9 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("id"))
 
   override def filter(filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
-    filters.foreach {
-      case org.apache.spark.sql.sources.In("id", vs) =>
-        val ids = vs.flatMap(BvGraphScan.num(_))
-        if (ids.nonEmpty && ids.length == vs.length) {
-          rtLo = math.max(rtLo, ids.min)
-          rtHi = math.min(rtHi, ids.max + 1)
-        }
-      // an unsupported runtime filter leaves the scan unpruned (safe)
-      case f => BvGraphScan.idBounds(f).foreach { case (l, h) =>
-        rtLo = math.max(rtLo, l); rtHi = math.min(rtHi, h)
-      }
+    // an unsupported runtime filter leaves the scan unpruned (safe)
+    filters.flatMap(BvGraphScan.idBounds).foreach { b =>
+      rtLo = math.max(rtLo, b.lo); rtHi = math.min(rtHi, b.hi)
     }
 
   override def readSchema(): StructType = pushedAggs match {
@@ -439,23 +443,37 @@ object BvGraphScan {
   import org.apache.spark.sql.sources._
 
   /** An integral filter literal as Long; None for any other type. */
-  private[sources] def num(v: Any): Option[Long] = v match {
+  private def num(v: Any): Option[Long] = v match {
     case i: Int => Some(i.toLong)
     case l: Long => Some(l)
     case s: Short => Some(s.toLong)
     case _ => None
   }
 
-  /** The id range [lo, hi) one comparison on `id` admits, for planning
-    * (`pushFilters`) and runtime pruning (`filter`) alike; None for any
-    * other filter. The bounds only narrow the scan: Spark re-evaluates
-    * every filter on the rows. */
-  private[sources] def idBounds(f: Filter): Option[(Long, Long)] = f match {
-    case GreaterThan("id", v) => num(v).map(x => (x + 1, Long.MaxValue))
-    case GreaterThanOrEqual("id", v) => num(v).map(x => (x, Long.MaxValue))
-    case LessThan("id", v) => num(v).map(x => (Long.MinValue, x))
-    case LessThanOrEqual("id", v) => num(v).map(x => (Long.MinValue, x + 1))
-    case EqualTo("id", v) => num(v).map(x => (x, x + 1))
+  /** Every row a filter admits has an id in [lo, hi). When `exact`, every
+    * row in [lo, hi) also passes the filter, so the clamped scan answers
+    * it alone. `Long.MinValue`/`Long.MaxValue` mean "no bound". */
+  private[sources] final case class IdBounds(lo: Long, hi: Long, exact: Boolean)
+
+  /** x + 1, saturating at `Long.MaxValue`. No node has id `Long.MaxValue`
+    * (a shard's exclusive end is a Long), so [x, Long.MaxValue) holds every
+    * id from x up. */
+  private def after(x: Long): Long = if (x == Long.MaxValue) x else x + 1
+
+  /** The id range one filter admits, for planning (`pushFilters`) and
+    * runtime pruning (`filter`) alike; None for a filter that bounds no id,
+    * or whose literal is not an Int, Long or Short. A comparison is exact;
+    * an `IN` set is its [min, max] envelope, which is not. */
+  private[sources] def idBounds(f: Filter): Option[IdBounds] = f match {
+    case GreaterThan("id", v) => num(v).map(x => IdBounds(after(x), Long.MaxValue, exact = true))
+    case GreaterThanOrEqual("id", v) => num(v).map(x => IdBounds(x, Long.MaxValue, exact = true))
+    case LessThan("id", v) => num(v).map(x => IdBounds(Long.MinValue, x, exact = true))
+    case LessThanOrEqual("id", v) => num(v).map(x => IdBounds(Long.MinValue, after(x), exact = true))
+    case EqualTo("id", v) => num(v).map(x => IdBounds(x, after(x), exact = true))
+    case In("id", vs) if vs.nonEmpty =>
+      val ids = vs.flatMap(num(_))
+      if (ids.length < vs.length) None
+      else Some(IdBounds(ids.min, after(ids.max), exact = false))
     case _ => None
   }
 
